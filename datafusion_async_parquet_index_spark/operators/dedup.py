@@ -1076,9 +1076,11 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = read_table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).alias("n_total"))
     # n_in derives from the histogram itself (Σ size × clusters) —
-    # identical integers, one fewer aggregation pass over the labels
-    in_comp = hist.agg(
-        F.sum(F.col("cluster_size") * F.col("n_clusters")).alias("n_in"))
+    # identical integers, one fewer aggregation pass over the labels;
+    # 0, not NULL, when the corpus has no near-duplicate clusters
+    in_comp = hist.agg(F.coalesce(
+        F.sum(F.col("cluster_size") * F.col("n_clusters")),
+        F.lit(0)).alias("n_in"))
     singles = (
         total.crossJoin(in_comp)
         .select(F.lit(1).cast("long").alias("cluster_size"),

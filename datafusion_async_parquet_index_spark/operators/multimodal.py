@@ -1785,20 +1785,6 @@ def _jpeg_code_table(bits, huffval):
     return out
 
 
-def _jpeg_decode_table(bits, huffval):
-    """Decoder-side canonical table: {(length, code): symbol}."""
-    out = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[(length, code)] = huffval[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
 class _JpegBitWriter:
     """MSB-first bit accumulator with T.81 byte stuffing (an emitted
     0xFF data byte is followed by 0x00 so it can never alias a
@@ -1829,69 +1815,6 @@ class _JpegBitWriter:
         return bytes(self.out)
 
 
-class _JpegBitReader:
-    """MSB-first bit reader over the entropy-coded segment with
-    0xFF00 de-stuffing; a bare marker inside the segment is a loud
-    refusal (restart markers are not supported — the encoder never
-    writes DRI, and decode_jpeg refuses DRI up front)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        d, p = self.data, self.pos
-        if p >= len(d):
-            raise ValueError("JPEG entropy data truncated (no EOI)")
-        byte = d[p]
-        p += 1
-        if byte == 0xFF:
-            if p >= len(d):
-                raise ValueError("JPEG entropy data truncated at 0xFF")
-            nxt = d[p]
-            while nxt == 0xFF and p + 1 < len(d):
-                p += 1           # T.81 B.1.1.2 fill byte before marker
-                nxt = d[p]
-            if nxt == 0x00:
-                p += 1           # stuffed literal 0xFF
-            elif 0xD0 <= nxt <= 0xD7:
-                raise ValueError(
-                    "JPEG restart markers (RSTn) are not supported "
-                    "(baseline without restart intervals only)")
-            else:
-                raise ValueError(
-                    f"unexpected marker 0xFF{nxt:02X} inside JPEG "
-                    f"entropy data (truncated scan?)")
-        self.acc = (self.acc << 8) | byte
-        self.nbits += 8
-        self.pos = p
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        bit = (self.acc >> self.nbits) & 1
-        self.acc &= (1 << self.nbits) - 1
-        return bit
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def read_huffman(self, table) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG Huffman code (corrupt stream)")
-
-
 def _jpeg_magnitude(v: int):
     """(category, additional-bits) for a DC diff / AC coefficient
     per T.81 F.1.2.1: category s = bit length of |v|; negative values
@@ -1917,20 +1840,6 @@ def _jpeg_quantize(coeffs, qtable):
     scaled = coeffs / qtable
     return (np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)).astype(
         np.int32)
-
-
-def _jpeg_component_blocks(plane):
-    """Pad an (h, w) float plane to 8-multiples by edge replication
-    and return (blocks_y, blocks_x, the (by, bx, 8, 8) block view)."""
-    import numpy as np
-
-    h, w = plane.shape
-    ph, pw = (-h) % 8, (-w) % 8
-    padded = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-    hh, ww = padded.shape
-    blocks = (padded.reshape(hh // 8, 8, ww // 8, 8)
-              .transpose(0, 2, 1, 3))
-    return hh // 8, ww // 8, blocks
 
 
 def _jpeg_rgb_to_ycbcr(rgb):

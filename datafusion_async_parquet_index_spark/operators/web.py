@@ -866,15 +866,6 @@ def _warc_v2_make(batches: Iterator[pd.DataFrame]
                             "payload": payloads})
 
 
-def synthesize_warc_media_v2(spark: SparkSession, sf_dir: str
-                             ) -> DataFrame:
-    return _warc_docs_spread(spark, sf_dir).mapInPandas(
-        _warc_v2_make, schema=StructType([
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]))
-
-
 CHUNKED_CHARSET_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("charset", StringType()),

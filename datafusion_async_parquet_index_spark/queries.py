@@ -76,12 +76,7 @@ def _make_table(spark, sf_dir, table, index_columns, bloom_columns=(),
         t.bloom_columns = tuple(bloom_columns)
         t.token_bloom_columns = tuple(token_bloom_columns)
         t.nan_count_columns = tuple(nan_count_columns)
-        from .sources.stats import build_index
-        t.index_schema = build_index(t.catalog, t._files, index_columns,
-                                     spark=None,
-                                     bloom_columns=t.bloom_columns,
-                                     token_bloom_columns=t.token_bloom_columns,
-                                     nan_count_columns=t.nan_count_columns)
+        t.index_schema = t._build_index(index_columns, incremental=False)
         from .plans.pruning import PruningRewriter
         t._rewriter = PruningRewriter(t.index_schema)
         t._schema = spark.read.parquet(t._files[0]).schema

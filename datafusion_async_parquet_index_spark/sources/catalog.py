@@ -41,6 +41,7 @@ from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from ..plans.expr import BinOp, Case, Col, Expr, InList, IsNull, Like, Lit, Not
+from .sidecars import STATISTICS, SidecarReads
 
 # type-category -> SQLite storage class (reference index.rs:396-415)
 _SQL_TYPE = {
@@ -287,7 +288,7 @@ class ConcurrentWriteError(RuntimeError):
     catalog mutation; re-read the table state and retry."""
 
 
-class SqliteIndexCatalog:
+class SqliteIndexCatalog(SidecarReads):
     """The external index over a directory of Parquet files.
 
     All database access routes through a small set of dialect hooks
@@ -486,6 +487,22 @@ class SqliteIndexCatalog:
              fs.row_count, fs.mtime_ns, fs.footer_md5))
         return row[0][0]
 
+    def _sidecar_ddl(self, stat) -> str:
+        cols = "".join(f"{name} {typ.replace('BLOB', self._blob_type())},\n"
+                       for name, typ in stat.payload)
+        return f"""CREATE TABLE IF NOT EXISTS {stat.table} (
+                   file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
+                       ON DELETE CASCADE,
+                   row_group INTEGER NOT NULL,
+                   column_name TEXT NOT NULL,
+                   {cols}PRIMARY KEY (file_id, {', '.join(stat.key)}))"""
+
+    def _sidecar_insert_sql(self, stat) -> str:
+        cols = ["file_id", "row_group", "column_name"] + [
+            name for name, _ in stat.payload]
+        return (f"INSERT INTO {stat.table} ({', '.join(cols)}) "
+                f"VALUES ({', '.join('?' * len(cols))})")
+
     # -- EP3: catalog bootstrap (reference index.rs:332-393) ----------
     def initialize(self, index_schema: Dict[str, str]) -> None:
         """Idempotent DDL. index_schema: {column: type_category}; columns
@@ -557,63 +574,18 @@ class SqliteIndexCatalog:
                         self._exec(
                             f'ALTER TABLE row_group_statistics '
                             f'ADD COLUMN "{col_name}" {col_t}')
-            # bloom extension (sources/bloom.py): per (row group, column)
-            # membership filter for equality pruning on high-cardinality
-            # columns where min/max cannot help
-            # sum extension (aggregate-statistics index): per
-            # (row group, integer column) exact sum + non-null count,
-            # computed at index time from the column pages — lets
-            # SUM/AVG push down the same way COUNT does (satisfaction-
-            # proven groups contribute stored sums unread)
-            # sumsq_value is TEXT (decimal string of an exact Python
-            # int): Σx² routinely exceeds int64 even when every x and
-            # Σx fit, and sqlite3 raises on >64-bit ints. NULL =
-            # unknown (e.g. decimal columns, or rows written before
-            # the VAR extension) — consumers demote those groups to
-            # the scanned set.
-            self._exec(
-                """CREATE TABLE IF NOT EXISTS row_group_sums (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       sum_value INTEGER NOT NULL,
-                       value_count INTEGER NOT NULL,
-                       sumsq_value TEXT,
-                       PRIMARY KEY (file_id, row_group, column_name))""")
-            if "sumsq_value" not in self._existing_columns("row_group_sums"):
-                # persisted catalog built before the VAR extension
-                self._exec(
-                    "ALTER TABLE row_group_sums ADD COLUMN sumsq_value TEXT")
-            # histogram extension: per (row group, integer column)
-            # equi-width bin counts over a caller-fixed domain —
-            # quantiles fold from the catalog the way COUNT/SUM/VAR
-            # do. lo/hi stored as TEXT (decimal strings: portable
-            # across backends and safe for >64-bit domains); counts
-            # as a comma-joined TEXT list.
-            self._exec(
-                """CREATE TABLE IF NOT EXISTS row_group_hists (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       lo TEXT NOT NULL,
-                       hi TEXT NOT NULL,
-                       nbins INTEGER NOT NULL,
-                       counts TEXT NOT NULL,
-                       PRIMARY KEY (file_id, row_group, column_name))""")
-            # NDV extension: per (row group, column) HyperLogLog
-            # registers (stats.HLL_REGS small ints, comma-joined TEXT)
-            # — approximate COUNT DISTINCT folds from the catalog by
-            # elementwise MAX the way COUNT/SUM/VAR fold by addition.
-            self._exec(
-                """CREATE TABLE IF NOT EXISTS row_group_ndv (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       registers TEXT NOT NULL,
-                       PRIMARY KEY (file_id, row_group, column_name))""")
+            # the sidecar statistics (sources/sidecars.py), one table
+            # each keyed (file_id, row_group, column_name[, page])
+            for stat in STATISTICS:
+                self._exec(self._sidecar_ddl(stat))
+                existing_sc = self._existing_columns(stat.table)
+                for col_name, col_t in stat.payload:
+                    if col_name not in existing_sc and "NOT NULL" not in col_t:
+                        # persisted catalog built before the column
+                        # existed (sums' sumsq_value, the VAR extension);
+                        # NULL = unknown
+                        self._exec(f"ALTER TABLE {stat.table} "
+                                   f"ADD COLUMN {col_name} {col_t}")
             # snapshot extension (time travel): a numbered, immutable
             # record of the indexed file set (name + size) at
             # create_snapshot() time. O(snapshots x files) tiny TEXT
@@ -740,73 +712,6 @@ class SqliteIndexCatalog:
                        deleted_sumsq TEXT,
                        PRIMARY KEY (snapshot_id, file_name, row_group,
                                     column_name))""")
-            # dictionary/frequency extension: per (row group, column)
-            # exact distinct-value -> count map for LOW-cardinality
-            # columns (capped at index time) — entries stored as a JSON
-            # array of [value, count] pairs sorted by value (portable
-            # TEXT across backends); category recorded so decode is
-            # type-faithful without consulting the index schema.
-            self._exec(
-                """CREATE TABLE IF NOT EXISTS row_group_dicts (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       category TEXT NOT NULL,
-                       entries TEXT NOT NULL,
-                       PRIMARY KEY (file_id, row_group, column_name))""")
-            # heavy-hitter (top-k frequency) extension: per (row group,
-            # column) the k most frequent values with exact counts
-            # (JSON [value, count] pairs, count-desc/value-asc), plus
-            # rest_rows (uncovered non-null rows) and kth_count — the
-            # order-free mergeable summary that folds into whole-table
-            # heavy hitters with deterministic [lower, upper] bounds.
-            self._exec(
-                """CREATE TABLE IF NOT EXISTS row_group_topk (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       category TEXT NOT NULL,
-                       entries TEXT NOT NULL,
-                       rest_rows INTEGER NOT NULL,
-                       kth_count INTEGER NOT NULL,
-                       PRIMARY KEY (file_id, row_group, column_name))""")
-            self._exec(
-                f"""CREATE TABLE IF NOT EXISTS row_group_blooms (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       m_bits INTEGER NOT NULL,
-                       k_hashes INTEGER NOT NULL,
-                       bits {self._blob_type()} NOT NULL,
-                       PRIMARY KEY (file_id, row_group, column_name))""")
-            # page-index tier (round 12): per-PAGE min/max/null stats
-            # from the Parquet ColumnIndex/OffsetIndex — the reference's
-            # own named-but-unimplemented third pruning granularity
-            # (sqlx-sqlite/src/main.rs:73-79). first_row/row_count are
-            # ROW-GROUP-scoped; values are stored as TEXT with their
-            # domain category ('int' covers int/date/timestamp encoded
-            # values, 'string' utf-8) — comparisons happen driver-side
-            # in the page refiner, never in SQL, so a portable TEXT
-            # encoding is enough.
-            self._exec(
-                """CREATE TABLE IF NOT EXISTS page_statistics (
-                       file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
-                           ON DELETE CASCADE,
-                       row_group INTEGER NOT NULL,
-                       column_name TEXT NOT NULL,
-                       page INTEGER NOT NULL,
-                       first_row INTEGER NOT NULL,
-                       row_count INTEGER NOT NULL,
-                       category TEXT,
-                       min_value TEXT,
-                       max_value TEXT,
-                       null_page INTEGER NOT NULL,
-                       null_count INTEGER,
-                       PRIMARY KEY (file_id, row_group, column_name,
-                                    page))""")
             # rtree planning acceleration (opt-in, SQLite-specific —
             # the DBAPI backend targets generic servers and skips it;
             # a Postgres deployment would use GiST the same way)
@@ -872,25 +777,17 @@ class SqliteIndexCatalog:
     # -- EP2: transactional upsert (reference index.rs:242-329) -------
     def upsert_file(
         self, fs: FileStats, rgs: Sequence[RowGroupStats],
-        blooms: Optional[Dict[int, Dict[str, Tuple[int, int, bytes]]]] = None,
-        sums: Optional[Dict[int, Dict[str, Tuple[int, int]]]] = None,
-        hists: Optional[
-            Dict[int, Dict[str, Tuple[int, int, int, List[int]]]]] = None,
-        ndvs: Optional[Dict[int, Dict[str, List[int]]]] = None,
-        dicts: Optional[Dict[int, Dict[str, List[Tuple[Any, int]]]]] = None,
-        topks: Optional[
-            Dict[int, Dict[str, Tuple[List[Tuple[Any, int]], int, int]]]]
-        = None,
-        pages: Optional[Dict[Tuple[int, str], list]] = None,
+        blooms=None, sums=None, hists=None, ndvs=None, dicts=None,
+        topks=None, pages=None,
     ) -> None:
         """Idempotent per file: upsert file row, replace its row-group rows.
         Re-adding a changed file replaces its stats — the incremental
         maintenance story of the reference (ON CONFLICT DO UPDATE +
         delete-then-insert, index.rs:249-285).
 
-        blooms: optional {row_group: {column: (m_bits, k, bits)}} written
-        alongside the stats in the same transaction.
-        sums: optional {row_group: {column: (sum, non_null_count)}}."""
+        blooms .. pages: the sidecar statistics' payloads (shapes in
+        sources/sidecars.py), written in the same transaction; an
+        omitted one is cleared."""
         with self._txn():
             self._upsert_file_locked(fs, rgs, blooms, sums, hists,
                                      ndvs, dicts, topks, pages)
@@ -928,17 +825,16 @@ class SqliteIndexCatalog:
                         f"batch transaction — no files from this "
                         f"batch were written)")
             with self._txn():
-                for item in batch:
-                    fs, rgs, *rest = item
-                    rest = list(rest) + [None] * (7 - len(rest))
-                    self._upsert_file_locked(fs, rgs, *rest[:7])
+                for fs, rgs, *payloads in batch:
+                    self._upsert_file_locked(fs, rgs, *payloads)
             n += len(batch)
 
-    def _upsert_file_locked(self, fs, rgs, blooms=None, sums=None,
-                            hists=None, ndvs=None, dicts=None,
-                            topks=None, pages=None) -> None:
+    def _upsert_file_locked(self, fs, rgs, *payloads) -> None:
         """upsert_file's body, caller holds _txn (one file's rows
-        are always applied atomically with its siblings' batch)."""
+        are always applied atomically with its siblings' batch).
+        payloads: the sidecar payloads in STATISTICS order; missing
+        trailing ones count as None."""
+        payloads += (None,) * (len(STATISTICS) - len(payloads))
         if fs.row_group_count >= _RTREE_ID_STRIDE:
             # rtree id = file_id * stride + row_group: a file at or past
             # the stride would alias into the next file_id's id space and
@@ -1051,113 +947,16 @@ class SqliteIndexCatalog:
                 self._execmany(
                     f'INSERT INTO "rg_rtree_{c}" (id, mn, mx) '
                     f'VALUES (?, ?, ?)', ent)
-        self._exec(
-            "DELETE FROM row_group_sums WHERE file_id = ?", (file_id,))
-        if sums:
-            # entries are (sum, n) or (sum, n, sumsq) — older
-            # writers/tests still pass 2-tuples; sumsq None/absent
-            # stores NULL (unknown)
-            self._execmany(
-                """INSERT INTO row_group_sums
-                       (file_id, row_group, column_name,
-                        sum_value, value_count, sumsq_value)
-                   VALUES (?, ?, ?, ?, ?, ?)""",
-                [(file_id, rg, col, entry[0], entry[1],
-                  None if len(entry) < 3 or entry[2] is None
-                  else str(entry[2]))
-                 for rg, cols in sums.items()
-                 for col, entry in cols.items()])
-        self._exec(
-            "DELETE FROM row_group_hists WHERE file_id = ?", (file_id,))
-        if hists:
-            self._execmany(
-                """INSERT INTO row_group_hists
-                       (file_id, row_group, column_name,
-                        lo, hi, nbins, counts)
-                   VALUES (?, ?, ?, ?, ?, ?, ?)""",
-                [(file_id, rg, col, str(lo), str(hi), nbins,
-                  ",".join(str(x) for x in counts))
-                 for rg, cols in hists.items()
-                 for col, (lo, hi, nbins, counts) in cols.items()])
-        self._exec(
-            "DELETE FROM row_group_ndv WHERE file_id = ?", (file_id,))
-        if ndvs:
-            self._execmany(
-                """INSERT INTO row_group_ndv
-                       (file_id, row_group, column_name, registers)
-                   VALUES (?, ?, ?, ?)""",
-                [(file_id, rg, col, ",".join(str(x) for x in regs))
-                 for rg, cols in ndvs.items()
-                 for col, regs in cols.items()])
-        self._exec(
-            "DELETE FROM row_group_dicts WHERE file_id = ?", (file_id,))
-        if dicts:
-            import json
-            self._execmany(
-                """INSERT INTO row_group_dicts
-                       (file_id, row_group, column_name,
-                        category, entries)
-                   VALUES (?, ?, ?, ?, ?)""",
-                [(file_id, rg, col,
-                  "int" if entries and isinstance(entries[0][0], int)
-                  else "string",
-                  json.dumps([[v, c] for v, c in entries]))
-                 for rg, cols in dicts.items()
-                 for col, entries in cols.items()])
-        self._exec(
-            "DELETE FROM row_group_topk WHERE file_id = ?", (file_id,))
-        if topks:
-            import json
-            self._execmany(
-                """INSERT INTO row_group_topk
-                       (file_id, row_group, column_name,
-                        category, entries, rest_rows, kth_count)
-                   VALUES (?, ?, ?, ?, ?, ?, ?)""",
-                [(file_id, rg, col,
-                  "int" if entries and isinstance(entries[0][0], int)
-                  else "string",
-                  json.dumps([[v, c] for v, c in entries]),
-                  rest, kth)
-                 for rg, cols in topks.items()
-                 for col, (entries, rest, kth) in cols.items()])
-        self._exec(
-            "DELETE FROM row_group_blooms WHERE file_id = ?", (file_id,))
-        if blooms:
-            self._execmany(
-                """INSERT INTO row_group_blooms
-                       (file_id, row_group, column_name,
-                        m_bits, k_hashes, bits)
-                   VALUES (?, ?, ?, ?, ?, ?)""",
-                [(file_id, rg, col, m, k, self._binary(bits))
-                 for rg, cols in blooms.items()
-                 for col, (m, k, bits) in cols.items()])
-        self._exec(
-            "DELETE FROM page_statistics WHERE file_id = ?", (file_id,))
-        if pages:
-            rows_p = []
-            for (rg, col), plist in pages.items():
-                for ps in plist:
-                    # ps: PageStats (sources/page_index.py)
-                    cat = ("string" if isinstance(ps.min_value, str)
-                           or isinstance(ps.max_value, str) else "int")
-                    rows_p.append((
-                        file_id, rg, col, ps.page, ps.first_row,
-                        ps.row_count, cat,
-                        None if ps.min_value is None
-                        else str(ps.min_value),
-                        None if ps.max_value is None
-                        else str(ps.max_value),
-                        1 if ps.null_page else 0,
-                        ps.null_count))
-            if rows_p:
+        for stat, payload in zip(STATISTICS, payloads):
+            self._exec(f"DELETE FROM {stat.table} WHERE file_id = ?",
+                       (file_id,))
+            rows = stat.rows(payload) if payload else ()
+            if rows:
                 self._execmany(
-                    """INSERT INTO page_statistics
-                           (file_id, row_group, column_name, page,
-                            first_row, row_count, category,
-                            min_value, max_value, null_page,
-                            null_count)
-                       VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?, ?)""",
-                    rows_p)
+                    self._sidecar_insert_sql(stat),
+                    [(file_id, *(self._binary(v)
+                                 if isinstance(v, (bytes, bytearray)) else v
+                                 for v in r)) for r in rows])
 
     def remove_file(self, file_name: str) -> None:
         # children deleted explicitly, not via ON DELETE CASCADE: the
@@ -1173,10 +972,8 @@ class SqliteIndexCatalog:
                         f'DELETE FROM "rg_rtree_{c}" WHERE id = ?',
                         [(fid * _RTREE_ID_STRIDE + rg,)
                          for rg in range(n_rgs)])
-            for child in ("row_group_statistics", "row_group_sums",
-                          "row_group_hists", "row_group_ndv",
-                          "row_group_dicts", "row_group_topk",
-                          "row_group_blooms", "page_statistics",
+            for child in ("row_group_statistics",
+                          *(stat.table for stat in STATISTICS),
                           "deletion_vectors",
                           "dv_rg_adjust", "dv_sum_adjust"):
                 self._exec(
@@ -1256,149 +1053,26 @@ class SqliteIndexCatalog:
             out.setdefault(file_name, []).append(row_group)
         return sorted(out.items())
 
-    def get_page_stats(
-        self, file_names: Sequence[str], columns: Sequence[str]
-    ) -> Dict[Tuple[str, int, str], list]:
-        """{(file_name, row_group, column): [(first_row, row_count,
-        min, max, null_page, null_count) ...]} for the page-index tier,
-        restricted to the given (already row-group-pruned) files and
-        columns — O(surviving pages), bounded planning data. Values
-        decode back to their domain ('int' -> int) so the driver-side
-        page refiner compares in the same encoded domain the rewriter
-        emits literals in. Absent keys mean "no page tier for this
-        chunk" and the refiner keeps the whole row group."""
-        out: Dict[Tuple[str, int, str], list] = {}
-        names = sorted(set(file_names))
-        cols = sorted(set(columns))
-        if not names or not cols:
-            return out
-        chunk_size = 200
-        colph = ",".join("?" * len(cols))
-        for i in range(0, len(names), chunk_size):
-            chunk = names[i:i + chunk_size]
-            ph = ",".join("?" * len(chunk))
-            rows = self._query(
-                f"""SELECT f.file_name, p.row_group, p.column_name,
-                           p.first_row, p.row_count, p.category,
-                           p.min_value, p.max_value, p.null_page,
-                           p.null_count
-                    FROM page_statistics p
-                    JOIN file_statistics f ON f.file_id = p.file_id
-                    WHERE f.file_name IN ({ph})
-                      AND p.column_name IN ({colph})
-                    ORDER BY f.file_name, p.row_group, p.column_name,
-                             p.page""",
-                (*chunk, *cols))
-            for (fn, rg, col, first, cnt, cat, mn, mx, np_, nc) in rows:
-                if cat == "int":
-                    mn = None if mn is None else int(mn)
-                    mx = None if mx is None else int(mx)
-                out.setdefault((fn, rg, col), []).append(
-                    (first, cnt, mn, mx, bool(np_),
-                     None if nc is None else int(nc)))
-        return out
-
-    def get_sums(
-        self, column: str
-    ) -> Dict[Tuple[str, int], Tuple[int, int, Optional[int]]]:
-        """{(file_name, row_group): (sum, non_null_count, sumsq)} for
-        one column; sumsq is None when the second moment was never
-        recorded. O(row_groups) rows, independent of data size."""
-        rows = self._query(
-            """SELECT f.file_name, s.row_group, s.sum_value,
-                      s.value_count, s.sumsq_value
-               FROM row_group_sums s
-               JOIN file_statistics f ON f.file_id = s.file_id
-               WHERE s.column_name = ?""", (column,))
-        return {(fn, rg): (sv, vc, None if sq is None else int(sq))
-                for fn, rg, sv, vc, sq in rows}
-
-    def get_hists(
-        self, column: str
-    ) -> Dict[Tuple[str, int], Tuple[int, int, int, List[int]]]:
-        """{(file_name, row_group): (lo, hi, nbins, counts)} for one
-        column's histogram extension. O(row_groups · nbins) ints,
-        independent of data size."""
-        rows = self._query(
-            """SELECT f.file_name, h.row_group, h.lo, h.hi, h.nbins,
-                      h.counts
-               FROM row_group_hists h
-               JOIN file_statistics f ON f.file_id = h.file_id
-               WHERE h.column_name = ?""", (column,))
-        return {(fn, rg): (int(lo), int(hi), int(nb),
-                           [int(x) for x in counts.split(",")])
-                for fn, rg, lo, hi, nb, counts in rows}
-
-    def get_ndvs(self, column: str) -> Dict[Tuple[str, int], List[int]]:
-        """{(file_name, row_group): registers} for one column's NDV
-        extension. O(row_groups · HLL_REGS) ints, independent of data
-        size or cardinality."""
-        rows = self._query(
-            """SELECT f.file_name, n.row_group, n.registers
-               FROM row_group_ndv n
-               JOIN file_statistics f ON f.file_id = n.file_id
-               WHERE n.column_name = ?""", (column,))
-        return {(fn, rg): [int(x) for x in regs.split(",")]
-                for fn, rg, regs in rows}
-
-    def get_dicts(
-        self, column: str
-    ) -> Dict[Tuple[str, int], List[Tuple[Any, int]]]:
-        """{(file_name, row_group): [(value, count), ...] sorted by
-        value} for one column's dictionary/frequency extension — only
-        row groups whose distinct count fit under the index-time cap
-        appear. O(row_groups · cap) entries, independent of data
-        size."""
-        import json
-        rows = self._query(
-            """SELECT f.file_name, d.row_group, d.category, d.entries
-               FROM row_group_dicts d
-               JOIN file_statistics f ON f.file_id = d.file_id
-               WHERE d.column_name = ?""", (column,))
-        out: Dict[Tuple[str, int], List[Tuple[Any, int]]] = {}
-        for fn, rg, cat, entries in rows:
-            pairs = json.loads(entries)
-            if cat == "int":
-                out[(fn, rg)] = [(int(v), int(c)) for v, c in pairs]
-            else:
-                out[(fn, rg)] = [(v, int(c)) for v, c in pairs]
-        return out
-
-    def get_topk(
-        self, column: str
-    ) -> Dict[Tuple[str, int], Tuple[List[Tuple[Any, int]], int, int]]:
-        """{(file_name, row_group): (entries, rest_rows, kth_count)} for
-        one column's heavy-hitter extension. O(row_groups · k) entries,
-        independent of data size or cardinality."""
-        import json
-        rows = self._query(
-            """SELECT f.file_name, t.row_group, t.category, t.entries,
-                      t.rest_rows, t.kth_count
-               FROM row_group_topk t
-               JOIN file_statistics f ON f.file_id = t.file_id
-               WHERE t.column_name = ?""", (column,))
-        out: Dict[Tuple[str, int],
-                  Tuple[List[Tuple[Any, int]], int, int]] = {}
-        for fn, rg, cat, entries, rest, kth in rows:
-            pairs = json.loads(entries)
-            if cat == "int":
-                decoded = [(int(v), int(c)) for v, c in pairs]
-            else:
-                decoded = [(v, int(c)) for v, c in pairs]
-            out[(fn, rg)] = (decoded, int(rest), int(kth))
-        return out
-
-    def get_blooms(
-        self, column: str
-    ) -> Dict[Tuple[str, int], Tuple[int, int, bytes]]:
-        """{(file_name, row_group): (m_bits, k, bits)} for one column.
-        O(row_groups) rows, independent of data size."""
-        rows = self._query(
-            """SELECT f.file_name, b.row_group, b.m_bits, b.k_hashes, b.bits
-               FROM row_group_blooms b
-               JOIN file_statistics f ON f.file_id = b.file_id
-               WHERE b.column_name = ?""", (column,))
-        return {(fn, rg): (m, k, bytes(bits)) for fn, rg, m, k, bits in rows}
+    def _sidecar_rows(self, stat, columns, file_names=None):
+        """SidecarReads' row source; with file_names, one query per
+        chunk of names (the page tier's survivor-bounded read)."""
+        sql = (f"SELECT f.file_name, s.row_group, s.column_name, "
+               f"{', '.join('s.' + name for name, _ in stat.payload)} "
+               f"FROM {stat.table} s "
+               f"JOIN file_statistics f ON f.file_id = s.file_id "
+               f"WHERE s.column_name IN ({','.join('?' * len(columns))})")
+        if file_names is None:
+            rows = self._query(sql, tuple(columns))
+        else:
+            rows = []
+            for i in range(0, len(file_names), 200):
+                chunk = file_names[i:i + 200]
+                rows += self._query(
+                    f"{sql} AND f.file_name IN ({','.join('?' * len(chunk))})"
+                    f" ORDER BY f.file_name, "
+                    f"{', '.join('s.' + k for k in stat.key)}",
+                    (*columns, *chunk))
+        return [(fn, rg, col, row) for fn, rg, col, *row in rows]
 
     def snapshots_referencing(
         self, names, after: int

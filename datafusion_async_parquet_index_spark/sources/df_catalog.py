@@ -19,9 +19,10 @@ driver-local filter at test sizes), and it can live alongside the data
 with no extra infrastructure — the 100 TB story the reference gestures
 at with "remote Postgres".
 
-Backend protocol (duck-typed, shared with ``SqliteIndexCatalog``):
-``initialize / upsert_file / remove_file / get_files / all_files /
-row_group_count``.
+The sidecar statistics (blooms, sums, hists, ndv, dicts, topk, page
+stats) are described once in ``sources/sidecars.py``; this backend keeps
+their stored rows in one driver-side store and serves the same getters
+as the SQL backends.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql import types as T
 
 from ..plans.expr import Expr
 from .catalog import FileStats, RowGroupStats
+from .sidecars import STATISTICS, SidecarReads
 
 # type-category -> Spark type for {col}_min / {col}_max (unsigned ints
 # already widened by the "int" category; reference index.rs:396-415)
@@ -47,7 +49,7 @@ _SPARK_TYPE = {
 }
 
 
-class DataFrameIndexCatalog:
+class DataFrameIndexCatalog(SidecarReads):
     """Stats catalog held as a Spark DataFrame (optionally persisted to
     a Parquet path — the stats *table* of a lakehouse deployment)."""
 
@@ -58,16 +60,10 @@ class DataFrameIndexCatalog:
         # file_name -> (FileStats, [RowGroupStats]); the system of record
         # driver-side, mirrored into the DataFrame on demand
         self._files: Dict[str, Tuple[FileStats, List[RowGroupStats]]] = {}
-        # file_name -> {row_group: {column: (m, k, bits)}}
-        self._blooms: Dict[str, Dict[int, Dict[str, tuple]]] = {}
-        # file_name -> {row_group: {column: (sum, non_null_count)}}
-        self._sums: Dict[str, Dict[int, Dict[str, tuple]]] = {}
-        # file_name -> {row_group: {column: (lo, hi, nbins, counts)}}
-        self._hists: Dict[str, Dict[int, Dict[str, tuple]]] = {}
-        # file_name -> {row_group: {column: registers}}
-        self._ndvs: Dict[str, Dict[int, Dict[str, list]]] = {}
-        # file_name -> {row_group: {column: [(value, count), ...]}}
-        self._dicts: Dict[str, Dict[int, Dict[str, list]]] = {}
+        # statistic keyword -> file_name -> stored rows (row_group,
+        # column_name, *payload), encoded as in the SQL side tables
+        self._sidecars: Dict[str, Dict[str, list]] = {
+            stat.keyword: {} for stat in STATISTICS}
         # deletion vectors — same protocol as SqliteIndexCatalog:
         # file_name -> [(start, length), ...]; (file, rg) -> deleted n;
         # (file, rg, column) -> (sum, nonnull, sumsq|None) adjustments
@@ -96,10 +92,6 @@ class DataFrameIndexCatalog:
         # writer lease — same contract as SqliteIndexCatalog
         # .mutation_lease (held across a verb's CAS + mutation phase)
         self._writer_lease = __import__("threading").RLock()
-        # file_name -> {row_group: {column: (entries, rest, kth)}}
-        self._topks: Dict[str, Dict[int, Dict[str, tuple]]] = {}
-        # file_name -> {(row_group, column): [PageStats...]}
-        self._pages: Dict[str, dict] = {}
         self._df: Optional[DataFrame] = None  # invalidated on writes
 
     # -- DDL (reference index.rs:332-393) ------------------------------
@@ -132,41 +124,19 @@ class DataFrameIndexCatalog:
         pages=None,
     ) -> None:
         """Idempotent per file: replaces any previous stats for the same
-        file_name (the reference's ON CONFLICT + delete-then-insert).
-        blooms: {row_group: {column: (m, k, bits)}}, kept in the same
-        per-file store (at scale these are small binary columns in the
-        stats table itself).
-        sums: {row_group: {column: (sum, non_null_count)}}."""
+        file_name (the reference's ON CONFLICT + delete-then-insert),
+        sidecar payloads included — an omitted one is cleared."""
         prior = self._files.get(fs.file_name)
         self._files[fs.file_name] = (fs, list(rgs))
-        if blooms:
-            self._blooms[fs.file_name] = dict(blooms)
-        else:
-            self._blooms.pop(fs.file_name, None)
-        if sums:
-            self._sums[fs.file_name] = dict(sums)
-        else:
-            self._sums.pop(fs.file_name, None)
-        if hists:
-            self._hists[fs.file_name] = dict(hists)
-        else:
-            self._hists.pop(fs.file_name, None)
-        if ndvs:
-            self._ndvs[fs.file_name] = dict(ndvs)
-        else:
-            self._ndvs.pop(fs.file_name, None)
-        if dicts:
-            self._dicts[fs.file_name] = dict(dicts)
-        else:
-            self._dicts.pop(fs.file_name, None)
-        if topks:
-            self._topks[fs.file_name] = dict(topks)
-        else:
-            self._topks.pop(fs.file_name, None)
-        if pages:
-            self._pages[fs.file_name] = dict(pages)
-        else:
-            self._pages.pop(fs.file_name, None)
+        payloads = (blooms, sums, hists, ndvs, dicts, topks, pages)
+        for stat, payload in zip(STATISTICS, payloads):
+            store = self._sidecars[stat.keyword]
+            if payload:
+                # key order, as the SQL tables' primary key sorts
+                store[fs.file_name] = sorted(
+                    stat.rows(payload), key=lambda r: r[:len(stat.key)])
+            else:
+                store.pop(fs.file_name, None)
         # deletion vectors are DML state: they die only with CHANGED
         # bytes; a re-index of unchanged bytes (a full rebuild over a
         # persisted catalog) preserves them — the same size →
@@ -199,50 +169,20 @@ class DataFrameIndexCatalog:
     def remove_file(self, file_name: str) -> None:
         self._files.pop(file_name, None)
         self._drop_dv_state(file_name)
-        self._blooms.pop(file_name, None)
-        self._sums.pop(file_name, None)
-        self._hists.pop(file_name, None)
-        self._ndvs.pop(file_name, None)
-        self._dicts.pop(file_name, None)
-        self._topks.pop(file_name, None)
-        self._pages.pop(file_name, None)
+        for store in self._sidecars.values():
+            store.pop(file_name, None)
         self._df = None
 
-    def get_page_stats(self, file_names, columns):
-        """Same protocol as SqliteIndexCatalog.get_page_stats:
-        {(file_name, row_group, column): [(first_row, row_count, min,
-        max, null_page, null_count) ...]}."""
-        wanted_cols = set(columns)
-        out = {}
-        for fname in set(file_names):
-            for (rg, col), plist in self._pages.get(fname, {}).items():
-                if col not in wanted_cols:
-                    continue
-                out[(fname, rg, col)] = [
-                    (ps.first_row, ps.row_count, ps.min_value,
-                     ps.max_value, ps.null_page, ps.null_count)
-                    for ps in plist]
-        return out
-
-    def get_hists(self, column: str):
-        """{(file_name, row_group): (lo, hi, nbins, counts)} — same
-        protocol as SqliteIndexCatalog.get_hists."""
-        out = {}
-        for fname, per_rg in self._hists.items():
-            for rg, cols in per_rg.items():
-                if column in cols:
-                    out[(fname, rg)] = cols[column]
-        return out
-
-    def get_ndvs(self, column: str):
-        """{(file_name, row_group): registers} — same protocol as
-        SqliteIndexCatalog.get_ndvs."""
-        out = {}
-        for fname, per_rg in self._ndvs.items():
-            for rg, cols in per_rg.items():
-                if column in cols:
-                    out[(fname, rg)] = cols[column]
-        return out
+    def _sidecar_rows(self, stat, columns, file_names=None):
+        """SidecarReads' row source: the stored rows of the wanted
+        columns."""
+        store = self._sidecars[stat.keyword]
+        wanted = set(columns)
+        names = store if file_names is None else [
+            fn for fn in file_names if fn in store]
+        return [(fn, rg, col, row) for fn in names
+                for rg, col, *row in store[fn]
+                if col in wanted]
 
     def create_snapshot(self) -> int:
         """Same protocol as SqliteIndexCatalog.create_snapshot."""
@@ -342,49 +282,6 @@ class DataFrameIndexCatalog:
         return {fs.file_name: (fs.file_size_bytes, fs.mtime_ns,
                                fs.footer_md5)
                 for fs, _ in self._files.values()}
-
-    def get_topk(self, column: str):
-        """{(file_name, row_group): (entries, rest_rows, kth_count)} —
-        same protocol as SqliteIndexCatalog.get_topk."""
-        out = {}
-        for fname, per_rg in self._topks.items():
-            for rg, cols in per_rg.items():
-                if column in cols:
-                    entries, rest, kth = cols[column]
-                    out[(fname, rg)] = (
-                        [(v, int(c)) for v, c in entries],
-                        int(rest), int(kth))
-        return out
-
-    def get_dicts(self, column: str):
-        """{(file_name, row_group): [(value, count), ...]} — same
-        protocol as SqliteIndexCatalog.get_dicts."""
-        out = {}
-        for fname, per_rg in self._dicts.items():
-            for rg, cols in per_rg.items():
-                if column in cols:
-                    out[(fname, rg)] = [(v, int(c)) for v, c in cols[column]]
-        return out
-
-    def get_sums(self, column: str):
-        """{(file_name, row_group): (sum, non_null_count)} — same
-        protocol as SqliteIndexCatalog.get_sums."""
-        out = {}
-        for fname, per_rg in self._sums.items():
-            for rg, cols in per_rg.items():
-                if column in cols:
-                    out[(fname, rg)] = cols[column]
-        return out
-
-    def get_blooms(self, column: str):
-        """{(file_name, row_group): (m, k, bits)} — same protocol as
-        SqliteIndexCatalog.get_blooms."""
-        out = {}
-        for fname, per_rg in self._blooms.items():
-            for rg, cols in per_rg.items():
-                if column in cols:
-                    out[(fname, rg)] = cols[column]
-        return out
 
     # -- the stats table ------------------------------------------------
     def stats_df(self) -> DataFrame:

@@ -98,22 +98,6 @@ def anti_filter_positions(table, row_groups, metadata, ranges):
     return table
 
 
-def keep_row_ranges(table, row_groups, metadata, ranges_by_rg):
-    """Keep only rows whose ROW-GROUP-scoped position falls inside the
-    page-index tier's keep ranges ({row_group: [[start, end), ...]}).
-    Row groups absent from the map keep every row — the dual of
-    ``anti_filter_positions`` (keep-ranges instead of drop-ranges).
-    ``table`` must be the FULL read of ``row_groups``."""
-    import pyarrow as pa
-
-    if not ranges_by_rg or not table.num_rows:
-        return table
-    mask = _range_keep_mask(row_groups, metadata, ranges_by_rg)
-    if not mask.all():
-        table = table.filter(pa.array(mask))
-    return table
-
-
 class RowGroupInputPartition(InputPartition):
     def __init__(self, path: str, row_groups: List[int],
                  dv_ranges: Optional[Sequence[Tuple[int, int]]] = None,

@@ -26,7 +26,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from .catalog import FileStats, RowGroupStats, SqliteIndexCatalog
-from .page_index import extract_file_page_stats
+from .page_index import extract_file_page_stats  # noqa: F401 (PAGES' extractor)
+from .sidecars import STATISTICS
 
 # Arrow type -> index type-category. Mirrors the reference's supported set
 # (index.rs:396-415: all int widths, floats, Utf8, Binary) plus the
@@ -684,6 +685,24 @@ def typed_partition_values(
     return out
 
 
+def _extract_file(path: str, plan) -> tuple:
+    """build_index's unit of work, the same on the driver thread pool
+    and on Spark executors: one file's footer stats (plus NaN counts)
+    and every requested sidecar statistic, as an upsert_files item
+    (fs, rgs, *payloads in STATISTICS order). Extractors are looked up
+    as module globals at call time."""
+    schema, names, part_values, nan_cols, sidecar_args = plan
+    fs, rgs = extract_file_stats(path, schema, file_name=names[path],
+                                 partition_stats=part_values.get(path))
+    if nan_cols:
+        nans = extract_file_nan_counts(path, nan_cols)
+        for rg in rgs:
+            rg.nan_counts.update(nans.get(rg.row_group, {}))
+    return (fs, rgs) + tuple(
+        globals()[stat.extractor](path, *sidecar_args[stat.keyword])
+        if stat.keyword in sidecar_args else None for stat in STATISTICS)
+
+
 def build_index(
     catalog: SqliteIndexCatalog,
     files: Iterable[str],
@@ -782,36 +801,18 @@ def build_index(
             if cat == "string":
                 bloom_schema[f"{c}{TOKEN_BLOOM_SUFFIX}"] = "string"
 
-    sum_cols = tuple(sum_columns or ())
-    nan_cols = tuple(nan_count_columns or ())
-    hist_specs = dict(hist_columns or {})
-    ndv_cols = tuple(ndv_columns or ())
-    dict_cols = tuple(dict_columns or ())
-    topk_cols = tuple(topk_columns or ())
-    page_cols = tuple(page_index_columns or ())
-
-    def _apply_nans(p, rgs):
-        if nan_cols:
-            nans = extract_file_nan_counts(p, nan_cols)
-            for rg in rgs:
-                rg.nan_counts.update(nans.get(rg.row_group, {}))
-        return rgs
-
-    def _extract(p):
-        fs, rgs = extract_file_stats(
-            p, schema, file_name=_name(p), partition_stats=part_values.get(p))
-        blooms = (extract_file_blooms(p, bloom_schema, bloom_fpp)
-                  if bloom_schema else None)
-        sums = extract_file_sums(p, sum_cols) if sum_cols else None
-        hists = extract_file_hists(p, hist_specs) if hist_specs else None
-        ndvs = extract_file_ndv(p, ndv_cols) if ndv_cols else None
-        dicts = (extract_file_dicts(p, dict_cols, dict_max_values)
-                 if dict_cols else None)
-        topks = extract_file_topk(p, topk_cols, topk_k) if topk_cols else None
-        pages = (extract_file_page_stats(p, page_cols)
-                 if page_cols else None)
-        return (fs, _apply_nans(p, rgs), blooms, sums, hists, ndvs, dicts,
-                topks, pages)
+    # extractor arguments per requested sidecar statistic (a statistic
+    # whose column list is empty is not extracted)
+    sidecar_args = {
+        "blooms": (bloom_schema, bloom_fpp),
+        "sums": (tuple(sum_columns or ()),),
+        "hists": (dict(hist_columns or {}),),
+        "ndvs": (tuple(ndv_columns or ()),),
+        "dicts": (tuple(dict_columns or ()), dict_max_values),
+        "topks": (tuple(topk_columns or ()), topk_k),
+        "pages": (tuple(page_index_columns or ()),),
+    }
+    sidecar_args = {k: a for k, a in sidecar_args.items() if a[0]}
 
     if incremental:
         # change detection is (size, mtime_ns): a same-size rewrite
@@ -840,46 +841,21 @@ def build_index(
         if not files:
             return schema
 
+    plan = (schema, {p: _name(p) for p in files}, part_values,
+            tuple(nan_count_columns or ()), sidecar_args)
     if spark is not None and len(files) >= distributed_threshold:
-        sc = spark.sparkContext
-        schema_b = sc.broadcast(schema)
-        bloom_b = sc.broadcast(bloom_schema)
-        names = {p: _name(p) for p in files}
-        meta_b = sc.broadcast((names, part_values))
-
-        def _extract_dist(p, _s=schema_b, _bs=bloom_b, _m=meta_b,
-                          _fpp=bloom_fpp, _sc=sum_cols, _nc=nan_cols,
-                          _hs=hist_specs, _nd=ndv_cols, _dc=dict_cols,
-                          _dm=dict_max_values, _tc=topk_cols, _tk=topk_k,
-                          _pc=page_cols):
-            nm, pv = _m.value
-            fs, rgs = extract_file_stats(
-                p, _s.value, file_name=nm.get(p), partition_stats=pv.get(p))
-            blooms = (extract_file_blooms(p, _bs.value, _fpp)
-                      if _bs.value else None)
-            sums = extract_file_sums(p, _sc) if _sc else None
-            hists = extract_file_hists(p, _hs) if _hs else None
-            ndvs = extract_file_ndv(p, _nd) if _nd else None
-            dicts = extract_file_dicts(p, _dc, _dm) if _dc else None
-            topks = extract_file_topk(p, _tc, _tk) if _tc else None
-            pages = extract_file_page_stats(p, _pc) if _pc else None
-            if _nc:
-                nans = extract_file_nan_counts(p, _nc)
-                for rg in rgs:
-                    rg.nan_counts.update(nans.get(rg.row_group, {}))
-            return fs, rgs, blooms, sums, hists, ndvs, dicts, topks, pages
-
+        plan_b = spark.sparkContext.broadcast(plan)
         results = (
-            sc.parallelize(files, min(len(files), 256))
-            .map(_extract_dist)
+            spark.sparkContext.parallelize(files, min(len(files), 256))
+            .map(lambda p, _b=plan_b: _extract_file(p, _b.value))
             .collect()
         )
     elif len(files) > 1 and max_workers > 1:
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=min(max_workers, len(files))) as ex:
-            results = list(ex.map(_extract, files))
+            results = list(ex.map(lambda p: _extract_file(p, plan), files))
     else:
-        results = [_extract(p) for p in files]
+        results = [_extract_file(p, plan) for p in files]
     bulk = getattr(catalog, "upsert_files", None)
     if bulk is not None:
         # one transaction per 1000 files: the per-file commit was the
@@ -887,9 +863,8 @@ def build_index(
         # measured ~400 files/s through per-file upsert_file)
         bulk(results)
     else:
-        for (fs, rgs, blooms, sums, hists, ndvs, dicts, topks,
-             pages) in results:
-            catalog.upsert_file(fs, rgs, blooms=blooms, sums=sums,
-                                hists=hists, ndvs=ndvs, dicts=dicts,
-                                topks=topks, pages=pages)
+        for fs, rgs, *payloads in results:
+            catalog.upsert_file(fs, rgs, **{
+                stat.keyword: payload
+                for stat, payload in zip(STATISTICS, payloads)})
     return schema

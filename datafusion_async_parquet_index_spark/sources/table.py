@@ -347,7 +347,6 @@ class IndexedParquetTable:
         # index stores partition values in that same typed domain, so
         # catalog pruning and the residual filter agree by construction
         self._schema = self._infer_schema()
-        part_kw = self._partition_index_kwargs()
         # incremental_attach: re-attaching to a PERSISTED catalog (the
         # CLI's file-backed --catalog, a reopened SQLite path) — the
         # initial build uses the same size short-circuit as refresh(),
@@ -357,23 +356,28 @@ class IndexedParquetTable:
         # the catalog was built with — refresh() shares exactly this
         # contract; rebuild with incremental_attach=False to change
         # options.
-        self.index_schema = build_index(
-            self.catalog, self._files, index_columns, spark=spark,
-            incremental=bool(incremental_attach),
-            bloom_columns=self.bloom_columns,
-            token_bloom_columns=self.token_bloom_columns,
-            sum_columns=self.sum_columns,
-            nan_count_columns=self.nan_count_columns,
-            hist_columns=self.hist_columns,
-            ndv_columns=self.ndv_columns,
-            dict_columns=self.dict_columns,
-            dict_max_values=self.dict_max_values,
-            topk_columns=self.topk_columns,
-            topk_k=self.topk_k,
-            page_index_columns=self.page_index_columns, **part_kw)
+        self.index_schema = self._build_index(
+            index_columns, incremental=bool(incremental_attach))
         self._rewriter = PruningRewriter(self.index_schema)
         self.last_scan: Optional[ScanDecision] = None
         self.scan_history: List[ScanDecision] = []
+
+    # the table attributes that are build_index options of the same name
+    _INDEX_OPTIONS = (
+        "bloom_columns", "token_bloom_columns", "sum_columns",
+        "nan_count_columns", "hist_columns", "ndv_columns", "dict_columns",
+        "dict_max_values", "topk_columns", "topk_k", "page_index_columns")
+
+    def _build_index(self, index_columns, incremental: bool):
+        """The one build_index call of a table (constructor, refresh()
+        and queries' memoized tables). Options come from the table's
+        attributes; a partial table (test shims, the query memo) lacks
+        some and gets build_index's defaults for them."""
+        opts = {k: getattr(self, k) for k in self._INDEX_OPTIONS
+                if hasattr(self, k)}
+        return build_index(self.catalog, self._files, index_columns,
+                           spark=self.spark, incremental=incremental,
+                           **opts, **self._partition_index_kwargs())
 
     def _infer_schema(self):
         if not self._files:
@@ -520,31 +524,7 @@ class IndexedParquetTable:
             # just appeared — infer the schema now
             self._schema = self._infer_schema()
         requested = getattr(self, "_index_columns", None) or list(self.index_schema)
-        new_schema = build_index(self.catalog, self._files,
-                                 requested, spark=self.spark,
-                                 incremental=not full,
-                                 bloom_columns=getattr(self, "bloom_columns", ()),
-                                 token_bloom_columns=getattr(
-                                     self, "token_bloom_columns", ()),
-                                 sum_columns=getattr(self, "sum_columns", ()),
-                                 nan_count_columns=getattr(
-                                     self, "nan_count_columns", ()),
-                                 hist_columns=getattr(
-                                     self, "hist_columns", None),
-                                 ndv_columns=getattr(
-                                     self, "ndv_columns", ()),
-                                 dict_columns=getattr(
-                                     self, "dict_columns", ()),
-                                 dict_max_values=getattr(
-                                     self, "dict_max_values",
-                                     _stats.DICT_MAX_VALUES),
-                                 topk_columns=getattr(
-                                     self, "topk_columns", ()),
-                                 topk_k=getattr(self, "topk_k",
-                                                _stats.TOPK_K),
-                                 page_index_columns=getattr(
-                                     self, "page_index_columns", ()),
-                                 **self._partition_index_kwargs())
+        new_schema = self._build_index(requested, incremental=not full)
         self._nan_free_cache = {}
         # a changed file's upsert cleared its deletion vector; removed
         # files dropped theirs — re-read DV state lazily

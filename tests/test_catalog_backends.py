@@ -268,8 +268,9 @@ def test_rowgroups_mode_prunes_columns(spark, corpus):
 def test_distributed_build_matches_threaded(spark, tmp_path):
     """The executor-fanned footer extraction (>= distributed_threshold
     files, the 100 TB posture) must produce the identical catalog to
-    the driver thread-pool path — stats, blooms, and partition values
-    all ride the broadcast."""
+    the driver thread-pool path — stats, partition values, NaN counts
+    and every sidecar statistic all ride the same per-file
+    extraction."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -285,10 +286,14 @@ def test_distributed_build_matches_threaded(spark, tmp_path):
         ids = list(range(f * 10, f * 10 + 10))
         tbl = pa.table({
             "v": pa.array(ids, pa.int64()),
-            "body": pa.array([f"alpha w{f} row{i}" for i in ids],
+            "body": pa.array([f"alpha w{f} row{i % 3}" for i in ids],
                              pa.string()),
+            "x": pa.array([float("nan") if i % 7 == 0 else i / 2
+                           for i in ids], pa.float64()),
         })
-        pq.write_table(tbl, str(sub / f"data-{f}.parquet"))
+        pq.write_table(tbl, str(sub / f"data-{f}.parquet"),
+                       row_group_size=5, data_page_size=16,
+                       write_page_index=True)
     files = list_parquet_files(str(d), recursive=True)
     assert len(files) == n_files
     pvals = {p: {"part": int(p.split("part=")[1].split("/")[0])}
@@ -296,9 +301,14 @@ def test_distributed_build_matches_threaded(spark, tmp_path):
 
     def build(use_spark):
         cat = SqliteIndexCatalog()
-        build_index(cat, files, ["v"],
+        build_index(cat, files, ["v", "x"],
                     spark=use_spark, distributed_threshold=64,
                     bloom_columns=["v"], token_bloom_columns=["body"],
+                    sum_columns=["v"], nan_count_columns=["x"],
+                    hist_columns={"v": (0, 679, 8)},
+                    ndv_columns=["v", "body"], dict_columns=["body"],
+                    topk_columns=["body"], topk_k=2,
+                    page_index_columns=["v"],
                     rel_to=str(d),
                     partition_schema={"part": "int"},
                     partition_values=pvals)
@@ -316,10 +326,23 @@ def test_distributed_build_matches_threaded(spark, tmp_path):
                  (col("part") == 1) & (col("v") > 400)]:
         sp = rw.rewrite(pred)
         assert sorted(threaded.get_files(sp)) == sorted(dist.get_files(sp))
-    a = threaded.get_blooms("body#tokens")
-    b = dist.get_blooms("body#tokens")
-    assert a.keys() == b.keys() and len(a) == n_files
-    assert all(a[k] == b[k] for k in a)
+    for c in ("v", "x", "part"):
+        assert threaded.column_rg_entries_keyed(c) == \
+            dist.column_rg_entries_keyed(c), c
+    assert threaded.column_nan_total("x") == dist.column_nan_total("x") \
+        == sum(1 for i in range(n_files * 10) if i % 7 == 0)
+    names = [f for f, *_ in threaded.all_files()]
+    pages = threaded.get_page_stats(names, ["v"])
+    assert len(pages) == n_files * 2  # every row group has a page index
+    assert pages == dist.get_page_stats(names, ["v"])
+    getters = [("get_blooms", "v"), ("get_blooms", "body#tokens"),
+               ("get_sums", "v"), ("get_hists", "v"), ("get_ndvs", "v"),
+               ("get_ndvs", "body"), ("get_dicts", "body"),
+               ("get_topk", "body")]
+    for getter, c in getters:
+        a = getattr(threaded, getter)(c)
+        assert len(a) == n_files * 2, (getter, c)
+        assert a == getattr(dist, getter)(c), (getter, c)
 
 
 # -- remote-style DB-API backend (reference main.rs:89-90) -------------
@@ -573,6 +596,132 @@ def test_ndv_store_round_trips_on_all_backends():
     check(SqliteIndexCatalog())
     check(_dbapi_qmark())
     check(_dbapi_format())
+
+
+def _sidecar_samples():
+    """One upsert payload per sidecar statistic, keyed by its
+    upsert_file keyword; each spans two row groups and two columns
+    (``w`` only in row group 0 or 1) so the getters' column filter and
+    row-group keying are both exercised."""
+    from datafusion_async_parquet_index_spark.sources.page_index import (
+        PageStats,
+    )
+
+    big = 2 ** 70
+    return {
+        "blooms": {0: {"v": (64, 3, b"\x01\x02\x03\x04" * 2)},
+                   1: {"v": (128, 2, bytes(16)),
+                       "w": (64, 1, b"\xff" * 8)}},
+        "sums": {0: {"v": (10, 4, 30)},
+                 1: {"v": (2 ** 62, 3, 2 ** 130), "w": (-5, 2, None)}},
+        "hists": {0: {"v": (0, 99, 4, [10, 20, 15, 5]),
+                      "w": (big, big + 99, 2, [30, 20])},
+                  1: {"v": (0, 99, 4, [1, 2, 3, 44])}},
+        "ndvs": {0: {"v": [0, 5] + [0] * 60 + [12, 1], "w": [1] * 64},
+                 1: {"v": [7] + [0] * 63}},
+        "dicts": {0: {"v": [(1, 20), (2, 30)], "w": [("a", 7), ("b", 3)]},
+                  1: {"v": [(-3, 50)]}},
+        "topks": {0: {"v": ([(2, 30), (1, 20)], 0, 0),
+                      "w": ([("a", 7)], 3, 7)},
+                  1: {"v": ([(-3, 45)], 5, 45)}},
+        "pages": {(0, "v"): [PageStats(0, 0, 25, 1, 9, False, 0),
+                             PageStats(1, 25, 25, 10, 19, False, 2)],
+                  (1, "v"): [PageStats(0, 0, 50, None, None, True, 50)],
+                  (0, "w"): [PageStats(0, 0, 50, "a", "m", False, None)]},
+    }
+
+
+_SIDECAR_GETTERS = {"blooms": "get_blooms", "sums": "get_sums",
+                    "hists": "get_hists", "ndvs": "get_ndvs",
+                    "dicts": "get_dicts", "topks": "get_topk",
+                    "pages": "get_page_stats"}
+
+
+def _sidecar_read(cat, kind, column):
+    if kind == "pages":
+        return cat.get_page_stats(["f.parquet"], [column])
+    return getattr(cat, _SIDECAR_GETTERS[kind])(column)
+
+
+def _sidecar_expected(kind, payload, column):
+    if kind == "pages":
+        return {("f.parquet", rg, c): [
+                    (p.first_row, p.row_count, p.min_value, p.max_value,
+                     p.null_page, p.null_count) for p in plist]
+                for (rg, c), plist in payload.items() if c == column}
+    return {("f.parquet", rg): cols[column]
+            for rg, cols in payload.items() if column in cols}
+
+
+_SIDECAR_BACKENDS = {
+    "sqlite": lambda: SqliteIndexCatalog(),
+    "dbapi_qmark": lambda: _dbapi_qmark(),
+    "dbapi_format": lambda: _dbapi_format(),
+    # no session needed: the sidecar store is driver-side
+    "df": lambda: DataFrameIndexCatalog(None),
+}
+
+
+@pytest.mark.parametrize("backend", sorted(_SIDECAR_BACKENDS))
+@pytest.mark.parametrize("kind", sorted(_SIDECAR_GETTERS))
+def test_sidecar_round_trip(kind, backend):
+    """Every sidecar statistic on every backend: the public getter
+    returns exactly what upsert_file stored, a re-upsert without that
+    keyword clears it (leaving the other statistics in place), and
+    remove_file clears it."""
+    from datafusion_async_parquet_index_spark.sources.catalog import (
+        FileStats, RowGroupStats,
+    )
+
+    samples = _sidecar_samples()
+    other = next(k for k in sorted(samples) if k != kind)
+    fs = FileStats("f.parquet", 10, 2, 100)
+    rgs = [RowGroupStats(row_group=0, row_count=50),
+           RowGroupStats(row_group=1, row_count=50)]
+    cat = _SIDECAR_BACKENDS[backend]()
+    cat.initialize({"v": "int", "w": "string"})
+    cat.upsert_file(fs, rgs, **samples)
+    for column in ("v", "w"):
+        assert _sidecar_read(cat, kind, column) == \
+            _sidecar_expected(kind, samples[kind], column), column
+    cat.upsert_file(fs, rgs, **{k: v for k, v in samples.items()
+                                if k != kind})
+    assert _sidecar_read(cat, kind, "v") == {}
+    assert _sidecar_read(cat, kind, "w") == {}
+    assert _sidecar_read(cat, other, "v") == \
+        _sidecar_expected(other, samples[other], "v")
+    cat.upsert_file(fs, rgs, **samples)
+    cat.remove_file("f.parquet")
+    assert _sidecar_read(cat, kind, "v") == {}
+    assert _sidecar_read(cat, kind, "w") == {}
+
+
+def test_sums_table_without_sumsq_migrates(tmp_path):
+    """A catalog persisted before the second-moment column keeps
+    opening: initialize adds sumsq_value, and the old rows read back
+    with an unknown (None) sum of squares."""
+    from datafusion_async_parquet_index_spark.sources.catalog import (
+        FileStats, RowGroupStats,
+    )
+
+    db = str(tmp_path / "legacy.db")
+    cat = SqliteIndexCatalog(db)
+    cat.initialize({"v": "int"})
+    cat.upsert_file(FileStats("f.parquet", 10, 1, 50),
+                    [RowGroupStats(row_group=0, row_count=50)])
+    cat._exec("DROP TABLE row_group_sums")
+    cat._exec("""CREATE TABLE row_group_sums (
+                   file_id INTEGER NOT NULL, row_group INTEGER NOT NULL,
+                   column_name TEXT NOT NULL, sum_value INTEGER NOT NULL,
+                   value_count INTEGER NOT NULL,
+                   PRIMARY KEY (file_id, row_group, column_name))""")
+    cat._exec("INSERT INTO row_group_sums VALUES (1, 0, 'v', 45, 50)")
+    cat._conn.commit()
+    cat.close()
+    cat = SqliteIndexCatalog(db)
+    cat.initialize({"v": "int"})
+    assert "sumsq_value" in cat._existing_columns("row_group_sums")
+    assert cat.get_sums("v") == {("f.parquet", 0): (45, 50, None)}
 
 
 def test_ndv_estimate_folds_and_degrades(tmp_path, spark):

@@ -145,3 +145,24 @@ def test_collapse_stat_rederived_on_corpus_regeneration(spark, tmp_path):
                os.path.join(d, "documents.parquet"))
     shutil.rmtree(d + "_tmp")
     assert D._corpus_collapse(spark, d, "text") == 1.0
+
+
+def test_cluster_stats_all_unique_corpus(spark, tmp_path):
+    """A corpus without a single near-duplicate pair has no clusters:
+    the audit histogram is the one size-1 row holding every document
+    with nothing removable — counts, never NULLs."""
+    import shutil
+
+    d = str(tmp_path / "uniq")
+    os.makedirs(d)
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{k}" for k in range(30))) for i in range(40)],
+        "doc_id LONG, text STRING")
+    docs.coalesce(1).write.mode("overwrite").parquet(d + "_tmp")
+    part = next(f for f in sorted(os.listdir(d + "_tmp"))
+                if f.endswith(".parquet"))
+    os.replace(os.path.join(d + "_tmp", part),
+               os.path.join(d, "documents.parquet"))
+    shutil.rmtree(d + "_tmp")
+    rows = D.dedup_cluster_stats(spark, d).collect()
+    assert [tuple(r) for r in rows] == [(1, 40, 40, 0)]

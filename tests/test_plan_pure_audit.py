@@ -51,11 +51,14 @@ class _Recorder:
         self._saved: list[tuple] = []
 
     def _wrap(self, owner, meth: str):
+        label = f"{owner.__name__}.{meth}"
         orig = owner.__dict__.get(meth)
         if orig is None:
-            return
+            # a renamed or moved method would silently drop out of the
+            # audit; refuse instead
+            raise AttributeError(
+                f"{label} is listed for the audit but not defined there")
         rec = self.calls
-        label = f"{owner.__name__}.{meth}"
 
         def spy(*a, **kw):
             rec.append(label)
@@ -72,13 +75,17 @@ class _Recorder:
             IndexedParquetTable,
         )
 
-        for m in _DF_ACTIONS:
-            self._wrap(DataFrame, m)
-        for m in _WRITER_SINKS:
-            self._wrap(DataFrameWriter, m)
-        self._wrap(SparkSession, "createDataFrame")
-        for m in _TABLE_MUTATORS:
-            self._wrap(IndexedParquetTable, m)
+        try:
+            for m in _DF_ACTIONS:
+                self._wrap(DataFrame, m)
+            for m in _WRITER_SINKS:
+                self._wrap(DataFrameWriter, m)
+            self._wrap(SparkSession, "createDataFrame")
+            for m in _TABLE_MUTATORS:
+                self._wrap(IndexedParquetTable, m)
+        except BaseException:
+            self.__exit__()
+            raise
         return self
 
     def __exit__(self, *exc):
@@ -119,3 +126,19 @@ def test_plan_pure_allowlist_is_pure_on_warm_reentry(spark):
         "queries in _PLAN_PURE performed actions/sinks/mutations on a "
         f"warm re-entry (remove them from the allowlist or fix them): "
         f"{offenders}")
+
+
+def test_recorder_refuses_missing_method():
+    """A listed method that does not exist fails the audit by name
+    instead of silently dropping out of it."""
+
+    class Owner:
+        def present(self):
+            pass
+
+    rec = _Recorder()
+    rec._wrap(Owner, "present")
+    with pytest.raises(AttributeError, match=r"Owner\.absent"):
+        rec._wrap(Owner, "absent")
+    rec.__exit__()
+    assert Owner.__dict__["present"].__name__ == "present"
