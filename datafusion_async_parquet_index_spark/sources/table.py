@@ -240,7 +240,12 @@ class ScanDecision:
         return "\n".join(lines)
 
 
-class IndexedParquetTable:
+# imported here, below ScanDecision and STATS_EXACT_MAX_BYTES, which
+# the answers module reads back from this one
+from .answers import CatalogAnswers  # noqa: E402
+
+
+class IndexedParquetTable(CatalogAnswers):
     """A directory of Parquet files exposed as one queryable table with an
     external statistics index."""
 
@@ -2928,365 +2933,7 @@ class IndexedParquetTable:
         self.last_local_read = {"engaged": True, "demoted": None}
         return out
 
-    # -- metadata-only answers ----------------------------------------
-    def count_rows(self, predicate: Optional[Expr] = None,
-                   as_of: Optional[int] = None) -> int:
-        """Exact row count with COUNT PUSHDOWN into the catalog:
-
-        - no predicate: the sum of catalog row_counts — zero Parquet
-          I/O (the stats ARE the aggregate, reference index.rs:198-205);
-        - refuted predicate: 0 straight from the empty access plan
-          (reference README.md:70);
-        - otherwise BOTH rewrites run: refutation gives the candidate
-          row groups, the satisfaction rewrite (PruningRewriter
-          .satisfies — the sound under-approximation dual) proves which
-          candidates match on EVERY row. Proven-full groups contribute
-          their catalog row_count unread; only the boundary groups
-          (candidates minus proven-full) are scanned, through the exact
-          row-group reader, reading only the predicate's columns. At
-          100 TB a time-range count reads the two boundary row groups
-          instead of the range.
-
-        ``last_count_pushdown`` records {full_row_groups, full_rows,
-        partial_row_groups} for observability/tests. Partitioned
-        layouts fall back to pruned-scan counting (the row-group reader
-        cannot surface partition columns).
-
-        as_of: answer as of a snapshot() — the count folds from the
-        snapshot's file set only (still zero Parquet I/O when
-        unpredicated: time-travel aggregates are catalog arithmetic
-        too)."""
-        if predicate is None:
-            if as_of is None:
-                deleted = self.catalog.dv_deleted_rows()
-                return (sum(f[3] for f in self.catalog.all_files())
-                        - sum(deleted.values()))
-            snap = self._snapshot_guard(as_of)
-            # era-correct: the snapshot's RECORDED deletions, not the
-            # live ones — deletes after the snapshot are invisible
-            deleted = self.catalog.dv_deleted_rows(as_of=as_of)
-            return sum(f[3] - deleted.get(f[0], 0)
-                       for f in self.catalog.all_files() if f[0] in snap)
-        decision = self.plan_scan(predicate, as_of=as_of)
-        if not decision.files_scanned:
-            self.last_count_pushdown = {
-                "full_row_groups": 0, "full_rows": 0,
-                "partial_row_groups": 0}
-            return 0
-        if getattr(self, "partitioned", False):
-            self.last_count_pushdown = None
-            return self.query(predicate, as_of=as_of).count()
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        dv_rg = self.catalog.dv_rg_deleted(as_of=as_of) \
-            if (self._dvs() or as_of is not None) else {}
-        full_rows = 0
-        full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            counts = self.catalog.row_group_row_counts(fname)
-            frg = set(full.get(fname, ()))
-            rest = [rg for rg in rgs if rg not in frg]
-            hit = [rg for rg in rgs if rg in frg]
-            # a satisfaction-proven group under deletes: every LIVE row
-            # still satisfies (the proof covers all rows), so the live
-            # contribution is row_count minus the recorded deletions
-            full_rows += sum(counts[rg] - dv_rg.get((fname, rg), 0)
-                             for rg in hit)
-            full_rgs += len(hit)
-            if rest:
-                partial[fname] = rest
-        self.last_count_pushdown = {
-            "full_row_groups": full_rgs, "full_rows": full_rows,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if not partial:
-            return full_rows
-        partial_decision = ScanDecision(
-            decision.predicate, partial, decision.total_files,
-            decision.total_row_groups)
-        cols = sorted(predicate.columns())
-        # boundary groups WITH deletions scan live-only: the exact
-        # reader anti-filters the era's positions, so the boundary
-        # term is a plain count — no full-scan demotion needed
-        dvs = self._boundary_dvs(partial, dv_rg, as_of)
-        df = self._read_rowgroups(partial_decision, predicate,
-                                  columns=cols or None, dvs=dvs,
-                                  as_of=as_of,
-                                  local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
-        return full_rows + df.filter(predicate.to_spark()).count()
-
-    def _sum_decoder(self, column: str):
-        """Stored catalog sums are raw ints for integer columns and
-        UNSCALED ints for decimal columns (lossless); this returns the
-        store->domain conversion for the column."""
-        from pyspark.sql import types as T
-
-        f = next((f for f in (self._schema.fields if self._schema else [])
-                  if f.name == column), None)
-        if f is not None and isinstance(f.dataType, T.DecimalType):
-            import decimal as _dec
-            scale = f.dataType.scale
-            return lambda s: _dec.Decimal(s).scaleb(-scale)
-        return lambda s: s
-
-    def sum_rows(self, column: str, predicate: Optional[Expr] = None,
-                 as_of: Optional[int] = None):
-        """(sum, non_null_count) of an integer or decimal column over
-        matching rows, pushed into the catalog the same way count_rows
-        is: the opt-in per-row-group sums (``sum_columns=[...]`` at
-        construction; exact integer arithmetic end to end — decimal
-        sums ride as unscaled ints and rescale on readout) answer
-        every satisfaction-proven row group unread, and only the
-        boundary groups scan — SUM over a sorted time/key range reads
-        two row groups at any corpus size, and the no-predicate total
-        is pure catalog arithmetic. A candidate group without a stored
-        sum entry simply demotes to the scanned set, so partial sum
-        coverage degrades to correctness, never to a wrong answer.
-        SQL semantics: NULLs are ignored; (None, 0) when no row
-        matches. Falls back to a full aggregate when the column has no
-        sums at all or the layout is partitioned."""
-        from pyspark.sql import functions as F
-
-        sums = self.catalog.get_sums(column)
-        decode = self._sum_decoder(column)
-
-        def _scan_agg(df) -> tuple:
-            row = df.agg(
-                F.sum(F.col(column)).alias("s"),
-                F.count(F.col(column)).alias("n")).head()
-            return row["s"], row["n"]
-
-        if not sums or getattr(self, "partitioned", False):
-            self.last_sum_pushdown = None
-            return _scan_agg(self.query(predicate, as_of=as_of))
-        dv_adj = (self.catalog.dv_sum_adjustments(column, as_of=as_of)
-                  if (self._dvs() or as_of is not None) else {})
-        dv_rg = (self.catalog.dv_rg_deleted(as_of=as_of)
-                 if (self._dvs() or as_of is not None) else {})
-        if predicate is None:
-            indexed = {f[0]: f[2] for f in self.catalog.all_files()}
-            if as_of is not None:
-                # time-travel aggregate: fold only the snapshot's files
-                snap = self._snapshot_guard(as_of)
-                indexed = {fn: c for fn, c in indexed.items() if fn in snap}
-            # a group with recorded deletions (dv_rg_adjust) but no
-            # recorded sum adjustment for THIS column — deletes issued
-            # by a session that tracked different/empty sum_columns —
-            # cannot be repaired by subtraction; the zero default would
-            # silently return the pre-delete sum. Demote to a scan.
-            if (all((fn, rg) in sums
-                    for fn, n in indexed.items() for rg in range(n))
-                    and all(k in dv_adj
-                            for k in dv_rg if k[0] in indexed)):
-                keys = [(fn, rg)
-                        for fn, n in indexed.items() for rg in range(n)]
-                s = sum(sums[k][0] - dv_adj.get(k, (0, 0, None))[0]
-                        for k in keys)
-                n = sum(sums[k][1] - dv_adj.get(k, (0, 0, None))[1]
-                        for k in keys)
-                self.last_sum_pushdown = {
-                    "full_row_groups": len(keys), "full_sum": s,
-                    "partial_row_groups": 0}
-                return (decode(s) if n else None), n
-            self.last_sum_pushdown = None
-            return _scan_agg(self.query(None, as_of=as_of))
-        decision = self.plan_scan(predicate, as_of=as_of)
-        if not decision.files_scanned:
-            self.last_sum_pushdown = {
-                "full_row_groups": 0, "full_sum": 0,
-                "partial_row_groups": 0}
-            return None, 0
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        s_full = 0
-        n_full = 0
-        full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            frg = set(full.get(fname, ()))
-            rest = []
-            for rg in rgs:
-                entry = sums.get((fname, rg))
-                k = (fname, rg)
-                if (rg in frg and entry is not None
-                        and (k not in dv_rg or k in dv_adj)):
-                    # proven-full group: every live row satisfies, so
-                    # the live sum is the stored sum minus the deleted
-                    # rows' recorded contribution. A group with
-                    # recorded deletions but no adjustment for this
-                    # column demotes to the scanned set instead.
-                    adj = dv_adj.get(k, (0, 0, None))
-                    s_full += entry[0] - adj[0]
-                    n_full += entry[1] - adj[1]
-                    full_rgs += 1
-                else:
-                    rest.append(rg)
-            if rest:
-                partial[fname] = rest
-        self.last_sum_pushdown = {
-            "full_row_groups": full_rgs, "full_sum": s_full,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if not partial:
-            return (decode(s_full) if n_full else None), n_full
-        partial_decision = ScanDecision(
-            decision.predicate, partial, decision.total_files,
-            decision.total_row_groups)
-        cols = sorted(predicate.columns() | {column})
-        # DV'd boundary groups scan live-only through the exact reader
-        dvs_b = self._boundary_dvs(partial, dv_rg, as_of)
-        df = self._read_rowgroups(partial_decision, predicate, columns=cols,
-                                  dvs=dvs_b, as_of=as_of,
-                                  local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
-        s_part, n_part = _scan_agg(df.filter(predicate.to_spark()))
-        n = n_full + n_part
-        s = (decode(s_full) + (s_part or 0)) if n else None
-        return s, n
-
-    def sum_sq_rows(self, column: str, predicate: Optional[Expr] = None):
-        """(sum, sum_of_squares, non_null_count) of an integer column
-        over matching rows — the VAR/STDDEV pushdown: the catalog's
-        per-row-group second moments (recorded by the same opt-in
-        ``sum_columns`` page scan that records sums) answer every
-        satisfaction-proven row group unread, exactly like sum_rows;
-        only boundary groups scan. From the exact integer triple the
-        caller derives VAR_POP = (n·Σx² − (Σx)²)/n² and VAR_SAMP /
-        STDDEV without ever touching Parquet for interior groups — at
-        100 TB a variance over a sorted key range reads two row groups.
-
-        All arithmetic is exact: catalog moments are Python ints
-        (sumsq rides as TEXT in SQLite since Σx² routinely exceeds
-        int64), and the boundary scan accumulates Σx² in DECIMAL(38,0)
-        so Spark cannot overflow a long. Groups whose stored entry
-        lacks a second moment (decimal columns, pre-extension rows)
-        demote to the scanned set — partial coverage degrades to
-        correctness. Falls back to a full aggregate when the column
-        has no sums at all or the layout is partitioned (same contract
-        as sum_rows). ``last_var_pushdown`` records the shape.
-        SQL semantics: NULLs ignored; (None, None, 0) when no row
-        matches."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        f = next((f for f in (self._schema.fields if self._schema else [])
-                  if f.name == column), None)
-        if f is not None and not isinstance(
-                f.dataType, (T.ByteType, T.ShortType, T.IntegerType,
-                             T.LongType)):
-            # the decimal(38,0) Σx² accumulator below would truncate
-            # fractional values; second moments are integer-only
-            raise TypeError(
-                f"sum_sq_rows supports integer columns only, "
-                f"{column} is {f.dataType.simpleString()}")
-
-        sums = self.catalog.get_sums(column)
-
-        def _scan_agg(df) -> tuple:
-            c = F.col(column)
-            row = df.agg(
-                F.sum(c).alias("s"),
-                F.sum(c.cast("decimal(38,0)") * c).alias("sq"),
-                F.count(c).alias("n")).head()
-            sq = None if row["sq"] is None else int(row["sq"])
-            return row["s"], sq, row["n"]
-
-        def _usable(entry) -> bool:
-            return len(entry) > 2 and entry[2] is not None
-
-        if (not any(_usable(e) for e in sums.values())
-                or getattr(self, "partitioned", False)):
-            self.last_var_pushdown = None
-            df = self.query(None) if predicate is None \
-                else self.query(predicate)
-            return _scan_agg(df)
-        dv_adj = (self.catalog.dv_sum_adjustments(column)
-                  if self._dvs() else {})
-        dv_rg = self.catalog.dv_rg_deleted() if self._dvs() else {}
-
-        def _adj_ok(key) -> bool:
-            # a deleted-rows adjustment without a recorded second moment
-            # cannot repair the stored sumsq, and a group with recorded
-            # deletions (dv_rg_adjust) but NO adjustment for this
-            # column (deletes issued under different/empty sum_columns)
-            # would silently keep the pre-delete sums — demote both
-            a = dv_adj.get(key)
-            if a is None:
-                return key not in dv_rg
-            return a[2] is not None
-
-        if predicate is None:
-            indexed = {f[0]: f[2] for f in self.catalog.all_files()}
-            if all(_usable(sums.get((fn, rg), ())) and _adj_ok((fn, rg))
-                   for fn, n in indexed.items() for rg in range(n)):
-                s = sum(v[0] for v in sums.values())
-                sq = sum(v[2] for v in sums.values())
-                n = sum(v[1] for v in sums.values())
-                for a_s, a_n, a_sq in dv_adj.values():
-                    s -= a_s
-                    n -= a_n
-                    sq -= a_sq or 0
-                self.last_var_pushdown = {
-                    "full_row_groups": len(sums), "partial_row_groups": 0}
-                return ((s, sq, n) if n else (None, None, 0))
-            self.last_var_pushdown = None
-            return _scan_agg(self.query(None))
-        decision = self.plan_scan(predicate)
-        if not decision.files_scanned:
-            self.last_var_pushdown = {
-                "full_row_groups": 0, "partial_row_groups": 0}
-            return None, None, 0
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        s_full = sq_full = n_full = full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            frg = set(full.get(fname, ()))
-            rest = []
-            for rg in rgs:
-                entry = sums.get((fname, rg))
-                if (rg in frg and entry is not None and _usable(entry)
-                        and _adj_ok((fname, rg))):
-                    adj = dv_adj.get((fname, rg), (0, 0, 0))
-                    s_full += entry[0] - adj[0]
-                    n_full += entry[1] - adj[1]
-                    sq_full += entry[2] - (adj[2] or 0)
-                    full_rgs += 1
-                else:
-                    rest.append(rg)
-            if rest:
-                partial[fname] = rest
-        self.last_var_pushdown = {
-            "full_row_groups": full_rgs,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if not partial:
-            return ((s_full, sq_full, n_full) if n_full else (None, None, 0))
-        partial_decision = ScanDecision(
-            decision.predicate, partial, decision.total_files,
-            decision.total_row_groups)
-        cols = sorted(predicate.columns() | {column})
-        # DV'd boundary groups scan live-only through the exact reader
-        dvs_b = self._boundary_dvs(partial, dv_rg)
-        df = self._read_rowgroups(partial_decision, predicate, columns=cols,
-                                  dvs=dvs_b,
-                                  local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
-        s_p, sq_p, n_p = _scan_agg(df.filter(predicate.to_spark()))
-        n = n_full + n_p
-        if not n:
-            return None, None, 0
-        return s_full + (s_p or 0), sq_full + (sq_p or 0), n
-
-    def count_upper_bound(self, predicate: Optional[Expr] = None) -> int:
-        """Catalog-only upper bound: total rows in surviving row groups.
-        Never touches Parquet; useful for planning (e.g. choosing
-        broadcast vs shuffle before reading)."""
-        if predicate is None:
-            return sum(f[3] for f in self.catalog.all_files())
-        decision = self.plan_scan(predicate)
-        total = 0
-        for file_name, rgs in decision.files_scanned.items():
-            counts = self.catalog.row_group_row_counts(file_name)
-            total += sum(counts[rg] for rg in rgs)
-        return total
-
+    # -- catalog-planned joins -----------------------------------------
     def query_join_pruned(
         self,
         key_column: str,
@@ -3386,627 +3033,6 @@ class IndexedParquetTable:
         side = F.broadcast(df) if strategy == "broadcast" else df
         return side.join(other_df,
                          side[key_column] == other_df[other_key])
-
-    def _bound_is_exact(self, column: str, value) -> bool:
-        """Whether a catalog min/max value can be trusted as the ACTUAL
-        attained value (not just a valid bound). int / date / timestamp
-        stats and partition-derived values are exact. Not trusted:
-        decimal (ulp-widened doubles by design), float UNLESS the column
-        is proven NaN-free via the opt-in NaN counts (Parquet writers
-        EXCLUDE NaN from min/max while Spark/DuckDB order NaN above
-        every value, so the true attained max may be an invisible NaN),
-        and string/binary bounds at or past the truncation threshold
-        (see ``stats_exact_max_bytes``)."""
-        cat = self.index_schema.get(column)
-        if cat == "decimal":
-            # the catalog readouts surface EXACT Decimal bounds (decoded
-            # from unscaled-int footer storage) when recorded; a float
-            # here is a widened pruning bound and never trusted
-            import decimal as _dec
-            return value is None or isinstance(value, _dec.Decimal)
-        if cat == "float":
-            return self._column_nan_free(column)
-        if cat not in ("string", "binary"):
-            return True
-        if column in getattr(self, "_partition_cols", ()):
-            return True
-        if value is None:
-            return True
-        raw = value.encode("utf-8") if isinstance(value, str) else value
-        return len(raw) < getattr(self, "stats_exact_max_bytes",
-                                  STATS_EXACT_MAX_BYTES)
-
-    def _column_nan_free(self, column: str) -> bool:
-        """True when every row group's opt-in NaN count is recorded and
-        zero (cached per column; invalidated by refresh())."""
-        cache = getattr(self, "_nan_free_cache", None)
-        if cache is None:
-            cache = self._nan_free_cache = {}
-        if column not in cache:
-            try:
-                total = self.catalog.column_nan_total(column)
-            except (KeyError, AttributeError):
-                total = None
-            cache[column] = total == 0
-        return cache[column]
-
-    def count_rows_by(self, column: str):
-        """Zero-I/O GROUP BY COUNT: {value: row_count} answered from the
-        catalog alone when EVERY row group is single-valued on the
-        column (min == max, no nulls, stats present) — always true for
-        partition columns, whose value is injected as a degenerate
-        min=max stat, and for any column the layout writer clustered
-        perfectly. Returns None when any row group is not single-valued
-        (caller falls back to a scan aggregate), or when a string bound
-        is long enough to be a truncated footer stat (min == max would
-        then not prove single-valuedness — two distinct long values can
-        share a truncated prefix). Values are returned in the data's
-        domain (the catalog decodes its storage encoding). At 100 TB
-        this is an O(catalog) driver-side fold — no executor starts."""
-        self._dv_guard("count_rows_by")
-        try:
-            entries = self.catalog.column_rg_entries(column)
-        except KeyError:
-            return None
-        out: Dict = {}
-        for nc, lo, hi, rc in entries:
-            if lo is None or lo != hi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(column, lo):
-                return None
-            out[lo] = out.get(lo, 0) + rc
-        return out
-
-    def sum_rows_by(self, group_column: str, sum_column: str):
-        """Zero-I/O GROUP BY SUM: {group value: (sum, non_null_count)}
-        answered from the catalog alone when EVERY row group is
-        single-valued on the group column (partition columns, perfectly
-        clustered layouts) AND carries a stored sum for the measure —
-        the grouped generalization of sum_rows' no-predicate total, and
-        the aggregate-table readout that otherwise needs a materialized
-        view. Returns None when any row group fails either condition
-        (caller falls back to a scan aggregate); the trust rules match
-        count_rows_by (no NULL group values, no truncated-bound
-        single-valuedness claims). O(catalog) driver-side fold — no
-        executor ever starts."""
-        self._dv_guard("sum_rows_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-        except KeyError:
-            return None
-        sums = self.catalog.get_sums(sum_column)
-        decode = self._sum_decoder(sum_column)
-        out: Dict = {}
-        for key, (nc, lo, hi, _) in entries.items():
-            if lo is None or lo != hi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, lo):
-                return None
-            entry = sums.get(key)
-            if entry is None:
-                return None
-            s, n = entry[0], entry[1]  # entry may carry a 3rd moment
-            acc = out.get(lo, (0, 0))
-            out[lo] = (acc[0] + s, acc[1] + n)
-        return {k: (decode(s), n) for k, (s, n) in out.items()}
-
-    def sum_sq_rows_by(self, group_column: str, sum_column: str):
-        """Zero-I/O GROUP BY VAR moments: {group value: (sum, sumsq,
-        non_null_count)} answered from the catalog alone — the grouped
-        generalization of sum_sq_rows under the same single-valued-
-        group trust rules as sum_rows_by, requiring every row group's
-        stored entry to carry a second moment (integer measures only;
-        the caller derives per-group VAR_POP/STDDEV from the exact
-        moments). Returns None when any row group fails a condition —
-        coverage degrades to a scan aggregate, never wrongness.
-        O(catalog) driver-side fold — no executor ever starts."""
-        self._dv_guard("sum_sq_rows_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-        except KeyError:
-            return None
-        sums = self.catalog.get_sums(sum_column)
-        out: Dict = {}
-        for key, (nc, lo, hi, _) in entries.items():
-            if lo is None or lo != hi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, lo):
-                return None
-            entry = sums.get(key)
-            if entry is None or len(entry) < 3 or entry[2] is None:
-                return None
-            acc = out.get(lo, (0, 0, 0))
-            out[lo] = (acc[0] + entry[0], acc[1] + entry[2],
-                       acc[2] + entry[1])
-        return out
-
-    def hist_quantiles(self, column: str, qs_permille: Sequence[int]):
-        """Zero-I/O QUANTILE estimates from the catalog's histogram
-        extension: per-row-group equi-width bin counts (stored at index
-        time, `hist_columns`) fold into one global histogram — an
-        O(row_groups · nbins) driver-side integer fold, no executor
-        starts — and each requested q (permille) reads off the
-        deterministic estimate: target rank r = ceil(q·n/1000), first
-        bin whose cumulative count reaches r, then integer
-        interpolation within the bin. Every operation is exact integer
-        arithmetic, so any engine recomputing the same binning formula
-        produces the identical estimate (this is what lets a DuckDB
-        oracle pin it). Returns [(q, estimate, n)] or None when any
-        row group lacks the histogram or the specs disagree — coverage
-        degrades to a scan-side quantile, never wrongness. This is the
-        P99-dashboard readout at 100 TB: distribution shape served the
-        way COUNT/SUM/VAR already are, from the index alone."""
-        self._dv_guard("hist_quantiles")
-        try:
-            hists = self.catalog.get_hists(column)
-        except Exception:
-            return None
-        if not hists:
-            return None
-        expected = {(f[0], rg) for f in self.catalog.all_files()
-                    for rg in range(f[2])}
-        if set(hists) != expected:
-            return None  # a row group without the histogram: no answer
-        specs = {(lo, hi, nb) for (lo, hi, nb, _) in hists.values()}
-        if len(specs) != 1:
-            return None  # mixed bin specs cannot fold
-        lo, hi, nbins = specs.pop()
-        span = hi - lo + 1
-        total = [0] * nbins
-        for (_, _, _, counts) in hists.values():
-            for b, c in enumerate(counts):
-                total[b] += c
-        n = sum(total)
-        if n == 0:
-            return None
-        width = span // nbins
-        out = []
-        for q in qs_permille:
-            target = min(max(1, (q * n + 999) // 1000), n)
-            cum = 0
-            b = 0
-            for b, cnt in enumerate(total):
-                if cum + cnt >= target:
-                    break
-                cum += cnt
-            rank_in = target - cum  # 1-based rank inside bin b
-            left = lo + (span * b) // nbins
-            est = left + (width * (rank_in - 1)) // max(total[b], 1)
-            out.append((q, est, n))
-        self.last_hist_pushdown = {"row_groups": len(hists),
-                                   "nbins": nbins, "n": n}
-        return out
-
-    def hist_quantiles_by(self, group_column: str, column: str,
-                          qs_permille: Sequence[int]):
-        """Zero-I/O GROUP BY quantiles: {group value: [(q, est, n)]}
-        from the histogram store, under the same single-valued-group
-        trust rules as sum_rows_by (every row group single-valued on
-        the group column — partition columns, perfectly clustered
-        layouts) — P99-per-tenant served entirely from the catalog.
-        Same deterministic integer estimate as hist_quantiles, folded
-        per group; None when any row group fails a trust condition or
-        lacks the histogram (scan fallback, never wrongness)."""
-        self._dv_guard("hist_quantiles_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-            hists = self.catalog.get_hists(column)
-        except Exception:
-            return None
-        if not hists or set(hists) != set(entries):
-            return None
-        specs = {(lo, hi, nb) for (lo, hi, nb, _) in hists.values()}
-        if len(specs) != 1:
-            return None
-        lo, hi, nbins = specs.pop()
-        span = hi - lo + 1
-        width = span // nbins
-        per_group: Dict = {}
-        for key, (nc, glo, ghi, _) in entries.items():
-            if glo is None or glo != ghi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            acc = per_group.setdefault(glo, [0] * nbins)
-            for b, c in enumerate(hists[key][3]):
-                acc[b] += c
-        out: Dict = {}
-        for g, total in per_group.items():
-            n = sum(total)
-            if n == 0:
-                continue
-            ests = []
-            for q in qs_permille:
-                target = min(max(1, (q * n + 999) // 1000), n)
-                cum = 0
-                b = 0
-                for b, cnt in enumerate(total):
-                    if cum + cnt >= target:
-                        break
-                    cum += cnt
-                left = lo + (span * b) // nbins
-                ests.append((q, left + (width * (target - cum - 1))
-                             // max(total[b], 1), n))
-            out[g] = ests
-        return out
-
-    def _fold_ndv_registers(self, reg_lists):
-        """Elementwise-MAX merge + the shared integer-scaled raw HLL
-        estimator (stats.HLL_ALPHA_SCALED / Σ 2^(55-M_j), rounded to 2
-        decimals — one float division total, so any engine recomputing
-        the same registers reproduces the identical estimate)."""
-        from .stats import HLL_ALPHA_SCALED, HLL_REGS
-
-        merged = [0] * HLL_REGS
-        for regs in reg_lists:
-            if len(regs) != HLL_REGS:
-                return None
-            for j, r in enumerate(regs):
-                if r > merged[j]:
-                    merged[j] = r
-        ind_sum = sum(1 << (55 - r) for r in merged)
-        return round(HLL_ALPHA_SCALED / ind_sum, 2)
-
-    def ndv_estimate(self, column: str):
-        """Zero-I/O approximate COUNT DISTINCT from the catalog's NDV
-        extension: per-row-group HyperLogLog registers (stored at index
-        time, ``ndv_columns``) merge by elementwise MAX into the
-        whole-table registers — an O(row_groups · HLL_REGS) driver-side
-        integer fold, no executor starts — and the raw estimator reads
-        off the estimate. Because register merging is associative, the
-        folded registers EQUAL what one pass over all rows would build,
-        so the estimate is a deterministic pure function of the value
-        set (a DuckDB oracle recomputing the same hash/bucket/rank
-        formula pins the VALUE). Returns the rounded estimate, or None
-        when any row group lacks registers (coverage degrades to a
-        scan-side distinct, never wrongness). Completes the
-        aggregate-statistics family — COUNT/SUM/MIN-MAX/VAR/quantiles/
-        NDV all served from the index the way the reference serves
-        COUNT from its stats (index.rs:198-205); at 100 TB this is the
-        cardinality dashboard that never touches the data, and the
-        registers keep merging across partitions, days, or tables."""
-        self._dv_guard("ndv_estimate")
-        try:
-            ndvs = self.catalog.get_ndvs(column)
-        except Exception:
-            return None
-        if not ndvs:
-            return None
-        expected = {(f[0], rg) for f in self.catalog.all_files()
-                    for rg in range(f[2])}
-        if set(ndvs) != expected:
-            return None  # a row group without registers: no answer
-        est = self._fold_ndv_registers(ndvs.values())
-        if est is None:
-            return None
-        self.last_ndv_pushdown = {"row_groups": len(ndvs),
-                                  "registers": len(next(iter(ndvs.values())))}
-        return est
-
-    def ndv_by(self, group_column: str, column: str):
-        """Zero-I/O GROUP BY approximate COUNT DISTINCT: {group value:
-        estimate} from the NDV register store, under the same
-        single-valued-group trust rules as sum_rows_by / hist_quantiles_by
-        (every row group single-valued on the group column — partition
-        columns, perfectly clustered layouts). Distinct-users-per-tenant
-        served entirely from the catalog; None when any row group fails
-        a trust condition or lacks registers (scan fallback, never
-        wrongness)."""
-        self._dv_guard("ndv_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-            ndvs = self.catalog.get_ndvs(column)
-        except Exception:
-            return None
-        if not ndvs or set(ndvs) != set(entries):
-            return None
-        per_group: Dict = {}
-        for key, (nc, glo, ghi, _) in entries.items():
-            if glo is None or glo != ghi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            per_group.setdefault(glo, []).append(ndvs[key])
-        out: Dict = {}
-        for g, reg_lists in per_group.items():
-            est = self._fold_ndv_registers(reg_lists)
-            if est is None:
-                return None
-            out[g] = est
-        return out
-
-    def group_counts(self, column: str, as_of: Optional[int] = None):
-        """Exact zero-I/O ``GROUP BY col, COUNT(*)`` from the catalog's
-        dictionary/frequency extension: per-row-group value→count maps
-        (stored at index time, ``dict_columns``, for columns whose
-        per-row-group cardinality fits the cap) fold by ADDITION into
-        the whole-table group counts — an O(row_groups · cap)
-        driver-side integer fold, no executor starts. Unlike
-        count_rows_by this needs NO layout trust rules (no
-        single-valued-group requirement, no partitioning): the maps are
-        exact per row group wherever they were recorded, so any flat
-        jumbled layout folds exactly. Returns {value: count} over
-        NON-NULL values (SQL GROUP BY's null group reads off the base
-        null_count stats when the column is also min/max-indexed), or
-        None when any row group lacks a dict row (cardinality blew the
-        cap there — coverage degrades to a scan-side groupBy, never
-        wrongness). as_of: fold only a snapshot()'s files — yesterday's
-        label distribution, still zero I/O. At 100 TB this is the
-        label/status/language distribution dashboard served from the
-        index alone, and the maps keep folding across partitions,
-        days, or tables."""
-        self._dv_guard("group_counts")
-        try:
-            dicts = self.catalog.get_dicts(column)
-        except Exception:
-            return None
-        if not dicts:
-            return None
-        files = self.catalog.all_files()
-        if as_of is not None:
-            snap = self._snapshot_guard(as_of)
-            files = [f for f in files if f[0] in snap]
-        expected = {(f[0], rg) for f in files for rg in range(f[2])}
-        if not expected or not expected <= set(dicts):
-            return None  # a row group over the cap: no exact answer
-        out: Dict = {}
-        for key in expected:
-            for v, c in dicts[key]:
-                out[v] = out.get(v, 0) + c
-        self.last_dict_pushdown = {"row_groups": len(expected),
-                                   "groups": len(out)}
-        return out
-
-    def distinct_values(self, column: str, as_of: Optional[int] = None):
-        """Exact zero-I/O ``SELECT DISTINCT col`` from the dictionary
-        extension: the union of the per-row-group value sets, sorted.
-        Same coverage rule as group_counts (every row group must carry
-        a dict row); None otherwise — scan fallback, never wrongness."""
-        self._dv_guard("distinct_values")
-        counts = self.group_counts(column, as_of=as_of)
-        if counts is None:
-            return None
-        return sorted(counts)
-
-    def heavy_hitters(self, column: str, n: int = 5):
-        """Whole-table HEAVY HITTERS with deterministic error bounds,
-        folded entirely from the catalog's top-k store
-        (``topk_columns``): for every value any row group stored,
-        lower = Σ of its stored counts, and upper adds, for each row
-        group that did NOT store it, min(that group's kth_count,
-        rest_rows) — it failed to make the top-k there, so its count
-        is bounded by both. Returns the n largest candidates by
-        (lower DESC, value ASC) as [(value, lower, upper)], or None
-        when any row group lacks a top-k row (coverage degrades to a
-        scan-side groupBy, never wrongness). Honesty signal: a value
-        stored in NO row group is invisible to the candidate set, and
-        its count can still reach Σ min(kth_count, rest_rows) over all
-        row groups — that ceiling is exposed as
-        ``last_hh_pushdown["unseen_upper"]``. When the n-th candidate's
-        LOWER bound clears the ceiling, the returned top-n provably
-        contains every true top-n value; when it does not, widen k or
-        fall back to a scan. Because the per-row-group
-        summaries are exact top-k selections (order-free, unlike
-        Misra-Gries whose decrements depend on arrival order), the
-        whole answer is a deterministic pure function of the data —
-        a DuckDB oracle rebuilding the same per-group summaries
-        reproduces every bound exactly. Zero Parquet I/O,
-        O(row_groups · k) driver fold; the hot-key/repeat-buyer
-        dashboard at 100 TB, with summaries that keep folding across
-        partitions, days, or tables."""
-        self._dv_guard("heavy_hitters")
-        try:
-            topks = self.catalog.get_topk(column)
-        except Exception:
-            return None
-        if not topks:
-            return None
-        expected = {(f[0], rg) for f in self.catalog.all_files()
-                    for rg in range(f[2])}
-        if set(topks) != expected:
-            return None
-        lower: Dict = {}
-        for entries, _, _ in topks.values():
-            for v, c in entries:
-                lower[v] = lower.get(v, 0) + c
-        out = []
-        for v, lo in lower.items():
-            slack = sum(min(kth, rest)
-                        for entries, rest, kth in topks.values()
-                        if all(sv != v for sv, _ in entries))
-            out.append((v, lo, lo + slack))
-        out.sort(key=lambda e: (-e[1], e[0]))
-        self.last_hh_pushdown = {
-            "row_groups": len(topks), "candidates": len(out),
-            "unseen_upper": sum(min(kth, rest)
-                                for _, rest, kth in topks.values())}
-        return out[:n]
-
-    def heavy_hitters_by(self, group_column: str, column: str,
-                         n: int = 5):
-        """Per-group heavy hitters with deterministic bounds: the
-        grouped sibling of heavy_hitters, under the same
-        single-valued-group trust rules as the other grouped folds
-        (sum_rows_by / ndv_by / hist_quantiles_by — every row group
-        single-valued on the group column: partition columns, perfectly
-        clustered layouts). Returns {group: [(value, lower, upper)]}
-        or None on any coverage/trust failure — scan fallback, never
-        wrongness. Hot-keys-per-tenant from the index alone."""
-        self._dv_guard("heavy_hitters_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-            topks = self.catalog.get_topk(column)
-        except Exception:
-            return None
-        if not topks or set(topks) != set(entries):
-            return None
-        per_group: Dict = {}
-        for key, (nc, glo, ghi, _) in entries.items():
-            if glo is None or glo != ghi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            per_group.setdefault(glo, []).append(topks[key])
-        out: Dict = {}
-        for g, summaries in per_group.items():
-            lower: Dict = {}
-            for ents, _, _ in summaries:
-                for v, c in ents:
-                    lower[v] = lower.get(v, 0) + c
-            rows = []
-            for v, lo in lower.items():
-                slack = sum(min(kth, rest)
-                            for ents, rest, kth in summaries
-                            if all(sv != v for sv, _ in ents))
-                rows.append((v, lo, lo + slack))
-            rows.sort(key=lambda e: (-e[1], e[0]))
-            out[g] = rows[:n]
-        return out
-
-    def min_max_by(self, group_column: str, target_column: str):
-        """Zero-I/O GROUP BY MIN/MAX: {group value: (min, max, count)}
-        answered from the catalog alone when EVERY row group is
-        single-valued on the group column (partition columns, perfectly
-        clustered layouts) AND the target column's bounds are trusted
-        as attained values in every group — the MIN/MAX sibling of
-        count_rows_by/sum_rows_by, completing the grouped
-        aggregate-pushdown family (COUNT/SUM/MIN/MAX, the index as the
-        materialized view). count is the target's NON-NULL count
-        (row_count - null_count, SQL MIN/MAX semantics); a group whose
-        target is all-NULL contributes (None, None, 0) bounds-free.
-        Returns None when any row group fails a trust condition (caller
-        falls back to a scan aggregate). O(catalog) driver-side fold."""
-        self._dv_guard("min_max_by")
-        try:
-            groups = self.catalog.column_rg_entries_keyed(group_column)
-            targets = self.catalog.column_rg_entries_keyed(target_column)
-        except KeyError:
-            return None
-        out: Dict = {}
-        for key, (gnc, glo, ghi, _) in groups.items():
-            if glo is None or glo != ghi or (gnc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            tnc, tlo, thi, trc = targets.get(key, (None, None, None, None))
-            mn, mx, n = out.get(glo, (None, None, 0))
-            if tlo is not None and thi is not None:
-                if not (self._bound_is_exact(target_column, tlo)
-                        and self._bound_is_exact(target_column, thi)):
-                    return None
-                mn = tlo if mn is None or tlo < mn else mn
-                mx = thi if mx is None or thi > mx else mx
-            elif not (tnc is not None and trc is not None and tnc == trc):
-                # bounds merely MISSING (not proven all-NULL): no
-                # catalog answer for this group's extremes
-                return None
-            n += (trc or 0) - (tnc or 0)
-            out[glo] = (mn, mx, n)
-        return out
-
-    def min_max(self, column: str, predicate: Optional[Expr] = None):
-        """(min, max) for an indexed column, answered from the catalog
-        when every row group carries stats AND the bounds are trustable
-        as attained values (numeric Parquet min/max are exact; long
-        string/binary stats may be truncated bounds and decimal bounds
-        are ulp-widened — valid for pruning but possibly never-attained,
-        so those trigger the scan fallback).
-
-        With a predicate, the same pushdown shape as count_rows/
-        sum_rows: over satisfaction-proven row groups every row
-        matches, so the group's exact-attained bounds participate in
-        the answer unread; groups whose bounds cannot be trusted as
-        attained demote to the scanned set alongside the boundary
-        groups. ``last_minmax_pushdown`` records the split."""
-        self._dv_guard("min_max")
-        from pyspark.sql import functions as F
-
-        if predicate is None:
-            try:
-                mn, mx, complete = self.catalog.column_bounds(column)
-            except KeyError:
-                complete = False
-                mn = mx = None
-            if (complete and self._bound_is_exact(column, mn)
-                    and self._bound_is_exact(column, mx)):
-                self.last_minmax_pushdown = {
-                    "full_row_groups":
-                        sum(f[2] for f in self.catalog.all_files()),
-                    "partial_row_groups": 0}
-                return mn, mx
-            self.last_minmax_pushdown = None
-            row = self.to_df().agg(F.min(column).alias("mn"),
-                                   F.max(column).alias("mx")).head()
-            return row["mn"], row["mx"]
-        decision = self.plan_scan(predicate)
-        if not decision.files_scanned:
-            self.last_minmax_pushdown = {
-                "full_row_groups": 0, "partial_row_groups": 0}
-            return None, None
-        if getattr(self, "partitioned", False):
-            self.last_minmax_pushdown = None
-            row = self.query(predicate).agg(
-                F.min(column).alias("mn"), F.max(column).alias("mx")).head()
-            return row["mn"], row["mx"]
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        try:
-            entries = self.catalog.column_rg_entries_keyed(column)
-        except KeyError:
-            # unindexed target column: the catalog knows nothing about
-            # its values — every candidate group must be scanned
-            entries = None
-        mn = mx = None
-        full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            frg = set(full.get(fname, ()))
-            rest = []
-            for rg in rgs:
-                nc, lo, hi, rc = (entries.get((fname, rg),
-                                              (None, None, None, None))
-                                  if entries is not None
-                                  else (None, None, None, None))
-                if entries is None or rg not in frg:
-                    rest.append(rg)
-                elif lo is not None and hi is not None:
-                    if (self._bound_is_exact(column, lo)
-                            and self._bound_is_exact(column, hi)):
-                        full_rgs += 1
-                        mn = lo if mn is None or lo < mn else mn
-                        mx = hi if mx is None or hi > mx else mx
-                    else:
-                        rest.append(rg)
-                elif nc is not None and rc is not None and nc == rc:
-                    # PROVEN all-NULL (null_count == row_count):
-                    # contributes no values, correctly skipped. Bounds
-                    # that are merely MISSING (writer omitted min/max,
-                    # e.g. an all-NaN float chunk) prove nothing and
-                    # fall through to the scan set instead.
-                    full_rgs += 1
-                else:
-                    rest.append(rg)
-            if rest:
-                partial[fname] = rest
-        self.last_minmax_pushdown = {
-            "full_row_groups": full_rgs,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if partial:
-            partial_decision = ScanDecision(
-                decision.predicate, partial, decision.total_files,
-                decision.total_row_groups)
-            cols = sorted(predicate.columns() | {column})
-            df = self._read_rowgroups(partial_decision, predicate,
-                                      columns=cols,
-                                      local_max_bytes=self
-                                      .ROWGROUP_LOCAL_MAX_BYTES)
-            row = df.filter(predicate.to_spark()).agg(
-                F.min(column).alias("mn"), F.max(column).alias("mx")).head()
-            lo, hi = row["mn"], row["mx"]
-            if lo is not None:
-                mn = lo if mn is None or lo < mn else mn
-                mx = hi if mx is None or hi > mx else mx
-        return mn, mx
 
     def order_limit(
         self,
