@@ -1,25 +1,315 @@
-"""The catalog-answer family: aggregates answered from the index.
-
-``CatalogAnswers`` is the mixin ``IndexedParquetTable`` inherits for
-every aggregate the statistics catalog can answer without reading
-Parquet (the reference answers COUNT from its stats, index.rs:198-205):
-COUNT, SUM, VAR moments, MIN/MAX, histogram quantiles, NDV, heavy
-hitters, GROUP BY counts and DISTINCT, whole-table and grouped. Every
-method reads the table's catalog, planner and boundary reader through
-``self``.
+"""The catalog-answer family: COUNT, SUM, VAR moments, MIN/MAX,
+quantiles, NDV, heavy hitters, GROUP BY counts and DISTINCT answered
+from the statistics catalog instead of Parquet (the reference answers
+COUNT from its stats, index.rs:198-205). ``CatalogAnswers`` is a mixin
+of ``IndexedParquetTable``. Its three trust rules are written once:
+coverage (``_row_groups``, ``_split_scan``), single-valued groups
+(``_group_values``) and attained bounds (``_bound_is_exact``); short of
+them an answer is None or a scan, never wrong.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Dict, List, Optional, Sequence
 
 from ..plans.expr import Expr
-from .table import STATS_EXACT_MAX_BYTES, ScanDecision
+
+
+# Parquet string/binary column-chunk statistics may be TRUNCATED bounds:
+# writers (parquet-mr, parquet-rs) shorten long min/max values while
+# keeping them valid *bounds* (max truncation rounds the last byte up),
+# and mark it with is_min_value_exact/is_max_value_exact footer flags —
+# which pyarrow 16 does not expose. Truncated bounds are still sound for
+# PRUNING (over-approximation), but catalog-only ANSWERS (min_max,
+# count_rows_by) would return a never-attained bound as "the max". With
+# the flags unreadable, the conservative guard is length-based: treat a
+# string/binary bound at or beyond the common 64-byte truncation
+# threshold as possibly inexact and fall back to a scan aggregate —
+# wrong answers become impossible, long-string corpora merely lose the
+# zero-I/O shortcut. Partition-column stats are exempt: their min=max
+# value comes from the directory name, not a footer stat.
+STATS_EXACT_MAX_BYTES = 64
+
+
+def _grouped(summaries: Dict, groups: Dict) -> Optional[Dict]:
+    """{group value: [row-group summary, ...]}, or None unless the
+    summaries cover exactly the grouped row groups."""
+    if set(summaries) != set(groups):
+        return None
+    out: Dict = {}
+    for key, g in groups.items():
+        out.setdefault(g, []).append(summaries[key])
+    return out
+
+
+def _extremes(bounds) -> tuple:
+    """(min of the lows, max of the highs) over (lo, hi) pairs, skipping
+    value-free (None, None) pairs; (None, None) when none remain."""
+    vals = [b for b in bounds if b[0] is not None]
+    if not vals:
+        return None, None
+    return min(lo for lo, _ in vals), max(hi for _, hi in vals)
+
+
+def _hist_spec(hists: Dict) -> Optional[tuple]:
+    """The one (lo, hi, nbins) bin spec every histogram shares, or None
+    when the specs disagree (mixed specs cannot fold)."""
+    specs = {(lo, hi, nb) for (lo, hi, nb, _) in hists.values()}
+    return specs.pop() if len(specs) == 1 else None
+
+
+def _bin_totals(hists, nbins: int) -> List[int]:
+    """Per-bin sum of the row groups' histogram counts."""
+    total = [0] * nbins
+    for (_, _, _, counts) in hists:
+        for b, c in enumerate(counts):
+            total[b] += c
+    return total
+
+
+def _quantiles(total: List[int], spec: tuple, qs_permille: Sequence[int]):
+    """[(q, estimate, n)] read off one folded histogram: target rank
+    r = ceil(q·n/1000), the first bin whose cumulative count reaches r,
+    then integer interpolation within that bin."""
+    lo, hi, nbins = spec
+    span = hi - lo + 1
+    width = span // nbins
+    n = sum(total)
+    out = []
+    for q in qs_permille:
+        target = min(max(1, (q * n + 999) // 1000), n)
+        cum = 0
+        b = 0
+        for b, cnt in enumerate(total):
+            if cum + cnt >= target:
+                break
+            cum += cnt
+        rank_in = target - cum  # 1-based rank inside bin b
+        left = lo + (span * b) // nbins
+        out.append((q, left + (width * (rank_in - 1)) // max(total[b], 1),
+                    n))
+    return out
+
+
+def _fold_ndv_registers(reg_lists):
+    """Elementwise-MAX merge + the shared integer-scaled raw HLL
+    estimator (stats.HLL_ALPHA_SCALED / Σ 2^(55-M_j), rounded to 2
+    decimals — one float division total, so any engine recomputing
+    the same registers reproduces the identical estimate)."""
+    from .stats import HLL_ALPHA_SCALED, HLL_REGS
+
+    merged = [0] * HLL_REGS
+    for regs in reg_lists:
+        if len(regs) != HLL_REGS:
+            return None
+        for j, r in enumerate(regs):
+            if r > merged[j]:
+                merged[j] = r
+    ind_sum = sum(1 << (55 - r) for r in merged)
+    return round(HLL_ALPHA_SCALED / ind_sum, 2)
+
+
+def _hh_bounds(summaries) -> list:
+    """Every candidate as (value, lower, upper), sorted by (lower DESC,
+    value ASC), from per-row-group top-k summaries (entries, rest_rows,
+    kth_count): lower sums the stored counts; upper adds, for each
+    summary that did not store the value, min(kth_count, rest_rows)."""
+    lower: Dict = {}
+    for entries, _, _ in summaries:
+        for v, c in entries:
+            lower[v] = lower.get(v, 0) + c
+    out = []
+    for v, lo in lower.items():
+        slack = sum(min(kth, rest)
+                    for entries, rest, kth in summaries
+                    if all(sv != v for sv, _ in entries))
+        out.append((v, lo, lo + slack))
+    out.sort(key=lambda e: (-e[1], e[0]))
+    return out
 
 
 class CatalogAnswers:
     """Catalog-only aggregate answers (mixin of IndexedParquetTable)."""
 
+    # -- shared rules ---------------------------------------------------
+    def _row_groups(self, as_of: Optional[int] = None) -> set:
+        """{(file_name, row_group)} of every indexed row group — of a
+        snapshot()'s files when as_of is given."""
+        files = self.catalog.all_files()
+        if as_of is not None:
+            snap = self._snapshot_guard(as_of)
+            files = [f for f in files if f[0] in snap]
+        return {(f[0], rg) for f in files for rg in range(f[2])}
+
+    def _dv_rg(self, as_of: Optional[int] = None) -> Dict:
+        """{(file_name, row_group): deleted rows} recorded for the era;
+        {} without a catalog read when no deletion can exist."""
+        return (self.catalog.dv_rg_deleted(as_of=as_of)
+                if self._dvs() or as_of is not None else {})
+
+    def _split_scan(self, predicate: Optional[Expr], part,
+                    column: Optional[str] = None,
+                    as_of: Optional[int] = None):
+        """The proven-full / boundary split behind the COUNT, SUM, VAR
+        and MIN/MAX pushdowns. Refutation (plan_scan) gives the
+        candidate row groups; the satisfaction rewrite
+        (PruningRewriter.satisfies — the sound under-approximation dual)
+        proves which candidates match on EVERY row (without a predicate,
+        every indexed group does). ``part(key, dv_rg)`` returns a
+        proven-full group's catalog contribution, or None to demote it.
+        The rest form the boundary, read through the exact row-group
+        reader (only the predicate's columns and ``column``; groups with
+        recorded deletions come back live-only) and filtered by the
+        predicate.
+
+        Returns (parts, boundary, shape): the proven-full contributions,
+        the boundary rows (None when nothing is left to scan) and the
+        {full_row_groups, partial_row_groups} split — or None when an
+        unpredicated group demotes, or on a partitioned layout, whose
+        partition columns the row-group reader cannot surface."""
+        if predicate is None:
+            dv_rg = self._dv_rg(as_of)
+            parts = [part(key, dv_rg) for key in self._row_groups(as_of)]
+            if None in parts:
+                return None
+            return parts, None, {"full_row_groups": len(parts),
+                                 "partial_row_groups": 0}
+        decision = self.plan_scan(predicate, as_of=as_of)
+        if not decision.files_scanned:
+            return [], None, {"full_row_groups": 0, "partial_row_groups": 0}
+        if getattr(self, "partitioned", False):
+            return None
+        # the satisfaction set takes plan_scan's R-tree prefilter too: it
+        # is only read at keys inside the (equally prefiltered)
+        # refutation decision, so the window cannot change any answer
+        sat = self._rewriter.satisfies(predicate)
+        window = self._rtree_window(predicate)
+        full = dict(self.catalog.get_files(sat) if window is None
+                    else self.catalog.get_files(sat, prefilter=window))
+        dv_rg = self._dv_rg(as_of)
+        parts: list = []
+        partial: Dict[str, List[int]] = {}
+        for fname, rgs in decision.files_scanned.items():
+            frg = set(full.get(fname, ()))
+            rest = []
+            for rg in rgs:
+                p = part((fname, rg), dv_rg) if rg in frg else None
+                if p is None:
+                    rest.append(rg)
+                else:
+                    parts.append(p)
+            if rest:
+                partial[fname] = rest
+        shape = {"full_row_groups": len(parts),
+                 "partial_row_groups": sum(len(v) for v in partial.values())}
+        if not partial:
+            return parts, None, shape
+        from .table import ScanDecision  # table imports this module
+
+        cols = sorted(predicate.columns() | ({column} if column else set()))
+        df = self._read_rowgroups(
+            ScanDecision(decision.predicate, partial, decision.total_files,
+                         decision.total_row_groups),
+            predicate, columns=cols or None,
+            dvs=self._boundary_dvs(partial, dv_rg, as_of), as_of=as_of,
+            local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
+        return parts, df.filter(predicate.to_spark()), shape
+
+    def _group_values(self, column: str, entries: Optional[Dict] = None):
+        """{(file_name, row_group): value} when EVERY row group is
+        single-valued on the column (min == max, no nulls, stats
+        present, the bound an attained value) — always true for
+        partition columns, whose value is injected as a degenerate
+        min=max stat, and for any column the layout writer clustered
+        perfectly; None otherwise, or when the column is not indexed.
+        ``entries``: the column's keyed catalog entries, when the caller
+        already read them."""
+        if entries is None:
+            try:
+                entries = self.catalog.column_rg_entries_keyed(column)
+            except KeyError:
+                return None
+        out = {}
+        for key, (nc, lo, hi, _) in entries.items():
+            if (lo is None or lo != hi or (nc or 0) != 0
+                    or not self._bound_is_exact(column, lo)):
+                return None
+            out[key] = lo
+        return out
+
+    def _attained(self, column: str, entry) -> Optional[tuple]:
+        """One row group's (min, max) of the column when both bounds
+        are attained values, (None, None) when the group is PROVEN
+        all-NULL (null_count == row_count: it contributes no values),
+        else None — untrusted bounds, or bounds merely MISSING (writer
+        omitted min/max, e.g. an all-NaN float chunk), prove nothing."""
+        nc, lo, hi, rc = entry or (None, None, None, None)
+        if lo is not None and hi is not None:
+            if (self._bound_is_exact(column, lo)
+                    and self._bound_is_exact(column, hi)):
+                return lo, hi
+            return None
+        return (None, None) if nc is not None and nc == rc else None
+
+    def _bound_is_exact(self, column: str, value) -> bool:
+        """Whether a catalog min/max value can be trusted as the ACTUAL
+        attained value (not just a valid bound). int / date / timestamp
+        stats and partition-derived values are exact. Not trusted:
+        decimal (ulp-widened doubles by design), float UNLESS the column
+        is proven NaN-free via the opt-in NaN counts (Parquet writers
+        EXCLUDE NaN from min/max while Spark/DuckDB order NaN above
+        every value, so the true attained max may be an invisible NaN),
+        and string/binary bounds at or past the truncation threshold
+        (see ``stats_exact_max_bytes``)."""
+        cat = self.index_schema.get(column)
+        if cat == "decimal":
+            # the catalog readouts surface EXACT Decimal bounds (decoded
+            # from unscaled-int footer storage) when recorded; a float
+            # here is a widened pruning bound and never trusted
+            import decimal as _dec
+            return value is None or isinstance(value, _dec.Decimal)
+        if cat == "float":
+            return self._column_nan_free(column)
+        if cat not in ("string", "binary"):
+            return True
+        if column in getattr(self, "_partition_cols", ()):
+            return True
+        if value is None:
+            return True
+        raw = value.encode("utf-8") if isinstance(value, str) else value
+        return len(raw) < getattr(self, "stats_exact_max_bytes",
+                                  STATS_EXACT_MAX_BYTES)
+
+    def _column_nan_free(self, column: str) -> bool:
+        """True when every row group's opt-in NaN count is recorded and
+        zero (cached per column; invalidated by refresh())."""
+        cache = getattr(self, "_nan_free_cache", None)
+        if cache is None:
+            cache = self._nan_free_cache = {}
+        if column not in cache:
+            try:
+                total = self.catalog.column_nan_total(column)
+            except (KeyError, AttributeError):
+                total = None
+            cache[column] = total == 0
+        return cache[column]
+
+    def _sum_decoder(self, column: str):
+        """Stored catalog sums are raw ints for integer columns and
+        UNSCALED ints for decimal columns (lossless); this returns the
+        store->domain conversion for the column."""
+        from pyspark.sql import types as T
+
+        f = next((f for f in (self._schema.fields if self._schema else [])
+                  if f.name == column), None)
+        if f is not None and isinstance(f.dataType, T.DecimalType):
+            import decimal as _dec
+            scale = f.dataType.scale
+            return lambda s: _dec.Decimal(s).scaleb(-scale)
+        return lambda s: s
+
+    # -- COUNT / SUM / VAR / MIN-MAX ------------------------------------
     def count_rows(self, predicate: Optional[Expr] = None,
                    as_of: Optional[int] = None) -> int:
         """Exact row count with COUNT PUSHDOWN into the catalog:
@@ -58,67 +348,24 @@ class CatalogAnswers:
             deleted = self.catalog.dv_deleted_rows(as_of=as_of)
             return sum(f[3] - deleted.get(f[0], 0)
                        for f in self.catalog.all_files() if f[0] in snap)
-        decision = self.plan_scan(predicate, as_of=as_of)
-        if not decision.files_scanned:
-            self.last_count_pushdown = {
-                "full_row_groups": 0, "full_rows": 0,
-                "partial_row_groups": 0}
-            return 0
-        if getattr(self, "partitioned", False):
-            self.last_count_pushdown = None
-            return self.query(predicate, as_of=as_of).count()
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        dv_rg = self.catalog.dv_rg_deleted(as_of=as_of) \
-            if (self._dvs() or as_of is not None) else {}
-        full_rows = 0
-        full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            counts = self.catalog.row_group_row_counts(fname)
-            frg = set(full.get(fname, ()))
-            rest = [rg for rg in rgs if rg not in frg]
-            hit = [rg for rg in rgs if rg in frg]
+        row_counts = functools.cache(self.catalog.row_group_row_counts)
+
+        def part(key, dv_rg):
             # a satisfaction-proven group under deletes: every LIVE row
             # still satisfies (the proof covers all rows), so the live
             # contribution is row_count minus the recorded deletions
-            full_rows += sum(counts[rg] - dv_rg.get((fname, rg), 0)
-                             for rg in hit)
-            full_rgs += len(hit)
-            if rest:
-                partial[fname] = rest
-        self.last_count_pushdown = {
-            "full_row_groups": full_rgs, "full_rows": full_rows,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if not partial:
-            return full_rows
-        partial_decision = ScanDecision(
-            decision.predicate, partial, decision.total_files,
-            decision.total_row_groups)
-        cols = sorted(predicate.columns())
-        # boundary groups WITH deletions scan live-only: the exact
-        # reader anti-filters the era's positions, so the boundary
+            return row_counts(key[0])[key[1]] - dv_rg.get(key, 0)
+
+        split = self._split_scan(predicate, part, as_of=as_of)
+        if split is None:
+            self.last_count_pushdown = None
+            return self.query(predicate, as_of=as_of).count()
+        parts, boundary, shape = split
+        full_rows = sum(parts)
+        self.last_count_pushdown = {**shape, "full_rows": full_rows}
+        # boundary groups WITH deletions scan live-only, so the boundary
         # term is a plain count — no full-scan demotion needed
-        dvs = self._boundary_dvs(partial, dv_rg, as_of)
-        df = self._read_rowgroups(partial_decision, predicate,
-                                  columns=cols or None, dvs=dvs,
-                                  as_of=as_of,
-                                  local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
-        return full_rows + df.filter(predicate.to_spark()).count()
-
-    def _sum_decoder(self, column: str):
-        """Stored catalog sums are raw ints for integer columns and
-        UNSCALED ints for decimal columns (lossless); this returns the
-        store->domain conversion for the column."""
-        from pyspark.sql import types as T
-
-        f = next((f for f in (self._schema.fields if self._schema else [])
-                  if f.name == column), None)
-        if f is not None and isinstance(f.dataType, T.DecimalType):
-            import decimal as _dec
-            scale = f.dataType.scale
-            return lambda s: _dec.Decimal(s).scaleb(-scale)
-        return lambda s: s
+        return full_rows + (boundary.count() if boundary is not None else 0)
 
     def sum_rows(self, column: str, predicate: Optional[Expr] = None,
                  as_of: Optional[int] = None):
@@ -152,86 +399,31 @@ class CatalogAnswers:
             return _scan_agg(self.query(predicate, as_of=as_of))
         dv_adj = (self.catalog.dv_sum_adjustments(column, as_of=as_of)
                   if (self._dvs() or as_of is not None) else {})
-        dv_rg = (self.catalog.dv_rg_deleted(as_of=as_of)
-                 if (self._dvs() or as_of is not None) else {})
-        if predicate is None:
-            indexed = {f[0]: f[2] for f in self.catalog.all_files()}
-            if as_of is not None:
-                # time-travel aggregate: fold only the snapshot's files
-                snap = self._snapshot_guard(as_of)
-                indexed = {fn: c for fn, c in indexed.items() if fn in snap}
-            # a group with recorded deletions (dv_rg_adjust) but no
-            # recorded sum adjustment for THIS column — deletes issued
-            # by a session that tracked different/empty sum_columns —
-            # cannot be repaired by subtraction; the zero default would
-            # silently return the pre-delete sum. Demote to a scan.
-            if (all((fn, rg) in sums
-                    for fn, n in indexed.items() for rg in range(n))
-                    and all(k in dv_adj
-                            for k in dv_rg if k[0] in indexed)):
-                keys = [(fn, rg)
-                        for fn, n in indexed.items() for rg in range(n)]
-                s = sum(sums[k][0] - dv_adj.get(k, (0, 0, None))[0]
-                        for k in keys)
-                n = sum(sums[k][1] - dv_adj.get(k, (0, 0, None))[1]
-                        for k in keys)
-                self.last_sum_pushdown = {
-                    "full_row_groups": len(keys), "full_sum": s,
-                    "partial_row_groups": 0}
-                return (decode(s) if n else None), n
+
+        def part(key, dv_rg):
+            # every live row of a proven-full group satisfies, so its
+            # live sum is the stored sum minus the deleted rows'
+            # recorded contribution. A group with recorded deletions
+            # but no adjustment for this column (deletes issued by a
+            # session that tracked different/empty sum_columns) cannot
+            # be repaired by subtraction: demote it to the scan.
+            entry = sums.get(key)
+            if entry is None or (key in dv_rg and key not in dv_adj):
+                return None
+            adj = dv_adj.get(key, (0, 0, None))
+            return entry[0] - adj[0], entry[1] - adj[1]
+
+        # as_of: a time-travel aggregate folds only the snapshot's files
+        split = self._split_scan(predicate, part, column, as_of)
+        if split is None:
             self.last_sum_pushdown = None
             return _scan_agg(self.query(None, as_of=as_of))
-        decision = self.plan_scan(predicate, as_of=as_of)
-        if not decision.files_scanned:
-            self.last_sum_pushdown = {
-                "full_row_groups": 0, "full_sum": 0,
-                "partial_row_groups": 0}
-            return None, 0
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        s_full = 0
-        n_full = 0
-        full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            frg = set(full.get(fname, ()))
-            rest = []
-            for rg in rgs:
-                entry = sums.get((fname, rg))
-                k = (fname, rg)
-                if (rg in frg and entry is not None
-                        and (k not in dv_rg or k in dv_adj)):
-                    # proven-full group: every live row satisfies, so
-                    # the live sum is the stored sum minus the deleted
-                    # rows' recorded contribution. A group with
-                    # recorded deletions but no adjustment for this
-                    # column demotes to the scanned set instead.
-                    adj = dv_adj.get(k, (0, 0, None))
-                    s_full += entry[0] - adj[0]
-                    n_full += entry[1] - adj[1]
-                    full_rgs += 1
-                else:
-                    rest.append(rg)
-            if rest:
-                partial[fname] = rest
-        self.last_sum_pushdown = {
-            "full_row_groups": full_rgs, "full_sum": s_full,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if not partial:
-            return (decode(s_full) if n_full else None), n_full
-        partial_decision = ScanDecision(
-            decision.predicate, partial, decision.total_files,
-            decision.total_row_groups)
-        cols = sorted(predicate.columns() | {column})
-        # DV'd boundary groups scan live-only through the exact reader
-        dvs_b = self._boundary_dvs(partial, dv_rg, as_of)
-        df = self._read_rowgroups(partial_decision, predicate, columns=cols,
-                                  dvs=dvs_b, as_of=as_of,
-                                  local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
-        s_part, n_part = _scan_agg(df.filter(predicate.to_spark()))
-        n = n_full + n_part
-        s = (decode(s_full) + (s_part or 0)) if n else None
-        return s, n
+        parts, boundary, shape = split
+        s_full = sum(p[0] for p in parts)
+        self.last_sum_pushdown = {**shape, "full_sum": s_full}
+        s_part, n_part = (None, 0) if boundary is None else _scan_agg(boundary)
+        n = sum(p[1] for p in parts) + n_part
+        return ((decode(s_full) + (s_part or 0)) if n else None), n
 
     def sum_sq_rows(self, column: str, predicate: Optional[Expr] = None):
         """(sum, sum_of_squares, non_null_count) of an integer column
@@ -286,84 +478,32 @@ class CatalogAnswers:
         if (not any(_usable(e) for e in sums.values())
                 or getattr(self, "partitioned", False)):
             self.last_var_pushdown = None
-            df = self.query(None) if predicate is None \
-                else self.query(predicate)
-            return _scan_agg(df)
+            return _scan_agg(self.query(predicate))
         dv_adj = (self.catalog.dv_sum_adjustments(column)
                   if self._dvs() else {})
-        dv_rg = self.catalog.dv_rg_deleted() if self._dvs() else {}
 
-        def _adj_ok(key) -> bool:
+        def part(key, dv_rg):
             # a deleted-rows adjustment without a recorded second moment
             # cannot repair the stored sumsq, and a group with recorded
             # deletions (dv_rg_adjust) but NO adjustment for this
             # column (deletes issued under different/empty sum_columns)
             # would silently keep the pre-delete sums — demote both
-            a = dv_adj.get(key)
-            if a is None:
-                return key not in dv_rg
-            return a[2] is not None
+            entry, a = sums.get(key), dv_adj.get(key)
+            if (entry is None or not _usable(entry)
+                    or (key in dv_rg if a is None else a[2] is None)):
+                return None
+            a = a or (0, 0, 0)
+            return entry[0] - a[0], entry[2] - a[2], entry[1] - a[1]
 
-        if predicate is None:
-            indexed = {f[0]: f[2] for f in self.catalog.all_files()}
-            if all(_usable(sums.get((fn, rg), ())) and _adj_ok((fn, rg))
-                   for fn, n in indexed.items() for rg in range(n)):
-                s = sum(v[0] for v in sums.values())
-                sq = sum(v[2] for v in sums.values())
-                n = sum(v[1] for v in sums.values())
-                for a_s, a_n, a_sq in dv_adj.values():
-                    s -= a_s
-                    n -= a_n
-                    sq -= a_sq or 0
-                self.last_var_pushdown = {
-                    "full_row_groups": len(sums), "partial_row_groups": 0}
-                return ((s, sq, n) if n else (None, None, 0))
+        split = self._split_scan(predicate, part, column)
+        if split is None:
             self.last_var_pushdown = None
             return _scan_agg(self.query(None))
-        decision = self.plan_scan(predicate)
-        if not decision.files_scanned:
-            self.last_var_pushdown = {
-                "full_row_groups": 0, "partial_row_groups": 0}
-            return None, None, 0
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        s_full = sq_full = n_full = full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            frg = set(full.get(fname, ()))
-            rest = []
-            for rg in rgs:
-                entry = sums.get((fname, rg))
-                if (rg in frg and entry is not None and _usable(entry)
-                        and _adj_ok((fname, rg))):
-                    adj = dv_adj.get((fname, rg), (0, 0, 0))
-                    s_full += entry[0] - adj[0]
-                    n_full += entry[1] - adj[1]
-                    sq_full += entry[2] - (adj[2] or 0)
-                    full_rgs += 1
-                else:
-                    rest.append(rg)
-            if rest:
-                partial[fname] = rest
-        self.last_var_pushdown = {
-            "full_row_groups": full_rgs,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if not partial:
-            return ((s_full, sq_full, n_full) if n_full else (None, None, 0))
-        partial_decision = ScanDecision(
-            decision.predicate, partial, decision.total_files,
-            decision.total_row_groups)
-        cols = sorted(predicate.columns() | {column})
-        # DV'd boundary groups scan live-only through the exact reader
-        dvs_b = self._boundary_dvs(partial, dv_rg)
-        df = self._read_rowgroups(partial_decision, predicate, columns=cols,
-                                  dvs=dvs_b,
-                                  local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
-        s_p, sq_p, n_p = _scan_agg(df.filter(predicate.to_spark()))
-        n = n_full + n_p
-        if not n:
-            return None, None, 0
-        return s_full + (s_p or 0), sq_full + (sq_p or 0), n
+        parts, boundary, self.last_var_pushdown = split
+        if boundary is not None:
+            parts.append(tuple(v or 0 for v in _scan_agg(boundary)))
+        s, sq, n = (sum(p[i] for p in parts) for i in range(3))
+        return (s, sq, n) if n else (None, None, 0)
 
     def count_upper_bound(self, predicate: Optional[Expr] = None) -> int:
         """Catalog-only upper bound: total rows in surviving row groups.
@@ -378,49 +518,66 @@ class CatalogAnswers:
             total += sum(counts[rg] for rg in rgs)
         return total
 
-    def _bound_is_exact(self, column: str, value) -> bool:
-        """Whether a catalog min/max value can be trusted as the ACTUAL
-        attained value (not just a valid bound). int / date / timestamp
-        stats and partition-derived values are exact. Not trusted:
-        decimal (ulp-widened doubles by design), float UNLESS the column
-        is proven NaN-free via the opt-in NaN counts (Parquet writers
-        EXCLUDE NaN from min/max while Spark/DuckDB order NaN above
-        every value, so the true attained max may be an invisible NaN),
-        and string/binary bounds at or past the truncation threshold
-        (see ``stats_exact_max_bytes``)."""
-        cat = self.index_schema.get(column)
-        if cat == "decimal":
-            # the catalog readouts surface EXACT Decimal bounds (decoded
-            # from unscaled-int footer storage) when recorded; a float
-            # here is a widened pruning bound and never trusted
-            import decimal as _dec
-            return value is None or isinstance(value, _dec.Decimal)
-        if cat == "float":
-            return self._column_nan_free(column)
-        if cat not in ("string", "binary"):
-            return True
-        if column in getattr(self, "_partition_cols", ()):
-            return True
-        if value is None:
-            return True
-        raw = value.encode("utf-8") if isinstance(value, str) else value
-        return len(raw) < getattr(self, "stats_exact_max_bytes",
-                                  STATS_EXACT_MAX_BYTES)
+    def min_max(self, column: str, predicate: Optional[Expr] = None):
+        """(min, max) for an indexed column, answered from the catalog
+        when every row group carries stats AND the bounds are trustable
+        as attained values (numeric Parquet min/max are exact; long
+        string/binary stats may be truncated bounds and decimal bounds
+        are ulp-widened — valid for pruning but possibly never-attained,
+        so those trigger the scan fallback).
 
-    def _column_nan_free(self, column: str) -> bool:
-        """True when every row group's opt-in NaN count is recorded and
-        zero (cached per column; invalidated by refresh())."""
-        cache = getattr(self, "_nan_free_cache", None)
-        if cache is None:
-            cache = self._nan_free_cache = {}
-        if column not in cache:
+        With a predicate, the same pushdown shape as count_rows/
+        sum_rows: over satisfaction-proven row groups every row
+        matches, so the group's exact-attained bounds participate in
+        the answer unread; groups whose bounds cannot be trusted as
+        attained demote to the scanned set alongside the boundary
+        groups. ``last_minmax_pushdown`` records the split."""
+        self._dv_guard("min_max")
+        from pyspark.sql import functions as F
+
+        def _scan_agg(df) -> tuple:
+            row = df.agg(F.min(column).alias("mn"),
+                         F.max(column).alias("mx")).head()
+            return row["mn"], row["mx"]
+
+        if predicate is None:
             try:
-                total = self.catalog.column_nan_total(column)
-            except (KeyError, AttributeError):
-                total = None
-            cache[column] = total == 0
-        return cache[column]
+                mn, mx, complete = self.catalog.column_bounds(column)
+            except KeyError:
+                complete = False
+                mn = mx = None
+            if (complete and self._bound_is_exact(column, mn)
+                    and self._bound_is_exact(column, mx)):
+                self.last_minmax_pushdown = {
+                    "full_row_groups":
+                        sum(f[2] for f in self.catalog.all_files()),
+                    "partial_row_groups": 0}
+                return mn, mx
+            self.last_minmax_pushdown = None
+            return _scan_agg(self.to_df())
 
+        @functools.cache
+        def entries() -> Dict:
+            # read at the first proven-full group; an unindexed target
+            # column: the catalog knows nothing about its values, so
+            # every candidate group must be scanned
+            try:
+                return self.catalog.column_rg_entries_keyed(column)
+            except KeyError:
+                return {}
+
+        split = self._split_scan(
+            predicate,
+            lambda key, _: self._attained(column, entries().get(key)), column)
+        if split is None:
+            self.last_minmax_pushdown = None
+            return _scan_agg(self.query(predicate))
+        parts, boundary, self.last_minmax_pushdown = split
+        if boundary is not None:
+            parts.append(_scan_agg(boundary))
+        return _extremes(parts)
+
+    # -- grouped folds ----------------------------------------------------
     def count_rows_by(self, column: str):
         """Zero-I/O GROUP BY COUNT: {value: row_count} answered from the
         catalog alone when EVERY row group is single-valued on the
@@ -436,17 +593,14 @@ class CatalogAnswers:
         this is an O(catalog) driver-side fold — no executor starts."""
         self._dv_guard("count_rows_by")
         try:
-            entries = self.catalog.column_rg_entries(column)
+            entries = self.catalog.column_rg_entries_keyed(column)
         except KeyError:
             return None
-        out: Dict = {}
-        for nc, lo, hi, rc in entries:
-            if lo is None or lo != hi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(column, lo):
-                return None
-            out[lo] = out.get(lo, 0) + rc
-        return out
+        groups = self._group_values(column, entries)
+        if groups is None:
+            return None
+        rows = _grouped({k: e[3] for k, e in entries.items()}, groups)
+        return {g: sum(rcs) for g, rcs in rows.items()}
 
     def sum_rows_by(self, group_column: str, sum_column: str):
         """Zero-I/O GROUP BY SUM: {group value: (sum, non_null_count)}
@@ -461,25 +615,16 @@ class CatalogAnswers:
         single-valuedness claims). O(catalog) driver-side fold — no
         executor ever starts."""
         self._dv_guard("sum_rows_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-        except KeyError:
+        groups = self._group_values(group_column)
+        if groups is None:
             return None
-        sums = self.catalog.get_sums(sum_column)
+        per = _grouped(self.catalog.get_sums(sum_column), groups)
+        if per is None:
+            return None
         decode = self._sum_decoder(sum_column)
-        out: Dict = {}
-        for key, (nc, lo, hi, _) in entries.items():
-            if lo is None or lo != hi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, lo):
-                return None
-            entry = sums.get(key)
-            if entry is None:
-                return None
-            s, n = entry[0], entry[1]  # entry may carry a 3rd moment
-            acc = out.get(lo, (0, 0))
-            out[lo] = (acc[0] + s, acc[1] + n)
-        return {k: (decode(s), n) for k, (s, n) in out.items()}
+        # an entry may carry a 3rd moment; SUM reads (sum, count)
+        return {g: (decode(sum(e[0] for e in es)), sum(e[1] for e in es))
+                for g, es in per.items()}
 
     def sum_sq_rows_by(self, group_column: str, sum_column: str):
         """Zero-I/O GROUP BY VAR moments: {group value: (sum, sumsq,
@@ -492,25 +637,50 @@ class CatalogAnswers:
         coverage degrades to a scan aggregate, never wrongness.
         O(catalog) driver-side fold — no executor ever starts."""
         self._dv_guard("sum_sq_rows_by")
+        groups = self._group_values(group_column)
+        if groups is None:
+            return None
+        per = _grouped(self.catalog.get_sums(sum_column), groups)
+        if per is None or any(len(e) < 3 or e[2] is None
+                              for es in per.values() for e in es):
+            return None
+        return {g: (sum(e[0] for e in es), sum(e[2] for e in es),
+                    sum(e[1] for e in es))
+                for g, es in per.items()}
+
+    def min_max_by(self, group_column: str, target_column: str):
+        """Zero-I/O GROUP BY MIN/MAX: {group value: (min, max, count)}
+        answered from the catalog alone when EVERY row group is
+        single-valued on the group column (partition columns, perfectly
+        clustered layouts) AND the target column's bounds are trusted
+        as attained values in every group — the MIN/MAX sibling of
+        count_rows_by/sum_rows_by, completing the grouped
+        aggregate-pushdown family (COUNT/SUM/MIN/MAX, the index as the
+        materialized view). count is the target's NON-NULL count
+        (row_count - null_count, SQL MIN/MAX semantics); a group whose
+        target is all-NULL contributes (None, None, 0) bounds-free.
+        Returns None when any row group fails a trust condition (caller
+        falls back to a scan aggregate). O(catalog) driver-side fold."""
+        self._dv_guard("min_max_by")
+        groups = self._group_values(group_column)
+        if groups is None:
+            return None
         try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
+            targets = self.catalog.column_rg_entries_keyed(target_column)
         except KeyError:
             return None
-        sums = self.catalog.get_sums(sum_column)
         out: Dict = {}
-        for key, (nc, lo, hi, _) in entries.items():
-            if lo is None or lo != hi or (nc or 0) != 0:
+        for key, g in groups.items():
+            bounds = self._attained(target_column, targets.get(key))
+            if bounds is None:
                 return None
-            if not self._bound_is_exact(group_column, lo):
-                return None
-            entry = sums.get(key)
-            if entry is None or len(entry) < 3 or entry[2] is None:
-                return None
-            acc = out.get(lo, (0, 0, 0))
-            out[lo] = (acc[0] + entry[0], acc[1] + entry[2],
-                       acc[2] + entry[1])
+            nc, _, _, rc = targets[key]
+            mn, mx, n = out.get(g, (None, None, 0))
+            out[g] = (*_extremes([(mn, mx), bounds]),
+                      n + (rc or 0) - (nc or 0))
         return out
 
+    # -- sketches: quantiles, NDV, dictionaries, heavy hitters -----------
     def hist_quantiles(self, column: str, qs_permille: Sequence[int]):
         """Zero-I/O QUANTILE estimates from the catalog's histogram
         extension: per-row-group equi-width bin counts (stored at index
@@ -528,45 +698,19 @@ class CatalogAnswers:
         P99-dashboard readout at 100 TB: distribution shape served the
         way COUNT/SUM/VAR already are, from the index alone."""
         self._dv_guard("hist_quantiles")
-        try:
-            hists = self.catalog.get_hists(column)
-        except Exception:
-            return None
-        if not hists:
-            return None
-        expected = {(f[0], rg) for f in self.catalog.all_files()
-                    for rg in range(f[2])}
-        if set(hists) != expected:
+        hists = self.catalog.get_hists(column)
+        if not hists or set(hists) != self._row_groups():
             return None  # a row group without the histogram: no answer
-        specs = {(lo, hi, nb) for (lo, hi, nb, _) in hists.values()}
-        if len(specs) != 1:
-            return None  # mixed bin specs cannot fold
-        lo, hi, nbins = specs.pop()
-        span = hi - lo + 1
-        total = [0] * nbins
-        for (_, _, _, counts) in hists.values():
-            for b, c in enumerate(counts):
-                total[b] += c
+        spec = _hist_spec(hists)
+        if spec is None:
+            return None
+        total = _bin_totals(hists.values(), spec[2])
         n = sum(total)
         if n == 0:
             return None
-        width = span // nbins
-        out = []
-        for q in qs_permille:
-            target = min(max(1, (q * n + 999) // 1000), n)
-            cum = 0
-            b = 0
-            for b, cnt in enumerate(total):
-                if cum + cnt >= target:
-                    break
-                cum += cnt
-            rank_in = target - cum  # 1-based rank inside bin b
-            left = lo + (span * b) // nbins
-            est = left + (width * (rank_in - 1)) // max(total[b], 1)
-            out.append((q, est, n))
         self.last_hist_pushdown = {"row_groups": len(hists),
-                                   "nbins": nbins, "n": n}
-        return out
+                                   "nbins": spec[2], "n": n}
+        return _quantiles(total, spec, qs_permille)
 
     def hist_quantiles_by(self, group_column: str, column: str,
                           qs_permille: Sequence[int]):
@@ -579,64 +723,17 @@ class CatalogAnswers:
         per group; None when any row group fails a trust condition or
         lacks the histogram (scan fallback, never wrongness)."""
         self._dv_guard("hist_quantiles_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-            hists = self.catalog.get_hists(column)
-        except Exception:
+        groups = self._group_values(group_column)
+        if groups is None:
             return None
-        if not hists or set(hists) != set(entries):
+        hists = self.catalog.get_hists(column)
+        per = _grouped(hists, groups) if hists else None
+        spec = _hist_spec(hists)
+        if per is None or spec is None:
             return None
-        specs = {(lo, hi, nb) for (lo, hi, nb, _) in hists.values()}
-        if len(specs) != 1:
-            return None
-        lo, hi, nbins = specs.pop()
-        span = hi - lo + 1
-        width = span // nbins
-        per_group: Dict = {}
-        for key, (nc, glo, ghi, _) in entries.items():
-            if glo is None or glo != ghi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            acc = per_group.setdefault(glo, [0] * nbins)
-            for b, c in enumerate(hists[key][3]):
-                acc[b] += c
-        out: Dict = {}
-        for g, total in per_group.items():
-            n = sum(total)
-            if n == 0:
-                continue
-            ests = []
-            for q in qs_permille:
-                target = min(max(1, (q * n + 999) // 1000), n)
-                cum = 0
-                b = 0
-                for b, cnt in enumerate(total):
-                    if cum + cnt >= target:
-                        break
-                    cum += cnt
-                left = lo + (span * b) // nbins
-                ests.append((q, left + (width * (target - cum - 1))
-                             // max(total[b], 1), n))
-            out[g] = ests
-        return out
-
-    def _fold_ndv_registers(self, reg_lists):
-        """Elementwise-MAX merge + the shared integer-scaled raw HLL
-        estimator (stats.HLL_ALPHA_SCALED / Σ 2^(55-M_j), rounded to 2
-        decimals — one float division total, so any engine recomputing
-        the same registers reproduces the identical estimate)."""
-        from .stats import HLL_ALPHA_SCALED, HLL_REGS
-
-        merged = [0] * HLL_REGS
-        for regs in reg_lists:
-            if len(regs) != HLL_REGS:
-                return None
-            for j, r in enumerate(regs):
-                if r > merged[j]:
-                    merged[j] = r
-        ind_sum = sum(1 << (55 - r) for r in merged)
-        return round(HLL_ALPHA_SCALED / ind_sum, 2)
+        totals = {g: _bin_totals(hs, spec[2]) for g, hs in per.items()}
+        return {g: _quantiles(total, spec, qs_permille)
+                for g, total in totals.items() if sum(total)}
 
     def ndv_estimate(self, column: str):
         """Zero-I/O approximate COUNT DISTINCT from the catalog's NDV
@@ -657,17 +754,10 @@ class CatalogAnswers:
         cardinality dashboard that never touches the data, and the
         registers keep merging across partitions, days, or tables."""
         self._dv_guard("ndv_estimate")
-        try:
-            ndvs = self.catalog.get_ndvs(column)
-        except Exception:
-            return None
-        if not ndvs:
-            return None
-        expected = {(f[0], rg) for f in self.catalog.all_files()
-                    for rg in range(f[2])}
-        if set(ndvs) != expected:
+        ndvs = self.catalog.get_ndvs(column)
+        if not ndvs or set(ndvs) != self._row_groups():
             return None  # a row group without registers: no answer
-        est = self._fold_ndv_registers(ndvs.values())
+        est = _fold_ndv_registers(ndvs.values())
         if est is None:
             return None
         self.last_ndv_pushdown = {"row_groups": len(ndvs),
@@ -684,27 +774,15 @@ class CatalogAnswers:
         a trust condition or lacks registers (scan fallback, never
         wrongness)."""
         self._dv_guard("ndv_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-            ndvs = self.catalog.get_ndvs(column)
-        except Exception:
+        groups = self._group_values(group_column)
+        if groups is None:
             return None
-        if not ndvs or set(ndvs) != set(entries):
+        ndvs = self.catalog.get_ndvs(column)
+        per = _grouped(ndvs, groups) if ndvs else None
+        if per is None:
             return None
-        per_group: Dict = {}
-        for key, (nc, glo, ghi, _) in entries.items():
-            if glo is None or glo != ghi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            per_group.setdefault(glo, []).append(ndvs[key])
-        out: Dict = {}
-        for g, reg_lists in per_group.items():
-            est = self._fold_ndv_registers(reg_lists)
-            if est is None:
-                return None
-            out[g] = est
-        return out
+        out = {g: _fold_ndv_registers(regs) for g, regs in per.items()}
+        return None if None in out.values() else out
 
     def group_counts(self, column: str, as_of: Optional[int] = None):
         """Exact zero-I/O ``GROUP BY col, COUNT(*)`` from the catalog's
@@ -727,17 +805,10 @@ class CatalogAnswers:
         index alone, and the maps keep folding across partitions,
         days, or tables."""
         self._dv_guard("group_counts")
-        try:
-            dicts = self.catalog.get_dicts(column)
-        except Exception:
-            return None
+        dicts = self.catalog.get_dicts(column)
         if not dicts:
             return None
-        files = self.catalog.all_files()
-        if as_of is not None:
-            snap = self._snapshot_guard(as_of)
-            files = [f for f in files if f[0] in snap]
-        expected = {(f[0], rg) for f in files for rg in range(f[2])}
+        expected = self._row_groups(as_of)
         if not expected or not expected <= set(dicts):
             return None  # a row group over the cap: no exact answer
         out: Dict = {}
@@ -786,27 +857,10 @@ class CatalogAnswers:
         dashboard at 100 TB, with summaries that keep folding across
         partitions, days, or tables."""
         self._dv_guard("heavy_hitters")
-        try:
-            topks = self.catalog.get_topk(column)
-        except Exception:
+        topks = self.catalog.get_topk(column)
+        if not topks or set(topks) != self._row_groups():
             return None
-        if not topks:
-            return None
-        expected = {(f[0], rg) for f in self.catalog.all_files()
-                    for rg in range(f[2])}
-        if set(topks) != expected:
-            return None
-        lower: Dict = {}
-        for entries, _, _ in topks.values():
-            for v, c in entries:
-                lower[v] = lower.get(v, 0) + c
-        out = []
-        for v, lo in lower.items():
-            slack = sum(min(kth, rest)
-                        for entries, rest, kth in topks.values()
-                        if all(sv != v for sv, _ in entries))
-            out.append((v, lo, lo + slack))
-        out.sort(key=lambda e: (-e[1], e[0]))
+        out = _hh_bounds(topks.values())
         self.last_hh_pushdown = {
             "row_groups": len(topks), "candidates": len(out),
             "unseen_upper": sum(min(kth, rest)
@@ -824,177 +878,11 @@ class CatalogAnswers:
         or None on any coverage/trust failure — scan fallback, never
         wrongness. Hot-keys-per-tenant from the index alone."""
         self._dv_guard("heavy_hitters_by")
-        try:
-            entries = self.catalog.column_rg_entries_keyed(group_column)
-            topks = self.catalog.get_topk(column)
-        except Exception:
+        groups = self._group_values(group_column)
+        if groups is None:
             return None
-        if not topks or set(topks) != set(entries):
+        topks = self.catalog.get_topk(column)
+        per = _grouped(topks, groups) if topks else None
+        if per is None:
             return None
-        per_group: Dict = {}
-        for key, (nc, glo, ghi, _) in entries.items():
-            if glo is None or glo != ghi or (nc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            per_group.setdefault(glo, []).append(topks[key])
-        out: Dict = {}
-        for g, summaries in per_group.items():
-            lower: Dict = {}
-            for ents, _, _ in summaries:
-                for v, c in ents:
-                    lower[v] = lower.get(v, 0) + c
-            rows = []
-            for v, lo in lower.items():
-                slack = sum(min(kth, rest)
-                            for ents, rest, kth in summaries
-                            if all(sv != v for sv, _ in ents))
-                rows.append((v, lo, lo + slack))
-            rows.sort(key=lambda e: (-e[1], e[0]))
-            out[g] = rows[:n]
-        return out
-
-    def min_max_by(self, group_column: str, target_column: str):
-        """Zero-I/O GROUP BY MIN/MAX: {group value: (min, max, count)}
-        answered from the catalog alone when EVERY row group is
-        single-valued on the group column (partition columns, perfectly
-        clustered layouts) AND the target column's bounds are trusted
-        as attained values in every group — the MIN/MAX sibling of
-        count_rows_by/sum_rows_by, completing the grouped
-        aggregate-pushdown family (COUNT/SUM/MIN/MAX, the index as the
-        materialized view). count is the target's NON-NULL count
-        (row_count - null_count, SQL MIN/MAX semantics); a group whose
-        target is all-NULL contributes (None, None, 0) bounds-free.
-        Returns None when any row group fails a trust condition (caller
-        falls back to a scan aggregate). O(catalog) driver-side fold."""
-        self._dv_guard("min_max_by")
-        try:
-            groups = self.catalog.column_rg_entries_keyed(group_column)
-            targets = self.catalog.column_rg_entries_keyed(target_column)
-        except KeyError:
-            return None
-        out: Dict = {}
-        for key, (gnc, glo, ghi, _) in groups.items():
-            if glo is None or glo != ghi or (gnc or 0) != 0:
-                return None
-            if not self._bound_is_exact(group_column, glo):
-                return None
-            tnc, tlo, thi, trc = targets.get(key, (None, None, None, None))
-            mn, mx, n = out.get(glo, (None, None, 0))
-            if tlo is not None and thi is not None:
-                if not (self._bound_is_exact(target_column, tlo)
-                        and self._bound_is_exact(target_column, thi)):
-                    return None
-                mn = tlo if mn is None or tlo < mn else mn
-                mx = thi if mx is None or thi > mx else mx
-            elif not (tnc is not None and trc is not None and tnc == trc):
-                # bounds merely MISSING (not proven all-NULL): no
-                # catalog answer for this group's extremes
-                return None
-            n += (trc or 0) - (tnc or 0)
-            out[glo] = (mn, mx, n)
-        return out
-
-    def min_max(self, column: str, predicate: Optional[Expr] = None):
-        """(min, max) for an indexed column, answered from the catalog
-        when every row group carries stats AND the bounds are trustable
-        as attained values (numeric Parquet min/max are exact; long
-        string/binary stats may be truncated bounds and decimal bounds
-        are ulp-widened — valid for pruning but possibly never-attained,
-        so those trigger the scan fallback).
-
-        With a predicate, the same pushdown shape as count_rows/
-        sum_rows: over satisfaction-proven row groups every row
-        matches, so the group's exact-attained bounds participate in
-        the answer unread; groups whose bounds cannot be trusted as
-        attained demote to the scanned set alongside the boundary
-        groups. ``last_minmax_pushdown`` records the split."""
-        self._dv_guard("min_max")
-        from pyspark.sql import functions as F
-
-        if predicate is None:
-            try:
-                mn, mx, complete = self.catalog.column_bounds(column)
-            except KeyError:
-                complete = False
-                mn = mx = None
-            if (complete and self._bound_is_exact(column, mn)
-                    and self._bound_is_exact(column, mx)):
-                self.last_minmax_pushdown = {
-                    "full_row_groups":
-                        sum(f[2] for f in self.catalog.all_files()),
-                    "partial_row_groups": 0}
-                return mn, mx
-            self.last_minmax_pushdown = None
-            row = self.to_df().agg(F.min(column).alias("mn"),
-                                   F.max(column).alias("mx")).head()
-            return row["mn"], row["mx"]
-        decision = self.plan_scan(predicate)
-        if not decision.files_scanned:
-            self.last_minmax_pushdown = {
-                "full_row_groups": 0, "partial_row_groups": 0}
-            return None, None
-        if getattr(self, "partitioned", False):
-            self.last_minmax_pushdown = None
-            row = self.query(predicate).agg(
-                F.min(column).alias("mn"), F.max(column).alias("mx")).head()
-            return row["mn"], row["mx"]
-        sat = self._rewriter.satisfies(predicate)
-        full = dict(self._get_files_prefiltered(sat, predicate))
-        try:
-            entries = self.catalog.column_rg_entries_keyed(column)
-        except KeyError:
-            # unindexed target column: the catalog knows nothing about
-            # its values — every candidate group must be scanned
-            entries = None
-        mn = mx = None
-        full_rgs = 0
-        partial: Dict[str, List[int]] = {}
-        for fname, rgs in decision.files_scanned.items():
-            frg = set(full.get(fname, ()))
-            rest = []
-            for rg in rgs:
-                nc, lo, hi, rc = (entries.get((fname, rg),
-                                              (None, None, None, None))
-                                  if entries is not None
-                                  else (None, None, None, None))
-                if entries is None or rg not in frg:
-                    rest.append(rg)
-                elif lo is not None and hi is not None:
-                    if (self._bound_is_exact(column, lo)
-                            and self._bound_is_exact(column, hi)):
-                        full_rgs += 1
-                        mn = lo if mn is None or lo < mn else mn
-                        mx = hi if mx is None or hi > mx else mx
-                    else:
-                        rest.append(rg)
-                elif nc is not None and rc is not None and nc == rc:
-                    # PROVEN all-NULL (null_count == row_count):
-                    # contributes no values, correctly skipped. Bounds
-                    # that are merely MISSING (writer omitted min/max,
-                    # e.g. an all-NaN float chunk) prove nothing and
-                    # fall through to the scan set instead.
-                    full_rgs += 1
-                else:
-                    rest.append(rg)
-            if rest:
-                partial[fname] = rest
-        self.last_minmax_pushdown = {
-            "full_row_groups": full_rgs,
-            "partial_row_groups": sum(len(v) for v in partial.values())}
-        if partial:
-            partial_decision = ScanDecision(
-                decision.predicate, partial, decision.total_files,
-                decision.total_row_groups)
-            cols = sorted(predicate.columns() | {column})
-            df = self._read_rowgroups(partial_decision, predicate,
-                                      columns=cols,
-                                      local_max_bytes=self
-                                      .ROWGROUP_LOCAL_MAX_BYTES)
-            row = df.filter(predicate.to_spark()).agg(
-                F.min(column).alias("mn"), F.max(column).alias("mx")).head()
-            lo, hi = row["mn"], row["mx"]
-            if lo is not None:
-                mn = lo if mn is None or lo < mn else mn
-                mx = hi if mx is None or hi > mx else mx
-        return mn, mx
+        return {g: _hh_bounds(summaries)[:n] for g, summaries in per.items()}

@@ -92,7 +92,7 @@ def decode_value(category: str, v: Any) -> Any:
     """Inverse of encode_value: catalog storage form -> Python domain
     value (epoch days -> date, epoch micros -> naive-UTC datetime,
     sqlite BLOB -> bytes). Applied by the catalog readout methods
-    (column_bounds / column_rg_entries) so catalog-only ANSWERS —
+    (column_bounds / column_rg_entries_keyed) so catalog-only ANSWERS —
     min_max(), count_rows_by() — return values in the data's domain,
     not the storage encoding; the DataFrame backend stores domain
     values directly, so decoding here is what keeps the two backends
@@ -1631,13 +1631,6 @@ class SqliteIndexCatalog(SidecarReads):
         mn, mx, missing = row
         return decode_value(cat, mn), decode_value(cat, mx), (missing or 0) == 0
 
-    def column_rg_bounds(self, column: str):
-        """{(file_name, row_group): (min, max)} in the data's domain —
-        the keyed form column_rg_entries lacks, needed when bounds must
-        line up with an access plan (predicated MIN/MAX pushdown)."""
-        return {k: (mn, mx) for k, (_, mn, mx, _)
-                in self.column_rg_entries_keyed(column).items()}
-
     def column_nan_total(self, column: str) -> Optional[int]:
         """Total NaN count across every row group for a float column, or
         None when ANY row group's NaN count is unknown (the opt-in
@@ -1665,8 +1658,8 @@ class SqliteIndexCatalog(SidecarReads):
 
     def column_rg_entries_keyed(self, column: str):
         """{(file_name, row_group): (null_count, min, max, row_count)}
-        in the data's domain — the keyed variant of column_rg_entries
-        for answers that must line up with sums/access plans."""
+        in the data's domain — the raw material for catalog-only
+        answers that must line up with sums, sidecars or access plans."""
         if column not in self.index_schema:
             raise KeyError(column)
         cat = self.index_schema[column]
@@ -1682,22 +1675,6 @@ class SqliteIndexCatalog(SidecarReads):
         return {(fn, rg): (nc, *self._decode_rg_bounds(cat, mn, mx, emn, emx),
                            rc)
                 for fn, rg, nc, mn, mx, rc, emn, emx in rows}
-
-    def column_rg_entries(self, column: str):
-        """[(null_count, min, max, row_count)] per indexed row group —
-        the raw material for catalog-only per-value aggregates over
-        single-valued (e.g. partition) columns."""
-        if column not in self.index_schema:
-            raise KeyError(column)
-        cat = self.index_schema[column]
-        exact = (f', "{column}_exact_min", "{column}_exact_max"'
-                 if cat == "decimal" else ", NULL, NULL")
-        rows = self._query(
-            f"""SELECT {column}_null_count, {column}_min,
-                       {column}_max, row_count{exact}
-                FROM row_group_statistics""")
-        return [(nc, *self._decode_rg_bounds(cat, mn, mx, emn, emx), rc)
-                for nc, mn, mx, rc, emn, emx in rows]
 
     def close(self) -> None:
         self._conn.close()

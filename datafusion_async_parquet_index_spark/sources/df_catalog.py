@@ -399,13 +399,6 @@ class DataFrameIndexCatalog(SidecarReads):
                 mx = hi if mx is None or hi > mx else mx
         return mn, mx, complete
 
-    def column_rg_bounds(self, column: str):
-        """{(file_name, row_group): (min, max)} — same protocol as
-        SqliteIndexCatalog.column_rg_bounds (values already in the
-        data's domain in this backend)."""
-        return {k: (mn, mx) for k, (_, mn, mx, _)
-                in self.column_rg_entries_keyed(column).items()}
-
     def column_rg_entries_keyed(self, column: str):
         """{(file_name, row_group): (null_count, min, max, row_count)}
         — same protocol as SqliteIndexCatalog."""
@@ -436,19 +429,6 @@ class DataFrameIndexCatalog(SidecarReads):
                     return None
                 total += n
         return total if seen else None
-
-    def column_rg_entries(self, column: str):
-        """[(null_count, min, max, row_count)] per indexed row group —
-        same contract as SqliteIndexCatalog.column_rg_entries."""
-        if column not in self.index_schema:
-            raise KeyError(column)
-        out = []
-        for _, rgs in self._files.values():
-            for rg in rgs:
-                nc, _, _ = rg.columns.get(column, (None, None, None))
-                lo, hi = self._rg_bounds(rg, column)
-                out.append((nc, lo, hi, rg.row_count))
-        return out
 
     # -- deletion vectors (same protocol as SqliteIndexCatalog) --------
     def upsert_dv(self, file_name, positions_by_rg, sum_adjust=None):

@@ -41,24 +41,10 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.expr import Expr, Lit, and_all
 from ..plans.pruning import PruningRewriter
 from . import stats as _stats
+from .answers import STATS_EXACT_MAX_BYTES, CatalogAnswers
 from .catalog import ConcurrentWriteError, SqliteIndexCatalog
 from .stats import build_index, list_parquet_files
 
-
-# Parquet string/binary column-chunk statistics may be TRUNCATED bounds:
-# writers (parquet-mr, parquet-rs) shorten long min/max values while
-# keeping them valid *bounds* (max truncation rounds the last byte up),
-# and mark it with is_min_value_exact/is_max_value_exact footer flags —
-# which pyarrow 16 does not expose. Truncated bounds are still sound for
-# PRUNING (over-approximation), but catalog-only ANSWERS (min_max,
-# count_rows_by) would return a never-attained bound as "the max". With
-# the flags unreadable, the conservative guard is length-based: treat a
-# string/binary bound at or beyond the common 64-byte truncation
-# threshold as possibly inexact and fall back to a scan aggregate —
-# wrong answers become impossible, long-string corpora merely lose the
-# zero-I/O shortcut. Partition-column stats are exempt: their min=max
-# value comes from the directory name, not a footer stat.
-STATS_EXACT_MAX_BYTES = 64
 
 
 def _compact_tmp_path(path: str) -> str:
@@ -238,11 +224,6 @@ class ScanDecision:
             lines.append(f"  page index skipped {self.page_rows_skipped} "
                          "rows inside surviving row groups")
         return "\n".join(lines)
-
-
-# imported here, below ScanDecision and STATS_EXACT_MAX_BYTES, which
-# the answers module reads back from this one
-from .answers import CatalogAnswers  # noqa: E402
 
 
 class IndexedParquetTable(CatalogAnswers):
@@ -819,22 +800,6 @@ class IndexedParquetTable(CatalogAnswers):
                 else:
                     del survivors[fname]
         return skipped
-
-    def _get_files_prefiltered(self, stats_pred: Expr,
-                               data_pred: Optional[Expr]):
-        """catalog.get_files with the rtree prefilter when available —
-        the shared lookup for the aggregate-pushdown planners'
-        SATISFACTION sets (count_rows/sum_rows/sum_sq_rows/min_max), so
-        they get the same O(log n) planning as plan_scan instead of the
-        full catalog scan. Consumers only read the satisfaction set at
-        keys already inside the (equally prefiltered) refutation
-        decision, so the window restriction cannot change any
-        answer."""
-        window = (self._rtree_window(data_pred)
-                  if data_pred is not None else None)
-        if window is not None:
-            return self.catalog.get_files(stats_pred, prefilter=window)
-        return self.catalog.get_files(stats_pred)
 
     _RTREE_MAX_STABS = 16  # IN-lists beyond this fall back to the envelope
 
@@ -3216,7 +3181,7 @@ class IndexedParquetTable(CatalogAnswers):
             "columns": {},
         }
         for col, cat in self.index_schema.items():
-            entries = self.catalog.column_rg_entries(col)
+            entries = self.catalog.column_rg_entries_keyed(col).values()
             with_stats = sum(1 for _, lo, _, _ in entries if lo is not None)
             nulls = (sum(nc for nc, _, _, _ in entries)
                      if all(nc is not None for nc, _, _, _ in entries)

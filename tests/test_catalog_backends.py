@@ -462,6 +462,20 @@ def test_dbapi_backend_full_protocol(spark, corpus):
                for fn, _ in t.catalog.get_sums("value"))
 
 
+def test_backends_expose_the_same_public_methods():
+    """A reader added to or deleted from one backend but not the other
+    fails here, not at a caller. The two known asymmetries:
+    upsert_files (batched SQL upsert) and stats_df (the DataFrame
+    backend's statistics frame)."""
+    def public(cls):
+        return {n for n in dir(cls)
+                if not n.startswith("_") and callable(getattr(cls, n))}
+
+    sqlite, frame = public(SqliteIndexCatalog), public(DataFrameIndexCatalog)
+    assert sqlite - frame == {"upsert_files"}
+    assert frame - sqlite == {"stats_df"}
+
+
 def test_dbapi_ddl_spellings_reach_driver():
     """The pk/blob DDL knobs and paramstyle translation must surface in
     the SQL the driver actually receives — recorded through a fake

@@ -248,7 +248,8 @@ def test_count_pushdown_matches_scan_count_sweep(spark, tmp_path):
                     "b": pa.array(b, pa.int64()),
                     "s": pa.array(s, pa.string())})
     pq.write_table(tbl, os.path.join(d, "part-0.parquet"), row_group_size=5)
-    t = IndexedParquetTable(spark, d, index_columns=["a", "b", "s"])
+    t = IndexedParquetTable(spark, d, index_columns=["a", "b", "s"],
+                            sum_columns=["a", "b"])
     full = spark.read.parquet(d)
     from datafusion_async_parquet_index_spark.plans.expr import Not, lit
     preds = [
@@ -268,11 +269,46 @@ def test_count_pushdown_matches_scan_count_sweep(spark, tmp_path):
         lit(True),
         lit(False),
     ]
+    a_ = F.col("a")
+
+    def expect(rows, pred):
+        r = rows.filter(pred.to_spark()).agg(
+            F.count(F.lit(1)).alias("rows"), F.sum(a_).alias("s"),
+            F.sum(a_ * a_).alias("sq"), F.count(a_).alias("n"),
+            F.min(a_).alias("mn"), F.max(a_).alias("mx")).head()
+        var = (r["s"], r["sq"], r["n"]) if r["n"] else (None, None, 0)
+        return r["rows"], (r["s"], r["n"]), var, (r["mn"], r["mx"])
+
+    # the proven-full / boundary split is shared by COUNT, SUM, VAR and
+    # MIN/MAX: pin each caller against the same predicate sweep
     for pred in preds:
-        want = full.filter(pred.to_spark()).count()
+        rows, sums, var, bounds = expect(full, pred)
         got = t.count_rows(pred)
-        assert got == want, (pred.to_sql(), got, want,
+        assert got == rows, (pred.to_sql(), got, rows,
                              t.last_count_pushdown)
+        assert t.sum_rows("a", pred) == sums, (
+            pred.to_sql(), t.last_sum_pushdown)
+        assert t.sum_sq_rows("a", pred) == var, (
+            pred.to_sql(), t.last_var_pushdown)
+        assert t.min_max("a", pred) == bounds, (
+            pred.to_sql(), t.last_minmax_pushdown)
+
+    # under deletion vectors: proven-full groups subtract the recorded
+    # deletions, boundary groups scan live-only
+    victims = col("a").isin([2, 7, 51])
+    assert t.delete_where(victims) == 7
+    live = full.filter(~F.coalesce(victims.to_spark(), F.lit(False)))
+    for pred in preds:
+        rows, sums, var, _ = expect(live, pred)
+        assert t.count_rows(pred) == rows, (pred.to_sql(),
+                                            t.last_count_pushdown)
+        assert t.sum_rows("a", pred) == sums, (
+            pred.to_sql(), t.last_sum_pushdown)
+        assert t.sum_sq_rows("a", pred) == var, (
+            pred.to_sql(), t.last_var_pushdown)
+        # MIN/MAX bounds cannot be repaired under deletes: refuse
+        with pytest.raises(ValueError, match="deletion vectors"):
+            t.min_max("a", pred)
 
 
 def test_sum_pushdown_matches_scan(spark, demo_dir, tmp_path):

@@ -36,6 +36,7 @@ class _Shim:
         self.catalog = cat
 
     heavy_hitters = IndexedParquetTable.heavy_hitters
+    _row_groups = IndexedParquetTable._row_groups
     _dvs = IndexedParquetTable._dvs
     _dv_guard = IndexedParquetTable._dv_guard
 
@@ -86,6 +87,7 @@ class _DictShim:
 
     group_counts = IndexedParquetTable.group_counts
     distinct_values = IndexedParquetTable.distinct_values
+    _row_groups = IndexedParquetTable._row_groups
     _dvs = IndexedParquetTable._dvs
     _dv_guard = IndexedParquetTable._dv_guard
 
