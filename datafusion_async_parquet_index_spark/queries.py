@@ -80,8 +80,7 @@ def _make_table(spark, sf_dir, table, index_columns, bloom_columns=(),
         from .plans.pruning import PruningRewriter
         t._rewriter = PruningRewriter(t.index_schema)
         t._schema = spark.read.parquet(t._files[0]).schema
-        t.last_scan = None
-        t.scan_history = []
+        t._reset_scan_log()
         _TABLES[key] = t
     return t
 

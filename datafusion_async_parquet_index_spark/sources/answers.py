@@ -340,8 +340,7 @@ class CatalogAnswers:
         if predicate is None:
             if as_of is None:
                 deleted = self.catalog.dv_deleted_rows()
-                return (sum(f[3] for f in self.catalog.all_files())
-                        - sum(deleted.values()))
+                return self.catalog.totals()[2] - sum(deleted.values())
             snap = self._snapshot_guard(as_of)
             # era-correct: the snapshot's RECORDED deletions, not the
             # live ones — deletes after the snapshot are invisible
@@ -510,7 +509,7 @@ class CatalogAnswers:
         Never touches Parquet; useful for planning (e.g. choosing
         broadcast vs shuffle before reading)."""
         if predicate is None:
-            return sum(f[3] for f in self.catalog.all_files())
+            return self.catalog.totals()[2]
         decision = self.plan_scan(predicate)
         total = 0
         for file_name, rgs in decision.files_scanned.items():
@@ -549,8 +548,7 @@ class CatalogAnswers:
             if (complete and self._bound_is_exact(column, mn)
                     and self._bound_is_exact(column, mx)):
                 self.last_minmax_pushdown = {
-                    "full_row_groups":
-                        sum(f[2] for f in self.catalog.all_files()),
+                    "full_row_groups": self.catalog.totals()[1],
                     "partial_row_groups": 0}
                 return mn, mx
             self.last_minmax_pushdown = None

@@ -328,6 +328,13 @@ class DataFrameIndexCatalog(SidecarReads):
             for fs, _ in self._files.values()
         )
 
+    def totals(self) -> Tuple[int, int, int]:
+        """Same protocol as SqliteIndexCatalog.totals (folded here: the
+        file dict is already in driver memory)."""
+        files = [fs for fs, _ in self._files.values()]
+        return (len(files), sum(fs.row_group_count for fs in files),
+                sum(fs.row_count for fs in files))
+
     def file_meta(self) -> Dict[str, Tuple[int, Optional[int]]]:
         """Same protocol as SqliteIndexCatalog.file_meta."""
         return {fs.file_name: (fs.file_size_bytes, fs.mtime_ns)

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import deque
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple
 
@@ -345,8 +346,18 @@ class IndexedParquetTable(CatalogAnswers):
         self.index_schema = self._build_index(
             index_columns, incremental=bool(incremental_attach))
         self._rewriter = PruningRewriter(self.index_schema)
+        self._reset_scan_log()
+
+    # the execution log keeps the most recent decisions only, so a
+    # long-lived handle's memory stays flat however many plans it makes
+    SCAN_HISTORY_CAP = 64
+
+    def _reset_scan_log(self) -> None:
+        """Empty ``last_scan`` and the bounded ``scan_history``; also the
+        one initialisation of the log for partial tables."""
         self.last_scan: Optional[ScanDecision] = None
-        self.scan_history: List[ScanDecision] = []
+        self.scan_history: deque[ScanDecision] = deque(
+            maxlen=self.SCAN_HISTORY_CAP)
 
     # the table attributes that are build_index options of the same name
     _INDEX_OPTIONS = (
@@ -692,7 +703,6 @@ class IndexedParquetTable(CatalogAnswers):
         """Steps 1-2: compile the predicate to stats space and consult the
         catalog. Does not touch Parquet. as_of: restrict the plan to a
         snapshot's file set (see snapshot())."""
-        total_rgs = sum(f[2] for f in self.catalog.all_files())
         if predicate is None:
             # catalog-driven file list: a file dropped into the directory
             # after construction is invisible (to BOTH the predicate and
@@ -703,7 +713,8 @@ class IndexedParquetTable(CatalogAnswers):
                      if (name := self._file_key(p)) in indexed}
             if as_of is not None:
                 files = self._snapshot_filter(as_of, files)
-            decision = ScanDecision("TRUE", files, len(self._files), total_rgs)
+            decision = ScanDecision("TRUE", files, len(self._files),
+                                    sum(indexed.values()))
         else:
             stats_pred = self._rewriter.rewrite(predicate)
             window = self._rtree_window(predicate)
@@ -718,7 +729,8 @@ class IndexedParquetTable(CatalogAnswers):
                 survivors = self._snapshot_filter(as_of, survivors)
             row_ranges, page_rows = self._page_refine(predicate, survivors)
             decision = ScanDecision(
-                predicate.to_sql(), survivors, len(self._files), total_rgs,
+                predicate.to_sql(), survivors, len(self._files),
+                self.catalog.totals()[1],
                 bloom_skipped=skipped, dict_skipped=dict_skipped,
                 row_ranges=row_ranges, page_rows_skipped=page_rows)
         self.last_scan = decision
@@ -1077,10 +1089,7 @@ class IndexedParquetTable(CatalogAnswers):
         dicts_by_col: Dict[str, Dict] = {}  # one fetch+decode per column
         for column, values, negated in constraints:
             if column not in dicts_by_col:
-                try:
-                    dicts_by_col[column] = self.catalog.get_dicts(column)
-                except Exception:
-                    dicts_by_col[column] = {}
+                dicts_by_col[column] = self.catalog.get_dicts(column)
             dicts = dicts_by_col[column]
             if not dicts:
                 continue
@@ -2937,7 +2946,7 @@ class IndexedParquetTable(CatalogAnswers):
             df = self.spark.createDataFrame([], self._schema)
             self.last_scan = ScanDecision(
                 "JOIN-PRUNED: empty build side", {}, len(self._files),
-                sum(f[2] for f in self.catalog.all_files()))
+                self.catalog.totals()[1])
             self.scan_history.append(self.last_scan)
             return df
         if len(keys) <= max_in_list:
@@ -2985,7 +2994,7 @@ class IndexedParquetTable(CatalogAnswers):
                 rc = self.catalog.row_group_row_counts(fname)
                 est += sum(rc[rg] for rg in rgs)
         else:
-            est = sum(f[3] for f in self.catalog.all_files())
+            est = self.catalog.totals()[2]
         if broadcast_max_rows is None:
             broadcast_max_rows = 500_000
         strategy = ("broadcast" if est <= broadcast_max_rows

@@ -11,6 +11,13 @@ increasing file counts and times plan-shaped lookups on the SQLite
 backend: point equality, a 1% range, a contradiction, and an IN-list,
 plus the upsert throughput that bounds index-build time.
 
+Next to the lookup timings each tier prints the end-to-end planner:
+``plan_scan_ms`` is ``IndexedParquetTable.plan_scan`` of the point
+predicate through a table assembled over the catalog alone (no Parquet,
+no Spark job), and ``all_files_ms`` / ``totals_ms`` time the O(files)
+file-row read and the O(1) counter read that fills
+``ScanDecision.total_row_groups``.
+
 Usage: python scripts/catalog_scale_probe.py [max_files]
 Prints one JSON line per scale tier.
 """
@@ -26,6 +33,9 @@ from datafusion_async_parquet_index_spark.plans.expr import Col, InList, Lit
 from datafusion_async_parquet_index_spark.plans.pruning import PruningRewriter
 from datafusion_async_parquet_index_spark.sources.catalog import (
     FileStats, RowGroupStats, SqliteIndexCatalog,
+)
+from datafusion_async_parquet_index_spark.sources.table import (
+    IndexedParquetTable,
 )
 
 RGS_PER_FILE = 8
@@ -51,22 +61,40 @@ def build(n_files: int, rtree: bool = False) -> tuple:
     return cat, time.perf_counter() - t0
 
 
+def planner(cat: SqliteIndexCatalog) -> IndexedParquetTable:
+    """A table over the catalog alone, assembled the way
+    ``queries._make_table`` assembles its partial table: plan_scan
+    needs the catalog, the index schema, the rewriter, the file list
+    and the scan log, never a Spark session or a Parquet footer."""
+    t = IndexedParquetTable.__new__(IndexedParquetTable)
+    t.catalog = cat
+    t.index_schema = {"v": "int"}
+    t._rewriter = PruningRewriter(t.index_schema)
+    t._files = [f[0] for f in cat.all_files()]
+    t._reset_scan_log()
+    return t
+
+
+def best_ms(fn, reps=20) -> tuple:
+    """(best wall time in ms over reps calls, the last result)"""
+    best = float("inf")
+    for _ in range(reps):
+        a = time.perf_counter()
+        out = fn()
+        best = min(best, time.perf_counter() - a)
+    return round(best * 1000, 3), out
+
+
 def probe(n_files: int, rtree: bool = False) -> dict:
     cat, build_s = build(n_files, rtree=rtree)
     rw = PruningRewriter({"v": "int"})
     domain = n_files * RGS_PER_FILE * ROWS_PER_RG
 
-    def t_plan(pred, windows, reps=20):
+    def t_plan(pred, windows):
         sp = rw.rewrite(pred)
-        best = float("inf")
-        out_len = 0
-        for _ in range(reps):
-            a = time.perf_counter()
-            res = (cat.get_files(sp, prefilter=("v", windows))
-                   if rtree else cat.get_files(sp))
-            best = min(best, time.perf_counter() - a)
-            out_len = sum(len(r) for _, r in res)
-        return round(best * 1000, 3), out_len
+        ms, res = best_ms(lambda: cat.get_files(sp, prefilter=("v", windows))
+                          if rtree else cat.get_files(sp))
+        return ms, sum(len(r) for _, r in res)
 
     point_ms, point_rgs = t_plan(Col("v") == Lit(domain // 2),
                                  [(domain // 2, domain // 2)])
@@ -79,6 +107,12 @@ def probe(n_files: int, rtree: bool = False) -> dict:
     in_lits = [i * domain // 10 + 7 for i in range(10)]
     in_ms, in_rgs = t_plan(InList(Col("v"), [Lit(x) for x in in_lits]),
                            [(x, x) for x in in_lits])
+    all_files_ms, _ = best_ms(cat.all_files)
+    totals_ms, _ = best_ms(cat.totals)
+    table = planner(cat)
+    plan_ms, dec = best_ms(
+        lambda: table.plan_scan(Col("v") == Lit(domain // 2)))
+    assert dec.row_groups_scanned == point_rgs
     return {
         "files": n_files, "rg_rows": n_files * RGS_PER_FILE,
         "rtree": rtree, "build_s": round(build_s, 2),
@@ -87,6 +121,8 @@ def probe(n_files: int, rtree: bool = False) -> dict:
         "range1pct_ms": rng_ms, "range1pct_rgs": rng_rgs,
         "contradiction_ms": contra_ms, "contradiction_rgs": contra_rgs,
         "in10_ms": in_ms, "in10_rgs": in_rgs,
+        "all_files_ms": all_files_ms, "totals_ms": totals_ms,
+        "plan_scan_ms": plan_ms,
     }
 
 

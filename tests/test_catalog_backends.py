@@ -114,8 +114,7 @@ def test_sqlite_catalog_survives_reopen(spark, corpus, tmp_path):
         t2._index_columns = ["value", "text"]
         t2._schema = spark.read.parquet(t2._files[0]).schema
         t2.index_schema = {}
-        t2.last_scan = None
-        t2.scan_history = []
+        t2._reset_scan_log()
         t2.refresh()  # incremental: size-matched files short-circuit
         assert calls["n"] == 0, "reopen must not re-read any footer"
         for pred, want in zip(PREDICATES, decisions):
@@ -492,11 +491,11 @@ def test_dbapi_ddl_spellings_reach_driver():
             recorded.append(sql)
 
         def fetchall(self):
-            # any SELECT finds a row; wide enough for the 5-column
+            # any SELECT finds a row; wide enough for the 6-column
             # prior-row lookup (file_id, row_group_count, size,
-            # mtime_ns, footer_md5) while keeping [0][0] = 1 for the
-            # upsert's id probe
-            return [(1, 1, 1, None, None)]
+            # mtime_ns, footer_md5, row_count) while keeping [0][0] = 1
+            # for the upsert's id probe
+            return [(1, 1, 1, None, None, 1)]
 
         @property
         def description(self):

@@ -226,6 +226,24 @@ def test_dict_refine_conservative_paths(spark, split_dir):
     assert got == want
 
 
+def test_dict_refine_catalog_fault_propagates(spark, split_dir,
+                                              monkeypatch):
+    """get_dicts answers an unknown column with {}, so an exception from
+    it is a real catalog fault: planning must raise it, not quietly
+    plan without dictionary pruning."""
+    import sqlite3
+
+    t = IndexedParquetTable(spark, split_dir, index_columns=["k"],
+                            dict_columns=["status"])
+
+    def broken(column):
+        raise sqlite3.OperationalError("disk I/O error")
+
+    monkeypatch.setattr(t.catalog, "get_dicts", broken)
+    with pytest.raises(sqlite3.OperationalError, match="disk I/O"):
+        t.plan_scan(Col("status") == Lit("O"))
+
+
 def test_refresh_updates_dicts(spark, tmp_path):
     """A file arriving after construction enters the dict store on
     refresh(); group_counts reflects it exactly."""
