@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..functions import (
     char_shingles, hash60, sql_char_shingles, sql_hash60, sql_tokens, tokens,
 )
+from ..session import local_frame
 from .util import read_table, track_cache
 
 # Corpus signature store: the dedup entry points share the expensive
@@ -627,8 +628,7 @@ def connected_components(
         schema = StructType([
             StructField("doc_id", e.schema[0].dataType, False),
             StructField("cluster_id", e.schema[0].dataType, False)])
-        return e.sparkSession.createDataFrame(
-            sorted(labels.items()), schema)
+        return local_frame(e.sparkSession, sorted(labels.items()), schema)
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     labels = (edges.select(F.col("src").alias("node")).distinct()
@@ -2314,7 +2314,8 @@ def dedup_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exactly, so (ci/cu)*cu == ci — the exact intersection —
         # where ci/K would underestimate by cu/K.
         inter_est = (ci / float(cu)) * union_raw
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(KMV_K, n_a, n_b, float(union_raw), float(inter_est),
           inter_exact)],
         "k INT, n_a BIGINT, n_b BIGINT, union_est DOUBLE, "

@@ -24,6 +24,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 # Runtime SQL confs the operators assume.  All are cheap, idempotent,
@@ -460,8 +462,8 @@ def _read_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 def _read_nanos_via_arrow(spark: SparkSession, path: str) -> DataFrame:
     """Fallback for sessions where the nanosAsLong conf cannot be set:
     read with pyarrow, cast ns-timestamps to int64 (same nanos-BIGINT
-    surface as the conf path), and parallelize.  Driver-side — local
-    harness escape hatch only."""
+    surface as the conf path), and ship the table as an Arrow local
+    relation.  Driver-side — local harness escape hatch only."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -474,4 +476,4 @@ def _read_nanos_via_arrow(spark: SparkSession, path: str) -> DataFrame:
         cols.append(column)
         fields.append(field)
     fixed = pa.table(cols, schema=pa.schema(fields))
-    return spark.createDataFrame(fixed.to_pandas())
+    return local_frame(spark, fixed)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .plans.expr import col as xcol
+from .session import local_frame
 from .sources.catalog import SqliteIndexCatalog
 from .sources.table import IndexedParquetTable
 
@@ -858,7 +859,7 @@ def q45_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N = sum of bin counts (every row lands in exactly one bin) — no
     # second scan of the fact table
     total = bins.agg(F.sum("cnt").alias("n"))
-    pcts = spark.createDataFrame([(p,) for p in Q45_PCTS], "pct INT")
+    pcts = local_frame(spark, [(p,) for p in Q45_PCTS], "pct INT")
     thr = pcts.crossJoin(total).select(
         "pct", F.ceil(F.col("pct") * F.col("n") / 100).cast("long").alias("thr"))
     est = (
@@ -969,8 +970,8 @@ def q48_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = t.count_rows()
     impossible = t.count_rows(xcol("l_quantity") > 1e9)
     assert t.last_scan.files_scanned == {}, "refutation must be catalog-only"
-    return spark.createDataFrame(
-        [(total, impossible)],
+    return local_frame(
+        spark, [(total, impossible)],
         "total_rows BIGINT, impossible_rows BIGINT")
 
 
@@ -1029,8 +1030,8 @@ def q51_partition_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _partitioned_orders(spark, sf_dir)
     counts = t.count_rows_by("o_orderstatus")
     assert counts is not None, "partition column must be single-valued"
-    return spark.createDataFrame(
-        sorted(counts.items()), "o_orderstatus STRING, n_orders BIGINT")
+    return local_frame(
+        spark, sorted(counts.items()), "o_orderstatus STRING, n_orders BIGINT")
 
 
 def q52_metadata_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1046,8 +1047,8 @@ def q52_metadata_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _make_table(spark, sf_dir, "lineitem", ["l_quantity"],
                     nan_count_columns=["l_quantity"])
     mn, mx = t.min_max("l_quantity")
-    return spark.createDataFrame(
-        [(float(mn), float(mx))], "min_qty DOUBLE, max_qty DOUBLE")
+    return local_frame(
+        spark, [(float(mn), float(mx))], "min_qty DOUBLE, max_qty DOUBLE")
 
 
 def q53_hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1116,9 +1117,10 @@ def q54_catalog_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert c["bounds_exact"], f"{col} bounds must be trusted exact"
         rows.append((col, int(c["null_count"]),
                      float(c["min"]), float(c["max"])))
-    return spark.createDataFrame(
-        rows, "column_name STRING, null_count BIGINT, "
-              "min_val DOUBLE, max_val DOUBLE")
+    return local_frame(
+        spark, rows,
+        "column_name STRING, null_count BIGINT, "
+        "min_val DOUBLE, max_val DOUBLE")
 
 
 def q55_colcol_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1369,8 +1371,8 @@ def q61_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_all = t.count_rows(xcol("o_totalprice") > 0.0)
     assert t.last_count_pushdown["partial_row_groups"] == 0, \
         t.last_count_pushdown  # zero-I/O count WITH a predicate
-    return spark.createDataFrame(
-        [(n_below, n_all)], "n_below BIGINT, n_all BIGINT")
+    return local_frame(
+        spark, [(n_below, n_all)], "n_below BIGINT, n_all BIGINT")
 
 
 CENTS_LAYOUT_ENV = "SPARK_GRAFT_CENTS_LAYOUT"
@@ -1436,8 +1438,8 @@ def q62_sum_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     # proven-full groups + a boundary scan
     rng_mn, rng_mx = t.min_max("price_cents", rng)
     assert t.last_minmax_pushdown["full_row_groups"] > 0
-    return spark.createDataFrame(
-        [(total_s, total_n, rng_s, rng_n, rng_mn, rng_mx)],
+    return local_frame(
+        spark, [(total_s, total_n, rng_s, rng_n, rng_mn, rng_mx)],
         "total_cents BIGINT, total_n BIGINT, "
         "range_cents BIGINT, range_n BIGINT, "
         "range_min BIGINT, range_max BIGINT")
@@ -1474,8 +1476,8 @@ def q68_var_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     # straddle at the half-cent edges)
     assert pd["partial_row_groups"] <= 4, pd
     var_pop_milli = (n_r * sq_r - s_r * s_r) * 1000 // (n_r * n_r)
-    return spark.createDataFrame(
-        [(s_all, sq_all, n_all, s_r, sq_r, n_r, var_pop_milli)],
+    return local_frame(
+        spark, [(s_all, sq_all, n_all, s_r, sq_r, n_r, var_pop_milli)],
         "sum_all BIGINT, sumsq_all BIGINT, n_all BIGINT, "
         "sum_rng BIGINT, sumsq_rng BIGINT, n_rng BIGINT, "
         "var_pop_milli BIGINT")
@@ -1569,8 +1571,8 @@ def q63_group_sum_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = t.sum_rows_by("o_orderstatus", "price_cents")
     assert groups is not None, "partition layout must fold from catalog"
     rows = [(k, s, n) for k, (s, n) in sorted(groups.items())]
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, sum_cents BIGINT, n BIGINT")
+    return local_frame(
+        spark, rows, "o_orderstatus STRING, sum_cents BIGINT, n BIGINT")
 
 
 def q70_group_var_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1589,9 +1591,10 @@ def q70_group_var_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert groups is not None, "hive layout must fold from the catalog"
     rows = [(k, s, sq, n, (n * sq - s * s) * 1000 // (n * n))
             for k, (s, sq, n) in sorted(groups.items())]
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, sum_dollars BIGINT, "
-              "sumsq_dollars BIGINT, n BIGINT, var_pop_milli BIGINT")
+    return local_frame(
+        spark, rows,
+        "o_orderstatus STRING, sum_dollars BIGINT, "
+        "sumsq_dollars BIGINT, n BIGINT, var_pop_milli BIGINT")
 
 
 def q71_catalog_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1626,10 +1629,11 @@ def q71_catalog_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert n == n2 == n3 == n_rows  # no-null measure: all folds agree
         rows.append((status, n_rows, s, mn, mx,
                      s * 1000 // n, (n * sq - s * s) * 1000 // (n * n)))
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, n_rows BIGINT, sum_dollars BIGINT, "
-              "min_dollars BIGINT, max_dollars BIGINT, avg_milli BIGINT, "
-              "var_pop_milli BIGINT")
+    return local_frame(
+        spark, rows,
+        "o_orderstatus STRING, n_rows BIGINT, sum_dollars BIGINT, "
+        "min_dollars BIGINT, max_dollars BIGINT, avg_milli BIGINT, "
+        "var_pop_milli BIGINT")
 
 
 EVOLVED_ENV = "SPARK_GRAFT_EVOLVED_LAYOUT"
@@ -1690,8 +1694,8 @@ def q72_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = hi.agg(F.count(F.lit(1)).alias("n_hi"),
                  F.sum("price_cents").alias("sum_hi_cents")).head()
     n_old = t.count_rows(xcol("price_cents").is_null())
-    return spark.createDataFrame(
-        [(agg["n_hi"], agg["sum_hi_cents"], n_old)],
+    return local_frame(
+        spark, [(agg["n_hi"], agg["sum_hi_cents"], n_old)],
         "n_hi BIGINT, sum_hi_cents BIGINT, n_pre_evolution BIGINT")
 
 
@@ -1752,8 +1756,8 @@ def q73_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert 0 < dec_after.row_groups_scanned < dec_after.total_row_groups, \
         dec_after.describe()  # pruning survives compaction
     assert agg["n_rng"] == n_before  # results invariant under compaction
-    return spark.createDataFrame(
-        [(agg["n_rng"], agg["sum_rng_cents"])],
+    return local_frame(
+        spark, [(agg["n_rng"], agg["sum_rng_cents"])],
         "n_rng BIGINT, sum_rng_cents BIGINT")
 
 
@@ -1805,8 +1809,8 @@ def q74_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                      & (xcol("price_cents") <= 20_000_000))
         agg = df.agg(F.count(F.lit(1)).alias("n_rng"),
                      F.sum("price_cents").alias("sum_rng_cents")).head()
-        return spark.createDataFrame(
-            [(n_after, agg["n_rng"], agg["sum_rng_cents"])],
+        return local_frame(
+            spark, [(n_after, agg["n_rng"], agg["sum_rng_cents"])],
             "n_total BIGINT, n_rng BIGINT, sum_rng_cents BIGINT")
 
     memo = session_memo(spark, "refresh_query")
@@ -1892,8 +1896,8 @@ def q83_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (t.query(rng, as_of=snap)
            .agg(F.count(F.lit(1)).alias("n_rng"),
                 F.sum("price_cents").alias("sum_rng")).head())
-    return spark.createDataFrame(
-        [(n_current, n_asof, agg["n_rng"], agg["sum_rng"])],
+    return local_frame(
+        spark, [(n_current, n_asof, agg["n_rng"], agg["sum_rng"])],
         "n_current BIGINT, n_asof BIGINT, "
         "n_rng_asof BIGINT, sum_rng_asof_cents BIGINT")
 
@@ -1918,8 +1922,8 @@ def q84_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t.read_delta(s1, s2)
     agg = df.agg(F.count(F.lit(1)).alias("n"),
                  F.sum("price_cents").alias("s")).head()
-    return spark.createDataFrame(
-        [(len(delta["added"]), agg["n"], agg["s"])],
+    return local_frame(
+        spark, [(len(delta["added"]), agg["n"], agg["s"])],
         "n_added_files BIGINT, n_delta BIGINT, sum_delta_cents BIGINT")
 
 
@@ -1944,8 +1948,8 @@ def q85_asof_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cur = t.count_rows()
     s_cur, _ = t.sum_rows("price_cents")
     assert t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n_asof, s_asof, n_cur, s_cur)],
+    return local_frame(
+        spark, [(n_asof, s_asof, n_cur, s_cur)],
         "n_asof BIGINT, sum_asof_cents BIGINT, "
         "n_current BIGINT, sum_current_cents BIGINT")
 
@@ -2026,8 +2030,8 @@ def q88_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_all, _ = t.sum_rows("price_cents")
         assert t.last_sum_pushdown["partial_row_groups"] == 0
         out += [n_all, s_all]
-        return spark.createDataFrame(
-            [tuple(out)],
+        return local_frame(
+            spark, [tuple(out)],
             "n_b0 BIGINT, sum_b0_cents BIGINT, n_b1 BIGINT, "
             "sum_b1_cents BIGINT, n_all BIGINT, sum_all_cents BIGINT")
 
@@ -2224,9 +2228,10 @@ def q87_group_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(g, v, lo, hi)
             for g in sorted(groups)
             for v, lo, hi in groups[g]]
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, value BIGINT, "
-              "lower_cnt BIGINT, upper_cnt BIGINT")
+    return local_frame(
+        spark, rows,
+        "o_orderstatus STRING, value BIGINT, "
+        "lower_cnt BIGINT, upper_cnt BIGINT")
 
 
 def q86_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2255,8 +2260,8 @@ def q86_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert t.last_hh_pushdown["row_groups"] == total_rgs
     for _, lo, hi in hh:
         assert lo <= hi
-    return spark.createDataFrame(
-        [(v, lo, hi) for v, lo, hi in hh],
+    return local_frame(
+        spark, [(v, lo, hi) for v, lo, hi in hh],
         "value BIGINT, lower_cnt BIGINT, upper_cnt BIGINT")
 
 
@@ -2294,8 +2299,8 @@ def q75_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = t.hist_quantiles("price_cents", list(HIST_QS))
     assert res is not None, "quantiles must fold from the catalog"
     assert t.last_hist_pushdown["nbins"] == HIST_NBINS
-    return spark.createDataFrame(
-        [(q, est, n) for q, est, n in res],
+    return local_frame(
+        spark, [(q, est, n) for q, est, n in res],
         "q_permille BIGINT, est_cents BIGINT, n_rows BIGINT")
 
 
@@ -2327,9 +2332,10 @@ def q76_group_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(g, q, est, n)
             for g in sorted(groups)
             for q, est, n in groups[g]]
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, q_permille BIGINT, "
-              "est_dollars BIGINT, n_rows BIGINT")
+    return local_frame(
+        spark, rows,
+        "o_orderstatus STRING, q_permille BIGINT, "
+        "est_dollars BIGINT, n_rows BIGINT")
 
 
 NDV_LAYOUT_ENV = "SPARK_GRAFT_NDV_LAYOUT"
@@ -2390,8 +2396,8 @@ def q77_ndv_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_okey = t.ndv_estimate("o_orderkey")
     assert est_okey is not None
     n_rows = sum(f[3] for f in t.catalog.all_files())  # file stats only
-    return spark.createDataFrame(
-        [(est_cust, est_okey, int(n_rows))],
+    return local_frame(
+        spark, [(est_cust, est_okey, int(n_rows))],
         "ndv_custkey DOUBLE, ndv_orderkey DOUBLE, n_rows BIGINT")
 
 
@@ -2411,8 +2417,8 @@ def q78_group_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = t.ndv_by("o_orderstatus", "o_custkey")
     assert groups is not None, "grouped NDV must fold from the catalog"
     rows = [(g, est) for g, est in sorted(groups.items())]
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, ndv_custkey DOUBLE")
+    return local_frame(
+        spark, rows, "o_orderstatus STRING, ndv_custkey DOUBLE")
 
 
 def q79_catalog_join_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2466,8 +2472,8 @@ def q79_catalog_join_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
             a1, a2 = f1.result(), f2.result()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    return spark.createDataFrame(
-        [(a1["n"], a1["s"], a2["n"], a2["s"])],
+    return local_frame(
+        spark, [(a1["n"], a1["s"], a2["n"], a2["s"])],
         "n_narrow BIGINT, qty_narrow BIGINT, n_all BIGINT, qty_all BIGINT")
 
 
@@ -2495,8 +2501,8 @@ def q64_div_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_imp = t.count_rows((xcol("price_cents") % 100) >= 100)
     assert t.last_scan.files_scanned == {}, \
         "impossible remainder must refute with zero I/O"
-    return spark.createDataFrame(
-        [(agg["n_low"], agg["sum_low_cents"], n_imp)],
+    return local_frame(
+        spark, [(agg["n_low"], agg["sum_low_cents"], n_imp)],
         "n_low BIGINT, sum_low_cents BIGINT, n_impossible BIGINT")
 
 
@@ -2518,8 +2524,8 @@ def q65_decimal_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     import decimal as _d
     assert isinstance(mn, _d.Decimal) and isinstance(mx, _d.Decimal)
     n = t.count_rows()
-    return spark.createDataFrame(
-        [(float(mn), float(mx), n)],
+    return local_frame(
+        spark, [(float(mn), float(mx), n)],
         "min_ep DOUBLE, max_ep DOUBLE, n_rows BIGINT")
 
 
@@ -2537,9 +2543,10 @@ def q67_group_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = t.min_max_by("o_orderstatus", "price_cents")
     assert groups is not None, "partition layout must fold from catalog"
     rows = [(k, mn, mx, n) for k, (mn, mx, n) in sorted(groups.items())]
-    return spark.createDataFrame(
-        rows, "o_orderstatus STRING, min_cents BIGINT, "
-              "max_cents BIGINT, n BIGINT")
+    return local_frame(
+        spark, rows,
+        "o_orderstatus STRING, min_cents BIGINT, "
+        "max_cents BIGINT, n BIGINT")
 
 
 def q66_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2558,8 +2565,8 @@ def q66_topk_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     pd = t.last_topk_pushdown
     assert pd["threshold"] is not None, pd
     assert pd["scanned_row_groups"] < pd["candidate_row_groups"], pd
-    return spark.createDataFrame(
-        [(r["o_orderkey"], r["price_cents"]) for r in rows],
+    return local_frame(
+        spark, [(r["o_orderkey"], r["price_cents"]) for r in rows],
         "o_orderkey BIGINT, price_cents BIGINT")
 
 
@@ -2622,8 +2629,8 @@ def q80_dict_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert counts is not None, "group counts must fold from the catalog"
     total_rgs = sum(f[2] for f in t.catalog.all_files())
     assert t.last_dict_pushdown["row_groups"] == total_rgs
-    return spark.createDataFrame(
-        sorted(counts.items()), "o_orderstatus STRING, cnt BIGINT")
+    return local_frame(
+        spark, sorted(counts.items()), "o_orderstatus STRING, cnt BIGINT")
 
 
 def q81_dict_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2642,8 +2649,8 @@ def q81_dict_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert vals is not None, "distinct must fold from the catalog"
     assert t.group_counts("o_orderkey") is None, \
         "over-cap column must refuse a catalog answer, not guess"
-    return spark.createDataFrame(
-        [(v,) for v in vals], "o_orderpriority STRING")
+    return local_frame(
+        spark, [(v,) for v in vals], "o_orderpriority STRING")
 
 
 def _dict_split_orders(spark: SparkSession, sf_dir: str):
@@ -2732,8 +2739,8 @@ def q82_dict_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_ni = df_ni.agg(F.count(F.lit(1)).alias("n"),
                      F.sum("o_orderkey").alias("s")).head()
     assert (a_eq["n"], a_eq["s"]) == (a_ni["n"], a_ni["s"])
-    return spark.createDataFrame(
-        [(a_eq["n"], a_eq["s"], a_ni["n"], a_ni["s"])],
+    return local_frame(
+        spark, [(a_eq["n"], a_eq["s"], a_ni["n"], a_ni["s"])],
         "n_eq BIGINT, sum_eq BIGINT, n_notin BIGINT, sum_notin BIGINT")
 
 
@@ -2862,8 +2869,8 @@ def q92_dv_count_sum_pushdown(spark: SparkSession, sf_dir: str
         raise AssertionError("min_max must refuse under deletions")
     except ValueError:
         pass
-    return spark.createDataFrame(
-        [(n, s, str(sq))],
+    return local_frame(
+        spark, [(n, s, str(sq))],
         "n_live BIGINT, sum_live_cents BIGINT, sumsq_live_cents STRING")
 
 
@@ -2894,8 +2901,8 @@ def q93_dv_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_post, _ = t.sum_rows("cents")
     assert s_post == pre_s
     mn, mx = t.min_max("cents")[:2]  # refused before, answers now
-    return spark.createDataFrame(
-        [(pre_n, pre_s, int(mn), int(mx))],
+    return local_frame(
+        spark, [(pre_n, pre_s, int(mn), int(mx))],
         "n_live BIGINT, sum_live_cents BIGINT, "
         "min_live_cents BIGINT, max_live_cents BIGINT")
 
@@ -2935,8 +2942,8 @@ def q94_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_upd = state[sf_dir]
     n = t.count_rows()
     s, _ = t.sum_rows("cents")
-    return spark.createDataFrame(
-        [(n, s, n_upd)],
+    return local_frame(
+        spark, [(n, s, n_upd)],
         "n_total BIGINT, sum_cents BIGINT, n_updated BIGINT")
 
 
@@ -2982,15 +2989,15 @@ def q95_dedup_delete_vectors(spark: SparkSession, sf_dir: str
         memo[sf_dir] = (t, n_del)
     t, n_del = memo[sf_dir]
     assert t.delete_matching(
-        t.spark.createDataFrame([], "doc_id LONG"), "doc_id") == 0
+        local_frame(t.spark, [], "doc_id LONG"), "doc_id") == 0
     n_live = t.count_rows()
     s_live, nn = t.sum_rows("doc_id")
     assert t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0, \
         t.last_sum_pushdown   # pure catalog arithmetic under the DV
     assert nn == n_live
-    return spark.createDataFrame(
-        [(n_live, s_live, n_del)],
+    return local_frame(
+        spark, [(n_live, s_live, n_del)],
         "n_live BIGINT, sum_doc_id BIGINT, n_deleted BIGINT")
 
 
@@ -3066,8 +3073,8 @@ def q96_stream_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
     assert nn == n_live
-    return spark.createDataFrame(
-        [(n_era[0], n_era[1], n_live, s_live, sum(deleted))],
+    return local_frame(
+        spark, [(n_era[0], n_era[1], n_live, s_live, sum(deleted))],
         "n_era0 BIGINT, n_era1 BIGINT, n_live BIGINT, "
         "sum_live_cents BIGINT, n_retracted BIGINT")
 
@@ -3156,8 +3163,8 @@ def q98_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         and t.last_sum_pushdown["partial_row_groups"] == 0, \
         t.last_sum_pushdown   # pure catalog arithmetic post-UPDATE
     assert nn == n
-    return spark.createDataFrame(
-        [(n, s, n_upd)],
+    return local_frame(
+        spark, [(n, s, n_upd)],
         "n_total BIGINT, sum_cents BIGINT, n_updated BIGINT")
 
 
@@ -3270,8 +3277,8 @@ def q100_optimize_lifecycle(spark: SparkSession, sf_dir: str
     s, nn = t.sum_rows("cents")
     assert nn == n and t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n, s)], "n_total BIGINT, sum_cents BIGINT")
+    return local_frame(
+        spark, [(n, s)], "n_total BIGINT, sum_cents BIGINT")
 
 
 def q101_snapshot_restore(spark: SparkSession, sf_dir: str
@@ -3314,8 +3321,8 @@ def q101_snapshot_restore(spark: SparkSession, sf_dir: str
     s, nn = t.sum_rows("cents")
     assert nn == n and t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n, s)], "n_total BIGINT, sum_cents BIGINT")
+    return local_frame(
+        spark, [(n, s)], "n_total BIGINT, sum_cents BIGINT")
 
 
 def q102_incremental_join_view_from_feed(spark: SparkSession,
@@ -3420,8 +3427,8 @@ def q103_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     s, nn = t.sum_rows("cents")
     assert nn == n and t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n, s)], "n_total BIGINT, sum_cents BIGINT")
+    return local_frame(
+        spark, [(n, s)], "n_total BIGINT, sum_cents BIGINT")
 
 
 def q104_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3463,8 +3470,8 @@ def q104_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     s, nn = t.sum_rows("cents")
     assert nn == n and t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n, s)], "n_total BIGINT, sum_cents BIGINT")
+    return local_frame(
+        spark, [(n, s)], "n_total BIGINT, sum_cents BIGINT")
 
 
 def q106_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3539,8 +3546,8 @@ def q106_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     s, nn = t.sum_rows("cents")
     assert nn == n and t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n, s)], "n_total BIGINT, sum_cents BIGINT")
+    return local_frame(
+        spark, [(n, s)], "n_total BIGINT, sum_cents BIGINT")
 
 
 def q105_append_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3608,8 +3615,8 @@ def q105_append_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     s, nn = t.sum_rows("cents")
     assert nn == n and t.last_sum_pushdown is not None \
         and t.last_sum_pushdown["partial_row_groups"] == 0
-    return spark.createDataFrame(
-        [(n, s, n_pre, agg["n_hi"], agg["sum_hi_disc"])],
+    return local_frame(
+        spark, [(n, s, n_pre, agg["n_hi"], agg["sum_hi_disc"])],
         "n_total BIGINT, sum_cents BIGINT, n_pre_evolution BIGINT, "
         "n_hi BIGINT, sum_hi_disc BIGINT")
 
@@ -3682,8 +3689,8 @@ def q107_page_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("sum_cents"),
         F.min("o_orderkey").alias("min_key"),
         F.max("o_orderkey").alias("max_key")).head()
-    return spark.createDataFrame(
-        [(agg["n_match"], agg["sum_cents"],
+    return local_frame(
+        spark, [(agg["n_match"], agg["sum_cents"],
           agg["min_key"], agg["max_key"])],
         "n_match BIGINT, sum_cents BIGINT, min_key BIGINT, "
         "max_key BIGINT")

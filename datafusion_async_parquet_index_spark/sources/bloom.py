@@ -28,7 +28,10 @@ Hashing: one md5 per value, split into two 64-bit halves combined with
 the standard double-hashing scheme h_i = h1 + i*h2 (Kirsch &
 Mitzenmacher 2006, "Less Hashing, Same Performance"), so k probes cost
 one digest. Values are canonicalized per index type-category so the
-probe literal hashes identically to the build value.
+probe literal hashes identically to the build value. ``build_bloom``
+sets the bits with numpy over all of a row group's digests at once;
+the bit layout is the one the per-value loop wrote, byte for byte, so
+filters persisted by earlier versions keep probing.
 """
 
 from __future__ import annotations
@@ -36,6 +39,8 @@ from __future__ import annotations
 import hashlib
 import math
 from typing import Any, Iterable, Optional, Tuple
+
+import numpy as np
 
 # categories bloom filters support: exact-match types. Floats are
 # excluded (equality on floats is fragile and min/max already serves
@@ -90,13 +95,20 @@ def _hash_pair(canon: bytes) -> Tuple[int, int]:
 
 
 def build_bloom(canon_values: Iterable[bytes], m: int, k: int) -> bytes:
-    bits = bytearray(m // 8)
-    for canon in canon_values:
-        h1, h2 = _hash_pair(canon)
-        for i in range(k):
-            pos = (h1 + i * h2) % m
-            bits[pos >> 3] |= 1 << (pos & 7)
-    return bytes(bits)
+    """The m-bit filter (bit ``pos`` at byte ``pos >> 3``, bit
+    ``pos & 7``) with bits ``(h1 + i*h2) % m`` set for i < k. The
+    positions are computed in numpy uint64 as ``(h1 % m + i*(h2 % m))
+    % m``, equal to the exact sum while m*k < 2**64 (any filter that
+    fits in memory)."""
+    digests = b"".join(hashlib.md5(c).digest() for c in canon_values)
+    halves = np.frombuffer(digests, dtype=">u8").reshape(-1, 2)
+    mm = np.uint64(m)
+    h1 = halves[:, 0] % mm
+    h2 = (halves[:, 1] | np.uint64(1)) % mm
+    bits = np.zeros(m, dtype=np.uint8)
+    for i in range(k):
+        bits[(h1 + np.uint64(i) * h2) % mm] = 1
+    return np.packbits(bits, bitorder="little").tobytes()
 
 
 def bloom_contains(blob: bytes, m: int, k: int, canon: bytes) -> bool:

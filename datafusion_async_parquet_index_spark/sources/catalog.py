@@ -39,6 +39,7 @@ cost stays a single indexed SQL query.
 from __future__ import annotations
 
 import datetime as _dt
+import heapq
 import sqlite3
 import threading
 from dataclasses import dataclass, field
@@ -218,16 +219,22 @@ class _SqliteStatsSql:
 _RTREE_FULL_LO = float("-inf")  # "unknown bounds" rows span everything
 _RTREE_FULL_HI = float("inf")   # (f32 infinities store fine in rtree)
 _F32_MAX = 3.4028234663852886e38
-def _ranges_from_positions(sorted_pos: Sequence[int]) -> List[List[int]]:
-    """Sorted distinct row positions -> [[start, length], ...] runs
-    (the storage form of a deletion vector: contiguous deletes — the
-    common case for time- or key-clustered data — compress to O(runs))."""
+def _merge_dv_ranges(ranges: Sequence[Sequence[int]],
+                     sorted_pos: Sequence[int]) -> List[List[int]]:
+    """A deletion vector's sorted [[start, length], ...] runs merged
+    with newly deleted sorted positions, as sorted coalesced runs (the
+    storage form: contiguous deletes — the common case for time- or
+    key-clustered data — compress to O(runs)). Works in the range
+    domain, O(runs + new positions): the stored vector is never
+    exploded, however many rows it covers. Overlaps and duplicates
+    fold in, so the result equals the runs of the positions' union."""
     out: List[List[int]] = []
-    for p in sorted_pos:
-        if out and p == out[-1][0] + out[-1][1]:
-            out[-1][1] += 1
+    for s, ln in heapq.merge(((int(s), int(ln)) for s, ln in ranges),
+                             ((int(p), 1) for p in sorted_pos)):
+        if out and s <= out[-1][0] + out[-1][1]:
+            out[-1][1] = max(out[-1][1], s + ln - out[-1][0])
         else:
-            out.append([p, 1])
+            out.append([s, ln])
     return out
 
 
@@ -1379,17 +1386,15 @@ class SqliteIndexCatalog(SidecarReads):
             old = self._query(
                 "SELECT ranges FROM deletion_vectors WHERE file_id = ?",
                 (fid,))
-            pos = set(new_pos)
-            if old:
-                for s, ln in json.loads(old[0][0]):
-                    pos.update(range(s, s + ln))
-            ranges = _ranges_from_positions(sorted(pos))
+            ranges = _merge_dv_ranges(
+                json.loads(old[0][0]) if old else (), new_pos)
+            deleted = sum(ln for _, ln in ranges)
             self._exec(
                 "DELETE FROM deletion_vectors WHERE file_id = ?", (fid,))
             self._exec(
                 "INSERT INTO deletion_vectors "
                 "(file_id, ranges, deleted_rows) VALUES (?, ?, ?)",
-                (fid, json.dumps(ranges), len(pos)))
+                (fid, json.dumps(ranges), deleted))
             for rg, ps in positions_by_rg.items():
                 if not ps:
                     continue
@@ -1453,7 +1458,7 @@ class SqliteIndexCatalog(SidecarReads):
                            VALUES (?, ?, ?, ?, ?, ?)""",
                         (fid, rg, col, str(s), nn,
                          None if sq is None else str(sq)))
-            return len(pos)
+            return deleted
 
     def get_dv_ranges(
         self, as_of: Optional[int] = None

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..plans.expr import Expr
-from .catalog import FileStats, RowGroupStats
+from ..session import local_frame
+from .catalog import FileStats, RowGroupStats, _merge_dv_ranges
 from .sidecars import STATISTICS, SidecarReads
 
 # type-category -> Spark type for {col}_min / {col}_max (unsigned ints
@@ -298,7 +299,7 @@ class DataFrameIndexCatalog(SidecarReads):
                         if cat == "float":
                             row.append(rg.nan_counts.get(c))
                     rows.append(tuple(row))
-            self._df = self.spark.createDataFrame(rows, self._stats_schema())
+            self._df = local_frame(self.spark, rows, self._stats_schema())
             if self.persist_path:
                 self._df.write.mode("overwrite").parquet(self.persist_path)
                 self._df = self.spark.read.parquet(self.persist_path)
@@ -445,12 +446,9 @@ class DataFrameIndexCatalog(SidecarReads):
             return sum(ln for _, ln in self._dv.get(file_name, ()))
         if file_name not in self._files:
             raise KeyError(file_name)
-        pos = set(new_pos)
-        for st, ln in self._dv.get(file_name, ()):
-            pos.update(range(st, st + ln))
-        from .catalog import _ranges_from_positions
-        self._dv[file_name] = [tuple(r) for r in
-                               _ranges_from_positions(sorted(pos))]
+        ranges = [tuple(r) for r in
+                  _merge_dv_ranges(self._dv.get(file_name, ()), new_pos)]
+        self._dv[file_name] = ranges
         for rg, ps in positions_by_rg.items():
             if ps:
                 k = (file_name, rg)
@@ -476,7 +474,7 @@ class DataFrameIndexCatalog(SidecarReads):
                     sq = (None if sq is None or prior[2] is None
                           else sq + prior[2])
                 self._dv_sums[k] = (sv, nn, sq)
-        return len(pos)
+        return sum(ln for _, ln in ranges)
 
     def get_dv_ranges(self, as_of=None):
         src = self._snap_dv.get(as_of, {}) if as_of is not None \
