@@ -71,8 +71,11 @@ def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
         schema = StructType.fromDDL(schema)
     if not isinstance(rows, pa.Table):
         arrow_schema = to_arrow_schema(schema)
-        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        # strict: a row with a missing or extra field raises instead
+        # of being cut to the shortest row or the schema's width
+        cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
         rows = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            [pa.array(c, type=f.type)
+             for c, f in zip(cols, arrow_schema, strict=True)],
             schema=arrow_schema)
     return spark.createDataFrame(rows, schema=schema)

@@ -29,7 +29,7 @@ the standard double-hashing scheme h_i = h1 + i*h2 (Kirsch &
 Mitzenmacher 2006, "Less Hashing, Same Performance"), so k probes cost
 one digest. Values are canonicalized per index type-category so the
 probe literal hashes identically to the build value. ``build_bloom``
-sets the bits with numpy over all of a row group's digests at once;
+sets the bits with numpy, a fixed-size chunk of digests at a time;
 the bit layout is the one the per-value loop wrote, byte for byte, so
 filters persisted by earlier versions keep probing.
 """
@@ -37,6 +37,7 @@ filters persisted by earlier versions keep probing.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import math
 from typing import Any, Iterable, Optional, Tuple
 
@@ -49,6 +50,8 @@ BLOOM_CATEGORIES = {"int", "string", "binary", "timestamp", "date"}
 
 DEFAULT_FPP = 0.01
 MIN_BITS = 64
+# values hashed per step of build_bloom
+_BUILD_CHUNK = 1 << 16
 
 
 def canonical_bytes(category: str, v: Any) -> Optional[bytes]:
@@ -99,16 +102,23 @@ def build_bloom(canon_values: Iterable[bytes], m: int, k: int) -> bytes:
     ``pos & 7``) with bits ``(h1 + i*h2) % m`` set for i < k. The
     positions are computed in numpy uint64 as ``(h1 % m + i*(h2 % m))
     % m``, equal to the exact sum while m*k < 2**64 (any filter that
-    fits in memory)."""
-    digests = b"".join(hashlib.md5(c).digest() for c in canon_values)
-    halves = np.frombuffer(digests, dtype=">u8").reshape(-1, 2)
+    fits in memory). Values are hashed _BUILD_CHUNK at a time and their
+    bits OR-ed straight into the m/8-byte filter, so the working set
+    beyond the filter stays a few MB however large the row group."""
+    out = np.zeros((m + 7) // 8, dtype=np.uint8)
     mm = np.uint64(m)
-    h1 = halves[:, 0] % mm
-    h2 = (halves[:, 1] | np.uint64(1)) % mm
-    bits = np.zeros(m, dtype=np.uint8)
-    for i in range(k):
-        bits[(h1 + np.uint64(i) * h2) % mm] = 1
-    return np.packbits(bits, bitorder="little").tobytes()
+    values = iter(canon_values)
+    while chunk := list(itertools.islice(values, _BUILD_CHUNK)):
+        digests = b"".join(hashlib.md5(c).digest() for c in chunk)
+        halves = np.frombuffer(digests, dtype=">u8").reshape(-1, 2)
+        h1 = halves[:, 0] % mm
+        h2 = (halves[:, 1] | np.uint64(1)) % mm
+        for i in range(k):
+            pos = (h1 + np.uint64(i) * h2) % mm
+            np.bitwise_or.at(out, pos >> np.uint64(3),
+                             (np.uint64(1) << (pos & np.uint64(7)))
+                             .astype(np.uint8))
+    return out.tobytes()
 
 
 def bloom_contains(blob: bytes, m: int, k: int, canon: bytes) -> bool:

@@ -1175,8 +1175,11 @@ class IndexedParquetTable(CatalogAnswers):
         until compact_deletes(), so N deletes could otherwise pile
         N x 2M positions into one forced broadcast and OOM executors
         (or trip Spark's broadcast limit). Past the threshold the
-        explicit broadcast is dropped and AQE picks the join strategy
-        (shuffle hash — still one O(1) probe per row, just exchanged).
+        build side carries a sort-merge hint instead: it is a local
+        relation of one small row per file, which Spark sizes far
+        under autoBroadcastJoinThreshold however many positions it
+        explodes to, so without the hint size-based join selection
+        would broadcast it anyway.
         The position total is O(ranges) driver arithmetic from the
         catalog metadata, never a count job. Must run on the raw scan
         BEFORE projection (needs ``_metadata``)."""
@@ -1212,8 +1215,9 @@ class IndexedParquetTable(CatalogAnswers):
         positional joins: one row per file (key, range starts, range
         ends) ships as an Arrow local relation (a JVM
         ``LocalTableScan``, no Python worker per broadcast build) and
-        the ranges explode JVM-side; force-broadcast only under the
-        cumulative DV_BROADCAST_MAX_POSITIONS cap (see _dv_apply).
+        the ranges explode JVM-side; broadcast under the cumulative
+        DV_BROADCAST_MAX_POSITIONS cap, sort-merge join above it (see
+        _dv_apply).
         One row per file, not per range: at 200k scattered ranges a
         per-range relation took 553 ms to build and 875 ms to count,
         the per-file arrays 113 ms and 368 ms (4-core host)."""
@@ -1252,6 +1256,8 @@ class IndexedParquetTable(CatalogAnswers):
                           .alias("__dv_bpos")))
         if total_pos <= self.DV_BROADCAST_MAX_POSITIONS:
             dv_pos = F.broadcast(dv_pos)
+        else:
+            dv_pos = dv_pos.hint("merge")
         memo.clear()   # one live DV state per table — keep it bounded
         memo[key] = dv_pos
         return dv_pos

@@ -30,6 +30,7 @@ from datafusion_async_parquet_index_spark.operators.util import (
 )
 from datafusion_async_parquet_index_spark.plans.expr import col
 from datafusion_async_parquet_index_spark.session import local_frame
+from datafusion_async_parquet_index_spark.sources import bloom
 from datafusion_async_parquet_index_spark.sources.bloom import (
     _hash_pair, bloom_contains, bloom_params, build_bloom,
 )
@@ -145,6 +146,17 @@ def test_local_frame_round_trip_matches_list_path(spark):
     _assert_local(got, "local_frame")
 
 
+@pytest.mark.parametrize("rows", [
+    [(1, 2, 3.5)],                       # a field short of the schema
+    [(1, 2, 3.5, "x", None, None, 7)],   # a field beyond it
+    [(1, 2, 3.5, "x", None, None), (1, 2, 3.5, "x", None)],  # ragged
+])
+def test_local_frame_rejects_wrong_arity(spark, rows):
+    with pytest.raises(ValueError):
+        local_frame(spark, rows, "a BIGINT, b INT, c DOUBLE, d STRING, "
+                                 "e DATE, f DECIMAL(12,3)")
+
+
 def test_package_builds_frames_only_through_local_frame():
     """One way to hand driver rows to Spark: ``createDataFrame`` is
     called only inside ``session.local_frame``."""
@@ -195,8 +207,10 @@ def test_large_scattered_dv_counts_exact(spark, tmp_path, monkeypatch,
     if cap is None:
         assert "BroadcastExchange" in plan, plan
     else:
-        assert ("BroadcastExchange" not in plan
-                or "LeftAnti BuildRight" not in plan), plan
+        # Spark prints the strategy as "LeftAnti, BuildRight"; above
+        # the cap no BroadcastHashJoin may build on the position side
+        assert "BroadcastHashJoin" not in plan, plan
+        assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
     assert df.count() == n - 20_500
     live = t.query((col("k") >= 59_990) & (col("k") < 100_010))
     assert live.count() == sum(
@@ -284,3 +298,11 @@ def test_build_bloom_byte_identical_to_loop(n, fpp):
     blob = build_bloom(vals, m, k)
     assert blob == _bloom_loop(vals, m, k)
     assert all(bloom_contains(blob, m, k, v) for v in vals[:200])
+
+
+def test_build_bloom_chunk_boundaries_byte_identical(monkeypatch):
+    """Chunks that split the values unevenly set the same bits."""
+    monkeypatch.setattr(bloom, "_BUILD_CHUNK", 7)
+    vals = [b"i%d" % i for i in range(1_000)]
+    m, k = bloom_params(len(vals), 0.01)
+    assert build_bloom(iter(vals), m, k) == _bloom_loop(vals, m, k)
