@@ -178,7 +178,7 @@ class CatalogAnswers:
         decision = self.plan_scan(predicate, as_of=as_of)
         if not decision.files_scanned:
             return [], None, {"full_row_groups": 0, "partial_row_groups": 0}
-        if getattr(self, "partitioned", False):
+        if self.partitioned:
             return None
         # the satisfaction set takes plan_scan's R-tree prefilter too: it
         # is only read at keys inside the (equally prefiltered)
@@ -211,9 +211,8 @@ class CatalogAnswers:
         df = self._read_rowgroups(
             ScanDecision(decision.predicate, partial, decision.total_files,
                          decision.total_row_groups),
-            predicate, columns=cols or None,
-            dvs=self._boundary_dvs(partial, dv_rg, as_of), as_of=as_of,
-            local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES)
+            predicate, columns=cols or None, as_of=as_of,
+            local_max_bytes=self.ROWGROUP_LOCAL_MAX_BYTES, dv_rg=dv_rg)
         return parts, df.filter(predicate.to_spark()), shape
 
     def _group_values(self, column: str, entries: Optional[Dict] = None):
@@ -273,20 +272,19 @@ class CatalogAnswers:
             return self._column_nan_free(column)
         if cat not in ("string", "binary"):
             return True
-        if column in getattr(self, "_partition_cols", ()):
+        if column in self._partition_cols:
             return True
         if value is None:
             return True
         raw = value.encode("utf-8") if isinstance(value, str) else value
-        return len(raw) < getattr(self, "stats_exact_max_bytes",
-                                  STATS_EXACT_MAX_BYTES)
+        return len(raw) < self.stats_exact_max_bytes
 
     def _column_nan_free(self, column: str) -> bool:
         """True when every row group's opt-in NaN count is recorded and
         zero (cached per column; invalidated by refresh())."""
-        cache = getattr(self, "_nan_free_cache", None)
-        if cache is None:
-            cache = self._nan_free_cache = {}
+        if self._nan_free_cache is None:
+            self._nan_free_cache = {}
+        cache = self._nan_free_cache
         if column not in cache:
             try:
                 total = self.catalog.column_nan_total(column)
@@ -393,7 +391,7 @@ class CatalogAnswers:
                 F.count(F.col(column)).alias("n")).head()
             return row["s"], row["n"]
 
-        if not sums or getattr(self, "partitioned", False):
+        if not sums or self.partitioned:
             self.last_sum_pushdown = None
             return _scan_agg(self.query(predicate, as_of=as_of))
         dv_adj = (self.catalog.dv_sum_adjustments(column, as_of=as_of)
@@ -475,7 +473,7 @@ class CatalogAnswers:
             return len(entry) > 2 and entry[2] is not None
 
         if (not any(_usable(e) for e in sums.values())
-                or getattr(self, "partitioned", False)):
+                or self.partitioned):
             self.last_var_pushdown = None
             return _scan_agg(self.query(predicate))
         dv_adj = (self.catalog.dv_sum_adjustments(column)

@@ -21,8 +21,12 @@ Design notes for 100 TB:
   file exactly like the footer pass and happens once per file at index
   time, never at query time.
 - Probing is driver-side: k bit tests per candidate row group per
-  equality literal, after the stats SQL has already pruned — cost is
-  O(candidates), data-free.
+  equality literal, after the stats SQL has already pruned — data-free.
+  The probes are O(candidates), but fetching the filters is not:
+  ``get_blooms(column)`` reads the column's filter for EVERY row group,
+  so the fetch is O(row groups). At 20k files × 8 row groups on SQLite
+  (4-core host) it took 459 ms with 1 KB filters and 1,223 ms with
+  16 KB filters; restricted to 4 surviving files it would take 0.1 ms.
 
 Hashing: one md5 per value, split into two 64-bit halves combined with
 the standard double-hashing scheme h_i = h1 + i*h2 (Kirsch &

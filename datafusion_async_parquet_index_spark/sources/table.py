@@ -11,7 +11,10 @@ Query lifecycle (cf. SURVEY §3 / reference main.rs:256-305):
 
   1. predicate (our Expr AST) --PruningRewriter--> stats-space predicate
   2. catalog.get_files(stats predicate)  -> {file -> [row groups]}
-  3a. mode="files"      : spark.read.parquet(*surviving_files)
+  3a. mode="files"      : ``_scan(surviving_files)`` — the one read of
+                          table data files behind every query, DML,
+                          snapshot and change-feed surface: fixed-schema
+                          spark.read.parquet, minus deletion vectors
   3b. mode="rowgroups"  : Python DataSource partitions = (file, rg list)
   4. .filter(original predicate)  — ALWAYS re-applied: pruning is
      Inexact (reference main.rs:307-316); over-approximation is the core
@@ -31,13 +34,16 @@ is insufficient.
 
 from __future__ import annotations
 
+import decimal
 import json
 import os
 from collections import deque
 from dataclasses import dataclass, field
+from itertools import accumulate
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..plans.expr import Expr, Lit, and_all
 from ..plans.pruning import PruningRewriter
@@ -47,6 +53,21 @@ from .answers import STATS_EXACT_MAX_BYTES, CatalogAnswers
 from .catalog import ConcurrentWriteError, SqliteIndexCatalog
 from .stats import build_index, list_parquet_files
 
+_INTEGER_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _sum_entry(dt, total, nonnull: int, sumsq) -> tuple:
+    """One column's (sum, nonnull, sumsq) catalog triple for deleted
+    rows: decimal sums as UNSCALED ints (the row_group_sums
+    convention), the second moment for integer columns only."""
+    if total is None:
+        s = 0
+    elif isinstance(dt, T.DecimalType):
+        s = int(decimal.Decimal(total).scaleb(dt.scale))
+    else:
+        s = int(total)
+    integer = sumsq is not None and isinstance(dt, _INTEGER_TYPES)
+    return s, nonnull, int(sumsq) if integer else None
 
 
 def _compact_tmp_path(path: str) -> str:
@@ -232,6 +253,31 @@ class IndexedParquetTable(CatalogAnswers):
     """A directory of Parquet files exposed as one queryable table with an
     external statistics index."""
 
+    # Defaults of the table's options (build_index's own defaults) and
+    # caches. Partial tables assembled through ``__new__`` (the query
+    # memo, the catalog scale probe) set only what they use and read
+    # these for the rest. All immutable: instances rebind, never mutate.
+    partitioned = False
+    merge_schema = False
+    bloom_columns: Tuple[str, ...] = ()
+    token_bloom_columns: Tuple[str, ...] = ()
+    sum_columns: Tuple[str, ...] = ()
+    nan_count_columns: Tuple[str, ...] = ()
+    hist_columns: Optional[Dict[str, Tuple[int, int, int]]] = None
+    ndv_columns: Tuple[str, ...] = ()
+    dict_columns: Tuple[str, ...] = ()
+    dict_max_values = _stats.DICT_MAX_VALUES
+    topk_columns: Tuple[str, ...] = ()
+    topk_k = _stats.TOPK_K
+    page_index_columns: Tuple[str, ...] = ()
+    stats_exact_max_bytes = STATS_EXACT_MAX_BYTES
+    _index_columns: Sequence[str] = ()
+    _partition_cols: frozenset = frozenset()
+    _registered_views: frozenset = frozenset()
+    _dv_cache: Optional[Dict[str, List[Tuple[int, int]]]] = None
+    _dv_pos_memo: Optional[tuple] = None       # (content key, frame)
+    _nan_free_cache: Optional[Dict[str, bool]] = None
+
     def __init__(
         self,
         spark: SparkSession,
@@ -310,11 +356,11 @@ class IndexedParquetTable(CatalogAnswers):
         self.hist_columns = dict(hist_columns or {})
         self.ndv_columns = tuple(ndv_columns or ())
         self.dict_columns = tuple(dict_columns or ())
-        from .stats import DICT_MAX_VALUES, TOPK_K
-        self.dict_max_values = (DICT_MAX_VALUES if dict_max_values is None
-                                else dict_max_values)
+        if dict_max_values is not None:
+            self.dict_max_values = dict_max_values
         self.topk_columns = tuple(topk_columns or ())
-        self.topk_k = TOPK_K if topk_k is None else topk_k
+        if topk_k is not None:
+            self.topk_k = topk_k
         # page-index tier (round 12): columns whose Parquet ColumnIndex
         # is persisted per page so point/range predicates can prune ROW
         # RANGES inside surviving row groups (the reference's named-
@@ -324,7 +370,6 @@ class IndexedParquetTable(CatalogAnswers):
         # writes one by default) contribute — files without one simply
         # keep row-group granularity.
         self.page_index_columns = tuple(page_index_columns or ())
-        self._nan_free_cache: Dict[str, bool] = {}
         # the REQUESTED columns, kept verbatim: over an empty directory
         # build_index derives an empty schema, and refresh() must still
         # know what to index once the first files appear
@@ -369,10 +414,9 @@ class IndexedParquetTable(CatalogAnswers):
     def _build_index(self, index_columns, incremental: bool):
         """The one build_index call of a table (constructor, refresh()
         and queries' memoized tables). Options come from the table's
-        attributes; a partial table (test shims, the query memo) lacks
-        some and gets build_index's defaults for them."""
-        opts = {k: getattr(self, k) for k in self._INDEX_OPTIONS
-                if hasattr(self, k)}
+        attributes; a partial table gets the class defaults, which are
+        build_index's."""
+        opts = {k: getattr(self, k) for k in self._INDEX_OPTIONS}
         return build_index(self.catalog, self._files, index_columns,
                            spark=self.spark, incremental=incremental,
                            **opts, **self._partition_index_kwargs())
@@ -389,7 +433,7 @@ class IndexedParquetTable(CatalogAnswers):
             # union across directories (Spark's own partition
             # discovery, a listing + sampled footers — no data read)
             return self.spark.read.parquet(self.data_dir).schema
-        if getattr(self, "merge_schema", False) and len(self._files) > 1:
+        if self.merge_schema and len(self._files) > 1:
             # Schema-evolved flat layout: the first file may PREDATE a
             # column. mergeSchema unions every footer's schema (a
             # distributed footer-only pass — no data read), so queries
@@ -405,9 +449,8 @@ class IndexedParquetTable(CatalogAnswers):
         """rel_to + partition schema/values kwargs for build_index (empty
         for flat layouts). Partition-column categories come from the
         Spark-inferred schema so both sides share one typed domain."""
-        if not getattr(self, "partitioned", False) or not self._files:
+        if not self.partitioned or not self._files:
             return {}
-        from pyspark.sql import types as T
         from .stats import partition_values_raw, typed_partition_values
 
         _CAT = {
@@ -437,7 +480,7 @@ class IndexedParquetTable(CatalogAnswers):
         """Catalog key for a file: dir-relative for partitioned layouts
         (basenames repeat across partition dirs), basename otherwise."""
         return (os.path.relpath(path, self.data_dir)
-                if getattr(self, "partitioned", False)
+                if self.partitioned
                 else os.path.basename(path))
 
     # -- optimistic concurrency (round 11) -----------------------------
@@ -516,14 +559,14 @@ class IndexedParquetTable(CatalogAnswers):
         new column cannot prune them."""
         self._recover_compaction_markers()
         self._files = list_parquet_files(
-            self.data_dir, recursive=getattr(self, "partitioned", False))
+            self.data_dir, recursive=self.partitioned)
         if self._schema is None and self._files:
             # table was constructed over an empty directory; first files
             # just appeared — infer the schema now
             self._schema = self._infer_schema()
-        requested = getattr(self, "_index_columns", None) or list(self.index_schema)
+        requested = self._index_columns or list(self.index_schema)
         new_schema = self._build_index(requested, incremental=not full)
-        self._nan_free_cache = {}
+        self._nan_free_cache = None
         # a changed file's upsert cleared its deletion vector; removed
         # files dropped theirs — re-read DV state lazily
         self._dv_cache = None
@@ -668,9 +711,7 @@ class IndexedParquetTable(CatalogAnswers):
                 f"files changed in place between snapshots: "
                 f"{delta['changed']} — the append-only delta read "
                 f"cannot represent rewrites")
-        if not delta["added"]:
-            return local_frame(self.spark, [], self._schema)
-        if target is not None:
+        if target is not None and delta["added"]:
             # explicit historical target: the added files are read from
             # DISK NOW, so each must still be indexed with the CONTENT
             # the target snapshot recorded (size → footer_md5 →
@@ -688,12 +729,7 @@ class IndexedParquetTable(CatalogAnswers):
                     f"delta of snapshots {base}->{target} is no longer "
                     f"reconstructable: added files {broken} changed or "
                     f"vanished since snapshot {target} was taken")
-        paths = [os.path.join(self.data_dir, n) for n in delta["added"]]
-        reader = self.spark.read
-        if getattr(self, "partitioned", False):
-            reader = reader.option("basePath", self.data_dir)
-        df = reader.schema(self._schema).parquet(*paths)
-        df = self._dv_apply(df, delta["added"], as_of=target)
+        df = self._scan(delta["added"], as_of=target)
         if columns:
             df = df.select(*columns)
         return df
@@ -748,8 +784,8 @@ class IndexedParquetTable(CatalogAnswers):
         false positives scan extra, absence of a filter row scans, so
         the over-approximation invariant holds. Returns #row groups
         removed."""
-        bloom_cols = getattr(self, "bloom_columns", ())
-        token_cols = getattr(self, "token_bloom_columns", ())
+        bloom_cols = self.bloom_columns
+        token_cols = self.token_bloom_columns
         if not (bloom_cols or token_cols) or not survivors:
             return 0
         from ..plans.expr import BinOp, Col, ContainsToken, InList, Lit
@@ -941,7 +977,7 @@ class IndexedParquetTable(CatalogAnswers):
         Cost: O(surviving pages) driver work on bounded planning data;
         files without page stats (never written, or non-indexed
         column) contribute nothing and keep full granularity."""
-        page_cols = getattr(self, "page_index_columns", ())
+        page_cols = self.page_index_columns
         get_pages = getattr(self.catalog, "get_page_stats", None)
         if not page_cols or not survivors or get_pages is None:
             return {}, 0
@@ -1041,7 +1077,7 @@ class IndexedParquetTable(CatalogAnswers):
         Row groups without a dict row (cardinality exceeded the
         index-time cap) are untouched — over-approximation holds; the
         mandatory residual filter keeps the contract inexact-safe."""
-        dict_cols = getattr(self, "dict_columns", ())
+        dict_cols = self.dict_columns
         if not dict_cols or not survivors:
             return 0
         from ..plans.expr import BinOp, Col, InList, Lit, Not
@@ -1136,9 +1172,14 @@ class IndexedParquetTable(CatalogAnswers):
         return skipped
 
     # -- deletion vectors (merge-on-read row-level deletes) -------------
-    def _dvs(self) -> Dict[str, List[Tuple[int, int]]]:
-        """Cached {file_name: [(start, length), ...]} deletion-vector
-        ranges; invalidated by every mutation (delete/compact/refresh)."""
+    def _dvs(self, as_of: Optional[int] = None
+             ) -> Dict[str, List[Tuple[int, int]]]:
+        """{file_name: [(start, length), ...]} deletion-vector ranges of
+        the live table (cached; invalidated by every mutation) or of a
+        snapshot() era."""
+        if as_of is not None:
+            return self.catalog.get_dv_ranges(as_of=as_of)
+        # getattr: test shims copy this method onto bare stand-ins
         if getattr(self, "_dv_cache", None) is None:
             self._dv_cache = self.catalog.get_dv_ranges()
         return self._dv_cache
@@ -1155,60 +1196,6 @@ class IndexedParquetTable(CatalogAnswers):
                 f"{sorted(self._dvs())}; run compact_deletes() first "
                 f"(COUNT/SUM/VAR pushdowns and all scans remain exact)")
 
-    def _dv_apply(self, df: DataFrame, file_names: Sequence[str],
-                  as_of: Optional[int] = None) -> DataFrame:
-        """Filter logically deleted rows out of a fresh parquet scan:
-        a hash ANTI-join on (file name, row position). The driver
-        ships only the range-compressed vectors; the ranges explode to
-        exact positions JVM-side (``explode(sequence(...))``) inside
-        the join build, so each scan row pays one O(1) hash probe.
-        (The first implementation kept the ranges as an array and ran
-        ``exists`` per row — linear in the DV size, which on a
-        SCATTERED delete (every range a single position) degenerated to
-        rows x deletions: measured 949 s for a 1.5M-row scan against a
-        214k-position DV at sf1, vs ~3 s for the hash anti-join.)
-
-        The build side is force-broadcast only while the CUMULATIVE
-        live position count over the scanned files stays under
-        DV_BROADCAST_MAX_POSITIONS: each delete call is capped at
-        DV_MAX_DELETED_PER_CALL, but vectors accumulate across calls
-        until compact_deletes(), so N deletes could otherwise pile
-        N x 2M positions into one forced broadcast and OOM executors
-        (or trip Spark's broadcast limit). Past the threshold the
-        build side carries a sort-merge hint instead: it is a local
-        relation of one small row per file, which Spark sizes far
-        under autoBroadcastJoinThreshold however many positions it
-        explodes to, so without the hint size-based join selection
-        would broadcast it anyway.
-        The position total is O(ranges) driver arithmetic from the
-        catalog metadata, never a count job. Must run on the raw scan
-        BEFORE projection (needs ``_metadata``)."""
-        from pyspark.sql import functions as F
-
-        dvs = self._dvs() if as_of is None \
-            else self.catalog.get_dv_ranges(as_of=as_of)
-        hit = {f: dvs[f] for f in file_names if f in dvs}
-        if not hit:
-            return df
-        return self._dv_position_join(df, hit, "left_anti")
-
-    def _boundary_dvs(
-        self,
-        partial: Dict[str, List[int]],
-        dv_rg: Dict[Tuple[str, int], int],
-        as_of: Optional[int] = None,
-    ) -> Optional[Dict[str, List[Tuple[int, int]]]]:
-        """Era deletion vectors for the boundary-scan files whose
-        scanned groups carry deletions; None when none do (the common
-        case — skips the positional-filter plumbing entirely)."""
-        if not any((fn, rg) in dv_rg
-                   for fn, rgs in partial.items() for rg in rgs):
-            return None
-        era = self._dvs() if as_of is None \
-            else self.catalog.get_dv_ranges(as_of=as_of)
-        out = {fn: era[fn] for fn in partial if fn in era}
-        return out or None
-
     def _dv_positions_df(self, dvs: Dict[str, List[Tuple[int, int]]]
                          ) -> DataFrame:
         """(file key URI-quoted, exact position) build side for the
@@ -1217,7 +1204,7 @@ class IndexedParquetTable(CatalogAnswers):
         ``LocalTableScan``, no Python worker per broadcast build) and
         the ranges explode JVM-side; broadcast under the cumulative
         DV_BROADCAST_MAX_POSITIONS cap, sort-merge join above it (see
-        _dv_apply).
+        _scan).
         One row per file, not per range: at 200k scattered ranges a
         per-range relation took 553 ms to build and 875 ms to count,
         the per-file arrays 113 ms and 368 ms (4-core host)."""
@@ -1232,12 +1219,8 @@ class IndexedParquetTable(CatalogAnswers):
         # the same object is safe and re-uses the analyzed plan too.
         key = tuple((f, tuple(map(tuple, ranges)))
                     for f, ranges in sorted(dvs.items()))
-        memo = getattr(self, "_dv_pos_memo", None)
-        if memo is None:
-            memo = self._dv_pos_memo = {}
-        hit = memo.get(key)
-        if hit is not None:
-            return hit
+        if self._dv_pos_memo is not None and self._dv_pos_memo[0] == key:
+            return self._dv_pos_memo[1]
         total_pos = sum(ln for ranges in dvs.values()
                         for _, ln in ranges)
         rows = [(self._dv_quote(f), [int(s) for s, _ in ranges],
@@ -1258,8 +1241,7 @@ class IndexedParquetTable(CatalogAnswers):
             dv_pos = F.broadcast(dv_pos)
         else:
             dv_pos = dv_pos.hint("merge")
-        memo.clear()   # one live DV state per table — keep it bounded
-        memo[key] = dv_pos
+        self._dv_pos_memo = (key, dv_pos)   # one DV state per table
         return dv_pos
 
     def _dv_position_join(self, df: DataFrame,
@@ -1308,6 +1290,46 @@ class IndexedParquetTable(CatalogAnswers):
             f"substring(_metadata.file_path, {len(prefix) + 1})")
 
     # -- reading -------------------------------------------------------
+    def _scan(self, file_names: Sequence[str], as_of: Optional[int] = None,
+              dvs: Optional[Dict[str, List[Tuple[int, int]]]] = None
+              ) -> DataFrame:
+        """The one read of table data files behind every query, DML and
+        change-feed surface: the catalog keys ``file_names`` joined onto
+        ``data_dir`` (``basePath`` re-surfaces hive partition columns,
+        typed as schema inference saw them), read with the table's
+        fixed schema, minus the rows the era's deletion vectors delete.
+        ``dvs`` stands in for the era's vectors when the caller holds
+        them already; ``{}`` yields the raw rows. A read of files still
+        carries ``_metadata`` for the DV position columns; no files
+        give an empty frame.
+
+        Deleted rows drop through a hash ANTI-join on (file name, row
+        position): the driver ships only the range-compressed vectors,
+        which explode to exact positions JVM-side inside the join build,
+        so each scan row pays one O(1) probe. (An ``exists`` over a
+        range array per row degenerated to rows x deletions on a
+        scattered delete: 949 s for a 1.5M-row scan against a
+        214k-position DV at sf1, vs ~3 s for the anti-join.) The build
+        side is force-broadcast only while the CUMULATIVE live position
+        count over the scanned files stays under
+        DV_BROADCAST_MAX_POSITIONS — vectors accumulate across delete
+        calls until compact_deletes(), so stacked deletes could
+        otherwise OOM executors; past it the build side carries a
+        sort-merge hint, because Spark sizes the one-row-per-file local
+        relation far under autoBroadcastJoinThreshold however many
+        positions it explodes to. The position total is O(ranges)
+        driver arithmetic, never a count job."""
+        if not file_names:
+            return local_frame(self.spark, [], self._schema)
+        reader = self.spark.read
+        if self.partitioned:
+            reader = reader.option("basePath", self.data_dir)
+        df = reader.schema(self._schema).parquet(
+            *[os.path.join(self.data_dir, f) for f in file_names])
+        era = self._dvs(as_of) if dvs is None else dvs
+        hit = {f: era[f] for f in file_names if f in era}
+        return self._dv_position_join(df, hit, "left_anti") if hit else df
+
     def query(
         self,
         predicate: Optional[Expr] = None,
@@ -1327,8 +1349,7 @@ class IndexedParquetTable(CatalogAnswers):
                 f"table {self.name!r} has no parquet files under "
                 f"{self.data_dir!r}; add data and call refresh()")
         decision = self.plan_scan(predicate, as_of=as_of)
-        partitioned = getattr(self, "partitioned", False)
-        if mode == "rowgroups" and partitioned:
+        if mode == "rowgroups" and self.partitioned:
             raise ValueError(
                 "mode='rowgroups' is not supported on partitioned layouts: "
                 "the Python DataSource reads raw files, which do not "
@@ -1336,24 +1357,11 @@ class IndexedParquetTable(CatalogAnswers):
                 "mode='files' (partition dirs already prune at file "
                 "granularity; the native reader skips row groups from "
                 "pushed footer stats).")
-        if not decision.files_scanned:
-            df = local_frame(self.spark, [], self._schema)
-        elif mode == "rowgroups":
-            era = self._dvs() if as_of is None \
-                else self.catalog.get_dv_ranges(as_of=as_of)
-            dvs = {f: era[f] for f in decision.file_names if f in era}
+        if mode == "rowgroups" and decision.files_scanned:
             df = self._read_rowgroups(decision, predicate, columns,
-                                      dvs=dvs or None, as_of=as_of)
+                                      as_of=as_of)
         else:
-            paths = [os.path.join(self.data_dir, f) for f in decision.file_names]
-            reader = self.spark.read
-            if partitioned:
-                # basePath re-surfaces the partition columns on a
-                # file-list read, typed exactly as schema inference saw
-                # them
-                reader = reader.option("basePath", self.data_dir)
-            df = reader.schema(self._schema).parquet(*paths)
-            df = self._dv_apply(df, decision.file_names, as_of=as_of)
+            df = self._scan(decision.file_names, as_of)
         if predicate is not None:
             df = df.filter(predicate.to_spark())  # Inexact => residual filter
         if columns:
@@ -1379,7 +1387,7 @@ class IndexedParquetTable(CatalogAnswers):
     DV_MAX_DELETED_PER_CALL = 2_000_000
     # cumulative exploded-position ceiling for the forced broadcast on
     # the DV read path (~64 MB of (string, long) build rows); above it
-    # _dv_apply leaves the anti-join strategy to AQE
+    # _scan hints a sort-merge anti-join instead
     DV_BROADCAST_MAX_POSITIONS = 4_000_000
 
     def delete_where(self, predicate: Expr) -> int:
@@ -1403,22 +1411,18 @@ class IndexedParquetTable(CatalogAnswers):
         positions per call (~ the point where a physical rewrite is
         cheaper than a vector; Delta draws the same line)."""
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         v0 = self._dml_begin()
         decision = self.plan_scan(predicate)
         if not decision.files_scanned:
             return 0
-        paths = [os.path.join(self.data_dir, f)
-                 for f in decision.file_names]
-        reader = self.spark.read
-        if getattr(self, "partitioned", False):
-            reader = reader.option("basePath", self.data_dir)
-        df = reader.schema(self._schema).parquet(*paths)
-        df = self._dv_apply(df, decision.file_names)   # idempotence
-        df = df.filter(predicate.to_spark())
-        return self._dv_collect_and_store(df, commit_from=v0,
-                                          verb="delete")
+        # the scan drops already-deleted rows: idempotence
+        df = self._scan(decision.file_names).filter(predicate.to_spark())
+        return self._dv_store_victims(
+            df.select(self._dv_file_key_col().alias("__file"),
+                      F.col("_metadata.row_index").alias("__pos"),
+                      *self.sum_columns),
+            commit_from=v0, verb="delete")
 
     def delete_matching(self, victims: DataFrame, key_column: str) -> int:
         """Set-based row-level DELETE: remove every row whose
@@ -1447,51 +1451,30 @@ class IndexedParquetTable(CatalogAnswers):
         decision = self.plan_scan(window)
         if not decision.files_scanned:
             return 0
-        paths = [os.path.join(self.data_dir, f)
-                 for f in decision.file_names]
-        reader = self.spark.read
-        if getattr(self, "partitioned", False):
-            reader = reader.option("basePath", self.data_dir)
-        df = reader.schema(self._schema).parquet(*paths)
-        df = self._dv_apply(df, decision.file_names)   # idempotence
+        df = self._scan(decision.file_names)   # idempotence
         df = df.join(keys,
                      df[key_column] == keys["__dv_victim_key"],
                      "leftsemi")
-        return self._dv_collect_and_store(df, commit_from=v0,
-                                          verb="delete_matching")
-
-    def _dv_collect_and_store(self, df: DataFrame,
-                              commit_from: int = -1,
-                              verb: str = "delete") -> int:
-        """Shared tail of the delete paths: one distributed pass over
-        the victim DataFrame (which still carries ``_metadata``)
-        collects per-file sorted positions, counts, and exact
-        per-sum-column contributions; positions are merged into the
-        catalog's deletion vectors."""
-        from pyspark.sql import functions as F
-
-        sum_cols = [c for c in getattr(self, "sum_columns", ())]
-        victims = df.select(
-            self._dv_file_key_col().alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-            *[F.col(c) for c in sum_cols])
-        return self._dv_store_victims(victims, commit_from=commit_from,
-                                      verb=verb)
+        return self._dv_store_victims(
+            df.select(self._dv_file_key_col().alias("__file"),
+                      F.col("_metadata.row_index").alias("__pos"),
+                      *self.sum_columns),
+            commit_from=v0, verb="delete_matching")
 
     def _dv_store_victims(self, victims: DataFrame,
                           commit_from: int = -1,
                           verb: str = "delete") -> int:
-        """Commit deletion vectors from an already-materialized victim
-        frame carrying ``__file`` (catalog key, URI-space), ``__pos``
-        (file-scoped row position) and every sum column — lets
-        update_where reuse ONE pruned read for both the update batch
-        and the delete, instead of re-planning the same files. Raises
-        (before committing anything) when the victim count exceeds
-        DV_MAX_DELETED_PER_CALL."""
+        """Shared tail of the delete paths: one distributed pass over a
+        victim frame carrying ``__file`` (catalog key, URI-space),
+        ``__pos`` (file-scoped row position) and every sum column
+        collects per-file sorted positions, counts and exact
+        per-sum-column contributions, which merge into the catalog's
+        deletion vectors (update_where hands in its one cached victim
+        read). Raises (before committing anything) when the victim
+        count exceeds DV_MAX_DELETED_PER_CALL."""
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
-        sum_cols = [c for c in getattr(self, "sum_columns", ())]
+        sum_cols = self.sum_columns
         # one distributed pass: file, position, and the deleted rows'
         # sum contributions (exact: integer/decimal sums in
         # decimal(38,0); second moments integer-only, like the store)
@@ -1504,8 +1487,7 @@ class IndexedParquetTable(CatalogAnswers):
                               if not isinstance(dt, T.DecimalType)
                               else F.col(c)).alias(f"__sum_{c}"))
             aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
-            if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
-                               T.LongType)):
+            if isinstance(dt, _INTEGER_TYPES):
                 aggs.append(F.sum(F.col(c).cast("decimal(38,0)")
                                   * F.col(c)).alias(f"__sq_{c}"))
         # enforce the cap BEFORE materializing any positions on the
@@ -1526,8 +1508,6 @@ class IndexedParquetTable(CatalogAnswers):
         # DV-commit loop stays inside the mutation scope so no other
         # in-process writer can commit-and-mutate (e.g. optimize()
         # evicting these files) while vectors are mid-store.
-        from urllib.parse import unquote
-        deleted = 0
         with self._dml_mutation_scope(commit_from, verb):
             deleted = self._dv_apply_hits(hits, sum_cols)
         self._dv_cache = None
@@ -1541,6 +1521,7 @@ class IndexedParquetTable(CatalogAnswers):
         catalog's deletion vectors. Runs inside the verb's
         ``_dml_mutation_scope``."""
         from urllib.parse import unquote
+        dts = {f.name: f.dataType for f in self._schema.fields}
         deleted = 0
         for r in hits:
             # scan-side keys are URI-space; the catalog's are raw
@@ -1548,11 +1529,8 @@ class IndexedParquetTable(CatalogAnswers):
             if not positions:
                 continue
             counts = self.catalog.row_group_row_counts(fname)
-            starts = []
-            acc = 0
-            for rg in range(len(counts)):
-                starts.append(acc)
-                acc += counts[rg]
+            starts = list(accumulate(
+                (counts[rg] for rg in range(len(counts))), initial=0))[:-1]
             # split file-scoped positions into row groups (positions
             # sorted; starts ascending)
             by_rg: Dict[int, List[int]] = {}
@@ -1567,76 +1545,41 @@ class IndexedParquetTable(CatalogAnswers):
             # reuses the file-level aggregates
             sum_adjust: Dict[int, Dict[str, tuple]] = {}
             if sum_cols and len(by_rg) == 1:
-                only_rg = next(iter(by_rg))
-                sum_adjust[only_rg] = self._dv_sum_entries(r, sum_cols)
+                agg = r.asDict()
+                sum_adjust[next(iter(by_rg))] = {
+                    c: _sum_entry(dts.get(c), agg[f"__sum_{c}"],
+                                  agg[f"__nn_{c}"], agg.get(f"__sq_{c}"))
+                    for c in sum_cols}
             elif sum_cols:
-                sum_adjust = self._dv_rg_sums(fname, by_rg, sum_cols)
+                sum_adjust = self._dv_rg_sums(fname, by_rg, sum_cols,
+                                              starts)
             deleted += len(positions)
             self.catalog.upsert_dv(fname, by_rg, sum_adjust)
         return deleted
 
-    def _dv_sum_entries(self, row, sum_cols):
-        """Decode one collected aggregate row into the catalog's
-        (sum, nonnull, sumsq|None) integer triples."""
-        import decimal as _dec
-        from pyspark.sql import types as T
-
-        schema_by_name = {f.name: f.dataType for f in self._schema.fields}
-        out = {}
-        for c in sum_cols:
-            s = row[f"__sum_{c}"]
-            dt = schema_by_name.get(c)
-            if isinstance(dt, T.DecimalType):
-                # store UNSCALED ints, the row_group_sums convention
-                s_int = 0 if s is None else int(
-                    _dec.Decimal(s).scaleb(dt.scale))
-            else:
-                s_int = 0 if s is None else int(s)
-            sq = row[f"__sq_{c}"] if f"__sq_{c}" in row.asDict() else None
-            out[c] = (s_int, row[f"__nn_{c}"],
-                      None if sq is None else int(sq))
-        return out
-
     def _dv_rg_sums(self, fname: str, by_rg: Dict[int, List[int]],
-                    sum_cols) -> Dict[int, Dict[str, tuple]]:
+                    sum_cols, starts: List[int]
+                    ) -> Dict[int, Dict[str, tuple]]:
         """Per-row-group deleted-sum contributions for a multi-row-group
         file: re-read exactly the deleted positions with pyarrow (a few
         row groups of one file — bounded work on the driver, mirroring
-        how the stats extractors already read footers)."""
-        import decimal as _dec
-
+        how the stats extractors already read footers). ``starts``: the
+        file-scoped first row of each row group."""
         import pyarrow.parquet as pq
-        from pyspark.sql import types as T
 
-        schema_by_name = {f.name: f.dataType for f in self._schema.fields}
+        dts = {f.name: f.dataType for f in self._schema.fields}
         pf = pq.ParquetFile(os.path.join(self.data_dir, fname))
-        counts = self.catalog.row_group_row_counts(fname)
-        starts = []
-        acc = 0
-        for rg in range(len(counts)):
-            starts.append(acc)
-            acc += counts[rg]
         out: Dict[int, Dict[str, tuple]] = {}
         for rg, positions in by_rg.items():
-            tbl = pf.read_row_group(rg, columns=list(sum_cols))
-            local = [p - starts[rg] for p in positions]
-            sub = tbl.take(local)
+            sub = pf.read_row_group(rg, columns=list(sum_cols)).take(
+                [p - starts[rg] for p in positions])
             entries = {}
             for c in sum_cols:
                 vals = [v for v in sub.column(c).to_pylist()
                         if v is not None]
-                dt = schema_by_name.get(c)
-                if isinstance(dt, T.DecimalType):
-                    s_int = int(sum(_dec.Decimal(v).scaleb(dt.scale)
-                                    for v in vals)) if vals else 0
-                    sq = None
-                else:
-                    s_int = sum(int(v) for v in vals)
-                    sq = sum(int(v) * int(v) for v in vals) \
-                        if isinstance(dt, (T.ByteType, T.ShortType,
-                                           T.IntegerType, T.LongType)) \
-                        else None
-                entries[c] = (s_int, len(vals), sq)
+                entries[c] = _sum_entry(
+                    dts.get(c), sum(vals), len(vals),
+                    sum(int(v) * int(v) for v in vals))
             out[rg] = entries
         return out
 
@@ -1753,8 +1696,8 @@ class IndexedParquetTable(CatalogAnswers):
     def _marker_file_key(self, path: str) -> str:
         """Catalog key for a data file during crash recovery: the
         dir-relative path (equals the basename for flat layouts) —
-        computed WITHOUT self.partitioned, which is not yet assigned
-        when recovery runs inside __init__."""
+        computed WITHOUT self.partitioned, which still holds the class
+        default when recovery runs inside __init__."""
         return os.path.relpath(path, self.data_dir)
 
     def _recover_pack_markers(self, markers: List[str]) -> None:
@@ -1846,7 +1789,7 @@ class IndexedParquetTable(CatalogAnswers):
             return 0   # empty table: nothing to pack
         v0 = self._dml_begin()
         dvs = self._dvs()
-        part_cols = getattr(self, "_partition_cols", set())
+        part_cols = self._partition_cols
         phys_schema = StructType(
             [f for f in self._schema.fields if f.name not in part_cols])
         by_dir: Dict[str, List[Tuple[str, int]]] = defaultdict(list)
@@ -2023,7 +1966,6 @@ class IndexedParquetTable(CatalogAnswers):
                     os.remove(tmp)
             raise
         self.refresh()
-        self._dv_cache = None
         self._refresh_views()
         return len(dvs)
 
@@ -2079,8 +2021,8 @@ class IndexedParquetTable(CatalogAnswers):
         the landed paths."""
         import shutil
 
-        partitioned = getattr(self, "partitioned", False)
-        part_cols = sorted(getattr(self, "_partition_cols", ()))
+        partitioned = self.partitioned
+        part_cols = sorted(self._partition_cols)
         tmp = os.path.join(self.data_dir, f"_stage_{prefix}")
         writer = batch.write.mode("overwrite")
         if partitioned and part_cols:
@@ -2266,7 +2208,7 @@ class IndexedParquetTable(CatalogAnswers):
         # the file — they serialize as path strings and cannot poison a
         # landed file's physical schema, so they keep the old
         # unconformed behavior
-        part_cols = getattr(self, "_partition_cols", set()) or set()
+        part_cols = self._partition_cols
         out = []
         for name in batch.columns:
             bt = batch_types[name]
@@ -2353,7 +2295,7 @@ class IndexedParquetTable(CatalogAnswers):
         # execution of the updates plan above); the landed files are
         # not in the catalog yet, so their rows cannot be deleted
         reader = self.spark.read
-        if getattr(self, "partitioned", False):
+        if self.partitioned:
             reader = reader.option("basePath", self.data_dir)
         victims = reader.parquet(*landed)
         try:
@@ -2419,14 +2361,7 @@ class IndexedParquetTable(CatalogAnswers):
         decision = self.plan_scan(predicate)
         if not decision.files_scanned:
             return 0
-        paths = [os.path.join(self.data_dir, f)
-                 for f in decision.file_names]
-        reader = self.spark.read
-        if getattr(self, "partitioned", False):
-            reader = reader.option("basePath", self.data_dir)
-        df = reader.schema(self._schema).parquet(*paths)
-        df = self._dv_apply(df, decision.file_names)
-        df = df.filter(predicate.to_spark())
+        df = self._scan(decision.file_names).filter(predicate.to_spark())
         # materialize file + position ALONGSIDE the data columns: the
         # same cached read feeds the update batch and the DV commit
         victims = df.select(
@@ -2468,9 +2403,8 @@ class IndexedParquetTable(CatalogAnswers):
                 self._land_batch(updated, "update")
                 # the landed files are invisible to the catalog until
                 # refresh() — old versions go, new versions stay
-                sum_cols = [c for c in getattr(self, "sum_columns", ())]
                 self._dv_store_victims(
-                    victims.select("__file", "__pos", *sum_cols))
+                    victims.select("__file", "__pos", *self.sum_columns))
         finally:
             victims.unpersist()
         self.refresh()
@@ -2575,7 +2509,7 @@ class IndexedParquetTable(CatalogAnswers):
                     f"restored")
         extras = [p for p in list_parquet_files(
                       self.data_dir,
-                      recursive=getattr(self, "partitioned", False))
+                      recursive=self.partitioned)
                   if self._file_key(p) not in recorded]
         if not force and extras:
             # refuse BEFORE any removal when a live newer snapshot
@@ -2622,7 +2556,6 @@ class IndexedParquetTable(CatalogAnswers):
                 self.catalog.remove_file(self._file_key(p))
                 removed += 1
             self.catalog.restore_dvs(snapshot_id)
-        self._dv_cache = None
         self.refresh()
         self._refresh_views()
         return {"files_removed": removed,
@@ -2663,20 +2596,15 @@ class IndexedParquetTable(CatalogAnswers):
                 f"{since} > {until}")
         since_files = self._snapshot_guard(since)
         until_files = self._snapshot_guard(until)
-        since_dv = self.catalog.get_dv_ranges(as_of=since)
-        until_dv = self.catalog.get_dv_ranges(as_of=until)
+        since_dv = self._dvs(since)
+        until_dv = self._dvs(until)
         out_cols = [F.col(change_col)] + \
             [F.col(f.name) for f in self._schema.fields]
         parts: List[DataFrame] = []
         new_files = sorted(set(until_files) - set(since_files))
         if new_files:
-            paths = [os.path.join(self.data_dir, f) for f in new_files]
-            reader = self.spark.read
-            if getattr(self, "partitioned", False):
-                reader = reader.option("basePath", self.data_dir)
-            ins = reader.schema(self._schema).parquet(*paths)
-            ins = self._dv_apply(ins, new_files, as_of=until)
-            parts.append(ins.withColumn(change_col, F.lit("insert"))
+            parts.append(self._scan(new_files, dvs=until_dv)
+                         .withColumn(change_col, F.lit("insert"))
                          .select(*out_cols))
         delta = {}
         for f in sorted(set(since_files) & set(until_files)):
@@ -2685,13 +2613,9 @@ class IndexedParquetTable(CatalogAnswers):
             if d:
                 delta[f] = d
         if delta:
-            paths = [os.path.join(self.data_dir, f)
-                     for f in sorted(delta)]
-            reader = self.spark.read
-            if getattr(self, "partitioned", False):
-                reader = reader.option("basePath", self.data_dir)
-            dels = reader.schema(self._schema).parquet(*paths)
-            dels = self._dv_position_join(dels, delta, "left_semi")
+            # the raw rows, keeping ONLY the positions the era deleted
+            dels = self._dv_position_join(
+                self._scan(sorted(delta), dvs={}), delta, "left_semi")
             parts.append(dels.withColumn(change_col, F.lit("delete"))
                          .select(*out_cols))
         if not parts:
@@ -2710,9 +2634,9 @@ class IndexedParquetTable(CatalogAnswers):
         decision: ScanDecision,
         predicate: Optional[Expr] = None,
         columns: Optional[Sequence[str]] = None,
-        dvs: Optional[Dict[str, List[Tuple[int, int]]]] = None,
         as_of: Optional[int] = None,
         local_max_bytes: int = 0,
+        dv_rg: Optional[Dict[Tuple[str, int], int]] = None,
     ) -> DataFrame:
         """Exact row-group scan via the Python DataSource (Spark 4).
         Column pruning is pushed into the reader by narrowing the schema
@@ -2728,17 +2652,16 @@ class IndexedParquetTable(CatalogAnswers):
         the native vectorized reader — identical semantics, zero tax —
         and the two halves union (both are scans; no shuffle).
 
-        dvs: optional {file_name: [(start, length), ...]} deletion
-        vectors for scanned files. The Python-DataSource half
-        anti-filters positionally inside read() (it knows each row
-        group's file-scoped row offsets from the footer); the native
-        half rides the same ``_dv_apply`` anti-join the files mode
-        uses. Both halves therefore serve merge-on-read DML exactly.
-        The aggregate pushdowns pass the era's DVs for their BOUNDARY
-        groups (scanned rows come back live-only, which is exactly
-        what the boundary term needs) while their proven-full groups
-        stay catalog arithmetic (stored values minus the recorded
-        adjustments).
+        Deletion vectors of the ``as_of`` era apply to both halves: the
+        Python-DataSource half anti-filters positionally inside read()
+        (it knows each row group's file-scoped row offsets from the
+        footer), the native half is ``_scan``. Scanned rows therefore
+        come back live-only — exactly what the aggregate pushdowns'
+        BOUNDARY term needs, while their proven-full groups stay
+        catalog arithmetic (stored values minus the recorded
+        adjustments). ``dv_rg``: the era's {(file, row group): deleted
+        rows} when the caller holds it; the era's vectors are then read
+        only if a scanned group carries deletions.
 
         local_max_bytes > 0 arms a driver-side fast path for the
         internal boundary scans (count/sum/var/min-max pushdowns):
@@ -2771,8 +2694,14 @@ class IndexedParquetTable(CatalogAnswers):
             if pruned:
                 from pyspark.sql.types import StructType
                 schema = StructType(pruned)
-        row_ranges = getattr(decision, "row_ranges", {}) or {}
-        full_files, full_names, partial = [], [], {}
+        row_ranges = decision.row_ranges
+        if dv_rg is None or any((fn, rg) in dv_rg for fn, rgs
+                                in decision.files_scanned.items()
+                                for rg in rgs):
+            era = self._dvs(as_of)
+        else:
+            era = {}
+        full_names, partial = [], {}
         for fname, rgs in decision.files_scanned.items():
             try:
                 total = self.catalog.row_group_count(fname)
@@ -2783,23 +2712,18 @@ class IndexedParquetTable(CatalogAnswers):
             # cannot skip rows inside a row group
             if (total is not None and len(rgs) >= total
                     and fname not in row_ranges):
-                full_files.append(os.path.join(self.data_dir, fname))
                 full_names.append(fname)
             else:
-                partial[os.path.join(self.data_dir, fname)] = rgs
+                partial[fname] = rgs
         parts_df = None
         if partial:
-            dv_by_path = {}
-            if dvs:
-                dv_by_path = {
-                    os.path.join(self.data_dir, fn):
-                        [[int(s), int(ln)] for s, ln in ranges]
-                    for fn, ranges in dvs.items()
-                    if os.path.join(self.data_dir, fn) in partial}
-            if local_max_bytes and not full_files:
+            path = {fn: os.path.join(self.data_dir, fn) for fn in partial}
+            plan = {path[fn]: rgs for fn, rgs in partial.items()}
+            dv_by_path = {path[fn]: [[int(s), int(ln)] for s, ln in era[fn]]
+                          for fn in partial if fn in era}
+            if local_max_bytes and not full_names:
                 local = self._read_rowgroups_local(
-                    partial, schema, local_max_bytes,
-                    dv_by_path=dv_by_path)
+                    plan, schema, local_max_bytes, dv_by_path=dv_by_path)
                 if local is not None:
                     return local
             from .rowgroup_source import ensure_registered
@@ -2807,26 +2731,20 @@ class IndexedParquetTable(CatalogAnswers):
             reader = (
                 self.spark.read.format("rowgroup_parquet")
                 .schema(schema)
-                .option("access_plan", json.dumps(partial)))
+                .option("access_plan", json.dumps(plan)))
             if dv_by_path:
                 reader = reader.option("dv", json.dumps(dv_by_path))
-            if row_ranges:
-                rr_by_path = {
-                    os.path.join(self.data_dir, fn): {
-                        str(rg): [[int(s), int(e)] for s, e in spans]
-                        for rg, spans in per_rg.items()}
-                    for fn, per_rg in row_ranges.items()
-                    if os.path.join(self.data_dir, fn) in partial}
-                if rr_by_path:
-                    reader = reader.option("row_ranges",
-                                           json.dumps(rr_by_path))
+            rr_by_path = {
+                path[fn]: {str(rg): [[int(s), int(e)] for s, e in spans]
+                           for rg, spans in row_ranges[fn].items()}
+                for fn in partial if fn in row_ranges}
+            if rr_by_path:
+                reader = reader.option("row_ranges", json.dumps(rr_by_path))
             parts_df = reader.load()
-        if not full_files:
+        if not full_names:
             return parts_df
-        native = self.spark.read.schema(self._schema).parquet(*full_files)
-        if dvs and any(fn in dvs for fn in full_names):
-            native = self._dv_apply(native, full_names, as_of=as_of)
-        native = native.select(*[f.name for f in schema.fields])
+        native = self._scan(full_names, dvs=era).select(
+            *[f.name for f in schema.fields])
         return native.unionByName(parts_df) if parts_df is not None else native
 
     # UNCOMPRESSED-byte ceiling for the driver-side boundary read
@@ -3062,17 +2980,14 @@ class IndexedParquetTable(CatalogAnswers):
         order = [F.col(column).desc_nulls_last() if descending
                  else F.col(column).asc_nulls_last()]
         order += [F.col(c).asc_nulls_last() for c in tiebreak]
-        if getattr(self, "partitioned", False) or self._dvs():
+        if self.partitioned or self._dvs():
             # the row-group reader cannot surface partition columns —
             # nor row positions for the deletion-vector anti-filter;
             # both layouts fall back to the pruned native scan (which
             # applies DVs exactly)
             self.last_topk_pushdown = None
-            df = self.query(predicate) if predicate is not None \
-                else self.query(None)
-            return df.orderBy(*order).limit(k)
-        decision = self.plan_scan(predicate) if predicate is not None \
-            else self.plan_scan(None)
+            return self.query(predicate).orderBy(*order).limit(k)
+        decision = self.plan_scan(predicate)
         candidates = [(fn, rg) for fn, rgs in decision.files_scanned.items()
                       for rg in rgs]
         try:
@@ -3180,15 +3095,15 @@ class IndexedParquetTable(CatalogAnswers):
             "files": len(files),
             "row_groups": sum(f[2] for f in files),
             "rows": sum(f[3] for f in files),
-            "bloom_columns": list(getattr(self, "bloom_columns", ())),
+            "bloom_columns": list(self.bloom_columns),
             "token_bloom_columns": list(
-                getattr(self, "token_bloom_columns", ())),
+                self.token_bloom_columns),
             # per sum column: how many row groups carry a stored sum —
             # partial coverage is legal (those groups scan), so the
             # operator can see how much pushdown they actually get
             "sum_coverage": {
                 c: len(self.catalog.get_sums(c))
-                for c in getattr(self, "sum_columns", ())},
+                for c in self.sum_columns},
             # merge-on-read DML state: how much of the table is
             # logically deleted and where — the operator's signal for
             # when compact_deletes() pays for itself
@@ -3227,18 +3142,11 @@ class IndexedParquetTable(CatalogAnswers):
 
     # -- convenience ---------------------------------------------------
     def to_df(self) -> DataFrame:
-        """Unpruned full-table scan through Spark's native reader
-        (deletion vectors still apply — every read surface hides
-        logically deleted rows)."""
-        if getattr(self, "partitioned", False):
-            df = self.spark.read.schema(self._schema).parquet(
-                self.data_dir)
-        else:
-            df = self.spark.read.schema(self._schema).parquet(
-                os.path.join(self.data_dir, "*.parquet"))
-        if self._dvs():
-            df = self._dv_apply(df, list(self._dvs()))
-        return df
+        """Unpruned full-table scan of the catalog's file set, like
+        ``query(None)`` — a file dropped into the directory stays
+        invisible until refresh() indexes it — with deletion vectors
+        applied (every read surface hides logically deleted rows)."""
+        return self._scan(sorted(f[0] for f in self.catalog.all_files()))
 
     def create_temp_view(self, view_name: Optional[str] = None) -> None:
         """Register the (DV-filtered) full scan as a temp view. A view
@@ -3248,12 +3156,10 @@ class IndexedParquetTable(CatalogAnswers):
         holds through views too."""
         name = view_name or self.name
         self.to_df().createOrReplaceTempView(name)
-        if not hasattr(self, "_registered_views"):
-            self._registered_views = set()
-        self._registered_views.add(name)
+        self._registered_views |= {name}
 
     def _refresh_views(self) -> None:
-        for name in getattr(self, "_registered_views", ()):
+        for name in self._registered_views:
             self.to_df().createOrReplaceTempView(name)
 
     def sql(self, statement: str) -> DataFrame:
