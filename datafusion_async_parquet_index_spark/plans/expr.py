@@ -22,11 +22,11 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
-from typing import Any, Iterable, Optional, Sequence, Tuple
+from typing import Any, Iterable, Iterator, Optional, Sequence, Tuple
 
 __all__ = [
     "Expr", "Col", "Lit", "BinOp", "Not", "IsNull", "Like", "InList",
-    "Case", "ContainsToken", "col", "lit", "and_all",
+    "Case", "ContainsToken", "col", "lit", "and_all", "conjuncts",
     "COMPARISONS", "ARITHMETIC", "BOOLEAN_OPS",
 ]
 
@@ -412,3 +412,13 @@ def and_all(exprs: Sequence[Expr]) -> Expr:
     for e in exprs[1:]:
         out = BinOp("AND", out, e)
     return out
+
+
+def conjuncts(e: Expr) -> Iterator[Expr]:
+    """The top-level AND conjuncts of ``e``, left to right (``e`` itself
+    when it is not an AND)."""
+    if isinstance(e, BinOp) and e.op == "AND":
+        yield from conjuncts(e.left)
+        yield from conjuncts(e.right)
+    else:
+        yield e

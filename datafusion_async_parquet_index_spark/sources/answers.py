@@ -183,10 +183,9 @@ class CatalogAnswers:
         # the satisfaction set takes plan_scan's R-tree prefilter too: it
         # is only read at keys inside the (equally prefiltered)
         # refutation decision, so the window cannot change any answer
-        sat = self._rewriter.satisfies(predicate)
-        window = self._rtree_window(predicate)
-        full = dict(self.catalog.get_files(sat) if window is None
-                    else self.catalog.get_files(sat, prefilter=window))
+        full = dict(self.catalog.get_files(
+            self._rewriter.satisfies(predicate),
+            prefilter=self._rtree_window(predicate)))
         dv_rg = self._dv_rg(as_of)
         parts: list = []
         partial: Dict[str, List[int]] = {}

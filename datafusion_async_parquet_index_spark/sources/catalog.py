@@ -241,6 +241,10 @@ def _merge_dv_ranges(ranges: Sequence[Sequence[int]],
 _RTREE_ID_STRIDE = 1_000_000  # rtree id = file_id * stride + row_group
 _RTREE_CATS = {"int", "float", "timestamp", "date"}
 
+# the content discriminators a file row and a snapshot row carry beside
+# the size (NULL = unknown on catalogs persisted before them)
+_IDENTITY_COLUMNS = (("mtime_ns", "INTEGER"), ("footer_md5", "TEXT"))
+
 
 def _f32_step(f: float, up: bool) -> float:
     import struct
@@ -486,6 +490,39 @@ class SqliteIndexCatalog(SidecarReads):
     def _blob_type(self) -> str:
         return "BLOB"
 
+    def _stat_columns(self) -> List[Tuple[str, str, str]]:
+        """(column, SQL type, value category) of every footer-stat
+        column of row_group_statistics, in table order: per indexed
+        column ``_null_count``, ``_min`` and ``_max``; floats add
+        ``_nan_count`` — opt-in per-row-group NaN count (NULL =
+        unknown): footer min/max EXCLUDE NaN while Spark/DuckDB order it
+        above every value, so float refutation/satisfaction consult it
+        (plans/pruning.py _nan_possible); decimals add ``_exact_min`` /
+        ``_exact_max`` — exact attained bounds (str(Decimal), lossless)
+        for catalog-only ANSWERS, while the REAL min/max stay the
+        ulp-widened PRUNING bounds."""
+        out: List[Tuple[str, str, str]] = []
+        for name, cat in self.index_schema.items():
+            sql_t = self._blob_type() if cat == "binary" else _SQL_TYPE[cat]
+            out += [(f"{name}_null_count", "INTEGER", "int"),
+                    (f"{name}_min", sql_t, cat), (f"{name}_max", sql_t, cat)]
+            if cat == "float":
+                out.append((f"{name}_nan_count", "INTEGER", "int"))
+            if cat == "decimal":
+                out += [(f"{name}_exact_min", "TEXT", "string"),
+                        (f"{name}_exact_max", "TEXT", "string")]
+        return out
+
+    def _add_missing_columns(self, table: str, columns) -> None:
+        """ALTER TABLE ADD COLUMN each (name, SQL type) ``table`` lacks:
+        a persisted catalog built before the column existed, or one
+        whose index schema grew; the added rows read NULL = unknown."""
+        existing = self._existing_columns(table)
+        for col_name, col_t in columns:
+            if col_name not in existing:
+                self._exec(f'ALTER TABLE {table} '
+                           f'ADD COLUMN "{col_name}" {col_t}')
+
     def _binary(self, b: bytes):
         return sqlite3.Binary(b)
 
@@ -530,25 +567,8 @@ class SqliteIndexCatalog(SidecarReads):
         with unsupported categories must already be filtered out by the
         caller (sources/stats.py does this)."""
         self.index_schema = dict(index_schema)
-        cols = []
-        for name, cat in self.index_schema.items():
-            sql_t = self._blob_type() if cat == "binary" else _SQL_TYPE[cat]
-            cols.append(f'"{name}_null_count" INTEGER')
-            cols.append(f'"{name}_min" {sql_t}')
-            cols.append(f'"{name}_max" {sql_t}')
-            if cat == "float":
-                # opt-in per-row-group NaN count (NULL = unknown):
-                # footer min/max EXCLUDE NaN while Spark/DuckDB order it
-                # above every value, so float refutation/satisfaction
-                # consult this column (plans/pruning.py _nan_possible)
-                cols.append(f'"{name}_nan_count" INTEGER')
-            if cat == "decimal":
-                # exact attained bounds (str(Decimal) — lossless) for
-                # catalog-only ANSWERS; the REAL min/max stay the
-                # ulp-widened PRUNING bounds
-                cols.append(f'"{name}_exact_min" TEXT')
-                cols.append(f'"{name}_exact_max" TEXT')
-        extra = (", " + ", ".join(cols)) if cols else ""
+        stat_cols = [(c, t) for c, t, _ in self._stat_columns()]
+        extra = "".join(f', "{c}" {t}' for c, t in stat_cols)
         with self._txn():
             self._exec(
                 f"""CREATE TABLE IF NOT EXISTS file_statistics (
@@ -559,15 +579,9 @@ class SqliteIndexCatalog(SidecarReads):
                        row_count INTEGER NOT NULL,
                        mtime_ns INTEGER,
                        footer_md5 TEXT)""")
-            existing_fs = self._existing_columns("file_statistics")
-            for col_name, col_t in (("mtime_ns", "INTEGER"),
-                                    ("footer_md5", "TEXT")):
-                if col_name not in existing_fs:
-                    # persisted catalog built before the change
-                    # discriminators; NULL = unknown, comparisons
-                    # fall back to the older convention
-                    self._exec(f"ALTER TABLE file_statistics "
-                               f"ADD COLUMN {col_name} {col_t}")
+            # persisted catalog built before the change discriminators;
+            # NULL = unknown, comparisons fall back to the older convention
+            self._add_missing_columns("file_statistics", _IDENTITY_COLUMNS)
             self._exec(
                 f"""CREATE TABLE IF NOT EXISTS row_group_statistics (
                        file_id INTEGER NOT NULL REFERENCES file_statistics(file_id)
@@ -579,34 +593,16 @@ class SqliteIndexCatalog(SidecarReads):
             # directory learns its real index schema on first refresh):
             # CREATE IF NOT EXISTS won't extend an existing table, so add
             # any missing stat columns explicitly
-            existing = self._existing_columns("row_group_statistics")
-            for name, cat in self.index_schema.items():
-                sql_t = (self._blob_type() if cat == "binary"
-                         else _SQL_TYPE[cat])
-                growth = [(f"{name}_null_count", "INTEGER"),
-                          (f"{name}_min", sql_t), (f"{name}_max", sql_t)]
-                if cat == "float":
-                    growth.append((f"{name}_nan_count", "INTEGER"))
-                if cat == "decimal":
-                    growth.append((f"{name}_exact_min", "TEXT"))
-                    growth.append((f"{name}_exact_max", "TEXT"))
-                for col_name, col_t in growth:
-                    if col_name not in existing:
-                        self._exec(
-                            f'ALTER TABLE row_group_statistics '
-                            f'ADD COLUMN "{col_name}" {col_t}')
+            self._add_missing_columns("row_group_statistics", stat_cols)
             # the sidecar statistics (sources/sidecars.py), one table
             # each keyed (file_id, row_group, column_name[, page])
             for stat in STATISTICS:
                 self._exec(self._sidecar_ddl(stat))
-                existing_sc = self._existing_columns(stat.table)
-                for col_name, col_t in stat.payload:
-                    if col_name not in existing_sc and "NOT NULL" not in col_t:
-                        # persisted catalog built before the column
-                        # existed (sums' sumsq_value, the VAR extension);
-                        # NULL = unknown
-                        self._exec(f"ALTER TABLE {stat.table} "
-                                   f"ADD COLUMN {col_name} {col_t}")
+                # a nullable payload column newer than the catalog
+                # (sums' sumsq_value, the VAR extension)
+                self._add_missing_columns(
+                    stat.table, [(c, t) for c, t in stat.payload
+                                 if "NOT NULL" not in t])
             # snapshot extension (time travel): a numbered, immutable
             # record of the indexed file set (name + size) at
             # create_snapshot() time. O(snapshots x files) tiny TEXT
@@ -660,16 +656,9 @@ class SqliteIndexCatalog(SidecarReads):
                        mtime_ns INTEGER,
                        footer_md5 TEXT,
                        PRIMARY KEY (snapshot_id, file_name))""")
-            existing_snap = self._existing_columns("catalog_snapshots")
-            for col_name, col_t in (("mtime_ns", "INTEGER"),
-                                    ("footer_md5", "TEXT")):
-                if col_name not in existing_snap:
-                    # persisted catalog whose snapshots predate the
-                    # content discriminators; NULL = unknown, the
-                    # reconstruction check falls back to size-only for
-                    # those rows (the old convention)
-                    self._exec(f"ALTER TABLE catalog_snapshots "
-                               f"ADD COLUMN {col_name} {col_t}")
+            # snapshots that predate the content discriminators: the
+            # reconstruction check falls back to size-only for NULL rows
+            self._add_missing_columns("catalog_snapshots", _IDENTITY_COLUMNS)
             # the restore blocker scan probes "which newer snapshots
             # reference these files" — keep it an index stab, not an
             # O(snapshots x files) walk (round-11 scale probe)
@@ -978,18 +967,13 @@ class SqliteIndexCatalog(SidecarReads):
                 self._exec(
                     f"DELETE FROM {dv_tbl} WHERE file_id = ?",
                     (file_id,))
-        stat_cols = []
-        for name, cat in self.index_schema.items():
-            stat_cols += [f'"{name}_null_count"', f'"{name}_min"', f'"{name}_max"']
-            if cat == "float":
-                stat_cols.append(f'"{name}_nan_count"')
-            if cat == "decimal":
-                stat_cols += [f'"{name}_exact_min"', f'"{name}_exact_max"']
-        all_cols = ["file_id", "row_group", "row_count"] + stat_cols
+        all_cols = ["file_id", "row_group", "row_count"] + [
+            f'"{c}"' for c, _, _ in self._stat_columns()]
         placeholders = ", ".join("?" for _ in all_cols)
         rows = []
         for rg in rgs:
             row: List[Any] = [file_id, rg.row_group, rg.row_count]
+            # values in _stat_columns order
             for name, cat in self.index_schema.items():
                 nc, mn, mx = rg.columns.get(name, (None, None, None))
                 row += [nc, encode_value(cat, mn), encode_value(cat, mx)]
@@ -1083,14 +1067,9 @@ class SqliteIndexCatalog(SidecarReads):
         intervals, so the restriction is a pure over-approximation.
         Ignored when no rtree serves the column — same results either
         way (tested)."""
-        cats: Dict[str, str] = {"row_count": "int"}
-        for name, cat in self.index_schema.items():
-            cats[f"{name}_min"] = cat
-            cats[f"{name}_max"] = cat
-            cats[f"{name}_null_count"] = "int"
-            if cat == "float":
-                cats[f"{name}_nan_count"] = "int"
-        renderer = _SqliteStatsSql(cats)
+        renderer = _SqliteStatsSql(
+            {"row_count": "int",
+             **{c: cat for c, _, cat in self._stat_columns()}})
         where = renderer.render(stats_predicate)
         pre_sql = ""
         pre_params: List = []

@@ -306,11 +306,14 @@ class DataFrameIndexCatalog(SidecarReads):
         return self._df
 
     # -- lookup (reference index.rs:102-176) ----------------------------
-    def get_files(self, stats_predicate: Expr) -> List[Tuple[str, List[int]]]:
+    def get_files(self, stats_predicate: Expr, prefilter=None
+                  ) -> List[Tuple[str, List[int]]]:
         """Evaluate the stats-space predicate as a pyspark Column; rows
         where it is not TRUE are pruned (same keep-on-TRUE semantics as
         the SQL WHERE in the SQLite backend). Files with zero surviving
-        row groups simply don't appear (reference README.md:70)."""
+        row groups simply don't appear (reference README.md:70).
+        ``prefilter`` (an R-tree window) is ignored: this backend has
+        no R-tree, and the window never changes the answer."""
         kept = (
             self.stats_df()
             .filter(stats_predicate.to_spark())

@@ -10,7 +10,13 @@ pruning and whole-stage codegen.
 Query lifecycle (cf. SURVEY §3 / reference main.rs:256-305):
 
   1. predicate (our Expr AST) --PruningRewriter--> stats-space predicate
-  2. catalog.get_files(stats predicate)  -> {file -> [row groups]}
+  2. plan_scan narrows {file -> [row groups]} through, in order: the
+     R-tree window (catalog.get_files' prefilter), the stats SQL
+     (catalog.get_files), Bloom probes, dictionary refutation, the
+     snapshot filter (as_of) and the page tier (row ranges). Every tier
+     reads one predicate analysis (``_literal_constraints`` over
+     ``plans.expr.conjuncts``); the encoded tiers (R-tree, Bloom) take
+     a literal only under the rewrite's ``_literal_compatible`` rule.
   3a. mode="files"      : ``_scan(surviving_files)`` — the one read of
                           table data files behind every query, DML,
                           snapshot and change-feed surface: fixed-schema
@@ -45,12 +51,15 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..plans.expr import Expr, Lit, and_all
-from ..plans.pruning import PruningRewriter
+from ..plans.expr import (
+    COMPARISONS, BinOp, Col, ContainsToken, Expr, InList, Lit, Not, and_all,
+    conjuncts,
+)
+from ..plans.pruning import PruningRewriter, _literal_compatible
 from ..session import local_frame
 from . import stats as _stats
 from .answers import STATS_EXACT_MAX_BYTES, CatalogAnswers
-from .catalog import ConcurrentWriteError, SqliteIndexCatalog
+from .catalog import ConcurrentWriteError, SqliteIndexCatalog, encode_value
 from .stats import build_index, list_parquet_files
 
 _INTEGER_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -160,6 +169,61 @@ def _intersect_ranges(
         else:
             j += 1
     return out
+
+
+def _literal_constraints(predicate: Expr):
+    """The planner's one predicate analysis: ``(column, op, values)``
+    per top-level AND conjunct of a literal shape — ``col op lit`` and
+    ``lit op col`` (flipped) for the six comparisons, ``col IN (lits)``
+    ("IN"), ``NOT (col IN (lits))`` ("NOT IN"), ``NOT (col = lit)``
+    ("!=", equal under SQL ternary logic) and ``contains_token(col, w)``
+    ("TOKEN"). Other conjuncts yield nothing. Each refinement tier reads
+    the ops it can refute, so an unread shape only keeps row groups."""
+    for c in conjuncts(predicate):
+        negated = isinstance(c, Not)
+        if negated:
+            c = c.child
+        if isinstance(c, InList):
+            if (isinstance(c.child, Col)
+                    and all(isinstance(v, Lit) for v in c.values)):
+                yield (c.child.name, "NOT IN" if negated else "IN",
+                       [v.value for v in c.values])
+        elif (isinstance(c, BinOp) and c.op in COMPARISONS
+              and (c.op == "=" or not negated)):
+            if isinstance(c.left, Lit) and isinstance(c.right, Col):
+                c = c.flipped()
+            if isinstance(c.left, Col) and isinstance(c.right, Lit):
+                yield (c.left.name, "!=" if negated else c.op,
+                       [c.right.value])
+        elif (isinstance(c, ContainsToken) and not negated
+              and isinstance(c.child, Col)):
+            yield c.child.name, "TOKEN", [c.token]
+
+
+def _encode_literals(category: Optional[str], values: list):
+    """``values`` in the catalog's encoded form, or None when any fails
+    ``plans/pruning._literal_compatible`` — the rule the stats rewrite
+    applies, so the encoded tiers (R-tree window, Bloom probes) prune on
+    exactly the literals the stats SQL would."""
+    if not all(_literal_compatible(category, v) for v in values):
+        return None
+    return [encode_value(category, v) for v in values]
+
+
+def _narrow(survivors: Dict[str, List[int]], keep) -> int:
+    """Drop every row group for which ``keep(file, rg)`` is false, and
+    every file left without one, in place. Returns #row groups
+    removed."""
+    removed = 0
+    for fname in list(survivors):
+        rgs = survivors[fname]
+        kept = [rg for rg in rgs if keep(fname, rg)]
+        removed += len(rgs) - len(kept)
+        if kept:
+            survivors[fname] = kept
+        else:
+            del survivors[fname]
+    return removed
 
 
 def with_commit_retries(fn, max_attempts: int = 5,
@@ -753,13 +817,9 @@ class IndexedParquetTable(CatalogAnswers):
             decision = ScanDecision("TRUE", files, len(self._files),
                                     sum(indexed.values()))
         else:
-            stats_pred = self._rewriter.rewrite(predicate)
-            window = self._rtree_window(predicate)
-            if window is not None:
-                survivors = dict(self.catalog.get_files(
-                    stats_pred, prefilter=window))
-            else:
-                survivors = dict(self.catalog.get_files(stats_pred))
+            survivors = dict(self.catalog.get_files(
+                self._rewriter.rewrite(predicate),
+                prefilter=self._rtree_window(predicate)))
             skipped = self._bloom_refine(predicate, survivors)
             dict_skipped = self._dict_refine(predicate, survivors)
             if as_of is not None:
@@ -778,156 +838,95 @@ class IndexedParquetTable(CatalogAnswers):
         self, predicate: Expr, survivors: Dict[str, List[int]]
     ) -> int:
         """Drop candidate row groups whose Bloom filter proves an
-        equality/IN conjunct cannot match (sources/bloom.py). Only
-        top-level AND conjuncts of the form col = lit / col IN (lits)
-        on bloom-indexed columns refine; everything else is untouched —
-        false positives scan extra, absence of a filter row scans, so
-        the over-approximation invariant holds. Returns #row groups
+        ``=`` / ``IN`` / ``contains_token`` conjunct cannot match
+        (sources/bloom.py). Literals are probed only when the shared
+        literal rule (``_encode_literals``) accepts them; everything else
+        is untouched — false positives scan extra, absence of a filter
+        row scans, so the over-approximation invariant holds. Each
+        column's filters are fetched once per plan. Returns #row groups
         removed."""
         bloom_cols = self.bloom_columns
         token_cols = self.token_bloom_columns
         if not (bloom_cols or token_cols) or not survivors:
             return 0
-        from ..plans.expr import BinOp, Col, ContainsToken, InList, Lit
         from .bloom import bloom_contains, canonical_bytes
-        from .catalog import encode_value
         from .stats import TOKEN_BLOOM_SUFFIX
 
-        def conjuncts(e):
-            if isinstance(e, BinOp) and e.op == "AND":
-                yield from conjuncts(e.left)
-                yield from conjuncts(e.right)
-            else:
-                yield e
-
-        constraints: List[tuple] = []  # (column, [literal values])
-        for c in conjuncts(predicate):
-            if isinstance(c, BinOp) and c.op == "=":
-                for a, b in ((c.left, c.right), (c.right, c.left)):
-                    if (isinstance(a, Col) and isinstance(b, Lit)
-                            and a.name in bloom_cols):
-                        constraints.append((a.name, [b.value]))
-                        break
-            elif (isinstance(c, InList) and isinstance(c.child, Col)
-                  and c.child.name in bloom_cols
-                  and all(isinstance(v, Lit) for v in c.values)):
-                constraints.append((c.child.name, [v.value for v in c.values]))
-            elif (isinstance(c, ContainsToken)
-                  and isinstance(c.child, Col)
-                  and c.child.name in token_cols):
+        blooms: Dict[str, Dict] = {}
+        probes: List[tuple] = []  # (column's filters, [canonical bytes])
+        for column, op, values in _literal_constraints(predicate):
+            if op == "TOKEN" and column in token_cols:
                 # token semantics: a row group whose token bloom lacks
                 # the word cannot contain it as a token — sound refute
-                constraints.append(
-                    (f"{c.child.name}{TOKEN_BLOOM_SUFFIX}", [c.token]))
-        skipped = 0
-        for column, values in constraints:
-            if column.endswith(TOKEN_BLOOM_SUFFIX):
-                cat = "string"  # token blooms are always string-keyed
-            else:
+                column, cat = column + TOKEN_BLOOM_SUFFIX, "string"
+            elif op in ("=", "IN") and column in bloom_cols:
                 cat = self.index_schema.get(column)
-            if cat is None:
+            else:
                 continue
-            canons = [canonical_bytes(cat, encode_value(cat, v))
-                      for v in values]
-            if any(cb is None for cb in canons):
+            encoded = _encode_literals(cat, values)
+            canons = [canonical_bytes(cat, v) for v in encoded or ()]
+            if encoded is None or None in canons:
                 continue  # un-bloomable literal (type mismatch): stay sound
-            blooms = self.catalog.get_blooms(column)
-            if not blooms:
-                continue
-            for fname in list(survivors):
-                kept = []
-                for rg in survivors[fname]:
-                    blo = blooms.get((fname, rg))
-                    if blo is None or any(
-                            bloom_contains(blo[2], blo[0], blo[1], cb)
-                            for cb in canons):
-                        kept.append(rg)
-                    else:
-                        skipped += 1
-                if kept:
-                    survivors[fname] = kept
-                else:
-                    del survivors[fname]
-        return skipped
+            if column not in blooms:
+                blooms[column] = self.catalog.get_blooms(column)
+            probes.append((blooms[column], canons))
+
+        def keep(fname, rg):
+            for filters, canons in probes:
+                blo = filters.get((fname, rg))
+                if blo is not None and not any(
+                        bloom_contains(blo[2], blo[0], blo[1], cb)
+                        for cb in canons):
+                    return False
+            return True
+
+        return _narrow(survivors, keep) if probes else 0
 
     _RTREE_MAX_STABS = 16  # IN-lists beyond this fall back to the envelope
 
     def _rtree_window(self, predicate: Expr):
         """(column, [(lo, hi), ...]) in the encoded numeric domain for
         the catalog's rtree prefilter (sources/catalog.py get_files),
-        or None. Extracted from TOP-LEVEL AND conjuncts of comparison /
-        IN shapes on an rtree-active column; every other shape (OR
-        arms, arithmetic, unknown nodes) contributes nothing — the
-        windows may only be WIDER than the predicate's true support,
-        never narrower, because the exact stats SQL still evaluates
-        over the candidates. The windows come from ONE conjunct group
-        (the first IN-list if present — one point stab per literal, k
-        indexed stabs beat one domain-spanning envelope by orders of
-        magnitude — else the closed comparison envelope): a single
-        group is by construction a SUPERSET of the stats SQL's
-        candidate set, so plan decisions stay byte-identical to the
-        plain catalog (fuzz-pinned); combining groups by intersection
-        could legally prune more but would break that identity. CLOSED
-        envelopes only: an open side (pure > / <) can cover most of
-        the domain, where the candidate join costs more than the plain
-        scan it replaces."""
+        or None. Read from the comparison / IN constraints of
+        ``_literal_constraints`` on an rtree-active column, encoded only
+        when the shared literal rule accepts them; every other shape
+        (OR arms, arithmetic, negations, literals the rule refuses)
+        contributes nothing — the windows may only be WIDER than the
+        predicate's true support, never narrower, because the exact
+        stats SQL still evaluates over the candidates. The windows come
+        from ONE conjunct group (the first IN-list if present — one
+        point stab per literal, k indexed stabs beat one domain-spanning
+        envelope by orders of magnitude — else the closed comparison
+        envelope). A single group is a SUPERSET of the stats SQL's
+        candidate set because the window uses only literals the
+        rewriter also compiles, so plan decisions stay byte-identical
+        to the plain catalog (fuzz-pinned); combining groups by
+        intersection could legally prune more but would break that
+        identity. CLOSED envelopes only: an open side (pure > / <) can
+        cover most of the domain, where the candidate join costs more
+        than the plain scan it replaces."""
         active = getattr(self.catalog, "_rtree_active", ())
         if not active:
             return None
-        from ..plans.expr import BinOp, Col, InList, Lit
-        from .catalog import encode_value
-
-        def enc(name, v):
-            if isinstance(v, bool):
-                return None
-            cat = self.index_schema.get(name)
-            if cat is None:
-                return None
-            try:
-                e = encode_value(cat, v)
-            except Exception:
-                return None
-            return e if isinstance(e, (int, float)) else None
-
         envelope: Dict[str, list] = {}   # col -> [lo, hi]
         points: Dict[str, list] = {}     # col -> FIRST IN conjunct's lits
-
-        def tighten(name, lo=None, hi=None):
-            w = envelope.setdefault(name, [None, None])
-            if lo is not None:
-                w[0] = lo if w[0] is None else max(w[0], lo)
-            if hi is not None:
-                w[1] = hi if w[1] is None else min(w[1], hi)
-
-        def visit(c):
-            if isinstance(c, BinOp) and c.op == "AND":
-                visit(c.left)
-                visit(c.right)
-            elif isinstance(c, BinOp) and c.op in ("=", "<", "<=",
-                                                   ">", ">="):
-                if isinstance(c.left, Lit) and isinstance(c.right, Col):
-                    c = c.flipped()
-                if (isinstance(c.left, Col) and isinstance(c.right, Lit)
-                        and c.left.name in active):
-                    v = enc(c.left.name, c.right.value)
-                    if v is None:
-                        return
-                    if c.op == "=":
-                        tighten(c.left.name, lo=v, hi=v)
-                    elif c.op in (">", ">="):
-                        tighten(c.left.name, lo=v)
-                    else:
-                        tighten(c.left.name, hi=v)
-            elif (isinstance(c, InList) and isinstance(c.child, Col)
-                  and c.child.name in active
-                  and all(isinstance(x, Lit) for x in c.values)
-                  and c.values):
-                vs = [enc(c.child.name, x.value) for x in c.values]
-                if all(v is not None for v in vs):
-                    name = c.child.name
-                    points.setdefault(name, sorted(set(vs)))
-
-        visit(predicate)
+        for column, op, values in _literal_constraints(predicate):
+            if (column not in active or not values
+                    or op not in ("=", "<", "<=", ">", ">=", "IN")):
+                continue
+            encoded = _encode_literals(self.index_schema.get(column), values)
+            if encoded is None or not all(isinstance(v, (int, float))
+                                          for v in encoded):
+                continue
+            if op == "IN":
+                points.setdefault(column, sorted(set(encoded)))
+                continue
+            v = encoded[0]
+            w = envelope.setdefault(column, [None, None])
+            if op in ("=", ">", ">="):
+                w[0] = v if w[0] is None else max(w[0], v)
+            if op in ("=", "<", "<="):
+                w[1] = v if w[1] is None else min(w[1], v)
         for name in active:  # deterministic pick: catalog's own order
             pts = points.get(name)
             if pts is not None:
@@ -978,8 +977,7 @@ class IndexedParquetTable(CatalogAnswers):
         files without page stats (never written, or non-indexed
         column) contribute nothing and keep full granularity."""
         page_cols = self.page_index_columns
-        get_pages = getattr(self.catalog, "get_page_stats", None)
-        if not page_cols or not survivors or get_pages is None:
+        if not page_cols or not survivors:
             return {}, 0
         # bounded-planning-data guard: page refinement is a PRECISION
         # tool for selective predicates (point/range lookups that
@@ -990,15 +988,7 @@ class IndexedParquetTable(CatalogAnswers):
         if sum(len(rgs) for rgs in survivors.values()) \
                 > self.PAGE_REFINE_MAX_RGS:
             return {}, 0
-        from ..plans.expr import BinOp
         from ..plans.pruning import eval_stats_expr
-
-        def conjuncts(e):
-            if isinstance(e, BinOp) and e.op == "AND":
-                yield from conjuncts(e.left)
-                yield from conjuncts(e.right)
-            else:
-                yield e
 
         armed = {c for c in page_cols
                  if self.index_schema.get(c) in self._PAGE_TIER_CATS}
@@ -1009,52 +999,46 @@ class IndexedParquetTable(CatalogAnswers):
                 by_col.setdefault(c, []).append(self._rewriter.rewrite(cj))
         if not by_col:
             return {}, 0
-        pages = get_pages(list(survivors), list(by_col))
+        pages = self.catalog.get_page_stats(list(survivors), list(by_col))
         if not pages:
             return {}, 0
         out: Dict[str, Dict[int, List[Tuple[int, int]]]] = {}
         skipped = 0
-        for fname in list(survivors):
-            kept_rgs = []
-            for rg in survivors[fname]:
-                ranges = None          # None = unrestricted (full rg)
-                rg_rows = None
-                for c, exprs in by_col.items():
-                    plist = pages.get((fname, rg, c))
-                    if not plist:
-                        continue       # no page tier for this chunk
-                    rg_rows = sum(p[1] for p in plist)
-                    keep: List[Tuple[int, int]] = []
-                    for first, cnt, mn, mx, null_page, nc in plist:
-                        env = {f"{c}_min": mn, f"{c}_max": mx,
-                               f"{c}_null_count": nc
-                               if nc is not None
-                               else (cnt if null_page else None),
-                               "row_count": cnt}
-                        if all(eval_stats_expr(x, env) is not False
-                               for x in exprs):
-                            s, e = first, first + cnt
-                            if keep and keep[-1][1] == s:
-                                keep[-1] = (keep[-1][0], e)
-                            else:
-                                keep.append((s, e))
-                    ranges = (keep if ranges is None
-                              else _intersect_ranges(ranges, keep))
-                if ranges is None or rg_rows is None:
-                    kept_rgs.append(rg)
-                    continue
-                kept = sum(e - s for s, e in ranges)
-                if kept == 0:
-                    skipped += rg_rows          # whole row group refuted
-                    continue
-                kept_rgs.append(rg)
-                if kept < rg_rows:
+
+        def keep(fname, rg):
+            nonlocal skipped
+            ranges = None              # None = unrestricted (full rg)
+            for c, exprs in by_col.items():
+                plist = pages.get((fname, rg, c))
+                if not plist:
+                    continue           # no page tier for this chunk
+                rg_rows = sum(p[1] for p in plist)
+                spans: List[Tuple[int, int]] = []
+                for first, cnt, mn, mx, null_page, nc in plist:
+                    env = {f"{c}_min": mn, f"{c}_max": mx,
+                           f"{c}_null_count": nc
+                           if nc is not None
+                           else (cnt if null_page else None),
+                           "row_count": cnt}
+                    if all(eval_stats_expr(x, env) is not False
+                           for x in exprs):
+                        s, e = first, first + cnt
+                        if spans and spans[-1][1] == s:
+                            spans[-1] = (spans[-1][0], e)
+                        else:
+                            spans.append((s, e))
+                ranges = (spans if ranges is None
+                          else _intersect_ranges(ranges, spans))
+            if ranges is None:
+                return True
+            kept = sum(e - s for s, e in ranges)
+            if kept < rg_rows:
+                skipped += rg_rows - kept   # kept == 0: rg refuted
+                if kept:
                     out.setdefault(fname, {})[rg] = ranges
-                    skipped += rg_rows - kept
-            if kept_rgs:
-                survivors[fname] = kept_rgs
-            else:
-                del survivors[fname]
+            return kept > 0
+
+        _narrow(survivors, keep)
         return out, skipped
 
     def _dict_refine(
@@ -1062,7 +1046,7 @@ class IndexedParquetTable(CatalogAnswers):
     ) -> int:
         """Drop candidate row groups the dictionary/frequency stats
         refute (sources/stats.py extract_file_dicts). Two refutation
-        shapes, both over top-level AND conjuncts on dict-indexed
+        shapes, both read from ``_literal_constraints`` on dict-indexed
         columns:
 
         - positive (col = lit / col IN lits): the row group's recorded
@@ -1080,96 +1064,42 @@ class IndexedParquetTable(CatalogAnswers):
         dict_cols = self.dict_columns
         if not dict_cols or not survivors:
             return 0
-        from ..plans.expr import BinOp, Col, InList, Lit, Not
-
-        def conjuncts(e):
-            if isinstance(e, BinOp) and e.op == "AND":
-                yield from conjuncts(e.left)
-                yield from conjuncts(e.right)
-            else:
-                yield e
-
-        def eq_sides(c):
-            """(column_name, literal) for col = lit / lit = col."""
-            for a, b in ((c.left, c.right), (c.right, c.left)):
-                if (isinstance(a, Col) and isinstance(b, Lit)
-                        and a.name in dict_cols):
-                    return a.name, b.value
-            return None
-
-        constraints: List[tuple] = []  # (column, values, negated)
-        for c in conjuncts(predicate):
-            if isinstance(c, BinOp) and c.op in ("=", "!="):
-                hit = eq_sides(c)
-                if hit:
-                    constraints.append(
-                        (hit[0], [hit[1]], c.op == "!="))
-            elif (isinstance(c, InList) and isinstance(c.child, Col)
-                  and c.child.name in dict_cols
-                  and all(isinstance(v, Lit) for v in c.values)):
-                constraints.append(
-                    (c.child.name, [v.value for v in c.values], False))
-            elif isinstance(c, Not):
-                inner = c.child
-                if (isinstance(inner, InList)
-                        and isinstance(inner.child, Col)
-                        and inner.child.name in dict_cols
-                        and all(isinstance(v, Lit) for v in inner.values)):
-                    constraints.append(
-                        (inner.child.name,
-                         [v.value for v in inner.values], True))
-                elif isinstance(inner, BinOp) and inner.op == "=":
-                    hit = eq_sides(inner)
-                    if hit:
-                        constraints.append((hit[0], [hit[1]], True))
-        skipped = 0
         dicts_by_col: Dict[str, Dict] = {}  # one fetch+decode per column
-        for column, values, negated in constraints:
+        constraints: List[tuple] = []  # (dicts, literal set, negated)
+        for column, op, values in _literal_constraints(predicate):
+            if (column not in dict_cols
+                    or op not in ("=", "!=", "IN", "NOT IN")):
+                continue
             if column not in dicts_by_col:
                 dicts_by_col[column] = self.catalog.get_dicts(column)
-            dicts = dicts_by_col[column]
-            if not dicts:
-                continue
-            lits = set()
-            for v in values:
-                if not isinstance(v, (int, str)) or isinstance(v, bool):
-                    lits = None  # un-dictable literal type: stay sound
-                    break
-                lits.add(v)
-            if lits is None:
-                continue
-            for fname in list(survivors):
-                kept = []
-                for rg in survivors[fname]:
-                    entries = dicts.get((fname, rg))
-                    if entries is None:
-                        kept.append(rg)
-                        continue
-                    keys = {v for v, _ in entries}
-                    # literal type must match the stored category: an int
-                    # literal against string-categorized dict values (or
-                    # vice versa) intersects empty here, yet Spark's
-                    # implicit cast in the residual filter could match —
-                    # refining would UNDER-select. Mirror the un-dictable-
-                    # literal bail-out and keep the row group.
-                    keys_int = keys and isinstance(next(iter(keys)), int)
-                    if keys and any(isinstance(l, int) != keys_int
-                                    for l in lits):
-                        kept.append(rg)
-                        continue
-                    alive = ((keys <= lits) if negated
-                             else bool(keys & lits))
-                    # negated: value set ⊆ excluded → refuted; else the
-                    # intersection must be non-empty to possibly match
-                    if (not alive) if negated else alive:
-                        kept.append(rg)
-                    else:
-                        skipped += 1
-                if kept:
-                    survivors[fname] = kept
-                else:
-                    del survivors[fname]
-        return skipped
+            if dicts_by_col[column] and all(
+                    isinstance(v, (int, str)) and not isinstance(v, bool)
+                    for v in values):  # un-dictable literal: stay sound
+                constraints.append((dicts_by_col[column], set(values),
+                                    op in ("!=", "NOT IN")))
+
+        def keep(fname, rg):
+            for dicts, lits, negated in constraints:
+                entries = dicts.get((fname, rg))
+                if entries is None:
+                    continue
+                keys = {v for v, _ in entries}
+                # literal type must match the stored category: an int
+                # literal against string-categorized dict values (or
+                # vice versa) intersects empty here, yet Spark's
+                # implicit cast in the residual filter could match —
+                # refining would UNDER-select. Keep the row group.
+                keys_int = keys and isinstance(next(iter(keys)), int)
+                if keys and any(isinstance(l, int) != keys_int
+                                for l in lits):
+                    continue
+                # negated: value set ⊆ excluded → refuted; else the
+                # intersection must be non-empty to possibly match
+                if (keys <= lits) if negated else not (keys & lits):
+                    return False
+            return True
+
+        return _narrow(survivors, keep) if constraints else 0
 
     # -- deletion vectors (merge-on-read row-level deletes) -------------
     def _dvs(self, as_of: Optional[int] = None
