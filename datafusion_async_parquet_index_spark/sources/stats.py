@@ -9,10 +9,11 @@ stats, ``index.rs:213-217`` — same semantic here: unsupported column =>
 never indexed => never pruned on).
 
 Scale posture: a footer read is a few KB of I/O regardless of file size;
-indexing 100 TB of Parquet touches only footers.  ``build_index`` offers
-a distributed path (``spark.sparkContext.parallelize(files)``) so the
-footer reads fan out across executors while the catalog write stays a
-driver-side transaction per file.
+indexing 100 TB of Parquet touches only footers.  ``build_index`` fans
+the per-file extraction out through ``_fan_out`` (driver threads for few
+files, one Spark job across executors for many) while the catalog write
+stays a driver-side transaction; ``compact_deletes`` reuses the same
+plan, fan-out and store step for the files it rewrites.
 """
 
 from __future__ import annotations
@@ -685,15 +686,18 @@ def typed_partition_values(
     return out
 
 
-def _extract_file(path: str, plan) -> tuple:
+def _extract_file(item, plan) -> tuple:
     """build_index's unit of work, the same on the driver thread pool
     and on Spark executors: one file's footer stats (plus NaN counts)
     and every requested sidecar statistic, as an upsert_files item
-    (fs, rgs, *payloads in STATISTICS order). Extractors are looked up
-    as module globals at call time."""
-    schema, names, part_values, nan_cols, sidecar_args = plan
-    fs, rgs = extract_file_stats(path, schema, file_name=names[path],
-                                 partition_stats=part_values.get(path))
+    (fs, rgs, *payloads in STATISTICS order). ``item`` is (path,
+    catalog key, partition values or None); the key need not name
+    ``path`` (compaction indexes a staged rewrite under its final
+    key). Extractors are looked up as module globals at call time."""
+    path, name, partition_stats = item
+    schema, nan_cols, sidecar_args = plan
+    fs, rgs = extract_file_stats(path, schema, file_name=name,
+                                 partition_stats=partition_stats)
     if nan_cols:
         nans = extract_file_nan_counts(path, nan_cols)
         for rg in rgs:
@@ -703,14 +707,113 @@ def _extract_file(path: str, plan) -> tuple:
         if stat.keyword in sidecar_args else None for stat in STATISTICS)
 
 
+def _extraction_plan(
+    schema: Dict[str, str],
+    arrow_schema: pa.Schema,
+    partition_schema: Optional[Dict[str, str]] = None,
+    bloom_columns: Optional[Sequence[str]] = None,
+    bloom_fpp: float = 0.01,
+    token_bloom_columns: Optional[Sequence[str]] = None,
+    sum_columns: Optional[Sequence[str]] = None,
+    nan_count_columns: Optional[Sequence[str]] = None,
+    hist_columns: Optional[Dict[str, Tuple[int, int, int]]] = None,
+    ndv_columns: Optional[Sequence[str]] = None,
+    dict_columns: Optional[Sequence[str]] = None,
+    dict_max_values: int = DICT_MAX_VALUES,
+    topk_columns: Optional[Sequence[str]] = None,
+    topk_k: int = TOPK_K,
+    page_index_columns: Optional[Sequence[str]] = None,
+) -> tuple:
+    """The ``plan`` argument of ``_extract_file`` for an index schema
+    and build_index's statistic options: (schema, NaN-count columns,
+    {statistic keyword: extractor arguments}). ``arrow_schema`` types
+    the token-bloom columns."""
+    from .bloom import BLOOM_CATEGORIES
+    bloom_schema = {
+        c: cat for c, cat in schema.items()
+        if bloom_columns and c in bloom_columns and cat in BLOOM_CATEGORIES
+        and not (partition_schema and c in partition_schema)}
+    # token blooms: over the token SET of a footer string column; the
+    # base column need not be min/max-indexed (token membership is the
+    # only thing the filter answers)
+    if token_bloom_columns:
+        tok_schema = index_schema_for(arrow_schema, token_bloom_columns)
+        for c, cat in tok_schema.items():
+            if cat == "string":
+                bloom_schema[f"{c}{TOKEN_BLOOM_SUFFIX}"] = "string"
+
+    # extractor arguments per requested sidecar statistic (a statistic
+    # whose column list is empty is not extracted)
+    sidecar_args = {
+        "blooms": (bloom_schema, bloom_fpp),
+        "sums": (tuple(sum_columns or ()),),
+        "hists": (dict(hist_columns or {}),),
+        "ndvs": (tuple(ndv_columns or ()),),
+        "dicts": (tuple(dict_columns or ()), dict_max_values),
+        "topks": (tuple(topk_columns or ()), topk_k),
+        "pages": (tuple(page_index_columns or ()),),
+    }
+    return (schema, tuple(nan_count_columns or ()),
+            {k: a for k, a in sidecar_args.items() if a[0]})
+
+
+# the per-file fan-out rule: at or above _DISTRIBUTED_THRESHOLD items
+# (with a SparkSession) the unit runs on executors, below it on a
+# driver thread pool of up to _MAX_WORKERS threads
+_DISTRIBUTED_THRESHOLD = 64
+_MAX_WORKERS = 8
+
+
+def _fan_out(unit, items: Sequence, plan, spark=None,
+             distributed_threshold: Optional[int] = None,
+             max_workers: Optional[int] = None) -> list:
+    """``[unit(item, plan) for item in items]``, fanned out per the
+    rule above: few items overlap their (latency-bound, GIL-releasing)
+    Parquet I/O on driver threads, the "async" maintenance posture of
+    the reference's tokio loop (index.rs:179); many items run as one
+    Spark job with ``plan`` broadcast, and the results (tiny:
+    O(row groups) per file) come back to the driver. ``unit`` must be
+    a module-level function so executors unpickle it by reference."""
+    if distributed_threshold is None:
+        distributed_threshold = _DISTRIBUTED_THRESHOLD
+    if max_workers is None:
+        max_workers = _MAX_WORKERS
+    if spark is not None and len(items) >= distributed_threshold:
+        plan_b = spark.sparkContext.broadcast(plan)
+        return (spark.sparkContext.parallelize(items, min(len(items), 256))
+                .map(lambda it, _u=unit, _b=plan_b: _u(it, _b.value))
+                .collect())
+    if len(items) > 1 and max_workers > 1:
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as ex:
+            return list(ex.map(lambda it: unit(it, plan), items))
+    return [unit(it, plan) for it in items]
+
+
+def _store_entries(catalog, entries: Sequence[tuple]) -> None:
+    """Write ``_extract_file`` results into the catalog: one
+    transaction per 1000 files through ``upsert_files`` (the per-file
+    commit was the driver-side serialization at 1M-file onboarding —
+    r12 tier-C measured ~400 files/s through per-file upsert_file),
+    or per file on backends without it."""
+    bulk = getattr(catalog, "upsert_files", None)
+    if bulk is not None:
+        bulk(entries)
+        return
+    for fs, rgs, *payloads in entries:
+        catalog.upsert_file(fs, rgs, **{
+            stat.keyword: payload
+            for stat, payload in zip(STATISTICS, payloads)})
+
+
 def build_index(
     catalog: SqliteIndexCatalog,
     files: Iterable[str],
     index_columns: Sequence[str],
     spark=None,
-    distributed_threshold: int = 64,
+    distributed_threshold: Optional[int] = None,
     incremental: bool = False,
-    max_workers: int = 8,
+    max_workers: Optional[int] = None,
     bloom_columns: Optional[Sequence[str]] = None,
     bloom_fpp: float = 0.01,
     token_bloom_columns: Optional[Sequence[str]] = None,
@@ -747,12 +850,12 @@ def build_index(
       rewrite that preserves the exact byte size is not detected — the
       usual immutable-file lakehouse convention makes that safe; force a
       full rebuild with incremental=False if files mutate in place.)
-    - few files: overlapped footer reads on a driver thread pool (footer
-      I/O is latency-bound — the "async" maintenance posture of the
-      reference's tokio loop, reference index.rs:179).
-    - many files + a SparkSession: extraction distributed across
-      executors; stats rows come back to the driver (tiny: O(row_groups))
-      for the transactional catalog write.
+    - the rest go through ``_fan_out``: overlapped reads on a driver
+      thread pool (``max_workers``) below ``distributed_threshold``
+      files, one Spark job across executors at or above it (with a
+      SparkSession); stats rows come back to the driver (tiny:
+      O(row_groups)) for the transactional catalog write. Both
+      default to the module's fan-out rule (64 files, 8 threads).
     """
     files = list(files)
     if not files:
@@ -785,34 +888,14 @@ def build_index(
         for c, cat in partition_schema.items():
             schema.setdefault(c, cat)
     catalog.initialize(schema)
-    from .bloom import BLOOM_CATEGORIES
-    part_values = partition_values or {}
-    bloom_schema = {
-        c: cat for c, cat in schema.items()
-        if bloom_columns and c in bloom_columns and cat in BLOOM_CATEGORIES
-        and not (partition_schema and c in partition_schema)}
-    # token blooms: over the token SET of a footer string column; the
-    # base column need not be min/max-indexed (token membership is the
-    # only thing the filter answers)
-    if token_bloom_columns:
-        tok_schema = index_schema_for(first.schema_arrow,
-                                      token_bloom_columns)
-        for c, cat in tok_schema.items():
-            if cat == "string":
-                bloom_schema[f"{c}{TOKEN_BLOOM_SUFFIX}"] = "string"
-
-    # extractor arguments per requested sidecar statistic (a statistic
-    # whose column list is empty is not extracted)
-    sidecar_args = {
-        "blooms": (bloom_schema, bloom_fpp),
-        "sums": (tuple(sum_columns or ()),),
-        "hists": (dict(hist_columns or {}),),
-        "ndvs": (tuple(ndv_columns or ()),),
-        "dicts": (tuple(dict_columns or ()), dict_max_values),
-        "topks": (tuple(topk_columns or ()), topk_k),
-        "pages": (tuple(page_index_columns or ()),),
-    }
-    sidecar_args = {k: a for k, a in sidecar_args.items() if a[0]}
+    plan = _extraction_plan(
+        schema, first.schema_arrow, partition_schema,
+        bloom_columns=bloom_columns, bloom_fpp=bloom_fpp,
+        token_bloom_columns=token_bloom_columns, sum_columns=sum_columns,
+        nan_count_columns=nan_count_columns, hist_columns=hist_columns,
+        ndv_columns=ndv_columns, dict_columns=dict_columns,
+        dict_max_values=dict_max_values, topk_columns=topk_columns,
+        topk_k=topk_k, page_index_columns=page_index_columns)
 
     if incremental:
         # change detection is (size, mtime_ns): a same-size rewrite
@@ -841,30 +924,9 @@ def build_index(
         if not files:
             return schema
 
-    plan = (schema, {p: _name(p) for p in files}, part_values,
-            tuple(nan_count_columns or ()), sidecar_args)
-    if spark is not None and len(files) >= distributed_threshold:
-        plan_b = spark.sparkContext.broadcast(plan)
-        results = (
-            spark.sparkContext.parallelize(files, min(len(files), 256))
-            .map(lambda p, _b=plan_b: _extract_file(p, _b.value))
-            .collect()
-        )
-    elif len(files) > 1 and max_workers > 1:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(max_workers, len(files))) as ex:
-            results = list(ex.map(lambda p: _extract_file(p, plan), files))
-    else:
-        results = [_extract_file(p, plan) for p in files]
-    bulk = getattr(catalog, "upsert_files", None)
-    if bulk is not None:
-        # one transaction per 1000 files: the per-file commit was the
-        # driver-side serialization at 1M-file onboarding (r12 tier-C
-        # measured ~400 files/s through per-file upsert_file)
-        bulk(results)
-    else:
-        for fs, rgs, *payloads in results:
-            catalog.upsert_file(fs, rgs, **{
-                stat.keyword: payload
-                for stat, payload in zip(STATISTICS, payloads)})
+    part_values = partition_values or {}
+    results = _fan_out(
+        _extract_file, [(p, _name(p), part_values.get(p)) for p in files],
+        plan, spark, distributed_threshold, max_workers)
+    _store_entries(catalog, results)
     return schema

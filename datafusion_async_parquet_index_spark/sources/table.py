@@ -89,12 +89,12 @@ def _compact_tmp_path(path: str) -> str:
 
 
 def _compact_rewrite_file(item):
-    """Executor-side body of ``compact_deletes``: rewrite ONE DV'd
-    file's live rows into a dot-prefixed staging file next to it.
+    """Rewrite half of ``compact_deletes``' per-file unit
+    (``_compact_file``): rewrite ONE DV'd file's live rows into a
+    dot-prefixed staging file next to it.
     ``item`` is ``(path, [(start, length), ...])`` with file-scoped
     deleted ranges. Returns the staging path, or None when every row
-    is deleted (the file should disappear entirely). Module-level so
-    Spark pickles it by reference for ``sc.parallelize(...).map``.
+    is deleted (the file should disappear entirely).
 
     The keep mask is ``anti_filter_positions`` — one vectorized numpy
     binary search over the range-compressed DV per row group, never a
@@ -136,6 +136,22 @@ def _compact_rewrite_file(item):
             os.remove(tmp)
         raise
     return tmp if writer is not None else None
+
+
+def _compact_file(item, plan):
+    """``compact_deletes``' per-file unit, fanned out by build_index's
+    rule (``stats._fan_out``): rewrite the file's live rows, then
+    extract the staged rewrite's index entry under the file's final
+    catalog key with build_index's own ``plan``. ``item`` is
+    ``(path, ranges, catalog key, partition values)``.
+    Returns ``(staging path, upsert_files entry)``, both None when
+    every row is deleted. The entry stays exact across the swap:
+    ``os.replace`` keeps the staged inode's size and mtime."""
+    path, ranges, key, partition_stats = item
+    tmp = _compact_rewrite_file((path, ranges))
+    if tmp is None:
+        return None, None
+    return tmp, _stats._extract_file((tmp, key, partition_stats), plan)
 
 
 class DVCapExceeded(ValueError):
@@ -517,21 +533,11 @@ class IndexedParquetTable(CatalogAnswers):
             return {}
         from .stats import partition_values_raw, typed_partition_values
 
-        _CAT = {
-            T.ByteType: "int", T.ShortType: "int", T.IntegerType: "int",
-            T.LongType: "int", T.FloatType: "float", T.DoubleType: "float",
-            T.StringType: "string", T.DateType: "date",
-        }
         raw_by_file = {p: partition_values_raw(self.data_dir, p)
                        for p in self._files}
-        part_cols = sorted({c for r in raw_by_file.values() for c in r})
-        self._partition_cols = set(part_cols)
-        cats = {}
-        for f in (self._schema.fields if self._schema else []):
-            if f.name in part_cols:
-                cat = _CAT.get(type(f.dataType))
-                if cat is not None:
-                    cats[f.name] = cat
+        self._partition_cols = frozenset(
+            c for r in raw_by_file.values() for c in r)
+        cats = self._partition_categories()
         return {
             "rel_to": self.data_dir,
             "partition_schema": cats,
@@ -539,6 +545,21 @@ class IndexedParquetTable(CatalogAnswers):
                 p: typed_partition_values(raw, cats)
                 for p, raw in raw_by_file.items()},
         }
+
+    _PARTITION_CATEGORIES = {
+        T.ByteType: "int", T.ShortType: "int", T.IntegerType: "int",
+        T.LongType: "int", T.FloatType: "float", T.DoubleType: "float",
+        T.StringType: "string", T.DateType: "date",
+    }
+
+    def _partition_categories(self) -> Dict[str, str]:
+        """{partition column: type-category} of the last index build's
+        partition columns, typed from the Spark-inferred schema."""
+        fields = self._schema.fields if self._schema else ()
+        return {f.name: cat for f in fields
+                if f.name in self._partition_cols
+                and (cat := self._PARTITION_CATEGORIES.get(
+                    type(f.dataType))) is not None}
 
     def _file_key(self, path: str) -> str:
         """Catalog key for a file: dir-relative for partitioned layouts
@@ -1339,7 +1360,9 @@ class IndexedParquetTable(CatalogAnswers):
 
         DV assembly is driver-side, capped at DV_MAX_DELETED_PER_CALL
         positions per call (~ the point where a physical rewrite is
-        cheaper than a vector; Delta draws the same line)."""
+        cheaper than a vector; Delta draws the same line). The cap
+        costs a count job only when the scanned files' catalog row
+        count exceeds it (see ``_dv_store_victims``)."""
         from pyspark.sql import functions as F
 
         v0 = self._dml_begin()
@@ -1352,6 +1375,7 @@ class IndexedParquetTable(CatalogAnswers):
             df.select(self._dv_file_key_col().alias("__file"),
                       F.col("_metadata.row_index").alias("__pos"),
                       *self.sum_columns),
+            self._catalog_rows(decision.file_names),
             commit_from=v0, verb="delete")
 
     def delete_matching(self, victims: DataFrame, key_column: str) -> int:
@@ -1389,9 +1413,23 @@ class IndexedParquetTable(CatalogAnswers):
             df.select(self._dv_file_key_col().alias("__file"),
                       F.col("_metadata.row_index").alias("__pos"),
                       *self.sum_columns),
+            self._catalog_rows(decision.file_names),
             commit_from=v0, verb="delete_matching")
 
-    def _dv_store_victims(self, victims: DataFrame,
+    def _catalog_rows(self, file_names: Sequence[str]) -> int:
+        """Catalog row count of ``file_names`` — an upper bound on the
+        rows a delete scanning them can match. Read from the O(1)
+        catalog total when the whole table already fits under
+        DV_MAX_DELETED_PER_CALL (the bound only has to decide the
+        cap), else folded over ``all_files()``."""
+        total = self.catalog.totals()[2]
+        if total <= self.DV_MAX_DELETED_PER_CALL:
+            return total
+        scanned = set(file_names)
+        return sum(rows for name, _size, _rgs, rows
+                   in self.catalog.all_files() if name in scanned)
+
+    def _dv_store_victims(self, victims: DataFrame, bound: int,
                           commit_from: int = -1,
                           verb: str = "delete") -> int:
         """Shared tail of the delete paths: one distributed pass over a
@@ -1400,8 +1438,16 @@ class IndexedParquetTable(CatalogAnswers):
         collects per-file sorted positions, counts and exact
         per-sum-column contributions, which merge into the catalog's
         deletion vectors (update_where hands in its one cached victim
-        read). Raises (before committing anything) when the victim
-        count exceeds DV_MAX_DELETED_PER_CALL."""
+        read).
+
+        Cap rule: ``bound`` is an upper bound on the victim count — the
+        catalog row count of the scanned files for delete_where /
+        delete_matching, the exact already-counted victims for
+        update_where. Only when it exceeds DV_MAX_DELETED_PER_CALL does
+        a ``count()`` job run first, raising DVCapExceeded (before
+        committing anything) when the victims really are over the cap;
+        otherwise the collect below is the verb's only victim
+        action."""
         from pyspark.sql import functions as F
 
         sum_cols = self.sum_columns
@@ -1423,14 +1469,15 @@ class IndexedParquetTable(CatalogAnswers):
         # enforce the cap BEFORE materializing any positions on the
         # driver — the cap exists to protect driver memory, so it must
         # not itself require the collect it guards against
-        total = victims.count()
-        if total > self.DV_MAX_DELETED_PER_CALL:
-            raise DVCapExceeded(
-                f"delete matches {total} rows > "
-                f"DV_MAX_DELETED_PER_CALL={self.DV_MAX_DELETED_PER_CALL}"
-                f"; a physical rewrite (compact_small_files / an "
-                f"overwrite) is the "
-                f"right tool at that volume")
+        if bound > self.DV_MAX_DELETED_PER_CALL:
+            total = victims.count()
+            if total > self.DV_MAX_DELETED_PER_CALL:
+                raise DVCapExceeded(
+                    f"delete matches {total} rows > "
+                    f"DV_MAX_DELETED_PER_CALL="
+                    f"{self.DV_MAX_DELETED_PER_CALL}; a physical rewrite "
+                    f"(compact_small_files / an overwrite) is the right "
+                    f"tool at that volume")
         hits = victims.groupBy("__file").agg(*aggs).collect()
         # optimistic-concurrency gate: everything above was read-only
         # planning; refuse LOUDLY before the first DV commit if another
@@ -1835,75 +1882,95 @@ class IndexedParquetTable(CatalogAnswers):
 
     def compact_deletes(self) -> int:
         """Physically rewrite every file that carries a deletion vector,
-        dropping the deleted rows, then refresh() — the re-indexed
-        files get fresh exact statistics and their DVs are cleared
-        (upsert_file drops them with the old bytes), restoring every
-        catalog-only answer surface. Files without DVs are untouched:
-        at 100 TB compaction cost is O(deleted-from files), not
-        O(table). Returns the number of files rewritten. Rewrites
-        preserve the original row-group partitioning (minus the holes),
-        so pruning granularity survives compaction.
+        dropping the deleted rows, and index each rewrite in the same
+        step — the rewritten files get fresh exact statistics and their
+        DVs are cleared, restoring every catalog-only answer surface.
+        Files without DVs are untouched: at 100 TB compaction cost is
+        O(deleted-from files), not O(table). Returns the number of
+        files rewritten. Rewrites preserve the original row-group
+        partitioning (minus the holes), so pruning granularity
+        survives compaction.
 
         Execution split (the reference's out-of-band, per-file
-        maintenance posture, index.rs:179): the expensive part — read
-        every row group, drop deleted positions, write the staged
-        rewrite — runs on EXECUTORS, one task per DV'd file
-        (``_compact_rewrite_file``; the keep mask is the same
-        vectorized binary search the DV read path uses, never a
-        per-row Python loop or an exploded position set). The driver
-        then performs only the O(files) crash-ordered metadata steps:
-        intent marker, byte swap, catalog evict. Requires executors to
-        see ``data_dir`` at the same path (shared FS / local mode) —
-        the same contract every Spark write in this table already
-        assumes."""
+        maintenance posture, index.rs:179): the per-file unit
+        (``_compact_file``) reads every row group, drops the deleted
+        positions (the same vectorized binary search the DV read path
+        uses, never a per-row Python loop or an exploded position
+        set), writes the staged rewrite, then extracts the staged
+        file's index entry — footer stats, NaN counts, every sidecar
+        statistic, hive partition values — under its final catalog
+        key with build_index's own plan. The unit fans out by
+        build_index's rule (``stats._fan_out``): a driver thread pool
+        below its distributed threshold (64 files), one executor job
+        at or above it. Executors must see ``data_dir`` at the same
+        path (shared FS / local mode) — the contract every Spark write
+        in this table already assumes. The driver then performs only
+        the O(files) crash-ordered metadata steps (intent marker, byte
+        swap, catalog evict) and upserts the extracted entries in one
+        batch, all inside the mutation scope. ``os.replace`` keeps
+        the staged inode's size and mtime, so the closing
+        ``refresh()`` finds every rewritten file unchanged and
+        re-extracts nothing; it only picks up other directory
+        changes."""
+        import pyarrow.parquet as pq
+
         v0 = self._dml_begin()
         dvs = self.catalog.get_dv_ranges()
-        items = [(os.path.join(self.data_dir, fname), ranges)
-                 for fname, ranges in sorted(dvs.items())]
-        if not items:
+        if not dvs:
             return 0
+        cats = self._partition_categories()
+        items = []
+        for fname, ranges in sorted(dvs.items()):
+            path = os.path.join(self.data_dir, fname)
+            part = _stats.typed_partition_values(
+                _stats.partition_values_raw(self.data_dir, path), cats)
+            items.append((path, ranges, fname, part))
+        opts = {k: getattr(self, k) for k in self._INDEX_OPTIONS}
+        plan = _stats._extraction_plan(
+            self.index_schema, pq.read_schema(items[0][0]), cats, **opts)
         try:
-            if len(items) <= 2:
-                staged = [_compact_rewrite_file(it) for it in items]
-            else:
-                sc = self.spark.sparkContext
-                # slices capped at ~2x parallelism: enough skew slack
-                # without paying per-task launch overhead for
-                # hundreds of tiny files
-                slices = min(len(items),
-                             max(2 * sc.defaultParallelism, 8))
-                staged = (sc.parallelize(items, slices)
-                          .map(_compact_rewrite_file).collect())
+            done = _stats._fan_out(_compact_file, items, plan, self.spark)
         except BaseException:
-            # a failed rewrite job may leave staged dotfiles for the
-            # files that DID finish — invisible to scans, but clean
-            # them now; originals + catalog + DVs are untouched
-            for path, _ in items:
-                t = _compact_tmp_path(path)
-                if os.path.exists(t):
-                    os.remove(t)
+            # a failed rewrite may leave staged dotfiles for the files
+            # that DID finish — invisible to scans, but clean them now;
+            # originals + catalog + DVs are untouched
+            self._drop_staged(_compact_tmp_path(path) for path, *_ in items)
             raise
+        staged = [tmp for tmp, _entry in done]
         # optimistic-concurrency gate between the (invisible) staged
         # rewrites and the swap/evict commit half; the swap/evict loop
-        # runs inside the mutation scope (CAS + mutations under one
-        # writer lease — no other writer can commit-and-mutate mid-swap)
+        # and the entries' upsert run inside the mutation scope (CAS +
+        # mutations under one writer lease — no other writer can
+        # commit-and-mutate mid-swap)
         try:
             with self._dml_mutation_scope(v0, "compact_deletes"):
                 self._compact_swap_evict(items, staged)
+                _stats._store_entries(
+                    self.catalog,
+                    [entry for _tmp, entry in done if entry is not None])
         except ConcurrentWriteError:
-            for tmp in staged:
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+            self._drop_staged(staged)
             raise
+        # the rewritten files' DVs are gone and their NaN counts new
+        self._dv_cache = None
+        self._nan_free_cache = None
         self.refresh()
         self._refresh_views()
         return len(dvs)
+
+    @staticmethod
+    def _drop_staged(tmps) -> None:
+        """Remove whichever staged rewrites exist (None = a file whose
+        every row was deleted, which staged nothing)."""
+        for tmp in tmps:
+            if tmp is not None and os.path.exists(tmp):
+                os.remove(tmp)
 
     def _compact_swap_evict(self, items, staged) -> None:
         """Mutation half of compact_deletes: crash-ordered byte swap +
         catalog evict per rewritten file. Runs inside the verb's
         ``_dml_mutation_scope``."""
-        for (path, _ranges), tmp in zip(items, staged):
+        for (path, *_), tmp in zip(items, staged):
             fname = self._marker_file_key(path)
             # crash-ordering: swap the BYTES first, evict the catalog
             # entry second. The reverse order opens a resurrection
@@ -2334,7 +2401,8 @@ class IndexedParquetTable(CatalogAnswers):
                 # the landed files are invisible to the catalog until
                 # refresh() — old versions go, new versions stay
                 self._dv_store_victims(
-                    victims.select("__file", "__pos", *self.sum_columns))
+                    victims.select("__file", "__pos", *self.sum_columns),
+                    n_upd)
         finally:
             victims.unpersist()
         self.refresh()

@@ -1,10 +1,11 @@
-"""compact_deletes at scale: the rewrite body runs on EXECUTORS (one
-task per DV'd file via sc.parallelize) and the keep mask is the
-vectorized ``anti_filter_positions`` binary search — never a per-row
-Python loop or an exploded position set (VERDICT r8 ask #2). The
-driver keeps only the O(files) crash-ordered metadata steps (marker,
-swap, evict), so compacting thousands of real DV'd files fans out
-instead of serializing through the driver."""
+"""compact_deletes at scale: the per-file rewrite fans out by
+build_index's rule (driver threads below 64 DV'd files, executors at
+or above) and the keep mask is the vectorized ``anti_filter_positions``
+binary search — never a per-row Python loop or an exploded position
+set (VERDICT r8 ask #2). The driver keeps only the O(files)
+crash-ordered metadata steps (marker, swap, evict), so compacting
+thousands of real DV'd files fans out instead of serializing through
+the driver."""
 
 import os
 import time
@@ -29,9 +30,9 @@ def _one_file(df, d, name, block=8192):
 
 
 def test_compact_distributed_many_files(spark, tmp_path):
-    """>2 DV'd files takes the sc.parallelize fan-out path; results
-    must be byte-equivalent to the sequential semantics: exact live
-    rows, all DVs cleared, catalog answers restored."""
+    """Several DV'd files take the fan-out path; results must be
+    byte-equivalent to the sequential semantics: exact live rows, all
+    DVs cleared, catalog answers restored."""
     d = str(tmp_path / "many")
     os.makedirs(d)
     n, nfiles = 6_000, 6
