@@ -1361,8 +1361,8 @@ class IndexedParquetTable(CatalogAnswers):
         DV assembly is driver-side, capped at DV_MAX_DELETED_PER_CALL
         positions per call (~ the point where a physical rewrite is
         cheaper than a vector; Delta draws the same line). The cap
-        costs a count job only when the scanned files' catalog row
-        count exceeds it (see ``_dv_store_victims``)."""
+        costs a count job only when the table's catalog row count
+        exceeds it (see ``_dv_store_victims``)."""
         from pyspark.sql import functions as F
 
         v0 = self._dml_begin()
@@ -1375,7 +1375,7 @@ class IndexedParquetTable(CatalogAnswers):
             df.select(self._dv_file_key_col().alias("__file"),
                       F.col("_metadata.row_index").alias("__pos"),
                       *self.sum_columns),
-            self._catalog_rows(decision.file_names),
+            self.catalog.totals()[2],
             commit_from=v0, verb="delete")
 
     def delete_matching(self, victims: DataFrame, key_column: str) -> int:
@@ -1413,21 +1413,8 @@ class IndexedParquetTable(CatalogAnswers):
             df.select(self._dv_file_key_col().alias("__file"),
                       F.col("_metadata.row_index").alias("__pos"),
                       *self.sum_columns),
-            self._catalog_rows(decision.file_names),
+            self.catalog.totals()[2],
             commit_from=v0, verb="delete_matching")
-
-    def _catalog_rows(self, file_names: Sequence[str]) -> int:
-        """Catalog row count of ``file_names`` — an upper bound on the
-        rows a delete scanning them can match. Read from the O(1)
-        catalog total when the whole table already fits under
-        DV_MAX_DELETED_PER_CALL (the bound only has to decide the
-        cap), else folded over ``all_files()``."""
-        total = self.catalog.totals()[2]
-        if total <= self.DV_MAX_DELETED_PER_CALL:
-            return total
-        scanned = set(file_names)
-        return sum(rows for name, _size, _rgs, rows
-                   in self.catalog.all_files() if name in scanned)
 
     def _dv_store_victims(self, victims: DataFrame, bound: int,
                           commit_from: int = -1,
@@ -1441,8 +1428,8 @@ class IndexedParquetTable(CatalogAnswers):
         read).
 
         Cap rule: ``bound`` is an upper bound on the victim count — the
-        catalog row count of the scanned files for delete_where /
-        delete_matching, the exact already-counted victims for
+        table's catalog row count (``totals()``, O(1)) for delete_where
+        / delete_matching, the exact already-counted victims for
         update_where. Only when it exceeds DV_MAX_DELETED_PER_CALL does
         a ``count()`` job run first, raising DVCapExceeded (before
         committing anything) when the victims really are over the cap;
@@ -1902,10 +1889,14 @@ class IndexedParquetTable(CatalogAnswers):
         key with build_index's own plan. The unit fans out by
         build_index's rule (``stats._fan_out``): a driver thread pool
         below its distributed threshold (64 files), one executor job
-        at or above it. Executors must see ``data_dir`` at the same
-        path (shared FS / local mode) — the contract every Spark write
-        in this table already assumes. The driver then performs only
-        the O(files) crash-ordered metadata steps (intent marker, byte
+        at or above it — and also one executor job whenever the DV'd
+        files' largest row groups, uncompressed, sum past
+        ``ROWGROUP_LOCAL_MAX_BYTES``, since unlike a footer read the
+        unit decodes whole row groups and each driver thread holds
+        one. Executors must see ``data_dir`` at the same path (shared
+        FS / local mode) — the contract every Spark write in this
+        table already assumes. The driver then performs only the
+        O(files) crash-ordered metadata steps (intent marker, byte
         swap, catalog evict) and upserts the extracted entries in one
         batch, all inside the mutation scope. ``os.replace`` keeps
         the staged inode's size and mtime, so the closing
@@ -1925,11 +1916,25 @@ class IndexedParquetTable(CatalogAnswers):
             part = _stats.typed_partition_values(
                 _stats.partition_values_raw(self.data_dir, path), cats)
             items.append((path, ranges, fname, part))
+        # token-Bloom columns are typed from the first table file, as
+        # build_index types them
         opts = {k: getattr(self, k) for k in self._INDEX_OPTIONS}
         plan = _stats._extraction_plan(
-            self.index_schema, pq.read_schema(items[0][0]), cats, **opts)
+            self.index_schema, pq.read_schema(self._files[0]), cats, **opts)
+        # a unit decodes whole row groups where build_index's reads a
+        # few KB of footer: past the driver's row-group budget (each
+        # DV'd file's largest group, summed) the units run on executors
+        # whatever their count
+        decoded = 0
+        for path, *_ in items:
+            md = pq.read_metadata(path)
+            decoded += max((md.row_group(rg).total_byte_size
+                            for rg in range(md.num_row_groups)), default=0)
         try:
-            done = _stats._fan_out(_compact_file, items, plan, self.spark)
+            done = _stats._fan_out(
+                _compact_file, items, plan, self.spark,
+                distributed_threshold=(
+                    1 if decoded > self.ROWGROUP_LOCAL_MAX_BYTES else None))
         except BaseException:
             # a failed rewrite may leave staged dotfiles for the files
             # that DID finish — invisible to scans, but clean them now;
@@ -1951,9 +1956,6 @@ class IndexedParquetTable(CatalogAnswers):
         except ConcurrentWriteError:
             self._drop_staged(staged)
             raise
-        # the rewritten files' DVs are gone and their NaN counts new
-        self._dv_cache = None
-        self._nan_free_cache = None
         self.refresh()
         self._refresh_views()
         return len(dvs)
@@ -2745,12 +2747,13 @@ class IndexedParquetTable(CatalogAnswers):
             *[f.name for f in schema.fields])
         return native.unionByName(parts_df) if parts_df is not None else native
 
-    # UNCOMPRESSED-byte ceiling for the driver-side boundary read
-    # (the guard sums the footers' total_byte_size, which is the
-    # uncompressed footprint — the conservative side for a
-    # driver-memory bound); the pushdowns' boundary sets are 1-2 row
-    # groups per file by construction, so this is generous while
-    # still bounding driver memory at ~the size of a few row groups
+    # UNCOMPRESSED-byte ceiling on the row groups the driver decodes
+    # itself, summed from the footers' total_byte_size: the
+    # driver-side boundary read's groups, and compaction's units
+    # (each DV'd file's largest group) — above it executors do the
+    # work. The pushdowns' boundary sets are 1-2 row groups per file
+    # by construction, so this is generous while still bounding
+    # driver memory at ~the size of a few row groups
     ROWGROUP_LOCAL_MAX_BYTES = 8 << 20
 
     def _read_rowgroups_local(

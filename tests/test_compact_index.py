@@ -8,9 +8,13 @@ refresh() then finds every rewritten file unchanged. Covered here:
 - the catalog after compaction equals a ``refresh(full=True)``
   re-extraction of the same files, table by table, on flat and hive
   layouts and on the sqlite and DataFrame backends;
-- counts and SUM pushdowns stay exact with ``refresh`` stubbed out;
-- a compaction on 6 files starts no Spark job, and with the fan-out
-  threshold lowered it runs on executors with the same result;
+- the closing refresh extracts no file, and counts and SUM pushdowns
+  are exact after it;
+- on an evolved schema the token-Bloom columns are typed as
+  build_index types them;
+- a compaction on 6 small files starts no Spark job, and with the
+  fan-out threshold or the driver's row-group byte budget lowered it
+  runs on executors with the same result;
 - a compaction refused by the commit CAS raises ConcurrentWriteError
   and leaves no staged rewrite behind, even when a file lost every row;
 - a static check that only ``stats._fan_out`` calls ``.parallelize(``
@@ -166,10 +170,11 @@ def test_compaction_catalog_equals_full_reextraction(
 
 
 @pytest.mark.parametrize("backend", ["sqlite", "df"])
-def test_compaction_exact_without_refresh(spark, tmp_path, monkeypatch,
-                                          backend):
-    """The entries compaction upserts are the whole re-index: with
-    ``refresh`` a no-op, counts and SUM pushdowns stay exact."""
+def test_compaction_refresh_reextracts_nothing(spark, tmp_path,
+                                               monkeypatch, backend):
+    """The entries compaction upserts are the whole re-index: its
+    closing ``refresh`` reads no footer, and counts and SUM pushdowns
+    are exact afterwards."""
     n_files = 4
     root = str(tmp_path / "data")
     _layout(root, n_files, hive=False)
@@ -177,14 +182,51 @@ def test_compaction_exact_without_refresh(spark, tmp_path, monkeypatch,
     _delete_mix(t, n_files)
     live = [r for i in range(n_files) if i != 1
             for r in _file_table(i).to_pylist() if r["k"] % 7 != 3]
-    monkeypatch.setattr(t, "refresh", lambda *a, **kw: None)
+    extracted, refreshes = [], []
+    orig_extract, orig_refresh = stats.extract_file_stats, t.refresh
+
+    def spy_extract(path, *a, **kw):
+        extracted.append(path)
+        return orig_extract(path, *a, **kw)
+
+    def spy_refresh(*a, **kw):
+        refreshes.append(a)
+        with monkeypatch.context() as m:
+            m.setattr(stats, "extract_file_stats", spy_extract)
+            return orig_refresh(*a, **kw)
+
+    monkeypatch.setattr(t, "refresh", spy_refresh)
     t.compact_deletes()
     monkeypatch.undo()
+    assert refreshes and extracted == []
     assert t.count_rows() == len(live)
     assert t.count_rows(col("v") < 50) == sum(r["v"] < 50 for r in live)
     s, n = t.sum_rows("v")
     assert (s, n) == (sum(r["v"] for r in live), len(live))
     assert t.last_sum_pushdown["partial_row_groups"] == 0
+
+
+def test_compaction_types_token_blooms_like_build_index(spark, tmp_path):
+    """On an evolved schema — the first file predates the token-Bloom
+    column — compaction types the token-Bloom columns from the same
+    file build_index does, so the catalog still equals a full
+    re-extraction."""
+    root = str(tmp_path / "data")
+    os.makedirs(root)
+    pq.write_table(_file_table(0).select(["k", "v"]),
+                   os.path.join(root, "f0.parquet"))
+    for i in (1, 2):
+        pq.write_table(_file_table(i), os.path.join(root, f"f{i}.parquet"))
+    t = IndexedParquetTable(spark, root, ["k", "v"],
+                            token_bloom_columns=["s"])
+    t.delete_where(col("k") >= ROWS_PER_FILE + 7)
+    assert sorted(t.catalog.get_dv_ranges()) == ["f1.parquet", "f2.parquet"]
+    live = t.count_rows()
+    assert t.compact_deletes() == 2
+    after = _state(t)
+    t.refresh(full=True)
+    assert _state(t) == after
+    assert t.count_rows() == live
 
 
 def _jobs(spark, group, fn):
@@ -199,29 +241,35 @@ def _jobs(spark, group, fn):
 
 def test_compaction_spark_jobs_follow_fan_out_rule(spark, tmp_path,
                                                    monkeypatch):
-    """Below the fan-out threshold compaction starts no Spark job; with
-    the threshold lowered it runs on executors, with the same rows and
-    catalog."""
+    """Below the fan-out threshold and the driver's row-group byte
+    budget compaction starts no Spark job; with either lowered it runs
+    on executors, with the same rows and catalog."""
     n_files = 6
+    lowered = {"driver": None,
+               "executors-by-count": (stats, "_DISTRIBUTED_THRESHOLD", 2),
+               "executors-by-bytes": (IndexedParquetTable,
+                                      "ROWGROUP_LOCAL_MAX_BYTES", 0)}
     tables = {}
-    for mode in ("driver", "executors"):
+    for mode in lowered:
         root = str(tmp_path / mode)
         _layout(root, n_files, hive=False)
         tables[mode] = t = _table(spark, root, "sqlite", hive=False)
         _delete_mix(t, n_files)
-    n, jobs = _jobs(spark, "compact-driver",
-                    tables["driver"].compact_deletes)
-    assert n == n_files and jobs == []
-    monkeypatch.setattr(stats, "_DISTRIBUTED_THRESHOLD", 2)
-    n, jobs = _jobs(spark, "compact-executors",
-                    tables["executors"].compact_deletes)
-    assert n == n_files and len(jobs) == 1
-    a, b = tables["driver"], tables["executors"]
-    assert _across_copies(_state(a)) == _across_copies(_state(b))
-    rows = [sorted(r["k"] for r in x.query(None).collect())
-            for x in (a, b)]
-    assert rows[0] == rows[1]
-    assert len(rows[0]) == a.count_rows()
+    for mode, patch in lowered.items():
+        with monkeypatch.context() as m:
+            if patch is not None:
+                m.setattr(*patch)
+            n, jobs = _jobs(spark, f"compact-{mode}",
+                            tables[mode].compact_deletes)
+        assert n == n_files
+        assert len(jobs) == (0 if patch is None else 1), mode
+    a = tables["driver"]
+    want = sorted(r["k"] for r in a.query(None).collect())
+    assert len(want) == a.count_rows()
+    for mode in ("executors-by-count", "executors-by-bytes"):
+        b = tables[mode]
+        assert _across_copies(_state(a)) == _across_copies(_state(b))
+        assert sorted(r["k"] for r in b.query(None).collect()) == want
 
 
 @pytest.mark.parametrize("backend", ["sqlite", "df"])

@@ -1,9 +1,9 @@
 """The delete verbs' cap check costs a Spark job only when it can matter.
 
 ``_dv_store_victims`` runs the DV_MAX_DELETED_PER_CALL ``count()`` only
-when an upper bound on the victims exceeds the cap: the catalog row
-count of the scanned files for ``delete_where`` / ``delete_matching``,
-the already-counted victims for ``update_where``. Otherwise the
+when an upper bound on the victims exceeds the cap: the table's catalog
+row count for ``delete_where`` / ``delete_matching``, the
+already-counted victims for ``update_where``. Otherwise the
 grouped collect is the verb's only victim action. Covered here: no
 ``count`` under the cap, one when the bound is over it, the cap still
 raising when the victims really are over it, and a seeded random delete
@@ -88,10 +88,10 @@ def test_bound_over_cap_counts_then_deletes(spark, tmp_path, count_calls):
     root = str(tmp_path / "data")
     _layout(root)
     t = IndexedParquetTable(spark, root, ["k"])
-    t.DV_MAX_DELETED_PER_CALL = ROWS - 1     # every file's rows exceed it
+    t.DV_MAX_DELETED_PER_CALL = ROWS - 1     # the table's rows exceed it
     assert t.delete_where(col("v") == 21) == 12
     assert len(count_calls) == 1
-    # a point delete pruned to one file is still over the bound
+    # the bound is the whole table's, even for a point delete
     assert t.delete_where(col("k") == 5) == 1
     assert len(count_calls) == 2
 
