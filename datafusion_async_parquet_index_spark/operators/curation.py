@@ -333,21 +333,19 @@ def _gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — one computation serves them all.  The scan is spread
     across cores first (a small corpus parquet is one row group = one
     partition; no-op at scale)."""
-    from .util import session_memo, spread_for_compute, track_cache
+    from .util import memoized, spread_for_compute, track_cache
 
-    memo = session_memo(spark, "gram_positions")
-    pos = memo.get(sf_dir)
-    if pos is not None:
-        return pos
-    docs = spread_for_compute(read_table(spark, sf_dir, "documents"))
-    toks = tokens(F.col("text"))
-    grams = F.transform(
-        F.sequence(F.lit(1),
-                   F.greatest(F.lit(1), F.size(toks) - (NGRAM_W - 1))),
-        lambda i: hash60(F.concat_ws(" ", F.slice(toks, i, NGRAM_W))))
-    pos = memo[sf_dir] = track_cache(
-        docs.select("doc_id", F.explode(grams).alias("g")))
-    return pos
+    def build():
+        docs = spread_for_compute(read_table(spark, sf_dir, "documents"))
+        toks = tokens(F.col("text"))
+        grams = F.transform(
+            F.sequence(F.lit(1),
+                       F.greatest(F.lit(1), F.size(toks) - (NGRAM_W - 1))),
+            lambda i: hash60(F.concat_ws(" ", F.slice(toks, i, NGRAM_W))))
+        return track_cache(
+            docs.select("doc_id", F.explode(grams).alias("g")))
+
+    return memoized(spark, "gram_positions", sf_dir, build)
 
 
 def dedup_substring_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,16 +655,14 @@ def text_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     by doc_id) so the tercile boundaries agree across engines."""
     from pyspark.sql import Window
 
-    from .util import session_memo, track_cache
+    from .util import memoized, track_cache
 
     # the corpus-wide NLL pipeline (token explode + vocab join) now has
     # two consumers (its own query entry and this one) — cache its tiny
     # per-doc output per (session, corpus) instead of recomputing
-    memo = session_memo(spark, "unigram_nll")
-    nll = memo.get(sf_dir)
-    if nll is None:
-        from .text import text_unigram_logprob
-        nll = memo[sf_dir] = track_cache(text_unigram_logprob(spark, sf_dir))
+    from .text import text_unigram_logprob
+    nll = memoized(spark, "unigram_nll", sf_dir, lambda: track_cache(
+        text_unigram_logprob(spark, sf_dir)))
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang")
     j = nll.join(docs, "doc_id")
     w = Window.partitionBy("lang").orderBy(F.asc("nll"), F.asc("doc_id"))

@@ -38,7 +38,7 @@ from ..functions import (
     char_shingles, hash60, sql_char_shingles, sql_hash60, sql_tokens, tokens,
 )
 from ..session import local_frame
-from .util import read_table, track_cache
+from .util import memoized, read_table, track_cache
 
 # Corpus signature store: the dedup entry points share the expensive
 # intermediates (MinHash signatures, band pairs per threshold, hashed
@@ -51,20 +51,10 @@ from .util import read_table, track_cache
 # md5-per-shingle hashing that dominates the suite. At 100 TB this memo
 # is the in-session stand-in for a persisted signature table next to
 # the corpus (write once, probe per batch). Cleared by
-# util.clear_caches() together with the caches it points at; the
-# session component of the key is held weakly (see util.session_memo)
-# so stopped sessions release their plans without an explicit clear.
-
-
-def _corpus(key, build):
-    from .util import session_memo
-
-    spark, subkey = key[0], key[1:]
-    memo = session_memo(spark, "dedup_corpus")
-    df = memo.get(subkey)
-    if df is None:
-        df = memo[subkey] = build()
-    return df
+# util.clear_caches() together with the caches it points at; entries
+# live in the session's artifact store (util.memoized, namespace
+# "dedup_corpus", keyed (sf_dir, artifact, params...)), so stopped
+# sessions release their plans without an explicit clear.
 
 K = 24          # minhash signature length
 R = 3           # rows per band
@@ -432,16 +422,16 @@ def _corpus_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs/shingle-sets materialize would force winnow to re-hash the
     corpus per call — the regression the artifact exists to prevent."""
     from .util import track_cache_eager
-    return _corpus(
-        (spark, sf_dir, "hashed_shingles"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "hashed_shingles"),
         lambda: track_cache_eager(_hashed_shingles(
             read_table(spark, sf_dir, "documents"))))
 
 
 def _corpus_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .util import track_cache_eager
-    return _corpus(
-        (spark, sf_dir, "minhash_sigs"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "minhash_sigs"),
         lambda: track_cache_eager(_sigs_from_hashed(
             _corpus_hashed(spark, sf_dir))))
 
@@ -452,8 +442,8 @@ def corpus_minhash_pairs(
     """Memoized MinHash pair list for the sf_dir documents corpus —
     all dedup entry points at or above ``threshold`` share one cached
     computation per (session, corpus, threshold)."""
-    return _corpus(
-        (spark, sf_dir, "minhash_pairs", threshold),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "minhash_pairs", threshold),
         lambda: minhash_pairs(
             None, threshold=threshold,
             sigs=_corpus_sigs(spark, sf_dir),
@@ -709,7 +699,6 @@ def verified_pairs(
     # through to the output so a consumer comparing estimate vs exact
     # does not need to re-join the candidate list on (doc_a, doc_b)
     # afterwards — one exchange + join fewer (guide §2.4)
-    cand0 = cand
     cand = cand.select("doc_a", "doc_b", *keep_cols)
     # distinct HASHED shingles: integer compares in the intersect (and a
     # far smaller shuffle) instead of 5-char strings; hash collisions are
@@ -756,7 +745,7 @@ def verified_pairs(
             .filter(F.col("_j") >= jaccard_threshold)
             .select("doc_a", "doc_b", *keep_cols,
                     F.round(F.col("_j"), 4).alias("jaccard")))
-    from .util import session_memo, track_cache_eager
+    from .util import track_cache_eager
     # the signature sidecars are cached EAGERLY (below) so they carry
     # exact InMemoryRelation stats — the planner then auto-broadcasts
     # them into the wide candidate joins whenever they genuinely fit
@@ -766,18 +755,10 @@ def verified_pairs(
     # by doc ids and once by sig pair for ~9 s of the exec; with the
     # small sides broadcast the whole verify leg is map-only over the
     # cached pair list). Scale-adaptive by construction: an oversized
-    # doc_sig keeps the shuffle-join plan (guide §3.1). The WHOLE
-    # factorized branch is memoized per (session, input frames,
-    # thresholds) so re-running this body against the same memoized
-    # corpus inputs (pure-plan audit re-entry, repeat callers) is a
-    # plan-memo hit instead of re-populating fresh caches per call;
-    # the memo VALUE pins the key objects so their ids cannot be
-    # reused while the entry lives, and clear_caches drops everything.
-    memo = session_memo(sh.sparkSession, "verify_factorized_plan")
-    mkey = (id(sh), id(cand0), jaccard_threshold, tuple(keep_cols))
-    hit = memo.get(mkey)
-    if hit is not None:
-        return hit[2]
+    # doc_sig keeps the shuffle-join plan (guide §3.1). Each call
+    # caches fresh sidecars: corpus callers memoize the RESULT by
+    # corpus key and parameters (corpus_verified_pairs,
+    # dedup_minhash_quality), so a re-entry never re-populates them.
     sh_sorted = sh.select("doc_id", F.sort_array("sh").alias("sh"))
     sig_store = track_cache_eager(
         sh_sorted.select("sh").distinct()
@@ -810,7 +791,6 @@ def verified_pairs(
         .select("doc_a", "doc_b", *keep_cols,
                 F.round(F.col("_j"), 4).alias("jaccard"))
     )
-    memo[mkey] = (sh, cand0, out)
     return out
 
 
@@ -819,8 +799,8 @@ def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_distinct is an O(|hs|) integer pass; the md5 hashing it
     # used to repeat lives in _corpus_hashed, computed once per corpus
     from .util import track_cache_eager
-    return _corpus(
-        (spark, sf_dir, "shingle_sets"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "shingle_sets"),
         lambda: track_cache_eager(_corpus_hashed(spark, sf_dir).select(
             "doc_id", F.array_distinct(F.col("hs")).alias("sh"))))
 
@@ -829,8 +809,8 @@ def corpus_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized verified near-dup pair list (LSH candidates + exact
     Jaccard) — shared by the pairs query and the clustering pipeline."""
     from .util import track_cache_eager
-    return _corpus(
-        (spark, sf_dir, "verified_pairs"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "verified_pairs"),
         lambda: track_cache_eager(verified_pairs(
             None,
             cand=corpus_minhash_pairs(spark, sf_dir, 0.35),
@@ -1002,8 +982,8 @@ def corpus_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff) on every call.  Same in-session artifact posture as the
     cached pair list it derives from and the streaming rows' sink
     memo: cleared by clear_caches, so cold passes re-price it."""
-    return _corpus(
-        (spark, sf_dir, "components", CLUSTER_THRESHOLD),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "components", CLUSTER_THRESHOLD),
         lambda: connected_components(
             corpus_minhash_pairs(spark, sf_dir, CLUSTER_THRESHOLD)))
 
@@ -1012,8 +992,8 @@ def corpus_verified_components(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Connected components over the VERIFIED pair set (same sharing
     rationale as corpus_components)."""
-    return _corpus(
-        (spark, sf_dir, "verified_components"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "verified_components"),
         lambda: connected_components(
             corpus_verified_pairs(spark, sf_dir)
             .select("doc_a", "doc_b")))
@@ -1153,8 +1133,8 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
 
 
 def _corpus_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _corpus(
-        (spark, sf_dir, "simhash_sigs"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "simhash_sigs"),
         lambda: simhash_signatures(read_table(spark, sf_dir, "documents")))
 
 
@@ -1315,7 +1295,8 @@ def _corpus_overlap(spark: SparkSession, sf_dir: str):
         from .util import track_cache_eager
         return track_cache_eager(sizes), track_cache(inter)
 
-    return _corpus((spark, sf_dir, "shingle_overlap"), build)
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "shingle_overlap"), build)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.1) -> DataFrame:
@@ -1614,7 +1595,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _verify_sig_candidates(
             cand, sigs, sigs, "new_id", "corpus_id", 0.25)
 
-    return _corpus((spark, sf_dir, "incremental"), build)
+    return memoized(spark, "dedup_corpus", (sf_dir, "incremental"), build)
 
 
 def _incremental_sql() -> str:
@@ -1629,9 +1610,6 @@ def _incremental_sql() -> str:
 # persisted signature store: the on-disk form of the _corpus memo
 # ---------------------------------------------------------------------------
 
-SIGSTORE_ENV = "SPARK_GRAFT_SIGSTORE"
-
-
 def signature_store_dir(sf_dir: str) -> str:
     """Deterministic store location for a corpus: keyed by the
     documents file's identity plus the signature parameters
@@ -1640,8 +1618,7 @@ def signature_store_dir(sf_dir: str) -> str:
     from .util import artifact_dir
 
     return artifact_dir(
-        SIGSTORE_ENV, "spark_graft_sigstore",
-        os.path.join(sf_dir, "documents.parquet"),
+        "spark_graft_sigstore", os.path.join(sf_dir, "documents.parquet"),
         f"K={K}|R={R}|mod={NEW_BATCH_MOD}")
 
 
@@ -1650,7 +1627,7 @@ def write_signature_store(docs: DataFrame, out_dir: str) -> None:
     corpus: ``signatures/`` is (doc_id, s0..s{K-1}), ``bands/`` is the
     derived (doc_id, band_idx, band_hash) band table, partitioned by
     band_idx so each band probes as its own directory. This is the real
-    nightly-ingest architecture the in-session ``_corpus`` memo stands
+    nightly-ingest architecture the in-session corpus memo stands
     in for at 100 TB: signatures are written ONCE per corpus rebuild
     (the dominant md5-per-shingle cost), and every later batch pays
     only its own hashing plus a band-sized equi-join probe. Bands are
@@ -1676,18 +1653,14 @@ def _corpus_signature_store(spark: SparkSession, sf_dir: str):
     parquet-backed DataFrames. Existence is checked via the _SUCCESS
     markers both writes leave; the per-session memo only skips the
     os.path checks, never the disk."""
-    store = signature_store_dir(sf_dir)
-    from .util import ensure_complete, session_memo
+    from .util import ensure_complete
 
-    memo = session_memo(spark, "sigstore")
-    if not memo.get(store):
-        ensure_complete(
-            store,
-            [("signatures", "_SUCCESS"), ("bands", "_SUCCESS")],
-            lambda d: write_signature_store(
-                read_table(spark, sf_dir, "documents").filter(
-                    F.col("doc_id") % NEW_BATCH_MOD != 0), d))
-        memo[store] = True
+    store = signature_store_dir(sf_dir)
+    memoized(spark, "sigstore", store, lambda: ensure_complete(
+        store, [("signatures", "_SUCCESS"), ("bands", "_SUCCESS")],
+        lambda d: write_signature_store(
+            read_table(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % NEW_BATCH_MOD != 0), d)))
     return read_signature_store(spark, store)
 
 
@@ -1709,7 +1682,8 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan memo only (match_against_corpus localCheckpoints the batch
     # signatures, so repeat calls skip both the analysis of the K=24
     # signature expression tree and the batch hashing)
-    return _corpus((spark, sf_dir, "incremental_persisted"), build)
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "incremental_persisted"), build)
 
 
 def _docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1745,7 +1719,7 @@ def _docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             os.utime(dst, (now + i, now + i))
             shutil.rmtree(tmp, ignore_errors=True)
 
-    d = artifact_dir("SPARK_GRAFT_STREAM_DIR", "spark_graft_stream_docs",
+    d = artifact_dir("spark_graft_stream_docs",
                      os.path.join(sf_dir, "documents.parquet"),
                      f"split3_mod{NEW_BATCH_MOD}_v1")
     return ensure_complete(d, markers, _write)
@@ -1792,7 +1766,8 @@ def dedup_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
         return spark.read.parquet(out_dir)
 
-    return _corpus((spark, sf_dir, "stream_incremental"), build)
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "stream_incremental"), build)
 
 
 # ---------------------------------------------------------------------------
@@ -1898,8 +1873,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verified pair list is a corpus artifact like the MinHash
     # signature store — memoized + cached so downstream consumers and
     # repeat runs re-read it instead of re-verifying candidates
-    return _corpus(
-        (spark, sf_dir, "embedding_lsh_pairs"),
+    return memoized(
+        spark, "dedup_corpus", (sf_dir, "embedding_lsh_pairs"),
         lambda: track_cache(embedding_lsh_pairs(
             read_table(spark, sf_dir, "embeddings"))))
 
@@ -1955,12 +1930,16 @@ def dedup_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # est_jaccard rides THROUGH the verify leg (keep_cols) instead of
     # re-joining the 200k-pair estimate list on (doc_a, doc_b) after it
     # — the verify leg is built from est, so the join only re-attached
-    # a column the pipeline already had: one exchange + join fewer
-    j = verified_pairs(
-        None, jaccard_threshold=0.0, cand=est,
-        shingles=_corpus_shingles(spark, sf_dir),
-        collapse=_corpus_text_collapse(spark, sf_dir),
-        keep_cols=("est_jaccard",))
+    # a column the pipeline already had: one exchange + join fewer.
+    # Memoized by corpus and parameters: the factorized branch caches
+    # its signature sidecars, which a re-entry must not re-populate
+    j = memoized(
+        spark, "verify_factorized_plan", (sf_dir, 0.25, 0.0, "est_jaccard"),
+        lambda: verified_pairs(
+            None, jaccard_threshold=0.0, cand=est,
+            shingles=_corpus_shingles(spark, sf_dir),
+            collapse=_corpus_text_collapse(spark, sf_dir),
+            keep_cols=("est_jaccard",)))
     e_bp = F.round(F.col("est_jaccard") * 10000).cast("long")
     x_bp = F.round(F.col("jaccard") * 10000).cast("long")
     return (
@@ -2075,7 +2054,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "cid", "embedding",
                     l2_norm(F.col("embedding")).alias("nrm")))
 
-    assigned = _corpus((spark, sf_dir, "semantic_assigned"), build)
+    assigned = memoized(
+        spark, "dedup_corpus", (sf_dir, "semantic_assigned"), build)
     # cheap embedding-collapse probe (md5 over the raw vector, ONE
     # narrow pass — never an extra pass over the derived assignment),
     # computed once per corpus like the text statistic

@@ -34,6 +34,7 @@ column plumbing; the mapInPandas paths are exercised in tests/.
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Dict, Iterator
 
 import pandas as pd
@@ -286,13 +287,10 @@ def _corpus_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized feature-extraction plan per (session, corpus) — plan
     reuse only (no data cache): building the mapInPandas plan costs
     ~0.1 s of driver py4j round trips that repeat calls need not pay."""
-    from .util import session_memo
+    from .util import memoized
 
-    memo = session_memo(spark, "mm_features")
-    df = memo.get(sf_dir)
-    if df is None:
-        df = memo[sf_dir] = extract_features(synthesize_media(spark, sf_dir))
-    return df
+    return memoized(spark, "mm_features", sf_dir, lambda: extract_features(
+        synthesize_media(spark, sf_dir)))
 
 
 def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,12 +388,10 @@ def mm_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched resize, the oracle recomputes the integer fit-within
     formula and the truncate/pad output size relationally, so the
     resize pipeline itself is hash-checked cross-engine."""
-    from .util import session_memo
+    from .util import memoized
 
-    memo = session_memo(spark, "mm_resized")
-    rs = memo.get(sf_dir)
-    if rs is None:
-        rs = memo[sf_dir] = resize_media(synthesize_media(spark, sf_dir))
+    rs = memoized(spark, "mm_resized", sf_dir, lambda: resize_media(
+        synthesize_media(spark, sf_dir)))
     return rs.groupBy("media_type").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum(F.col("out_w").cast("bigint")).alias("sum_out_w"),
@@ -1758,20 +1754,14 @@ def _jpeg_dct_matrix():
     return _JPEG_DCT_M
 
 
-_JPEG_CODE_TABLE_CACHE: Dict[tuple, dict] = {}
-
-
-def _jpeg_code_table(bits, huffval):
+@functools.lru_cache(maxsize=64)
+def _jpeg_code_table(bits: tuple, huffval: tuple) -> dict:
     """Canonical Huffman codes per T.81 C.2: {symbol: (code, length)}.
-    Cached per table content like _jpeg_lut: encode_jpeg builds its 4
-    Annex K tables PER IMAGE, and on the synthesized corpora (5 000
-    images per query, ~50 000 at sf1) that rebuild measured ~0.09 ms
-    of the ~0.74 ms per-image encode cost. The dict is read-only in
-    every consumer."""
-    key = (tuple(bits), tuple(huffval))
-    hit = _JPEG_CODE_TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    Cached per table content (bounded, like _jpeg_lut): encode_jpeg
+    builds its 4 Annex K tables PER IMAGE, and on the synthesized
+    corpora (5 000 images per query, ~50 000 at sf1) that rebuild
+    measured ~0.09 ms of the ~0.74 ms per-image encode cost. The dict
+    is read-only in every consumer."""
     out = {}
     code = 0
     k = 0
@@ -1781,7 +1771,6 @@ def _jpeg_code_table(bits, huffval):
             code += 1
             k += 1
         code <<= 1
-    _JPEG_CODE_TABLE_CACHE[key] = out
     return out
 
 
@@ -2255,22 +2244,18 @@ def _jpeg_encode_block(bw, coefs, dct_t, act_t, pred, ci) -> None:
         bw.write(code, ln)
 
 
-_JPEG_LUT_CACHE: Dict[tuple, tuple] = {}
-
-
-def _jpeg_lut(bits, huffval):
+@functools.lru_cache(maxsize=64)
+def _jpeg_lut(bits: tuple, huffval: tuple) -> list:
     """16-bit-window Huffman lookup tables: lut_len[w] = code length
     (0 = invalid), lut_sym[w] = decoded symbol, for every 16-bit
     window w whose prefix is a canonical code from (bits, huffval).
     One array index replaces the old per-BIT Python walk — the r12
-    verdict's ask #6 vectorization. Cached per table content (the
-    Annex K tables recur across every image of a corpus)."""
+    verdict's ask #6 vectorization. Cached per table content, bounded
+    (the Annex K tables recur across every image of a corpus; a
+    long-lived worker decoding arbitrary files keeps only the most
+    recent 64 tables)."""
     import numpy as np
 
-    key = (tuple(bits), tuple(huffval))
-    hit = _JPEG_LUT_CACHE.get(key)
-    if hit is not None:
-        return hit
     # one combined entry per window: (length << 8) | symbol; 0 =
     # invalid code. A plain Python list — int indexing is ~5x faster
     # than numpy scalar indexing in the per-symbol loop.
@@ -2285,9 +2270,7 @@ def _jpeg_lut(bits, huffval):
             code += 1
             k += 1
         code <<= 1
-    out = lut.tolist()
-    _JPEG_LUT_CACHE[key] = out
-    return out
+    return lut.tolist()
 
 
 class _FastBitDecoder:
@@ -2482,9 +2465,9 @@ def decode_jpeg(payload: bytes):
             bp = 0
             while bp < len(body):
                 tc, th = body[bp] >> 4, body[bp] & 0x0F
-                bits = list(body[bp + 1:bp + 17])
+                bits = tuple(body[bp + 1:bp + 17])
                 n = sum(bits)
-                huffval = list(body[bp + 17:bp + 17 + n])
+                huffval = tuple(body[bp + 17:bp + 17 + n])
                 if len(bits) != 16 or len(huffval) != n:
                     raise ValueError("DHT segment truncated")
                 hufftables[(tc, th)] = _jpeg_lut(bits, huffval)

@@ -65,8 +65,9 @@ def ensure_tuned(spark: SparkSession) -> None:
 
 def pure_plan(name: str, fn):
     """Memoize a query function's BUILT DataFrame per (session, corpus)
-    — plan reuse only, never a result cache: the returned DataFrame is
-    lazy, so every sink/action still computes from the parquet inputs.
+    under ``memoized(spark, "pure_plan", (name, sf_dir), ...)`` — plan
+    reuse only, never a result cache: the returned DataFrame is lazy,
+    so every sink/action still computes from the parquet inputs.
 
     Constructing a query's DataFrame costs 0.1-1 s of driver py4j round
     trips per call (measured across the suite), paid again on every
@@ -75,19 +76,15 @@ def pure_plan(name: str, fn):
     pure plan builders are wrapped (no Spark actions, no driver-side
     data construction, no table mutation on warm re-entry — see the
     allowlist in __spark_entry__), so a memo hit changes nothing about
-    what executes.  clear_caches() drops the memo with every other
-    session memo, so the bench's cold pass and any fresh process still
-    price plan construction."""
+    what executes.  clear_caches() drops these entries with every other
+    session artifact, so the bench's cold pass and any fresh process
+    still price plan construction."""
     import functools
 
     @functools.wraps(fn)
     def wrapped(spark, sf_dir):
-        memo = session_memo(spark, "pure_plan")
-        key = (name, sf_dir)
-        df = memo.get(key)
-        if df is None:
-            df = memo[key] = fn(spark, sf_dir)
-        return df
+        return memoized(spark, "pure_plan", (name, sf_dir),
+                        lambda: fn(spark, sf_dir))
     return wrapped
 
 
@@ -191,35 +188,25 @@ def _plan_size_estimate(df: DataFrame) -> int | None:
     return est
 
 
-# Operator-internal caches (MinHash signatures, shingle sets, SimHash
-# sigs) are registered here so long-lived sessions can release them:
-# operators return lazy DataFrames, so they cannot unpersist their own
-# intermediates — the consumer calls clear_caches() once results are
-# materialized (bench cold mode does; the driver's per-query processes
-# exit anyway).
-_TRACKED_CACHES: list = []
-
-# Memo dicts registered by operator modules (e.g. the dedup corpus
-# signature store). They hold DataFrame OBJECTS so repeat calls reuse
-# the same cached plan — Spark's cache-manager plan matching does not
-# reliably hit across independently-built higher-order-function plans
-# (fresh lambda-variable IDs), so object identity is the only
-# dependable way to share a cached intermediate across entry points.
-_MEMO_REGISTRY: list = []
-
-
-def register_memo(d: dict) -> dict:
-    _MEMO_REGISTRY.append(d)
-    return d
-
-
-# Per-session memos keyed by a WEAK session reference.  Weak keying
-# alone cannot free anything here: the memo VALUES (cached DataFrames,
-# IndexedParquetTable objects) strongly reference their session, so the
-# key stays reachable through its own entry.  session_memo therefore
-# also PRUNES entries whose session has been stopped on every access —
-# that drops the value->session chain and lets the weak key collect.
-_SESSION_MEMOS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+# The session artifact store: every session-scoped derived artifact —
+# built plans, indexed fixture tables, DML gates, corpus caches — lives
+# here, keyed by a WEAK session reference and then (namespace, key).
+# Keys are values (sf_dir, table, parameters), never object ids, and
+# the session itself must NOT appear in them: that is what the outer
+# map is for.  Each session's entry is ``(memos, caches)``: the memo
+# dicts by namespace, and the DataFrames ``track_cache`` persisted for
+# that session.  Operators return lazy DataFrames, so they cannot
+# unpersist their own intermediates — the consumer calls clear_caches()
+# once results are materialized (bench cold mode does; the driver's
+# per-query processes exit anyway).
+#
+# Weak keying alone cannot free anything: the values (cached
+# DataFrames, IndexedParquetTable objects) strongly reference their
+# session, so the key stays reachable through its own entry.
+# _session_store therefore also PRUNES the entries of stopped sessions
+# on every access — that drops the value->session chain, so a process
+# cycling sessions does not accumulate dead plans or cache handles.
+_SESSION_STORES: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
     weakref.WeakKeyDictionary())
 
 
@@ -230,26 +217,40 @@ def _session_stopped(s: SparkSession) -> bool:
         return True  # dead gateway / stopped context
 
 
-def session_memo(spark: SparkSession, namespace: str) -> dict:
-    """A mutable memo dict scoped to (session, namespace). Callers key
-    entries by their own sub-keys (sf_dir, table, params) — the session
-    itself must NOT appear in those sub-keys, that's what the outer map
-    is for.  Entries of stopped sessions are pruned here so a process
-    cycling sessions does not accumulate dead cached plans."""
-    for s in list(_SESSION_MEMOS.keys()):
+def _session_store(spark: SparkSession) -> tuple:
+    for s in list(_SESSION_STORES.keys()):
         if s is not spark and _session_stopped(s):
-            _SESSION_MEMOS.pop(s, None)
-    per = _SESSION_MEMOS.get(spark)
-    if per is None:
-        per = {}
-        _SESSION_MEMOS[spark] = per
-    return per.setdefault(namespace, {})
+            _SESSION_STORES.pop(s, None)
+    store = _SESSION_STORES.get(spark)
+    if store is None:
+        store = _SESSION_STORES[spark] = ({}, [])
+    return store
+
+
+def session_memo(spark: SparkSession, namespace: str) -> dict:
+    """The (session, namespace) memo dict behind ``memoized`` — for
+    reading an entry back; build entries through ``memoized``."""
+    return _session_store(spark)[0].setdefault(namespace, {})
+
+
+def memoized(spark: SparkSession, namespace: str, key, build):
+    """The one get-or-build for session-scoped artifacts: the value
+    stored under (session, namespace, key), else ``build()``'s result,
+    stored first.  A build that raises stores nothing, so the next
+    call builds again.  Also the once-per-session gate for DML
+    fixtures: the build runs the mutation and returns what later
+    calls need (or True).  clear_caches() drops every entry."""
+    memo = session_memo(spark, namespace)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def track_cache(df: DataFrame) -> DataFrame:
-    """cache() a DataFrame and remember it for clear_caches()."""
+    """cache() a DataFrame and register it with its session's store,
+    so clear_caches() (or the session stopping) releases it."""
     df = df.cache()
-    _TRACKED_CACHES.append(df)
+    _session_store(df.sparkSession)[1].append(df)
     return df
 
 
@@ -278,13 +279,6 @@ def track_cache_eager(df: DataFrame) -> DataFrame:
     session-scoped compute: the builder runs inside the first caller's
     measured window and clear_caches() drops the data, so cold passes
     re-pay it."""
-    from pyspark.sql import functions as F
-
-    if os.environ.get("SPARK_GRAFT_EAGER_CACHE", "1") == "0":
-        # diagnosis knob (r15 eager-cost audit): lazy cache-marking
-        # only, so the populate-at-build vs recompute-per-branch
-        # trade can be measured per query
-        return track_cache(df)
     sc = df.sparkSession.sparkContext
     try:
         # an IDENTICAL plan may already sit in the cache manager (two
@@ -352,37 +346,38 @@ def track_cache_eager(df: DataFrame) -> DataFrame:
 
 
 def clear_caches() -> None:
-    """Unpersist every operator-internal cache registered so far and
-    drop the cross-call memos that point at them."""
-    for d in _MEMO_REGISTRY:
-        d.clear()
-    for per in list(_SESSION_MEMOS.values()):
-        per.clear()
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
+    """The one lifecycle call for session artifacts: drop every memo
+    entry of every live session and unpersist every DataFrame
+    track_cache registered.  Persisted layouts on disk (artifact_dir)
+    survive: they are keyed by their source's identity, not by the
+    session."""
+    for memos, caches in list(_SESSION_STORES.values()):
+        memos.clear()
+        while caches:
+            df = caches.pop()
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # session already stopped
 
 
-def artifact_dir(env_var: str, default_name: str, src_file: str,
-                 params: str) -> str:
+def artifact_dir(name: str, src_file: str, params: str) -> str:
     """Deterministic persisted-artifact directory for a derived store
-    (signature store, IVF layout, ...): keyed by the source file's
-    (path, size, mtime) plus the build parameters, so a regenerated
-    corpus or retuned parameter set gets a fresh store instead of
-    silently reusing a stale one.  Shared by every on-disk store so the
-    fingerprint recipe cannot drift between them."""
+    (signature store, IVF layout, query layouts, ...):
+    ``<tempfile.gettempdir()>/<name>_<uid>/<fingerprint>``, where the
+    fingerprint hashes the source file's (path, size, mtime) plus the
+    build parameters, so a regenerated corpus or retuned parameter set
+    gets a fresh store instead of silently reusing a stale one.  Shared
+    by every on-disk store so the fingerprint recipe cannot drift
+    between them; ``TMPDIR`` is the one setting that moves them all."""
     import hashlib
     import tempfile
 
-    # uid-scoped default (like Spark's own scratch dirs): a shared /tmp
-    # name would collide across users — one user's 0755 dir blocks
-    # another's writes, and a predictable path invites pre-creation
+    # uid-scoped (like Spark's own scratch dirs): a shared /tmp name
+    # would collide across users — one user's 0755 dir blocks another's
+    # writes, and a predictable path invites pre-creation
     uid = getattr(os, "getuid", lambda: "u")()
-    base = os.environ.get(env_var) or os.path.join(
-        tempfile.gettempdir(), f"{default_name}_{uid}")
+    base = os.path.join(tempfile.gettempdir(), f"{name}_{uid}")
     st = os.stat(src_file)
     fp = hashlib.md5(
         f"{os.path.abspath(src_file)}|{st.st_size}|{int(st.st_mtime)}"
@@ -436,12 +431,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # dominated plan-build time for the cheap operators. DataFrames are
     # immutable so handing back the same object is safe; the testdata
     # dirs are static for a session's lifetime.
-    memo = session_memo(spark, "read_table")
-    key = (sf_dir, name)
-    df = memo.get(key)
-    if df is None:
-        df = memo[key] = _read_table_uncached(spark, sf_dir, name)
-    return df
+    return memoized(spark, "read_table", (sf_dir, name),
+                    lambda: _read_table_uncached(spark, sf_dir, name))
 
 
 def _read_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

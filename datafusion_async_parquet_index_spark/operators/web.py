@@ -1268,34 +1268,32 @@ def _link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, target) edge list extracted from real HTML — shared by
     the degree, single-step and iterated PageRank rows. Cached: the
     power loop joins it once per iteration."""
-    from .util import session_memo, track_cache
+    from .util import memoized, track_cache
 
-    memo = session_memo(spark, "web_link_edges")
-    hit = memo.get(sf_dir)
-    if hit is not None:
-        return hit
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "text")
+    def build():
+        docs = read_table(spark, sf_dir, "documents").select(
+            "doc_id", "text")
 
-    def _links(batches: Iterator[pd.DataFrame]
-               ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "target": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                page = _doc_link_html(int(doc_id), text)
-                for href in extract_links(page):
-                    out["doc_id"].append(int(doc_id))
-                    out["target"].append(
-                        int(href.rsplit("/", 1)[-1]))
-            yield pd.DataFrame(out)
+        def _links(batches: Iterator[pd.DataFrame]
+                   ) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                out = {"doc_id": [], "target": []}
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                    page = _doc_link_html(int(doc_id), text)
+                    for href in extract_links(page):
+                        out["doc_id"].append(int(doc_id))
+                        out["target"].append(
+                            int(href.rsplit("/", 1)[-1]))
+                yield pd.DataFrame(out)
 
-    spread = spread_for_compute(docs)
-    edges = spread.mapInPandas(_links, schema=StructType([
-        StructField("doc_id", LongType()),
-        StructField("target", LongType()),
-    ]))
-    memo[sf_dir] = track_cache(edges)
-    return memo[sf_dir]
+        spread = spread_for_compute(docs)
+        edges = spread.mapInPandas(_links, schema=StructType([
+            StructField("doc_id", LongType()),
+            StructField("target", LongType()),
+        ]))
+        return track_cache(edges)
+
+    return memoized(spark, "web_link_edges", sf_dir, build)
 
 
 def _pr_graph(spark: SparkSession, sf_dir: str):
@@ -1310,23 +1308,21 @@ def _pr_graph(spark: SparkSession, sf_dir: str):
     PageRank persists between iterations."""
     from pyspark.sql import functions as F
 
-    from .util import session_memo, track_cache
+    from .util import memoized, track_cache
 
-    memo = session_memo(spark, "web_pr_graph")
-    hit = memo.get(sf_dir)
-    if hit is not None:
-        return hit
-    edges = _link_edges(spark, sf_dir)
-    out_deg = edges.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("out_degree"))
-    wedges = track_cache(edges.join(out_deg, "doc_id")
-                         .select("doc_id", "target", "out_degree"))
-    nodes = track_cache(
-        edges.select(F.col("doc_id").alias("node"))
-        .union(edges.select(F.col("target").alias("node")))
-        .distinct())
-    memo[sf_dir] = (wedges, nodes)
-    return memo[sf_dir]
+    def build():
+        edges = _link_edges(spark, sf_dir)
+        out_deg = edges.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("out_degree"))
+        wedges = track_cache(edges.join(out_deg, "doc_id")
+                             .select("doc_id", "target", "out_degree"))
+        nodes = track_cache(
+            edges.select(F.col("doc_id").alias("node"))
+            .union(edges.select(F.col("target").alias("node")))
+            .distinct())
+        return wedges, nodes
+
+    return memoized(spark, "web_pr_graph", sf_dir, build)
 
 
 def web_pagerank_iterations(spark: SparkSession, sf_dir: str

@@ -246,6 +246,35 @@ _RTREE_CATS = {"int", "float", "timestamp", "date"}
 _IDENTITY_COLUMNS = (("mtime_ns", "INTEGER"), ("footer_md5", "TEXT"))
 
 
+def _bytes_changed(recorded: Optional[tuple],
+                   current: Optional[tuple]) -> bool:
+    """The one "did this file's BYTES change" rule, over two
+    (size, mtime_ns, footer_md5) identities; None on either side (no
+    prior row, a vanished file) is a change. Precedence:
+      1. size differs → changed;
+      2. footer_md5 known on both sides → CONTENT decides: a real
+         same-size rewrite perturbs the footer (stats, offsets), while
+         an identical-content replace (backup restore, rsync without
+         timestamp preservation — mtime changes, bytes don't) is
+         unchanged;
+      3. md5 unknown on either side (legacy row) → mtime_ns decides
+         when both known (conservative: a legacy row with a fresh
+         mtime counts as changed), else unchanged (size-only, the
+         pre-migration convention).
+    ``current``'s md5 may be a zero-argument callable, called only
+    when the sizes match and the recorded md5 is known — a caller
+    reading it from disk pays that read only when it decides."""
+    if recorded is None or current is None:
+        return True
+    size, mtime_ns, md5 = current
+    if recorded[0] != size:
+        return True
+    if recorded[2] is not None and md5 is not None:
+        return recorded[2] != (md5() if callable(md5) else md5)
+    return (recorded[1] is not None and mtime_ns is not None
+            and recorded[1] != mtime_ns)
+
+
 def _f32_step(f: float, up: bool) -> float:
     import struct
     b = struct.unpack("<I", struct.pack("<f", f))[0]
@@ -921,7 +950,7 @@ class SqliteIndexCatalog(SidecarReads):
             "mtime_ns, footer_md5, row_count "
             "FROM file_statistics WHERE file_name = ?",
             (fs.file_name,))
-        prior = [(old[0][2], old[0][3], old[0][4])] if old else []
+        prior = tuple(old[0][2:5]) if old else None
         delta = ((0, fs.row_group_count - old[0][1],
                   fs.row_count - old[0][5]) if old
                  else (1, fs.row_group_count, fs.row_count))
@@ -937,31 +966,11 @@ class SqliteIndexCatalog(SidecarReads):
         # bytes (a full non-incremental rebuild, a reopen with
         # incremental_attach=False) must preserve them, or every
         # logically deleted row silently resurrects on a plain
-        # rebuild over a persisted catalog. Change detection, in
-        # precedence order:
-        #   1. size differs → changed (the old convention);
-        #   2. footer_md5 known on both sides → CONTENT decides: a
-        #      real same-size rewrite perturbs the footer (stats,
-        #      offsets) and drops the stale DV, while an
-        #      identical-content replace (backup restore, rsync
-        #      without timestamp preservation — mtime changes,
-        #      bytes don't) PRESERVES it, because dropping there
-        #      would silently resurrect the deleted rows;
-        #   3. md5 unknown on either side (legacy row) → fall back
-        #      to mtime_ns when both known, else size-only.
-        # The mtime stays the cheap refresh-skip trigger
-        # (build_index); the md5 is the retention judge.
-        if not prior:
-            changed = True
-        elif prior[0][0] != fs.file_size_bytes:
-            changed = True
-        elif prior[0][2] is not None and fs.footer_md5 is not None:
-            changed = prior[0][2] != fs.footer_md5
-        else:
-            changed = (prior[0][1] is not None
-                       and fs.mtime_ns is not None
-                       and prior[0][1] != fs.mtime_ns)
-        if changed:
+        # rebuild over a persisted catalog — _bytes_changed judges
+        # (the mtime stays the cheap refresh-skip trigger in
+        # build_index; the footer md5 is the retention judge).
+        if _bytes_changed(
+                prior, (fs.file_size_bytes, fs.mtime_ns, fs.footer_md5)):
             for dv_tbl in ("deletion_vectors", "dv_rg_adjust",
                            "dv_sum_adjust"):
                 self._exec(

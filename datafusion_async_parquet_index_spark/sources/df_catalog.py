@@ -34,7 +34,9 @@ from pyspark.sql import types as T
 
 from ..plans.expr import Expr
 from ..session import local_frame
-from .catalog import FileStats, RowGroupStats, _merge_dv_ranges
+from .catalog import (
+    FileStats, RowGroupStats, _bytes_changed, _merge_dv_ranges,
+)
 from .sidecars import STATISTICS, SidecarReads
 
 # type-category -> Spark type for {col}_min / {col}_max (unsigned ints
@@ -140,23 +142,12 @@ class DataFrameIndexCatalog(SidecarReads):
                 store.pop(fs.file_name, None)
         # deletion vectors are DML state: they die only with CHANGED
         # bytes; a re-index of unchanged bytes (a full rebuild over a
-        # persisted catalog) preserves them — the same size →
-        # footer_md5 → mtime_ns precedence as the SQLite backend, so a
-        # same-size rewrite (different footer bytes) drops the stale
-        # DV while an identical-content replace (fresh mtime, same
-        # bytes) keeps it
-        if prior is None:
-            changed = True
-        elif prior[0].file_size_bytes != fs.file_size_bytes:
-            changed = True
-        elif (prior[0].footer_md5 is not None
-              and fs.footer_md5 is not None):
-            changed = prior[0].footer_md5 != fs.footer_md5
-        else:
-            changed = (prior[0].mtime_ns is not None
-                       and fs.mtime_ns is not None
-                       and prior[0].mtime_ns != fs.mtime_ns)
-        if changed:
+        # persisted catalog) preserves them — _bytes_changed, the
+        # rule the SQLite backend applies too
+        if _bytes_changed(
+                prior and (prior[0].file_size_bytes, prior[0].mtime_ns,
+                           prior[0].footer_md5),
+                (fs.file_size_bytes, fs.mtime_ns, fs.footer_md5)):
             self._drop_dv_state(fs.file_name)
         self._df = None
 

@@ -765,27 +765,28 @@ _MAX_WORKERS = 8
 
 
 def _fan_out(unit, items: Sequence, plan, spark=None,
-             distributed_threshold: Optional[int] = None,
-             max_workers: Optional[int] = None) -> list:
+             distributed_threshold: Optional[int] = None) -> list:
     """``[unit(item, plan) for item in items]``, fanned out per the
     rule above: few items overlap their (latency-bound, GIL-releasing)
     Parquet I/O on driver threads, the "async" maintenance posture of
     the reference's tokio loop (index.rs:179); many items run as one
     Spark job with ``plan`` broadcast, and the results (tiny:
     O(row groups) per file) come back to the driver. ``unit`` must be
-    a module-level function so executors unpickle it by reference."""
+    a module-level function so executors unpickle it by reference.
+    ``distributed_threshold`` overrides the item count at which the
+    executors take over (compaction lowers it to 1 past the driver's
+    row-group budget)."""
     if distributed_threshold is None:
         distributed_threshold = _DISTRIBUTED_THRESHOLD
-    if max_workers is None:
-        max_workers = _MAX_WORKERS
     if spark is not None and len(items) >= distributed_threshold:
         plan_b = spark.sparkContext.broadcast(plan)
         return (spark.sparkContext.parallelize(items, min(len(items), 256))
                 .map(lambda it, _u=unit, _b=plan_b: _u(it, _b.value))
                 .collect())
-    if len(items) > 1 and max_workers > 1:
+    if len(items) > 1:
         from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as ex:
+        with ThreadPoolExecutor(
+                max_workers=min(_MAX_WORKERS, len(items))) as ex:
             return list(ex.map(lambda it: unit(it, plan), items))
     return [unit(it, plan) for it in items]
 
@@ -811,9 +812,7 @@ def build_index(
     files: Iterable[str],
     index_columns: Sequence[str],
     spark=None,
-    distributed_threshold: Optional[int] = None,
     incremental: bool = False,
-    max_workers: Optional[int] = None,
     bloom_columns: Optional[Sequence[str]] = None,
     bloom_fpp: float = 0.01,
     token_bloom_columns: Optional[Sequence[str]] = None,
@@ -843,19 +842,20 @@ def build_index(
     all have the same schema", reference main.rs:228-237). Extraction
     fan-out, cheapest-first:
 
-    - incremental=True: files whose size already matches their catalog row
-      are skipped entirely (footer untouched), and catalog entries whose
-      file vanished are removed — the steady-state refresh cost is
-      O(changed files), not O(files). (Size-based change detection: a
-      rewrite that preserves the exact byte size is not detected — the
-      usual immutable-file lakehouse convention makes that safe; force a
-      full rebuild with incremental=False if files mutate in place.)
+    - incremental=True: files whose (size, mtime_ns) already match
+      their catalog row are skipped entirely (footer untouched), and
+      catalog entries whose file vanished are removed — the
+      steady-state refresh cost is O(changed files), not O(files).
+      A same-size rewrite is re-indexed: this engine rewrites through
+      os.replace, which always gives a fresh mtime. Catalog rows
+      without a recorded mtime (legacy) compare size-only; force a
+      full rebuild with incremental=False if files mutate in place
+      with a preserved mtime.
     - the rest go through ``_fan_out``: overlapped reads on a driver
-      thread pool (``max_workers``) below ``distributed_threshold``
-      files, one Spark job across executors at or above it (with a
-      SparkSession); stats rows come back to the driver (tiny:
-      O(row_groups)) for the transactional catalog write. Both
-      default to the module's fan-out rule (64 files, 8 threads).
+      thread pool (8 threads) below 64 files, one Spark job across
+      executors at or above it (with a SparkSession); stats rows come
+      back to the driver (tiny: O(row_groups)) for the transactional
+      catalog write.
     """
     files = list(files)
     if not files:
@@ -927,6 +927,6 @@ def build_index(
     part_values = partition_values or {}
     results = _fan_out(
         _extract_file, [(p, _name(p), part_values.get(p)) for p in files],
-        plan, spark, distributed_threshold, max_workers)
+        plan, spark)
     _store_entries(catalog, results)
     return schema

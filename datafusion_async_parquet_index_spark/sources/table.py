@@ -59,7 +59,9 @@ from ..plans.pruning import PruningRewriter, _literal_compatible
 from ..session import local_frame
 from . import stats as _stats
 from .answers import STATS_EXACT_MAX_BYTES, CatalogAnswers
-from .catalog import ConcurrentWriteError, SqliteIndexCatalog, encode_value
+from .catalog import (
+    ConcurrentWriteError, SqliteIndexCatalog, _bytes_changed, encode_value,
+)
 from .stats import build_index, list_parquet_files
 
 _INTEGER_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -685,27 +687,9 @@ class IndexedParquetTable(CatalogAnswers):
         mtime, same bytes) keeps serving."""
         return self.catalog.create_snapshot()
 
-    @staticmethod
-    def _identity_changed(
-        recorded: tuple, current: Optional[tuple]
-    ) -> bool:
-        """True when two (size, mtime_ns, footer_md5) identities say
-        the file's BYTES changed (or it vanished: current None) —
-        size → footer_md5 → mtime_ns precedence, the exact
-        DV-retention rule upsert_file implements (catalog.py): size
-        differs → changed; md5 known on both sides → content decides;
-        else mtime decides when both known (conservative: a legacy row
-        with a fresh mtime refuses loudly rather than risk serving
-        stale positions); else size-only (the pre-migration
-        convention)."""
-        if current is None:
-            return True
-        if recorded[0] != current[0]:
-            return True
-        if recorded[2] is not None and current[2] is not None:
-            return recorded[2] != current[2]
-        return (recorded[1] is not None and current[1] is not None
-                and recorded[1] != current[1])
+    # snapshot reconstruction judges a recorded identity against the
+    # live catalog's with the catalog's own DV-retention rule
+    _identity_changed = staticmethod(_bytes_changed)
 
     def _snapshot_guard(self, as_of: int) -> Dict[str, int]:
         """The snapshot's {file: size}, after verifying every recorded
@@ -2490,18 +2474,12 @@ class IndexedParquetTable(CatalogAnswers):
         # per recorded file and only runs when sizes already match.
         v0 = self._dml_begin()
         recorded = self.catalog.snapshot_manifest(snapshot_id)
-        for name, (size, mt, md5) in sorted(recorded.items()):
+        for name, ident in sorted(recorded.items()):
             p = os.path.join(self.data_dir, name)
             st = os.stat(p) if os.path.exists(p) else None
-            if st is None or st.st_size != size:
-                changed = True
-            elif md5 is not None:
-                changed = _stats._footer_md5(p, st.st_size) != md5
-            elif mt is not None:
-                changed = st.st_mtime_ns != mt
-            else:
-                changed = False   # pre-migration row: size-only
-            if changed:
+            if _bytes_changed(ident, st and (
+                    st.st_size, st.st_mtime_ns,
+                    lambda: _stats._footer_md5(p, st.st_size))):
                 raise ValueError(
                     f"snapshot {snapshot_id} cannot be reconstructed: "
                     f"recorded file {name!r} changed or vanished "

@@ -301,7 +301,7 @@ def test_distributed_build_matches_threaded(spark, tmp_path):
     def build(use_spark):
         cat = SqliteIndexCatalog()
         build_index(cat, files, ["v", "x"],
-                    spark=use_spark, distributed_threshold=64,
+                    spark=use_spark,
                     bloom_columns=["v"], token_bloom_columns=["body"],
                     sum_columns=["v"], nan_count_columns=["x"],
                     hist_columns={"v": (0, 679, 8)},

@@ -267,12 +267,15 @@ def test_incremental_persisted_store_roundtrip(spark, sf_dir, tmp_path, monkeypa
     incremental result exactly, and the store layout must be the
     documented two-table form (signatures + band-partitioned bands)."""
     import os
+    import tempfile
 
     from datafusion_async_parquet_index_spark.operators.dedup import (
-        SIGSTORE_ENV, dedup_incremental, dedup_incremental_persisted,
+        dedup_incremental, dedup_incremental_persisted,
         signature_store_dir,
     )
-    monkeypatch.setenv(SIGSTORE_ENV, str(tmp_path / "sigstore"))
+    # an isolated store: every persisted artifact lives under the
+    # temp root
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     mem = {(r.new_id, r.corpus_id): r.est_jaccard
            for r in dedup_incremental(spark, str(sf_dir)).collect()}
     per = {(r.new_id, r.corpus_id): r.est_jaccard

@@ -391,20 +391,23 @@ def test_stream_dedup_against_persisted_store_matches_batch(
     signature store, raw corpus never touched) reproduces
     dedup_incremental exactly across micro-batch boundaries."""
     import os
+    import tempfile
 
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )
 
     from datafusion_async_parquet_index_spark.operators.dedup import (
-        NEW_BATCH_MOD, SIGSTORE_ENV, dedup_incremental,
+        NEW_BATCH_MOD, dedup_incremental,
         signature_store_dir, write_signature_store,
     )
     from datafusion_async_parquet_index_spark.streaming import (
         dedup_against_store_stream,
     )
 
-    monkeypatch.setenv(SIGSTORE_ENV, str(tmp_path / "sigstore"))
+    # an isolated store: every persisted artifact lives under the
+    # temp root
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     is_new = F.col("doc_id") % NEW_BATCH_MOD == 0
     store = signature_store_dir(sf_dir)
