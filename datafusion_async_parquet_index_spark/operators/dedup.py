@@ -1650,15 +1650,14 @@ def read_signature_store(spark: SparkSession, store_dir: str):
 def _corpus_signature_store(spark: SparkSession, sf_dir: str):
     """Ensure the persisted store exists for the CORPUS side of the
     incremental split (doc_id % NEW_BATCH_MOD != 0) and return it as
-    parquet-backed DataFrames. Existence is checked via the _SUCCESS
-    markers both writes leave; the per-session memo only skips the
-    os.path checks, never the disk."""
+    parquet-backed DataFrames. The store is published whole
+    (ensure_complete), so its directory existing means both writes
+    finished; the per-session memo only skips that check."""
     from .util import ensure_complete
 
     store = signature_store_dir(sf_dir)
     memoized(spark, "sigstore", store, lambda: ensure_complete(
-        store, [("signatures", "_SUCCESS"), ("bands", "_SUCCESS")],
-        lambda d: write_signature_store(
+        store, lambda d: write_signature_store(
             read_table(spark, sf_dir, "documents").filter(
                 F.col("doc_id") % NEW_BATCH_MOD != 0), d)))
     return read_signature_store(spark, store)
@@ -1693,14 +1692,10 @@ def _docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     micro-batches of 'arriving' documents."""
     import time as _time
 
+    from ..sources.layout import write_one_file
     from .util import artifact_dir, ensure_complete
 
-    markers = [f"batch{i}.parquet" for i in range(3)]
-
     def _write(dd):
-        import shutil
-
-        os.makedirs(dd, exist_ok=True)
         docs = (read_table(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") % NEW_BATCH_MOD == 0)
                 .select("doc_id", "text"))
@@ -1708,21 +1703,16 @@ def _docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
         step = (hi - lo) // 3 + 1
         now = _time.time()
         for i in range(3):
-            tmp = os.path.join(dd, f"_stage{i}")
-            (docs.filter((F.col("doc_id") >= lo + i * step)
-                         & (F.col("doc_id") < lo + (i + 1) * step))
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            part = next(f for f in sorted(os.listdir(tmp))
-                        if f.endswith(".parquet"))
             dst = os.path.join(dd, f"batch{i}.parquet")
-            os.replace(os.path.join(tmp, part), dst)
+            write_one_file(docs.filter(
+                (F.col("doc_id") >= lo + i * step)
+                & (F.col("doc_id") < lo + (i + 1) * step)), dst)
             os.utime(dst, (now + i, now + i))
-            shutil.rmtree(tmp, ignore_errors=True)
 
     d = artifact_dir("spark_graft_stream_docs",
                      os.path.join(sf_dir, "documents.parquet"),
                      f"split3_mod{NEW_BATCH_MOD}_v1")
-    return ensure_complete(d, markers, _write)
+    return ensure_complete(d, _write)
 
 
 def dedup_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -800,12 +800,10 @@ def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     deterministic oldest-first micro-batches (no sleeping)."""
     import time as _time
 
+    from ..sources.layout import write_one_file
     from .util import artifact_dir, ensure_complete, ensure_epoch_nanos
 
-    markers = [f"batch{i}.parquet" for i in range(3)]
-
     def _write(dd):
-        os.makedirs(dd, exist_ok=True)
         ev = ensure_epoch_nanos(
             read_table(spark, sf_dir, "events")
             .select("event_id", "ts", "user_id", "event_type"))
@@ -813,21 +811,15 @@ def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
         step = (hi - lo) // 3 + 1
         now = _time.time()
         for i in range(3):
-            tmp = os.path.join(dd, f"_stage{i}")
-            (ev.filter((F.col("ts") >= lo + i * step)
-                       & (F.col("ts") < lo + (i + 1) * step))
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            part = next(f for f in sorted(os.listdir(tmp))
-                        if f.endswith(".parquet"))
             dst = os.path.join(dd, f"batch{i}.parquet")
-            os.replace(os.path.join(tmp, part), dst)
+            write_one_file(ev.filter((F.col("ts") >= lo + i * step)
+                                     & (F.col("ts") < lo + (i + 1) * step)),
+                           dst)
             os.utime(dst, (now + i, now + i))
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
 
     d = artifact_dir("spark_graft_stream_events",
                      os.path.join(sf_dir, "events.parquet"), "split3_v1")
-    return ensure_complete(d, markers, _write)
+    return ensure_complete(d, _write)
 
 
 SESSIONIZE_SENTINEL_USER = -1
@@ -850,14 +842,10 @@ def _sessionize_replay_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from .util import artifact_dir, ensure_complete
 
-    markers = [f"batch{i}.parquet" for i in range(3)] + [
-        "sentinel0.parquet", "sentinel1.parquet"]
-
     def _write(dd):
         import shutil
 
         base = _events_replay_dir(spark, sf_dir)
-        os.makedirs(dd, exist_ok=True)
         now = _time.time()
         for i in range(3):
             dst = os.path.join(dd, f"batch{i}.parquet")
@@ -881,7 +869,7 @@ def _sessionize_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     d = artifact_dir("spark_graft_stream_events",
                      os.path.join(sf_dir, "events.parquet"),
                      "split3_sentinel_v1")
-    return ensure_complete(d, markers, _write)
+    return ensure_complete(d, _write)
 
 
 def _run_stream_to_sink(spark: SparkSession, out_stream, sink: str,
@@ -1031,14 +1019,10 @@ def _dedup_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     is required of the operator, not hoped for."""
     import time as _time
 
+    from ..sources.layout import write_one_file
     from .util import artifact_dir, ensure_complete, ensure_epoch_nanos
 
-    markers = [f"batch{i}.parquet" for i in range(3)]
-
     def _write(dd):
-        import shutil
-
-        os.makedirs(dd, exist_ok=True)
         ev = ensure_epoch_nanos(
             read_table(spark, sf_dir, "events")
             .select("event_id", "ts", "user_id", "event_type"))
@@ -1057,19 +1041,14 @@ def _dedup_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             batch = parts[0]
             for p in parts[1:]:
                 batch = batch.unionAll(p)
-            tmp = os.path.join(dd, f"_stage{i}")
-            batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in sorted(os.listdir(tmp))
-                        if f.endswith(".parquet"))
             dst = os.path.join(dd, f"batch{i}.parquet")
-            os.replace(os.path.join(tmp, part), dst)
+            write_one_file(batch, dst)
             os.utime(dst, (now + i, now + i))
-            shutil.rmtree(tmp, ignore_errors=True)
 
     d = artifact_dir("spark_graft_stream_events",
                      os.path.join(sf_dir, "events.parquet"),
                      f"split3_dupes{DEDUP_REDELIVER_SEC}_v1")
-    return ensure_complete(d, markers, _write)
+    return ensure_complete(d, _write)
 
 
 def ev_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

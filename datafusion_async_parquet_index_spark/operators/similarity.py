@@ -895,7 +895,6 @@ def sim_ivf_layout_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         ensure_complete(
             layout,
-            ["_SUCCESS", ("_meta", "centroids", "_SUCCESS")],
             lambda d: write_ivf_layout(
                 read_table(spark, sf_dir, "embeddings"), d))
         return ivf_layout_topk(spark, layout, nprobe=1)
@@ -1368,7 +1367,7 @@ def sim_ivfpq_layout_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"mod={IVF_CENTROID_MOD}_m{PQ_M}k{PQ_K}")
 
     def build():
-        ensure_complete(layout, ["_SUCCESS"],
+        ensure_complete(layout,
                         lambda d: write_ivfpq_layout(spark, sf_dir, d))
         vec, cb = _pq_corpus(spark, sf_dir)
         dim = _embedding_dim(vec)
@@ -1894,25 +1893,19 @@ def sim_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     as all sim_* rows; the oracle recomputes over the flat table with
     the delete predicate negated."""
     import os
-    import shutil
     import tempfile
 
     from ..plans.expr import col as xcol
+    from ..sources.layout import write_one_file
     from ..sources.table import IndexedParquetTable
 
     def table():
         d = tempfile.mkdtemp(prefix="spark_graft_simlive_")
         emb = read_table(spark, sf_dir, "embeddings")
-        for i, half in enumerate((emb.filter(F.col("vec_id") % 2 == 0),
-                                  emb.filter(F.col("vec_id") % 2 == 1))):
-            tmp = os.path.join(d, f"_s{i}")
-            half.orderBy("vec_id").coalesce(1).write.mode(
-                "overwrite").parquet(tmp)
-            part = next(f for f in sorted(os.listdir(tmp))
-                        if f.endswith(".parquet"))
-            os.replace(os.path.join(tmp, part),
-                       os.path.join(d, f"half{i}.parquet"))
-            shutil.rmtree(tmp, ignore_errors=True)
+        for i in range(2):
+            write_one_file(emb.filter(F.col("vec_id") % 2 == i)
+                           .orderBy("vec_id"),
+                           os.path.join(d, f"half{i}.parquet"))
         t = IndexedParquetTable(spark, d, ["vec_id"])
         t.delete_where((xcol("vec_id") % 9) == 4)
         return t

@@ -369,7 +369,12 @@ def artifact_dir(name: str, src_file: str, params: str) -> str:
     build parameters, so a regenerated corpus or retuned parameter set
     gets a fresh store instead of silently reusing a stale one.  Shared
     by every on-disk store so the fingerprint recipe cannot drift
-    between them; ``TMPDIR`` is the one setting that moves them all."""
+    between them; ``TMPDIR`` is the one setting that moves them all.
+
+    The directory is published only through ``ensure_complete``, so it
+    exists only when complete.  The fingerprint carries a fixed
+    ``staged`` tag: a directory an earlier in-place writer may have
+    left half-written sits under another name and is never reused."""
     import hashlib
     import tempfile
 
@@ -381,23 +386,38 @@ def artifact_dir(name: str, src_file: str, params: str) -> str:
     st = os.stat(src_file)
     fp = hashlib.md5(
         f"{os.path.abspath(src_file)}|{st.st_size}|{int(st.st_mtime)}"
-        f"|{params}".encode()).hexdigest()[:12]
+        f"|{params}|staged".encode()).hexdigest()[:12]
     return os.path.join(base, fp)
 
 
-def ensure_complete(d: str, markers, writer) -> str:
-    """The one lazily-write-then-reuse rule for every persisted derived
-    artifact (signature store, IVF layout, partitioned/z-order query
-    layouts): rebuild via ``writer(d)`` unless EVERY marker path
-    exists. Centralized so the completeness check cannot drift between
-    stores — a partial write (missing any marker) always rebuilds.
+def ensure_complete(d: str, writer) -> str:
+    """The one publish rule for every persisted derived artifact
+    (signature store, IVF layouts, query layouts, replay feeds): ``d``
+    exists only when complete.  If ``d`` exists it is returned at once.
+    Otherwise ``writer(stage)`` fills a fresh private staging directory
+    beside ``d`` (same filesystem) and one ``os.rename(stage, d)``
+    publishes it — the staged-write-then-rename ordering of the DML
+    crash contract.  A process that loses the rename to another process
+    discards its stage and returns the winner's ``d``; a crash mid-write
+    leaves only a staging directory, never a partial ``d``."""
+    import shutil
+    import tempfile
 
-    markers: iterable of path components relative to ``d``, each either
-    a str or a tuple of segments."""
-    def _p(m):
-        return os.path.join(d, *((m,) if isinstance(m, str) else m))
-    if not all(os.path.exists(_p(m)) for m in markers):
-        writer(d)
+    if os.path.exists(d):
+        return d
+    parent = os.path.dirname(d)
+    os.makedirs(parent, exist_ok=True)
+    stage = tempfile.mkdtemp(dir=parent,
+                             prefix=os.path.basename(d) + ".stage-")
+    try:
+        writer(stage)
+        try:
+            os.rename(stage, d)
+        except OSError:
+            if not os.path.isdir(d):
+                raise  # not a lost race: nothing was published
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return d
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .plans.expr import col as xcol
 from .session import local_frame
 from .sources.catalog import SqliteIndexCatalog
+from .sources.layout import write_one_file
 from .sources.table import IndexedParquetTable
 
 # Every fixture table, layout and DML gate below is a session artifact
@@ -85,12 +86,11 @@ def _make_table(spark, sf_dir, table, index_columns, bloom_columns=(),
 
 def _layout_table(spark: SparkSession, sf_dir: str, namespace: str,
                   artifact: str, source: str, params: str, writer,
-                  markers=("_SUCCESS",), **table_kwargs
-                  ) -> IndexedParquetTable:
+                  **table_kwargs) -> IndexedParquetTable:
     """The persisted-layout fixture chain: the layout directory is
-    ``artifact_dir(artifact, <source table file>, params)``,
-    ``writer(d)`` writes it unless every marker exists
-    (ensure_complete), and the IndexedParquetTable over it
+    ``artifact_dir(artifact, <source table file>, params)``, published
+    once by ``writer`` through ``ensure_complete`` (staged, then one
+    rename), and the IndexedParquetTable over it
     (``table_kwargs``) is memoized per session under
     (namespace, layout directory)."""
     from .operators.util import artifact_dir, ensure_complete, memoized
@@ -99,7 +99,7 @@ def _layout_table(spark: SparkSession, sf_dir: str, namespace: str,
         artifact, os.path.join(sf_dir, f"{source}.parquet"), params)
 
     def build():
-        ensure_complete(layout, markers, writer)
+        ensure_complete(layout, writer)
         return IndexedParquetTable(spark, layout, **table_kwargs)
 
     return memoized(spark, namespace, layout, build)
@@ -1153,11 +1153,14 @@ def _bucketed_orders_customer(spark: SparkSession, sf_dir: str):
     """Both join sides written ONCE per corpus as bucketed tables
     (bucketBy + sortBy on the join key, same bucket count) so the join
     needs no Exchange on either side — the co-located-join layout a
-    100 TB deployment maintains for its hottest fact-dim keys. Bucket
-    metadata lives in the session catalog, so each new session rewrites
-    the layout once (cheap, memoized thereafter); table names embed the
-    artifact fingerprint so two corpora never collide."""
-    from .operators.util import artifact_dir, memoized
+    100 TB deployment maintains for its hottest fact-dim keys. The
+    bucket files are published once through ``ensure_complete``: a
+    temporary external table writes them into the stage and is dropped
+    again. Bucket metadata lives in the session catalog, so each new
+    session registers its table over the published directory with
+    ``CREATE TABLE ... CLUSTERED BY ... LOCATION``; table names embed
+    the artifact fingerprint so two corpora never collide."""
+    from .operators.util import artifact_dir, ensure_complete, memoized
 
     def build():
         names = []
@@ -1168,11 +1171,23 @@ def _bucketed_orders_customer(spark: SparkSession, sf_dir: str):
                 os.path.join(sf_dir, f"{tbl}.parquet"),
                 f"{key}_b{Q56_BUCKETS}")
             name = f"bkt_{tbl}_{os.path.basename(d)}"
+
+            src = _read(spark, sf_dir, tbl)
+
+            def _write(stage, src=src, key=key, name=name):
+                (src.write.bucketBy(Q56_BUCKETS, key).sortBy(key)
+                 .option("path", stage).mode("overwrite")
+                 .format("parquet").saveAsTable(f"{name}_stage"))
+                spark.sql(f"DROP TABLE {name}_stage")  # files stay
+
+            ensure_complete(d, _write)
             if not spark.catalog.tableExists(name):
-                (_read(spark, sf_dir, tbl)
-                 .write.bucketBy(Q56_BUCKETS, key).sortBy(key)
-                 .option("path", d).mode("overwrite").format("parquet")
-                 .saveAsTable(name))
+                cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                                 for f in src.schema)
+                spark.sql(
+                    f"CREATE TABLE {name} ({cols}) USING parquet "
+                    f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+                    f"INTO {Q56_BUCKETS} BUCKETS LOCATION '{d}'")
             names.append(name)
         return tuple(names)
 
@@ -1596,28 +1611,16 @@ def q72_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (even keys have NULL cents => only odd keys can match); IS NULL
     counts the old era exactly."""
     def _write(d):
-        os.makedirs(d, exist_ok=True)
         base = _read(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice")
-        (base.filter(F.col("o_orderkey") % 2 == 0)
-         .select("o_orderkey")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(d, "era0")))
-        (base.filter(F.col("o_orderkey") % 2 == 1)
-         .select("o_orderkey",
-                 F.round(F.col("o_totalprice") * 100).cast("long")
-                 .alias("price_cents"))
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(d, "era1")))
-        import shutil
-        for era in ("era0", "era1"):
-            src = os.path.join(d, era)
-            part = next(f for f in sorted(os.listdir(src))
-                        if f.endswith(".parquet"))
-            os.replace(os.path.join(src, part),
-                       os.path.join(d, f"{era}.parquet"))
-            shutil.rmtree(src, ignore_errors=True)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
+        write_one_file(base.filter(F.col("o_orderkey") % 2 == 0)
+                       .select("o_orderkey"),
+                       os.path.join(d, "era0.parquet"))
+        write_one_file(base.filter(F.col("o_orderkey") % 2 == 1)
+                       .select("o_orderkey",
+                               F.round(F.col("o_totalprice") * 100)
+                               .cast("long").alias("price_cents")),
+                       os.path.join(d, "era1.parquet"))
 
     t = _layout_table(
         spark, sf_dir, "evolved_orders", "spark_graft_evolved", "orders",
@@ -1648,7 +1651,7 @@ def q73_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     row groups stay tiny); this row proves the repair loop preserves
     correctness and pruning in one pass. The oracle recomputes the
     range aggregate from the flat table."""
-    from .operators.util import artifact_dir, memoized
+    from .operators.util import artifact_dir, ensure_complete, memoized
     from .sources.layout import compact_to
 
     t = _cents_orders(spark, sf_dir)
@@ -1657,14 +1660,13 @@ def q73_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(sf_dir, "orders.parquet"), "cents_compact_v1")
 
     def compacted():
-        marker = os.path.join(dest, "_COMPACTED")
-        if os.path.exists(marker):
-            return IndexedParquetTable(
-                spark, dest, index_columns=list(t.index_schema))
-        t2 = compact_to(t, dest, ["price_cents"],
-                        target_file_bytes=1 << 30, row_group_bytes=1 << 15)
-        open(marker, "w").close()
-        return t2
+        # compact_to's table over the staging dir is dropped: the
+        # published directory gets its own below
+        ensure_complete(dest, lambda d: compact_to(
+            t, d, ["price_cents"],
+            target_file_bytes=1 << 30, row_group_bytes=1 << 15))
+        return IndexedParquetTable(
+            spark, dest, index_columns=list(t.index_schema))
 
     t2 = memoized(spark, "compacted_orders", dest, compacted)
     rng = ((xcol("price_cents") >= 10_000_000)
@@ -1717,21 +1719,17 @@ def q74_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.round(F.col("o_totalprice") * 100).cast("long")
             .alias("price_cents"))
-        def _one_file(df, name):
-            tmp = os.path.join(d, f"_stage_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in sorted(os.listdir(tmp))
-                        if f.endswith(".parquet"))
-            os.replace(os.path.join(tmp, part), os.path.join(d, name))
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
-        _one_file(base.filter(F.col("o_orderkey") % 3 == 1), "base1.parquet")
-        _one_file(base.filter(F.col("o_orderkey") % 3 == 2), "base2.parquet")
+
+        write_one_file(base.filter(F.col("o_orderkey") % 3 == 1),
+                       os.path.join(d, "base1.parquet"))
+        write_one_file(base.filter(F.col("o_orderkey") % 3 == 2),
+                       os.path.join(d, "base2.parquet"))
         t = IndexedParquetTable(spark, d, index_columns=["price_cents"])
         n_before = t.count_rows()
         assert len(t._files) == 2
         # tonight's arrival: invisible until the maintenance pass runs
-        _one_file(base.filter(F.col("o_orderkey") % 3 == 0), "new.parquet")
+        write_one_file(base.filter(F.col("o_orderkey") % 3 == 0),
+                       os.path.join(d, "new.parquet"))
         assert t.count_rows() == n_before, \
             "unindexed arrival must not leak into catalog answers"
         t.refresh()
@@ -1767,21 +1765,15 @@ def _time_travel_table(spark: SparkSession, sf_dir: str):
             F.round(F.col("o_totalprice") * 100).cast("long")
             .alias("price_cents"))
 
-        def _one_file(df, name):
-            import shutil
-            tmp = os.path.join(d, f"_stage_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in sorted(os.listdir(tmp))
-                        if f.endswith(".parquet"))
-            os.replace(os.path.join(tmp, part), os.path.join(d, name))
-            shutil.rmtree(tmp, ignore_errors=True)
-
-        _one_file(base.filter(F.col("o_orderkey") % 3 == 1), "base1.parquet")
-        _one_file(base.filter(F.col("o_orderkey") % 3 == 2), "base2.parquet")
+        write_one_file(base.filter(F.col("o_orderkey") % 3 == 1),
+                       os.path.join(d, "base1.parquet"))
+        write_one_file(base.filter(F.col("o_orderkey") % 3 == 2),
+                       os.path.join(d, "base2.parquet"))
         t = IndexedParquetTable(spark, d, index_columns=["price_cents"],
                                 sum_columns=["price_cents"])
         s1 = t.snapshot()
-        _one_file(base.filter(F.col("o_orderkey") % 3 == 0), "new.parquet")
+        write_one_file(base.filter(F.col("o_orderkey") % 3 == 0),
+                       os.path.join(d, "new.parquet"))
         t.refresh()
         assert len(t._files) == 3
         s2 = t.snapshot()
@@ -1913,15 +1905,8 @@ def q88_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay = tempfile.mkdtemp(prefix="spark_graft_ingest_replay_")
         now = _time.time()
         for i in range(3):
-            tmp = os.path.join(replay, f"_stage_{i}")
-            (base.filter(F.col("o_orderkey") % 3 == i).coalesce(1)
-             .write.mode("overwrite").parquet(tmp))
-            part = next(p for p in sorted(os.listdir(tmp))
-                        if p.endswith(".parquet"))
             dst = os.path.join(replay, f"batch{i}.parquet")
-            os.replace(os.path.join(tmp, part), dst)
-            import shutil
-            shutil.rmtree(tmp, ignore_errors=True)
+            write_one_file(base.filter(F.col("o_orderkey") % 3 == i), dst)
             os.utime(dst, (now + i, now + i))
         table_dir = tempfile.mkdtemp(prefix="spark_graft_ingest_table_")
         t = IndexedParquetTable(spark, table_dir,
@@ -2044,25 +2029,16 @@ def _topk_orders(spark: SparkSession, sf_dir: str):
     DuckDB oracle can rebuild the exact per-row-group top-k summaries
     relationally. Shared fixture for q86."""
     def _write(d):
-        import shutil
         base = _read(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey")
         for i in range(4):
-            tmp = os.path.join(d, f"_stage_{i}")
-            (base.filter(F.col("o_orderkey") % 4 == i).coalesce(1)
-             .write.option("parquet.block.size", str(1 << 30))
-             .mode("overwrite").parquet(tmp))
-            part = next(p for p in sorted(os.listdir(tmp))
-                        if p.endswith(".parquet"))
-            os.replace(os.path.join(tmp, part),
-                       os.path.join(d, f"mod{i}.parquet"))
-            shutil.rmtree(tmp, ignore_errors=True)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
+            write_one_file(base.filter(F.col("o_orderkey") % 4 == i),
+                           os.path.join(d, f"mod{i}.parquet"),
+                           block_bytes=1 << 30)
 
     t = _layout_table(
         spark, sf_dir, "topk_orders", "spark_graft_topk_layout", "orders",
         "topk_mod4_v1", _write,
-        ["_SUCCESS"] + [f"mod{i}.parquet" for i in range(4)],
         index_columns=["o_orderkey"], topk_columns=["o_custkey"],
         topk_k=TOPK_HH_K)
     # one row group per file, or the oracle's %4 → row-group map (and
@@ -2079,28 +2055,19 @@ def _topk_status_orders(spark: SparkSession, sf_dir: str):
     oracle can rebuild every per-row-group top-k summary relationally.
     Fixture for q87 (grouped heavy hitters)."""
     def _write(d):
-        import shutil
         base = _read(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_custkey")
         statuses = sorted(r[0] for r in
                           base.select("o_orderstatus").distinct().collect())
         for s in statuses:
             for i in range(2):
-                part = base.filter(
-                    (F.col("o_orderstatus") == s)
-                    & (F.col("o_orderkey") % 2 == i)).drop("o_orderstatus")
-                tmp = os.path.join(d, f"_stage_{s}_{i}")
-                (part.coalesce(1)
-                 .write.option("parquet.block.size", str(1 << 30))
-                 .mode("overwrite").parquet(tmp))
-                src = next(p for p in sorted(os.listdir(tmp))
-                           if p.endswith(".parquet"))
-                dest = os.path.join(d, f"o_orderstatus={s}",
-                                    f"slice{i}.parquet")
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.replace(os.path.join(tmp, src), dest)
-                shutil.rmtree(tmp, ignore_errors=True)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
+                write_one_file(
+                    base.filter((F.col("o_orderstatus") == s)
+                                & (F.col("o_orderkey") % 2 == i))
+                    .drop("o_orderstatus"),
+                    os.path.join(d, f"o_orderstatus={s}",
+                                 f"slice{i}.parquet"),
+                    block_bytes=1 << 30)
 
     t = _layout_table(
         spark, sf_dir, "topk_status_orders", "spark_graft_topk_status",
@@ -2530,27 +2497,17 @@ def _dict_split_orders(spark: SparkSession, sf_dir: str):
     CONTAINS the absent 'O'), file b.parquet holds every O row. The
     shape where min/max is structurally blind — only the recorded value
     SET knows 'O' is missing from a. Shared by q82's two refutations."""
-    import shutil
-
     def _write(d):
         df = _read(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus")
         for name, part in (
                 ("a", df.filter(F.col("o_orderstatus").isin("F", "P"))),
                 ("b", df.filter(F.col("o_orderstatus") == "O"))):
-            tmp = os.path.join(d, f"_tmp_{name}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = next(p for p in sorted(os.listdir(tmp))
-                       if p.endswith(".parquet"))
-            os.replace(os.path.join(tmp, src),
-                       os.path.join(d, f"{name}.parquet"))
-            shutil.rmtree(tmp)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
+            write_one_file(part, os.path.join(d, f"{name}.parquet"))
 
     return _layout_table(
         spark, sf_dir, "dict_split_orders", "spark_graft_dict_split",
         "orders", "dict_split_v1", _write,
-        ["_SUCCESS", "a.parquet", "b.parquet"],
         index_columns=["o_orderstatus"], dict_columns=["o_orderstatus"])
 
 
@@ -2605,22 +2562,9 @@ def q82_dict_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_eq BIGINT, sum_eq BIGINT, n_notin BIGINT, sum_notin BIGINT")
 
 
-
-def _stage_one_file(df, dirname: str, name: str,
-                    block_bytes: int = 1 << 16) -> None:
-    """Write df as EXACTLY ONE parquet file at dirname/name (atomic
-    rename from a staging dir) — the deterministic-layout primitive
-    every catalog-family fixture uses. block_bytes maps to
-    parquet.block.size (small => several row groups per file)."""
-    import shutil
-
-    tmp = os.path.join(dirname, f"_stage_{name}")
-    (df.coalesce(1).write.mode("overwrite")
-     .option("parquet.block.size", str(block_bytes)).parquet(tmp))
-    part = next(f for f in sorted(os.listdir(tmp))
-                if f.endswith(".parquet"))
-    os.replace(os.path.join(tmp, part), os.path.join(dirname, name))
-    shutil.rmtree(tmp, ignore_errors=True)
+# parquet.block.size of the catalog-family fixtures: several row groups
+# per file
+_SMALL_ROW_GROUPS = 1 << 16
 
 
 def _dv_fixture(spark: SparkSession, sf_dir: str, memo_key: str,
@@ -2643,8 +2587,9 @@ def _dv_fixture(spark: SparkSession, sf_dir: str, memo_key: str,
         names = (["even.parquet", "odd.parquet"] if n_files == 2
                  else [f"part{i}.parquet" for i in range(n_files)])
         for i in range(n_files):
-            _stage_one_file(base.filter(F.col("o_orderkey") % n_files == i)
-                            .orderBy("o_orderkey"), d, names[i])
+            write_one_file(base.filter(F.col("o_orderkey") % n_files == i)
+                           .orderBy("o_orderkey"),
+                           os.path.join(d, names[i]), _SMALL_ROW_GROUPS)
         t = IndexedParquetTable(spark, d, ["o_orderkey", "cents"],
                                 sum_columns=["cents"])
         return t, base
@@ -2836,10 +2781,10 @@ def q95_dedup_delete_vectors(spark: SparkSession, sf_dir: str
         d = tempfile.mkdtemp(prefix="spark_graft_dvdedup_")
         docs = _read(spark, sf_dir, "documents").select(
             "doc_id", "text")
-        _stage_one_file(docs.filter(F.col("doc_id") % 2 == 0)
-                        .orderBy("doc_id"), d, "even.parquet")
-        _stage_one_file(docs.filter(F.col("doc_id") % 2 == 1)
-                        .orderBy("doc_id"), d, "odd.parquet")
+        for i, name in enumerate(["even.parquet", "odd.parquet"]):
+            write_one_file(docs.filter(F.col("doc_id") % 2 == i)
+                           .orderBy("doc_id"), os.path.join(d, name),
+                           _SMALL_ROW_GROUPS)
         t = IndexedParquetTable(spark, d, ["doc_id"],
                                 sum_columns=["doc_id"])
         fp = F.md5(F.substring("text", 1, 40)).alias("fp")
@@ -2892,10 +2837,10 @@ def q96_stream_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long")
             .alias("cents"))
         d = tempfile.mkdtemp(prefix="spark_graft_dvstream_")
-        _stage_one_file(base.filter(F.col("o_orderkey") % 2 == 0)
-                        .orderBy("o_orderkey"), d, "even.parquet")
-        _stage_one_file(base.filter(F.col("o_orderkey") % 2 == 1)
-                        .orderBy("o_orderkey"), d, "odd.parquet")
+        for i, name in enumerate(["even.parquet", "odd.parquet"]):
+            write_one_file(base.filter(F.col("o_orderkey") % 2 == i)
+                           .orderBy("o_orderkey"), os.path.join(d, name),
+                           _SMALL_ROW_GROUPS)
         t = IndexedParquetTable(spark, d, ["o_orderkey", "cents"],
                                 sum_columns=["cents"])
         # the retraction feed: keys of every order with cents % 10 = 3,
@@ -2905,11 +2850,10 @@ def q96_stream_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_orderkey")
         now = _time.time()
         for i in range(3):
-            _stage_one_file(
-                victims.filter(F.col("o_orderkey") % 3 == i),
-                feed, f"batch{i}.parquet")
-            os.utime(os.path.join(feed, f"batch{i}.parquet"),
-                     (now + i, now + i))
+            dst = os.path.join(feed, f"batch{i}.parquet")
+            write_one_file(victims.filter(F.col("o_orderkey") % 3 == i),
+                           dst, _SMALL_ROW_GROUPS)
+            os.utime(dst, (now + i, now + i))
         snaps: list = []
         deleted: list = []
 
@@ -3120,9 +3064,10 @@ def q100_optimize_lifecycle(spark: SparkSession, sf_dir: str
             F.round(F.col("o_totalprice") * 100).cast("long")
             .alias("cents"))
         for i in range(6):
-            _stage_one_file(base.filter(F.col("o_orderkey") % 6 == i)
-                            .orderBy("o_orderkey"), d,
-                            f"part{i}.parquet")
+            write_one_file(base.filter(F.col("o_orderkey") % 6 == i)
+                           .orderBy("o_orderkey"),
+                           os.path.join(d, f"part{i}.parquet"),
+                           _SMALL_ROW_GROUPS)
         t = IndexedParquetTable(spark, d, ["o_orderkey", "cents"],
                                 sum_columns=["cents"])
         t.update_where((xcol("cents") % 13) == 0,
@@ -3376,8 +3321,9 @@ def q106_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long")
             .alias("cents"))
         for i, name in enumerate(["even.parquet", "odd.parquet"]):
-            _stage_one_file(base.filter(F.col("o_orderkey") % 2 == i)
-                            .orderBy("o_orderkey"), d, name)
+            write_one_file(base.filter(F.col("o_orderkey") % 2 == i)
+                           .orderBy("o_orderkey"), os.path.join(d, name),
+                           _SMALL_ROW_GROUPS)
         t = IndexedParquetTable(spark, d, ["o_orderkey", "cents"],
                                 sum_columns=["cents"])
         t2 = IndexedParquetTable(spark, d, ["o_orderkey", "cents"],
@@ -3452,8 +3398,9 @@ def q105_append_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long")
             .alias("cents"))
         for i, name in enumerate(["even.parquet", "odd.parquet"]):
-            _stage_one_file(base.filter(F.col("o_orderkey") % 2 == i)
-                            .orderBy("o_orderkey"), d, name)
+            write_one_file(base.filter(F.col("o_orderkey") % 2 == i)
+                           .orderBy("o_orderkey"), os.path.join(d, name),
+                           _SMALL_ROW_GROUPS)
         # "disc" is requested as an index column BEFORE any file
         # carries it — build_index types it on first appearance
         t = IndexedParquetTable(spark, d,

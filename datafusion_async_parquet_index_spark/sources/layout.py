@@ -14,9 +14,36 @@ main.rs:93-100.)
 
 from __future__ import annotations
 
-from typing import Sequence
+import os
+import shutil
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
+
+
+def write_one_file(df: DataFrame, path: str,
+                   block_bytes: Optional[int] = None) -> None:
+    """Write ``df`` as EXACTLY ONE parquet file at ``path``: Spark
+    writes a single coalesced part file into ``_stage_<name>`` beside
+    ``path`` (underscore-prefixed, so listings skip it), one
+    ``os.replace`` moves the part file to ``path``, and the staging
+    directory is removed whether or not the write succeeded. The
+    package's one single-file writer: fixtures, replay feeds and
+    compaction's bin rewrites all land files through it.
+    ``block_bytes`` sets ``parquet.block.size`` (small => several row
+    groups per file); None keeps the writer's default."""
+    stage = os.path.join(os.path.dirname(path),
+                         "_stage_" + os.path.basename(path))
+    writer = df.coalesce(1).write.mode("overwrite")
+    if block_bytes is not None:
+        writer = writer.option("parquet.block.size", str(block_bytes))
+    try:
+        writer.parquet(stage)
+        part = next(f for f in sorted(os.listdir(stage))
+                    if f.endswith(".parquet"))
+        os.replace(os.path.join(stage, part), path)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def compact_to(

@@ -198,8 +198,9 @@ class SidecarReads:
 
     def get_blooms(self, column: str
                    ) -> Dict[Tuple[str, int], Tuple[int, int, bytes]]:
-        """{(file_name, row_group): (m_bits, k, bits)} for one column.
-        O(row_groups) rows, independent of data size."""
+        """{(file_name, row_group): (m_bits, k, bits)} for one column:
+        the column's filter for every row group in the catalog, with no
+        restriction to a scan's surviving row groups."""
         return self._sidecar(BLOOMS, column)
 
     def get_sums(self, column: str

@@ -167,8 +167,7 @@ def test_optimize_many_bins_concurrent_staging(spark, tmp_path):
     # 6 bins total, staged by the thread pool
     sizes = [f[1] for f in t.catalog.all_files()]
     target = 2 * max(sizes) + 1
-    packed = t.compact_small_files(target_bytes=target,
-                                   max_concurrent_bins=4)
+    packed = t.compact_small_files(target_bytes=target)
     assert packed == 6
     names = sorted(f[0] for f in t.catalog.all_files())
     assert names == sorted(
