@@ -25,747 +25,88 @@ def entry(spark: SparkSession) -> DataFrame:
     return q3_or_range_agg(spark, "/root/testdata/sf0.001")
 
 
-# The driver's CORRECTNESS gate records only the FIRST 50 entries of
-# ``queries()`` in iteration order.  With 78+ registered queries the
-# order below decides which operators get a driver oracle row this
-# round (VERDICT r2 ask #1).  Priority:
-#   1. operators never driver-verified in any round (r1/r2 gap),
-#   2. operators whose modules changed since their last green row,
-#   3. freshly re-verified (r2-green) entries, relational tail last.
-# Rotate tiers between rounds so every entry eventually gets a row.
+# The order of ``queries()`` and ``oracle_sql()``: these names first, in
+# this order, then any registered entry not listed.  Each name appears
+# once (tests/test_round_priority.py pins that, and that each is a
+# registered query).
 _ROUND_PRIORITY = [
-    # == ROUND 14 WINDOW (scripts/next_window.py output; VERDICT r13
-    # ask #1 — the 20 round-9-stale entries behind the new landings,
-    # proof floor rises to round 10) ==================================
-    # tier 1: round-14 landings (web realism family), zero proof lag.
-    "web_chunked_charset_text",
-    "web_warc_container_stats",
-    "web_pagerank_step",
-    "web_crawl_clean_pipeline",
-    "web_pagerank_iterations",
-    "web_boilerplate_text",
-    # tier 2: stalest greens first (r9 cohort the verdict names, then
-    # the r10 cohort filling to 50).
-    "q67_group_minmax",
-    "q97_change_feed",
-    "q98_update_where",
-    "q99_incremental_agg_from_feed",
-    "q100_optimize_lifecycle",
-    "text_topk_terms",
-    "text_curation_pipeline",
-    "text_deterministic_sample",
-    "text_token_budget_pack",
-    "text_stratified_sample",
-    "text_unigram_logprob",
-    "text_sequence_pack",
-    "text_quality_classifier",
-    "dedup_source_crosstab",
-    "dedup_cross_modal",
-    "dedup_clusters",
-    "dedup_verified_clusters",
-    "sim_range_search",
-    "sim_ivfpq_topk",
-    "sim_topk_live",
-    "q101_snapshot_restore",
-    "q102_incremental_join_view_from_feed",
-    "q103_append",
-    "q104_snapshot_expiry",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_incremental",
-    "dedup_incremental_persisted",
-    "dedup_stream_incremental",
-    "dedup_embedding_lsh",
-    "dedup_containment",
-    "dedup_keep_policy",
-    "dedup_minhash_quality",
-    "sim_bruteforce_topk",
-    "sim_lsh_topk",
-    "sim_ivf_topk",
-    "sim_ivf_nprobe_topk",
-    "sim_ivf_layout_topk",
-    "sim_sq_topk",
-    "sim_ivfpq_layout_topk",
-    "sim_recall_report",
-    "emb_label_centroids",
-    "ev_tumbling_agg",
-    "ev_sliding_agg",
-    # == ROUND 13 WINDOW (scripts/next_window.py output, start of
-    # r13; VERDICT r12 ask #1) =========================================
-    # tier 0 (unresolved reds): none — CORRECTNESS_r12 was 50/50 green.
-    # tier 1: round-13 landings, inserted AT THE HEAD as they land.
-    "mm_decode_jpeg420_stats",
-    "mm_decode_jpeg422_stats",
-    "mm_decode_jpeg_prog_stats",
-    "web_warc_metadata",
-    "web_warc_html_text",
-    "web_url_canonical_dedup",
-    "web_link_graph_degrees",
-    # tier 2: the 13 round-8-stale entries the verdict names, then the
-    #   stalest r9 greens filling to 50.
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_verified_pairs",
-    "dedup_cluster_stats",
-    "sim_pq_topk",
-    "emb_kmeans_step",
-    "ev_attribution",
-    "ev_funnel_ordered",
-    "ev_markov_transitions",
-    "ev_stream_rate",
-    "ev_user_lifecycle",
-    "mm_feature_extract",
-    "dedup_snapshot_diff",
-    "q18_semi_join",
-    "q19_anti_join",
-    "q20_asof_join",
-    "q21_count_distinct",
-    "q22_correlated_subquery",
-    "q23_running_total",
-    "q24_lag_gaps",
-    "q25_set_ops",
-    "q26_percentiles",
-    "q27_outer_join_distribution",
-    "q28_hll_registers",
-    "q29_argmax_join",
-    "q30_shift_pred",
-    "q31_registered_view",
-    "q32_bloom_point_lookup",
-    "q33_range_join",
-    "q34_cube",
-    "q36_salted_join",
-    "q52_metadata_minmax",
-    "q54_catalog_describe",
-    "q55_colcol_pred",
-    "q61_count_pushdown",
-    "q62_sum_pushdown",
-    "q63_group_sum_pushdown",
-    "q68_var_pushdown",
-    "q69_remote_catalog",
-    "q71_catalog_profile",
-    "q64_div_pred",
-    "q65_decimal_minmax",
-    "q66_topk_pushdown",
-    "q67_group_minmax",
-    "q97_change_feed",
-    "q98_update_where",
-    "q99_incremental_agg_from_feed",
-    "q100_optimize_lifecycle",
-    "text_topk_terms",
-    "text_curation_pipeline",
-    # == ROUND 12 WINDOW (kept for natural-order stability) ===========
-    # tier 0 (unresolved reds): none — CORRECTNESS_r11 was 50/50 green.
-    # tier 1: the round-12 landings, inserted AT THE HEAD as they land
-    #   (zero proof lag): baseline JPEG decode + the page-index
-    #   (sub-row-group) pruning tier.
-    "mm_decode_jpeg_stats",
-    "q107_page_index_scan",
-    "mm_mp4_metadata",
-    "mm_jpeg_ahash_dedup",
-    # tier 2: the nine round-7-stale entries the r11 tier-1 displaced
-    #   (VERDICT r11 ask #1 — the proof floor rises to round 8), then
-    #   the stalest r8 greens filling to 50.
-    "emb_pca_power_step",
-    "sim_filtered_topk",
-    "sim_hybrid_rrf",
-    "ev_stream_sliding",
-    "ev_stream_interval_join",
-    "ev_stream_dedup",
-    "ev_session_window_agg",
-    "ev_stream_session_window",
-    "text_temperature_resample",
-    # -- tier 2 tail (r8-stale, stalest first) -------------------------
-    "q6_pricing_summary",
-    "q7_join_revenue_by_nation",
-    "q8_distinct",
-    "q9_window_topn",
-    "q10_like_prefix",
-    "q11_case_when_agg",
-    "q12_in_filter_join",
-    "q13_union_set_op",
-    "q14_not_null_arith",
-    "q15_multi_join_lineitem",
-    "q16_date_range",
-    "q17_rollup",
-    "q51_partition_group_count",
-    "q53_hll_union_merge",
-    "q56_bucketed_join",
-    "q57_rank_family",
-    "q58_unpivot",
-    "q59_nullsafe_join",
-    "q60_decimal_pred",
-    "q91_delete_scan",
-    "q92_dv_count_sum_pushdown",
-    "q93_dv_compaction",
-    "q94_merge_upsert",
-    "q95_dedup_delete_vectors",
-    "q96_stream_retraction",
-    "text_quality_metrics",
-    "text_langid",
-    "text_token_counts",
-    "text_fingerprint",
-    "text_bigram_logprob",
-    "text_tfidf_topk",
-    "text_bm25_score",
-    "text_lang_confusion",
-    "text_hashed_ngram_features",
-    "text_zipf_fit",
-    "text_bpe_pair_merge",
-    "text_length_histogram",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_verified_pairs",
-    "dedup_cluster_stats",
-    # == ROUND 11 WINDOW (kept for natural-order stability) ==========
-    # tier 0 (unresolved reds): none — CORRECTNESS_r10 was 50/50 green.
-    # tier 1: the round-11 landings (PNG decode, PCM WAV decode,
-    #   schema-evolving append) plus dedup_overlap_kmv, whose estimator
-    #   FORMULA changed this round (ADVICE r10 #2 bias fix — the r10
-    #   green row pinned the old values, so it needs a fresh proof).
-    # tier 2: stalest driver greens — the r7-green pruning core
-    #   (q1–q5, also re-pinned every run by tests/test_golden_parity)
-    #   and the r7 relational/layout/sketch tail, filling to 50; the
-    #   last nine of next_window's list (emb_pca_power_step,
-    #   sim_filtered_topk, sim_hybrid_rrf, ev_stream_sliding,
-    #   ev_stream_interval_join, ev_stream_dedup,
-    #   ev_session_window_agg, ev_stream_session_window,
-    #   text_temperature_resample) are displaced to r12 by the nine
-    #   tier-1 entries.
-    "q105_append_merge_schema",
-    "q106_concurrent_writers",
-    "mm_decode_png_stats",
-    "mm_decode_wav_stats",
-    "mm_wav_energy_stats",
-    "mm_image_ahash_dedup",
-    "mm_resize_png_stats",
-    "mm_resample_wav_stats",
-    "dedup_overlap_kmv",
-    # -- tier 2 (r7-stale) --------------------------------------------
-    "q1_select_limit",
-    "q2_point_equality",
-    "q3_or_range_agg",
-    "q4_and_mixed_columns",
-    "q5_contradictory_and",
-    "q35_rowgroup_scan",
-    "q37_case_pred",
-    "q38_exists_subquery",
-    "q39_grouping_sets",
-    "q40_range_frame",
-    "q41_pivot",
-    "q42_hll_estimate",
-    "q43_in_pred",
-    "q44_isnull_pred",
-    "q45_binned_quantiles",
-    "q46_partitioned_scan",
-    "q47_zorder_scan",
-    "q48_metadata_count",
-    "q49_token_search",
-    "q50_join_pruned_scan",
-    "q70_group_var_pushdown",
-    "q72_schema_evolution",
-    "q73_compaction",
-    "q74_incremental_refresh",
-    "q75_hist_quantiles",
-    "q76_group_hist_quantiles",
-    "q77_ndv_pushdown",
-    "q78_group_ndv",
-    "q79_catalog_join_strategy",
-    "q80_dict_groupby",
-    "q83_time_travel",
-    "q84_snapshot_delta",
-    "q85_asof_pushdown",
-    "q86_heavy_hitters",
-    "q87_group_heavy_hitters",
-    "q88_stream_ingest",
-    "q89_sql_pushdown",
-    "q90_rtree_plan",
-    "q81_dict_distinct",
-    "q82_dict_pruning",
-    "dedup_semantic",
-    "emb_pca_power_step",
-    "sim_filtered_topk",
-    "sim_hybrid_rrf",
-    "ev_stream_sliding",
-    "ev_stream_interval_join",
-    "ev_stream_dedup",
-    # (window full at 50)
-    # == ROUND 10 WINDOW (kept for natural-order stability) ==========
-    # tier 0 (unresolved reds): none — CORRECTNESS_r09 was 50/50 green.
-    # tier 1: the 2 round-9 landings never driver-proven — RESTORE and
-    #   join-view IVM (VERDICT r9 ask #1) — plus the round-10 landings
-    #   (append verb, real-BMP decode) inserted here as they land so
-    #   the one-generation lag never recurs.
-    # tier 2: stalest driver greens first — the r6-green entries
-    #   displaced from the r9 window, then the oldest r7 greens
-    #   (q1–q5, also re-pinned every run by tests/test_golden_parity).
-    "q101_snapshot_restore",
-    "q102_incremental_join_view_from_feed",
-    "q103_append",
-    "mm_decode_pixel_stats",
-    "q104_snapshot_expiry",
-    "mm_resize_decoded_stats",
-    "dedup_overlap_kmv",
-    # -- tier 2 (r6-stale) ------------------------------------------
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_incremental",
-    "dedup_incremental_persisted",
-    "dedup_stream_incremental",
-    "dedup_embedding_lsh",
-    "dedup_containment",
-    "dedup_keep_policy",
-    "dedup_minhash_quality",
-    "sim_bruteforce_topk",
-    "sim_lsh_topk",
-    "sim_ivf_topk",
-    "sim_ivf_nprobe_topk",
-    "sim_ivf_layout_topk",
-    "sim_sq_topk",
-    "sim_ivfpq_layout_topk",
-    "sim_recall_report",
-    "emb_label_centroids",
-    "ev_tumbling_agg",
-    "ev_sliding_agg",
-    "ev_sessionize",
-    "ev_type_funnel",
-    "ev_cms_user_counts",
-    "ev_json_extract",
-    "ev_retention",
-    "ev_anomaly",
-    "ev_interval_join",
-    "ev_stream_tumbling",
-    "ev_stream_sessionize",
-    "mm_metadata_extract",
-    "mm_frame_sample_stats",
-    "mm_modality_stats",
-    "mm_resize_stats",
-    "text_pii_scrub",
-    "text_domain_mixture",
-    "dedup_substring_ngram",
-    "text_quality_buckets",
-    "text_winnow_fingerprint",
-    "dedup_contamination",
-    "text_repetition_stats",
-    "text_gopher_filter",
-    # -- tier 2 (r7-stale) ------------------------------------------
-    "q1_select_limit",
-    "q2_point_equality",
-    "q3_or_range_agg",
-    "q4_and_mixed_columns",
-    # (window full at 50 after text_gopher_filter — q1..q5 displaced
-    #  by the five round-10 landings (q103_append,
-    #  mm_decode_pixel_stats, q104_snapshot_expiry,
-    #  mm_resize_decoded_stats, dedup_overlap_kmv); their pruning
-    #  behavior is re-pinned by the golden-parity suite every test
-    #  run.)
-    # ROUND-11 PLAN: run `python scripts/next_window.py` at round
-    # start.  Expected tier 1: any round-10 landings never
-    # driver-proven; tier 2: q1..q5 + the remaining r7 greens,
-    # stalest first.
-    # == ROUND 9 WINDOW (kept for natural-order stability) ===========
-    # tier 0 (unresolved reds): none — CORRECTNESS_r08 was 50/50 green.
-    # tier 1: the 5 round-8 landings never driver-proven — UPDATE, CDF,
-    #   feed-maintained aggregates, OPTIMIZE lifecycle, ANN-under-DML
-    #   (VERDICT r8 ask #1).
-    # tier 2: stalest driver greens first — the 38 r5-stale entries,
-    #   then the oldest r6 greens, filling the window to 50
-    #   (VERDICT r8 ask #3: after r9 no entry older than round 6).
-    "q97_change_feed",
-    "q98_update_where",
-    "q99_incremental_agg_from_feed",
-    "q100_optimize_lifecycle",
-    "sim_topk_live",
-    # -- tier 2 (r5-stale) ------------------------------------------
-    "q18_semi_join",
-    "q19_anti_join",
-    "q20_asof_join",
-    "q21_count_distinct",
-    "q22_correlated_subquery",
-    "q23_running_total",
-    "q24_lag_gaps",
-    "q25_set_ops",
-    "q26_percentiles",
-    "q27_outer_join_distribution",
-    "q28_hll_registers",
-    "q29_argmax_join",
-    "q30_shift_pred",
-    "q31_registered_view",
-    "q32_bloom_point_lookup",
-    "q33_range_join",
-    "q34_cube",
-    "q36_salted_join",
-    "q52_metadata_minmax",
-    "q54_catalog_describe",
-    "q55_colcol_pred",
-    "q61_count_pushdown",
-    "q62_sum_pushdown",
-    "q63_group_sum_pushdown",
-    "q64_div_pred",
-    "q65_decimal_minmax",
-    "q66_topk_pushdown",
-    "q67_group_minmax",
-    "text_topk_terms",
-    "text_curation_pipeline",
-    "text_deterministic_sample",
-    "text_token_budget_pack",
-    "text_stratified_sample",
-    "text_unigram_logprob",
-    "text_sequence_pack",
-    "text_quality_classifier",
-    "sim_range_search",
-    "sim_ivfpq_topk",
-    # -- tier 2 (r6-stale) ------------------------------------------
-    "q68_var_pushdown",
-    "q69_remote_catalog",
-    "q71_catalog_profile",
-    "dedup_source_crosstab",
-    "dedup_cross_modal",
-    "dedup_clusters",
-    "dedup_verified_clusters",
-    # (window full at 50 here.)
-    # ROUND-10 PLAN: run `python scripts/next_window.py` at round
-    # start.  Expected tier 1: any round-9 landings never
-    # driver-proven; tier 2: the remaining r6-green entries displaced
-    # from this round's window, stalest first.
-    # == ROUND 8 WINDOW (kept for natural-order stability) ===========
-    # tier 0 (unresolved reds): none — CORRECTNESS_r07 was 50/50 green.
-    # tier 1: the 6 round-7 landings never driver-proven — the whole
-    #   deletion-vector / merge-on-read DML family (VERDICT r7 ask #1).
-    # tier 2: stalest driver greens first — 32 r4 greens, then the 12
-    #   oldest r5 greens, filling the window to 50.
-    "q91_delete_scan",
-    "q92_dv_count_sum_pushdown",
-    "q93_dv_compaction",
-    "q94_merge_upsert",
-    "q95_dedup_delete_vectors",
-    "q96_stream_retraction",
-    # -- tier 2 (r4-stale) ------------------------------------------
-    "q51_partition_group_count",
-    "q53_hll_union_merge",
-    "q56_bucketed_join",
-    "q57_rank_family",
-    "q58_unpivot",
-    "q59_nullsafe_join",
-    "q60_decimal_pred",
-    "text_quality_metrics",
-    "text_langid",
-    "text_token_counts",
-    "text_fingerprint",
-    "text_bigram_logprob",
-    "text_tfidf_topk",
-    "text_bm25_score",
-    "text_lang_confusion",
-    "text_hashed_ngram_features",
-    "text_zipf_fit",
-    "text_bpe_pair_merge",
-    "text_length_histogram",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_verified_pairs",
-    "dedup_cluster_stats",
-    "sim_pq_topk",
-    "emb_kmeans_step",
-    "ev_attribution",
-    "ev_funnel_ordered",
-    "ev_markov_transitions",
-    "ev_stream_rate",
-    "ev_user_lifecycle",
-    "mm_feature_extract",
-    "dedup_snapshot_diff",
-    # -- tier 2 (r5-stale) ------------------------------------------
-    "q6_pricing_summary",
-    "q7_join_revenue_by_nation",
-    "q8_distinct",
-    "q9_window_topn",
-    "q10_like_prefix",
-    "q11_case_when_agg",
-    "q12_in_filter_join",
-    "q13_union_set_op",
-    "q14_not_null_arith",
-    "q15_multi_join_lineitem",
-    "q16_date_range",
-    "q17_rollup",
-    # == ROUND 7 WINDOW (kept for natural-order stability) ===========
-    # tier 0 (unresolved reds): none — CORRECTNESS_r06 was 50/50 green.
-    # tier 1: the 30 entries landed after the r6 window filled, never
-    #   driver-proven (each locally oracle-green + fingerprinted at
-    #   sf0.001 and sf0.01 when it landed; re-swept at round start).
-    # tier 2: stalest driver greens first — the 8 r3-green deferrals,
-    #   then the oldest r4 greens, filling the window to 50.
-    "q70_group_var_pushdown",
-    "q72_schema_evolution",
-    "q73_compaction",
-    "q74_incremental_refresh",
-    "q75_hist_quantiles",
-    "q76_group_hist_quantiles",
-    "q77_ndv_pushdown",
-    "q78_group_ndv",
-    "q79_catalog_join_strategy",
-    "q80_dict_groupby",
-    "q83_time_travel",
-    "q84_snapshot_delta",
-    "q85_asof_pushdown",
-    "q86_heavy_hitters",
-    "q87_group_heavy_hitters",
-    "q88_stream_ingest",
-    "q89_sql_pushdown",
-    "q90_rtree_plan",
-    "q81_dict_distinct",
-    "q82_dict_pruning",
-    "dedup_semantic",
-    "emb_pca_power_step",
-    "sim_filtered_topk",
-    "sim_hybrid_rrf",
-    "ev_stream_sliding",
-    "ev_stream_interval_join",
-    "ev_stream_dedup",
-    "ev_session_window_agg",
-    "ev_stream_session_window",
-    "text_temperature_resample",
-    # -- tier 2 ----------------------------------------------------
-    "q35_rowgroup_scan",
-    "q37_case_pred",
-    "q38_exists_subquery",
-    "q39_grouping_sets",
-    "q40_range_frame",
-    "q41_pivot",
-    "q42_hll_estimate",
-    "q43_in_pred",
-    "q1_select_limit",
-    "q2_point_equality",
-    "q3_or_range_agg",
-    "q4_and_mixed_columns",
-    "q5_contradictory_and",
-    "q44_isnull_pred",
-    "q45_binned_quantiles",
-    "q46_partitioned_scan",
-    "q47_zorder_scan",
-    "q48_metadata_count",
-    "q49_token_search",
-    "q50_join_pruned_scan",
-    # (window full at 50 here. Older windows below are kept for
-    #  natural-order stability of the full registry.)
-    # ROUND-8 PLAN: run `python scripts/next_window.py` at round start
-    # (it mechanizes the whole rotation). Expected tier 1 = the round-7
-    # landings, never driver-proven: q91_delete_scan,
-    # q92_dv_count_sum_pushdown, q93_dv_compaction, q94_merge_upsert,
-    # q95_dedup_delete_vectors, q96_stream_retraction (the
-    # deletion-vector / merge-on-read DML family — each locally
-    # oracle-green at sf0.001+sf0.01, most at sf0.1 and sf1, on
-    # vanilla sessions); tier 2 = the r4-green entries displaced from
-    # this round's window (q6..q29 era), stalest first.
-    # == ROUND 6 WINDOW (kept for natural-order stability) ===========
-    "sim_ivfpq_layout_topk",
-    "dedup_source_crosstab",
-    "ev_stream_sessionize",
-    "dedup_stream_incremental",
-    "text_gopher_filter",
-    "q71_catalog_profile",
-    "q68_var_pushdown",
-    "q69_remote_catalog",
-    "ev_stream_tumbling",
-    "dedup_clusters",
-    "dedup_containment",
-    "dedup_contamination",
-    "dedup_cross_modal",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_incremental",
-    "dedup_incremental_persisted",
-    "dedup_keep_policy",
-    "dedup_minhash_quality",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_substring_ngram",
-    "dedup_verified_clusters",
-    "sim_bruteforce_topk",
-    "sim_ivf_layout_topk",
-    "sim_ivf_nprobe_topk",
-    "sim_ivf_topk",
-    "sim_lsh_topk",
-    "sim_recall_report",
-    "sim_sq_topk",
-    "ev_anomaly",
-    "ev_cms_user_counts",
-    "ev_interval_join",
-    "ev_json_extract",
-    "ev_retention",
-    "ev_sessionize",
-    "ev_sliding_agg",
-    "ev_tumbling_agg",
-    "ev_type_funnel",
-    "mm_frame_sample_stats",
-    "mm_metadata_extract",
-    "mm_modality_stats",
-    "mm_resize_stats",
-    "emb_label_centroids",
-    "text_domain_mixture",
-    "text_pii_scrub",
-    "text_quality_buckets",
-    "text_repetition_stats",
-    "text_winnow_fingerprint",
-    # == ROUND 5 WINDOW (kept for natural-order stability) ===========
-    # -- tier 1: entries whose bodies or load-bearing dependencies
-    #    changed this round — the NaN-soundness work (ADVICE r4) added
-    #    opt-in NaN counting to q52/q54/q55/q61, rewrote
-    #    extract_file_sums (q62/q63's sum store) with pyarrow.compute,
-    #    and rebuilt min_max's missing-bounds handling ----------------
-    "q52_metadata_minmax",
-    "q54_catalog_describe",
-    "q55_colcol_pred",
-    "q61_count_pushdown",
-    "q62_sum_pushdown",
-    "q63_group_sum_pushdown",
-    # -- tier 1b: NEW in round 5 (never had a driver row) ------------
-    "sim_ivfpq_topk",
-    "q64_div_pred",
-    "q65_decimal_minmax",
-    "q66_topk_pushdown",
-    "q67_group_minmax",
-    "text_quality_classifier",
-    "sim_range_search",
-    # -- tier 2: the padding trimmed in round 4 for space — last green
-    #    row round 2 -------------------------------------------------
-    "text_stratified_sample",
-    "text_unigram_logprob",
-    "text_sequence_pack",
-    "text_deterministic_sample",
-    "text_token_budget_pack",
-    "text_curation_pipeline",
-    "text_topk_terms",
-    "q6_pricing_summary",
-    "q20_asof_join",
-    # -- tier 3: green-r2 entries never re-proven since (the entire
-    #    remaining stale set; after this round no entry's last proof
-    #    is older than two rounds) -----------------------------------
-    "q7_join_revenue_by_nation",
-    "q8_distinct",
-    "q9_window_topn",
-    "q10_like_prefix",
-    "q11_case_when_agg",
-    "q12_in_filter_join",
-    "q13_union_set_op",
-    "q14_not_null_arith",
-    "q15_multi_join_lineitem",
-    "q16_date_range",
-    "q17_rollup",
-    "q18_semi_join",
-    "q19_anti_join",
-    "q21_count_distinct",
-    "q22_correlated_subquery",
-    "q23_running_total",
-    "q24_lag_gaps",
-    "q25_set_ops",
-    "q26_percentiles",
-    "q27_outer_join_distribution",
-    "q28_hll_registers",
-    "q29_argmax_join",
-    "q30_shift_pred",
-    "q31_registered_view",
-    "q32_bloom_point_lookup",
-    "q33_range_join",
-    "q34_cube",
-    "q36_salted_join",
-    # -- (q1-q5 golden re-proofs rotated fully out this round: new
-    #    never-verified entries outrank periodic re-proofs, their
-    #    bodies are untouched, and the golden-parity tests +
-    #    1500-example fuzz + the full local sweeps cover the reference
-    #    queries every round. ROUND-6 tier 1 should lead with
-    #    sim_ivfpq_layout_topk and dedup_source_crosstab — landed
-    #    after this round's window filled, locally green at sf0.01 —
-    #    then q1-q5, then the r3-green families oldest-first per the
-    #    documented plan. `scripts/vanilla_harness.py --stale` emits
-    #    the changed-entry list mechanically.) ----------------------
-    # Everything below rotates out this round (green r3/r4, modules
-    # untouched since their rows). ROUND-6 PLAN: tier 1 = any red/new
-    # entries; tier 2 = the r3-green families (dedup_*, sim_*, ev_*,
-    # mm_*, curation) oldest-first; tier 3 = r4-green relational tail.
-    # == ROUND 4 WINDOW (kept for natural-order stability) ===========
-    # -- tier 1: the 18 late-round-3 entries that never got a driver
-    #    row (the 50-slot window was already full when they landed) —
-    #    the r3 verdict's ask #2, now actual list entries ------------
-    "q44_isnull_pred",
-    "q45_binned_quantiles",
-    "q46_partitioned_scan",
-    "q47_zorder_scan",
-    "q48_metadata_count",
-    "q49_token_search",
-    "q50_join_pruned_scan",
-    "q51_partition_group_count",
-    "q52_metadata_minmax",
-    "text_bigram_logprob",
-    "text_tfidf_topk",
-    "text_bm25_score",
-    "text_lang_confusion",
-    "emb_kmeans_step",
-    "ev_attribution",
-    "ev_funnel_ordered",
-    "ev_markov_transitions",
-    "dedup_snapshot_diff",
-    # -- tier 2: round 3's only red row, fixed this round (feature
-    #    array serialized to a string + full DuckDB oracle added) ----
-    "mm_feature_extract",
-    # -- tier 3: NEW in round 4 (never had a driver row) -------------
-    "q53_hll_union_merge",
-    "q54_catalog_describe",
-    "q55_colcol_pred",
-    "q56_bucketed_join",
-    "ev_stream_rate",
-    "text_hashed_ngram_features",
-    "dedup_cluster_stats",
-    "sim_pq_topk",
-    "text_zipf_fit",
-    "ev_user_lifecycle",
-    "q57_rank_family",
-    "q58_unpivot",
-    "q59_nullsafe_join",
-    "text_bpe_pair_merge",
-    "text_length_histogram",
-    "q60_decimal_pred",
-    "q61_count_pushdown",
-    "q62_sum_pushdown",
-    "q63_group_sum_pushdown",
-    # -- tier 4: oldest driver rows first (green-r2, bodies untouched
-    #    since — rotated back in per the documented policy: every
-    #    entry gets a periodic re-proof) -----------------------------
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_verified_pairs",
-    "text_quality_metrics",
-    "text_langid",
-    "text_token_counts",
-    "text_fingerprint",
-    # text_stratified_sample / text_unigram_logprob /
-    # text_sequence_pack trimmed with q20/q6 (padding-tail rule: new
-    # never-verified entries outrank periodic re-proofs)
-    "q1_select_limit",
-    "q2_point_equality",
-    "q3_or_range_agg",
-    "q4_and_mixed_columns",
-    "q5_contradictory_and",
-    # q20_asof_join / q6_pricing_summary trimmed from the padding tail
-    # to make room for q57-q59 (new entries outrank periodic re-proofs).
-    # Everything below slot 50 appends in natural order and rotates
-    # into later rounds. Green-r3 entries (the whole r3 window) rotate
-    # OUT this round: their bodies are untouched since their rows,
-    # except emb_kmeans_step / q45 / q51 / q52 / mm_* whose round-4
-    # touches put them in tiers 1-2 above.
-    #
-    # ROUND-5 ROTATION PLAN (write it as actual entries then!):
-    #   tier 1: any red/new entries from this round's CORRECTNESS_r04;
-    #   tier 2: the padding trimmed this round for space —
-    #     text_stratified_sample, text_unigram_logprob,
-    #     text_sequence_pack, text_deterministic_sample,
-    #     text_token_budget_pack, text_curation_pipeline,
-    #     text_topk_terms, q6_pricing_summary, q20_asof_join;
-    #   tier 3: green-r2 entries never re-proven since —
-    #     q7..q19, q21..q34, q36;
-    #   everything green-r4 rotates out unless its module is touched.
+    "web_chunked_charset_text", "web_warc_container_stats",
+    "web_pagerank_step", "web_crawl_clean_pipeline", "web_pagerank_iterations",
+    "web_boilerplate_text", "q67_group_minmax", "q97_change_feed",
+    "q98_update_where", "q99_incremental_agg_from_feed",
+    "q100_optimize_lifecycle", "text_topk_terms", "text_curation_pipeline",
+    "text_deterministic_sample", "text_token_budget_pack",
+    "text_stratified_sample", "text_unigram_logprob", "text_sequence_pack",
+    "text_quality_classifier", "dedup_source_crosstab", "dedup_cross_modal",
+    "dedup_clusters", "dedup_verified_clusters", "sim_range_search",
+    "sim_ivfpq_topk", "sim_topk_live", "q101_snapshot_restore",
+    "q102_incremental_join_view_from_feed", "q103_append",
+    "q104_snapshot_expiry", "dedup_simhash", "dedup_simhash_pairs",
+    "dedup_ngram_jaccard", "dedup_embedding_cosine", "dedup_incremental",
+    "dedup_incremental_persisted", "dedup_stream_incremental",
+    "dedup_embedding_lsh", "dedup_containment", "dedup_keep_policy",
+    "dedup_minhash_quality", "sim_bruteforce_topk", "sim_lsh_topk",
+    "sim_ivf_topk", "sim_ivf_nprobe_topk", "sim_ivf_layout_topk",
+    "sim_sq_topk", "sim_ivfpq_layout_topk", "sim_recall_report",
+    "emb_label_centroids", "ev_tumbling_agg", "ev_sliding_agg",
+    "mm_decode_jpeg420_stats", "mm_decode_jpeg422_stats",
+    "mm_decode_jpeg_prog_stats", "web_warc_metadata", "web_warc_html_text",
+    "web_url_canonical_dedup", "web_link_graph_degrees", "dedup_exact",
+    "dedup_minhash_lsh", "dedup_verified_pairs", "dedup_cluster_stats",
+    "sim_pq_topk", "emb_kmeans_step", "ev_attribution", "ev_funnel_ordered",
+    "ev_markov_transitions", "ev_stream_rate", "ev_user_lifecycle",
+    "mm_feature_extract", "dedup_snapshot_diff", "q18_semi_join",
+    "q19_anti_join", "q20_asof_join", "q21_count_distinct",
+    "q22_correlated_subquery", "q23_running_total", "q24_lag_gaps",
+    "q25_set_ops", "q26_percentiles", "q27_outer_join_distribution",
+    "q28_hll_registers", "q29_argmax_join", "q30_shift_pred",
+    "q31_registered_view", "q32_bloom_point_lookup", "q33_range_join",
+    "q34_cube", "q36_salted_join", "q52_metadata_minmax",
+    "q54_catalog_describe", "q55_colcol_pred", "q61_count_pushdown",
+    "q62_sum_pushdown", "q63_group_sum_pushdown", "q68_var_pushdown",
+    "q69_remote_catalog", "q71_catalog_profile", "q64_div_pred",
+    "q65_decimal_minmax", "q66_topk_pushdown", "mm_decode_jpeg_stats",
+    "q107_page_index_scan", "mm_mp4_metadata", "mm_jpeg_ahash_dedup",
+    "emb_pca_power_step", "sim_filtered_topk", "sim_hybrid_rrf",
+    "ev_stream_sliding", "ev_stream_interval_join", "ev_stream_dedup",
+    "ev_session_window_agg", "ev_stream_session_window",
+    "text_temperature_resample", "q6_pricing_summary",
+    "q7_join_revenue_by_nation", "q8_distinct", "q9_window_topn",
+    "q10_like_prefix", "q11_case_when_agg", "q12_in_filter_join",
+    "q13_union_set_op", "q14_not_null_arith", "q15_multi_join_lineitem",
+    "q16_date_range", "q17_rollup", "q51_partition_group_count",
+    "q53_hll_union_merge", "q56_bucketed_join", "q57_rank_family",
+    "q58_unpivot", "q59_nullsafe_join", "q60_decimal_pred", "q91_delete_scan",
+    "q92_dv_count_sum_pushdown", "q93_dv_compaction", "q94_merge_upsert",
+    "q95_dedup_delete_vectors", "q96_stream_retraction",
+    "text_quality_metrics", "text_langid", "text_token_counts",
+    "text_fingerprint", "text_bigram_logprob", "text_tfidf_topk",
+    "text_bm25_score", "text_lang_confusion", "text_hashed_ngram_features",
+    "text_zipf_fit", "text_bpe_pair_merge", "text_length_histogram",
+    "q105_append_merge_schema", "q106_concurrent_writers",
+    "mm_decode_png_stats", "mm_decode_wav_stats", "mm_wav_energy_stats",
+    "mm_image_ahash_dedup", "mm_resize_png_stats", "mm_resample_wav_stats",
+    "dedup_overlap_kmv", "q1_select_limit", "q2_point_equality",
+    "q3_or_range_agg", "q4_and_mixed_columns", "q5_contradictory_and",
+    "q35_rowgroup_scan", "q37_case_pred", "q38_exists_subquery",
+    "q39_grouping_sets", "q40_range_frame", "q41_pivot", "q42_hll_estimate",
+    "q43_in_pred", "q44_isnull_pred", "q45_binned_quantiles",
+    "q46_partitioned_scan", "q47_zorder_scan", "q48_metadata_count",
+    "q49_token_search", "q50_join_pruned_scan", "q70_group_var_pushdown",
+    "q72_schema_evolution", "q73_compaction", "q74_incremental_refresh",
+    "q75_hist_quantiles", "q76_group_hist_quantiles", "q77_ndv_pushdown",
+    "q78_group_ndv", "q79_catalog_join_strategy", "q80_dict_groupby",
+    "q83_time_travel", "q84_snapshot_delta", "q85_asof_pushdown",
+    "q86_heavy_hitters", "q87_group_heavy_hitters", "q88_stream_ingest",
+    "q89_sql_pushdown", "q90_rtree_plan", "q81_dict_distinct",
+    "q82_dict_pruning", "dedup_semantic", "mm_decode_pixel_stats",
+    "mm_resize_decoded_stats", "ev_sessionize", "ev_type_funnel",
+    "ev_cms_user_counts", "ev_json_extract", "ev_retention", "ev_anomaly",
+    "ev_interval_join", "ev_stream_tumbling", "ev_stream_sessionize",
+    "mm_metadata_extract", "mm_frame_sample_stats", "mm_modality_stats",
+    "mm_resize_stats", "text_pii_scrub", "text_domain_mixture",
+    "dedup_substring_ngram", "text_quality_buckets", "text_winnow_fingerprint",
+    "dedup_contamination", "text_repetition_stats", "text_gopher_filter",
 ]
 
 

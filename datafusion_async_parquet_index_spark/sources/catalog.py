@@ -99,9 +99,8 @@ def decode_value(category: str, v: Any) -> Any:
     sqlite BLOB -> bytes). Applied by the catalog readout methods
     (column_bounds / column_rg_entries_keyed) so catalog-only ANSWERS —
     min_max(), count_rows_by() — return values in the data's domain,
-    not the storage encoding; the DataFrame backend stores domain
-    values directly, so decoding here is what keeps the two backends
-    interchangeable."""
+    not the storage encoding, and by the DataFrame backend's
+    ``stats_df()`` to type its Spark stats table."""
     if v is None:
         return None
     if category == "timestamp":

@@ -65,14 +65,9 @@ def compact_to(
     num_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
     write_range_sorted(table.to_df(), dest_path, sort_cols,
                        num_files=num_files, row_group_bytes=row_group_bytes)
-    from .df_catalog import DataFrameIndexCatalog
     from .table import IndexedParquetTable
-    if isinstance(table.catalog, DataFrameIndexCatalog):
-        fresh = DataFrameIndexCatalog(table.spark)
-    else:
-        fresh = type(table.catalog)()
     return IndexedParquetTable(
-        table.spark, dest_path, list(table.index_schema), catalog=fresh)
+        table.spark, dest_path, list(table.index_schema))
 
 
 def write_zordered(
@@ -90,16 +85,23 @@ def write_zordered(
     on each.
 
     Spark-first implementation, no UDFs:
-      1. per column, compute ~2^bits_per_col approx-quantile boundaries
-         (driver-side array of <=256 doubles — a metadata-sized
-         collect, same at any data scale);
+      1. per column, compute 2^bits_per_col - 1 exact quantile
+         boundaries (driver-side array of <=255 doubles);
       2. map each value to its bucket rank with a broadcast-literal
          boundary array folded via ``F.aggregate`` (JVM codegen,
          O(2^bits) comparisons per row);
       3. bit-interleave the ranks into one integer z-value with
          shift/or expressions;
-      4. range-partition + sort by z (the existing range-sorted path),
-         drop the helper column, write with forced row-group size.
+      4. cut z at its exact quantiles into num_files ranges, route range
+         i to shuffle partition i, sort each by z, drop the helper
+         columns, write with forced row-group size.
+
+    The layout depends only on the input rows: exact quantiles are a
+    fold of value counts (approxQuantile merges per-partition sketches
+    in task order), and step 4 replaces ``repartitionByRange``, whose
+    boundaries come from a sample seeded by the RDD id and so differ
+    from build to build. The price is one aggregation buffer of
+    O(distinct values) per column and over z.
 
     Quantile (not min/max) normalization makes the curve robust to
     skew: each bucket holds ~equal row counts, so every z-cell maps to
@@ -112,31 +114,52 @@ def write_zordered(
         raise ValueError("z-order needs 2..4 columns, got %r" % (cols,))
     nbuckets = 1 << bits_per_col
 
+    def quantiles(frame, names, n):
+        # the i/n quantiles (0 < i < n) of each column, one pass
+        if n < 2:
+            return [[] for _ in names]
+        probs = [i / n for i in range(1, n)]
+        row = frame.select(*[F.percentile(c, probs) for c in names]).first()
+        return [v or [] for v in row]
+
+    def rank(name, bounds):
+        # how many bounds lie below the value; NULL ranks 0
+        arr = F.array(*[F.lit(float(b)) for b in bounds])
+        return F.coalesce(F.aggregate(
+            arr, F.lit(0),
+            lambda acc, b: acc + F.when(F.col(name) > b, 1).otherwise(0)),
+            F.lit(0))
+
     casted = df.select(
         "*", *[F.col(c).cast("double").alias(f"__zc_{c}") for c in cols])
-    # one pass, all columns at once; relativeError 1/(4*buckets) keeps
-    # bucket populations near-uniform without a full sort
-    bounds = casted.stat.approxQuantile(
-        [f"__zc_{c}" for c in cols],
-        [i / nbuckets for i in range(1, nbuckets)], 1.0 / (4 * nbuckets))
-
     z = None
-    for ci, (c, bs) in enumerate(zip(cols, bounds)):
-        arr = F.array(*[F.lit(float(b)) for b in bs])
-        rank = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, b: acc + F.when(F.col(f"__zc_{c}") > b, 1).otherwise(0))
-        rank = F.coalesce(rank, F.lit(0))
+    for ci, (c, bs) in enumerate(zip(
+            cols, quantiles(casted, [f"__zc_{c}" for c in cols], nbuckets))):
+        r = rank(f"__zc_{c}", bs)
         # interleave: bit j of column ci lands at position j*ncols + ci
         for j in range(bits_per_col):
-            bit = F.shiftright(rank, j).bitwiseAND(F.lit(1))
+            bit = F.shiftright(r, j).bitwiseAND(F.lit(1))
             placed = F.shiftleft(bit, j * len(cols) + ci)
             z = placed if z is None else z.bitwiseOR(placed)
-
     zed = casted.withColumn("__zval", z).drop(*[f"__zc_{c}" for c in cols])
-    (zed.repartitionByRange(num_files, "__zval")
-     .sortWithinPartitions("__zval")
-     .drop("__zval")
+
+    # one bigint key per shuffle partition, read off the hash
+    # partitioner itself: repartition(num_files, key) sends every row
+    # carrying keys[i] to partition i, so file i holds z range i
+    spark = df.sparkSession
+    probe = (spark.range(64 * num_files).repartition(num_files, "id")
+             .select("id", F.spark_partition_id().alias("p")).collect())
+    first = {}
+    for r in probe:
+        first.setdefault(r["p"], r["id"])
+    keys = F.array(*[F.lit(first[i]).cast("bigint")
+                     for i in range(num_files)])
+    (zed.withColumn("__zkey", F.element_at(
+            keys, rank("__zval", quantiles(zed, ["__zval"], num_files)[0])
+            + 1))
+     .repartition(num_files, "__zkey")
+     .sortWithinPartitions("__zval", *cols)
+     .drop("__zval", "__zkey")
      .write.mode("overwrite")
      .option("parquet.block.size", str(row_group_bytes))
      .parquet(path))

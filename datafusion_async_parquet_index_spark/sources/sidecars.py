@@ -8,8 +8,8 @@ below records everything about one kind: its ``upsert_file`` keyword,
 its SQL table and payload columns, how an upsert payload becomes stored
 rows, how a stored row becomes the ``get_*`` value, and which per-file
 extractor in ``sources/stats.py`` computes it.  From the ``STATISTICS``
-registry the SQL backends derive their DDL, upsert, delete and fetch
-statements, the DataFrame backend its in-memory store, and
+registry the SQL catalog derives its DDL, upsert, delete and fetch
+statements (the DB-API and DataFrame backends inherit them), and
 ``build_index`` its per-file extraction.  Adding a statistic means one
 registry entry, its extractor, the build option that requests it and a
 getter on ``SidecarReads``.

@@ -791,22 +791,6 @@ def _fan_out(unit, items: Sequence, plan, spark=None,
     return [unit(it, plan) for it in items]
 
 
-def _store_entries(catalog, entries: Sequence[tuple]) -> None:
-    """Write ``_extract_file`` results into the catalog: one
-    transaction per 1000 files through ``upsert_files`` (the per-file
-    commit was the driver-side serialization at 1M-file onboarding —
-    r12 tier-C measured ~400 files/s through per-file upsert_file),
-    or per file on backends without it."""
-    bulk = getattr(catalog, "upsert_files", None)
-    if bulk is not None:
-        bulk(entries)
-        return
-    for fs, rgs, *payloads in entries:
-        catalog.upsert_file(fs, rgs, **{
-            stat.keyword: payload
-            for stat, payload in zip(STATISTICS, payloads)})
-
-
 def build_index(
     catalog: SqliteIndexCatalog,
     files: Iterable[str],
@@ -928,5 +912,7 @@ def build_index(
     results = _fan_out(
         _extract_file, [(p, _name(p), part_values.get(p)) for p in files],
         plan, spark)
-    _store_entries(catalog, results)
+    # one transaction per 1000 files: per-file commits were the
+    # driver-side serialization at 1M-file onboarding (~400 files/s)
+    catalog.upsert_files(results)
     return schema

@@ -1922,8 +1922,7 @@ class IndexedParquetTable(CatalogAnswers):
         try:
             with self._dml_mutation_scope(v0, "compact_deletes"):
                 self._compact_swap_evict(items, staged)
-                _stats._store_entries(
-                    self.catalog,
+                self.catalog.upsert_files(
                     [entry for _tmp, entry in done if entry is not None])
         except ConcurrentWriteError:
             self._drop_staged(staged)

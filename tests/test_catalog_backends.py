@@ -463,16 +463,25 @@ def test_dbapi_backend_full_protocol(spark, corpus):
 
 def test_backends_expose_the_same_public_methods():
     """A reader added to or deleted from one backend but not the other
-    fails here, not at a caller. The two known asymmetries:
-    upsert_files (batched SQL upsert) and stats_df (the DataFrame
-    backend's statistics frame)."""
+    fails here, not at a caller. The one known asymmetry: stats_df (the
+    DataFrame backend's statistics frame)."""
     def public(cls):
         return {n for n in dir(cls)
                 if not n.startswith("_") and callable(getattr(cls, n))}
 
     sqlite, frame = public(SqliteIndexCatalog), public(DataFrameIndexCatalog)
-    assert sqlite - frame == {"upsert_files"}
+    assert sqlite - frame == set()
     assert frame - sqlite == {"stats_df"}
+
+
+def test_frame_backend_is_sqlite_plus_its_lookup():
+    """The DataFrame backend is one SQLite catalog with a Spark lookup:
+    every write, snapshot, DV and read comes from SqliteIndexCatalog,
+    so a DML or snapshot rule is written once."""
+    assert issubclass(DataFrameIndexCatalog, SqliteIndexCatalog)
+    own = {n for n, v in vars(DataFrameIndexCatalog).items()
+           if callable(v)}
+    assert own == {"__init__", "_stats_schema", "stats_df", "get_files"}
 
 
 def test_dbapi_ddl_spellings_reach_driver():

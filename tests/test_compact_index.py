@@ -123,18 +123,6 @@ def _sqlite_state(cat) -> dict:
     return out
 
 
-def _df_state(cat) -> dict:
-    return {"files": dict(cat._files), "sidecars": cat._sidecars,
-            "dv": cat._dv, "dv_rg": cat._dv_rg, "dv_sums": cat._dv_sums,
-            "totals": cat.totals()}
-
-
-def _state(t) -> dict:
-    if isinstance(t.catalog, DataFrameIndexCatalog):
-        return _df_state(t.catalog)
-    return _sqlite_state(t.catalog)
-
-
 def _across_copies(state: dict) -> dict:
     """``_sqlite_state`` without what differs between two copies of a
     layout: the file mtimes and the commit writer's random nonce."""
@@ -158,9 +146,9 @@ def test_compaction_catalog_equals_full_reextraction(
     live = t.count_rows()
     assert t.compact_deletes() == n_files
     assert not t.catalog.get_dv_ranges()
-    after = _state(t)
+    after = _sqlite_state(t.catalog)
     t.refresh(full=True)
-    assert _state(t) == after
+    assert _sqlite_state(t.catalog) == after
     assert t.count_rows() == live
     if backend == "sqlite":
         # the rewritten files' sidecar statistics are really there
@@ -223,9 +211,9 @@ def test_compaction_types_token_blooms_like_build_index(spark, tmp_path):
     assert sorted(t.catalog.get_dv_ranges()) == ["f1.parquet", "f2.parquet"]
     live = t.count_rows()
     assert t.compact_deletes() == 2
-    after = _state(t)
+    after = _sqlite_state(t.catalog)
     t.refresh(full=True)
-    assert _state(t) == after
+    assert _sqlite_state(t.catalog) == after
     assert t.count_rows() == live
 
 
@@ -268,7 +256,8 @@ def test_compaction_spark_jobs_follow_fan_out_rule(spark, tmp_path,
     assert len(want) == a.count_rows()
     for mode in ("executors-by-count", "executors-by-bytes"):
         b = tables[mode]
-        assert _across_copies(_state(a)) == _across_copies(_state(b))
+        assert (_across_copies(_sqlite_state(a.catalog))
+                == _across_copies(_sqlite_state(b.catalog)))
         assert sorted(r["k"] for r in b.query(None).collect()) == want
 
 

@@ -3,6 +3,9 @@ better when written range-sorted on the indexed column than when
 scattered randomly.
 """
 
+import sqlite3
+
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_async_parquet_index_spark.plans.expr import col
@@ -114,6 +117,66 @@ def test_compact_to_fresh_sorted_table(spark, tmp_path, demo_dir):
     assert t2.last_scan.row_groups_scanned <= 1
     # source untouched
     assert len(t.catalog.all_files()) == 3
+
+
+@pytest.mark.parametrize("backend", ["dbapi", "df"])
+def test_compact_to_over_any_backend(spark, tmp_path, demo_dir, backend):
+    """compact_to indexes the new directory with the default catalog,
+    whatever catalog the source table uses: a DB-API or DataFrame
+    catalog cannot be rebuilt without its constructor arguments."""
+    from datafusion_async_parquet_index_spark.sources.catalog import (
+        DBAPIIndexCatalog,
+    )
+    from datafusion_async_parquet_index_spark.sources.df_catalog import (
+        DataFrameIndexCatalog,
+    )
+    from datafusion_async_parquet_index_spark.sources.layout import compact_to
+
+    catalog = (DBAPIIndexCatalog(lambda: sqlite3.connect(
+                   ":memory:", check_same_thread=False))
+               if backend == "dbapi" else DataFrameIndexCatalog(spark))
+    t = IndexedParquetTable(spark, demo_dir, ["value", "text"],
+                            catalog=catalog)
+    t2 = compact_to(t, str(tmp_path / "compacted"), ["value"],
+                    target_file_bytes=1 << 30)
+    assert len(t2.catalog.all_files()) == 1
+    assert t2.count_rows() == 3000
+    assert [r["value"] for r in
+            t2.query(col("value") == 150).collect()] == [150]
+
+
+def test_zorder_layout_depends_only_on_the_rows(spark, tmp_path):
+    """The same multi-partition frame, z-ordered twice, gives the same
+    files: equal row counts per file and per row group, equal bounds."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from datafusion_async_parquet_index_spark.sources.layout import (
+        write_zordered,
+    )
+
+    base = spark.range(0, 40_000, 1, 8).select(
+        F.col("id").cast("int").alias("a"),
+        F.pmod(F.hash(F.col("id").cast("string")), F.lit(40_000))
+         .cast("int").alias("b"))
+
+    def layout(name):
+        d = str(tmp_path / name)
+        write_zordered(base, d, ["a", "b"], num_files=4,
+                       row_group_bytes=1 << 15)
+        out = []
+        for f in sorted(glob.glob(f"{d}/*.parquet")):
+            md = pq.ParquetFile(f).metadata
+            out.append([(md.row_group(i).num_rows,
+                         md.row_group(i).column(0).statistics.min,
+                         md.row_group(i).column(1).statistics.max)
+                        for i in range(md.num_row_groups)])
+        return out
+
+    first = layout("z1")
+    assert len(first) == 4
+    assert layout("z2") == first
 
 
 def test_ivf_layout_topk_parity_and_partition_pruning(spark, sf_dir, tmp_path):

@@ -254,13 +254,10 @@ def test_upsert_dv_merges_in_range_domain(spark, backend):
     cat.upsert_file(FileStats("f.parquet", 1, 1, 10_000_000),
                     [RowGroupStats(0, 10_000_000, {"v": (0, 0, 9)})])
     big = [[0, 1_000_000], [2_000_000, 1_000_000], [4_000_000, 1_000_000]]
-    if backend == "sqlite":
-        fid = cat._query("SELECT file_id FROM file_statistics")[0][0]
-        cat._exec("INSERT INTO deletion_vectors "
-                  "(file_id, ranges, deleted_rows) VALUES (?, ?, ?)",
-                  (fid, json.dumps(big), 3_000_000))
-    else:
-        cat._dv["f.parquet"] = [tuple(r) for r in big]
+    fid = cat._query("SELECT file_id FROM file_statistics")[0][0]
+    cat._exec("INSERT INTO deletion_vectors "
+              "(file_id, ranges, deleted_rows) VALUES (?, ?, ?)",
+              (fid, json.dumps(big), 3_000_000))
     tracemalloc.start()
     try:
         total = cat.upsert_dv("f.parquet", {0: [3_000_000]})
