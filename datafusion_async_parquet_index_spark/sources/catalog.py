@@ -323,6 +323,24 @@ def rtree_hi(v) -> float:
     return _f32_step(f, up=True) if f < v else f
 
 
+def survivors_by_file(rows) -> List[Tuple[str, List[int]]]:
+    """The lookup's result shape from its ``(file_name, row_group)``
+    rows, which may come in any order: ``[(file_name, [row_group,
+    ...])]`` sorted by file name, each file's row groups ascending.
+    Rows must already be unique; grouping does not deduplicate."""
+    by_file: Dict[str, List[int]] = {}
+    for file_name, row_group in rows:
+        rgs = by_file.get(file_name)
+        if rgs is None:
+            by_file[file_name] = [row_group]
+        else:
+            rgs.append(row_group)
+    out = sorted(by_file.items())
+    for _, rgs in out:
+        rgs.sort()
+    return out
+
+
 class ConcurrentWriteError(RuntimeError):
     """Raised when a DML verb's commit-time CAS finds the catalog
     version moved past the version the verb started planning from —
@@ -1061,8 +1079,14 @@ class SqliteIndexCatalog(SidecarReads):
         """Evaluate a stats-space predicate against the catalog.
 
         Returns [(file_name, [row_group, ...])] for row groups that MAY
-        contain matching rows — the same CTE + INNER JOIN + DISTINCT shape
-        the reference emits (index.rs:127-156, doc index.rs:55-67).
+        contain matching rows, sorted by file name with each file's row
+        groups ascending — the reference's CTE + INNER JOIN lookup
+        (index.rs:127-156, doc index.rs:55-67) without its DISTINCT and
+        ORDER BY. Each (file, row group) comes back once without them:
+        it is the primary key of row_group_statistics, and the R-tree
+        stabs are joined with UNION. The ordering happens on the driver
+        (``survivors_by_file``), which spares SQLite two temporary
+        B-trees over the survivors on every wide plan.
         Files with zero surviving row groups are absent from the result.
 
         prefilter: optional (column, [(lo, hi), ...]) — one or more
@@ -1108,16 +1132,12 @@ class SqliteIndexCatalog(SidecarReads):
                 {pre_sql}
                 WHERE {where}
             )
-            SELECT DISTINCT f.file_name, rg.row_group
+            SELECT f.file_name, rg.row_group
             FROM file_statistics f
             INNER JOIN row_groups rg ON f.file_id = rg.file_id
-            ORDER BY f.file_name, rg.row_group
         """
-        rows = self._query(sql, pre_params + list(renderer.params))
-        out: Dict[str, List[int]] = {}
-        for file_name, row_group in rows:
-            out.setdefault(file_name, []).append(row_group)
-        return sorted(out.items())
+        return survivors_by_file(
+            self._query(sql, pre_params + list(renderer.params)))
 
     def _sidecar_rows(self, stat, columns, file_names=None):
         """SidecarReads' row source; with file_names, one query per

@@ -30,14 +30,14 @@ at with "remote Postgres".
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..plans.expr import Expr
 from ..session import local_frame
-from .catalog import SqliteIndexCatalog, decode_value
+from .catalog import SqliteIndexCatalog, decode_value, survivors_by_file
 
 # type-category -> Spark type for {col}_min / {col}_max (unsigned ints
 # already widened by the "int" category; reference index.rs:396-415)
@@ -127,7 +127,4 @@ class DataFrameIndexCatalog(SqliteIndexCatalog):
             .select("file_name", "row_group")
             .collect()
         )
-        out: Dict[str, List[int]] = {}
-        for r in kept:
-            out.setdefault(r["file_name"], []).append(int(r["row_group"]))
-        return sorted((f, sorted(rgs)) for f, rgs in out.items())
+        return survivors_by_file((r[0], int(r[1])) for r in kept)

@@ -621,14 +621,31 @@ def list_parquet_files(data_dir: str, recursive: bool = False) -> List[str]:
     """Sorted directory listing (reference main.rs:409-423 sorts entries
     by file name for deterministic index order). recursive=True walks
     hive-partitioned layouts, skipping hidden/metadata entries
-    (_SUCCESS, _delta_log, .crc — the usual lakehouse convention)."""
-    pat = "**/*.parquet" if recursive else "*.parquet"
-    out = []
-    for p in Path(data_dir).glob(pat):
-        rel = p.relative_to(data_dir)
-        if any(seg.startswith((".", "_")) for seg in rel.parts):
-            continue
-        out.append(str(p))
+    (_SUCCESS, _delta_log, .crc — the usual lakehouse convention).
+
+    One ``os.scandir`` per directory: names are matched as strings, and
+    directory entries' types come from the listing itself, so a file
+    costs no stat call. Symlinked directories are listed by name but
+    not descended into, and an unreadable or missing directory lists
+    nothing."""
+    out: List[str] = []
+
+    def walk(path: str, prefix: str) -> None:
+        try:
+            with os.scandir(path) as it:
+                entries = list(it)
+        except OSError:
+            return
+        for e in entries:
+            if e.name.startswith((".", "_")):
+                continue
+            if e.name.endswith(".parquet"):
+                out.append(prefix + e.name)
+            if recursive and e.is_dir(follow_symlinks=False):
+                walk(e.path, f"{prefix}{e.name}/")
+
+    root = str(Path(data_dir))   # the spelling Path.glob would return
+    walk(root, "" if root == "." else root.rstrip("/") + "/")
     return sorted(out)
 
 

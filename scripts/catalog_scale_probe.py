@@ -12,11 +12,13 @@ backend: point equality, a 1% range, a contradiction, and an IN-list,
 plus the upsert throughput that bounds index-build time.
 
 Next to the lookup timings each tier prints the end-to-end planner:
-``plan_scan_ms`` is ``IndexedParquetTable.plan_scan`` of the point
-predicate through a table assembled over the catalog alone (no Parquet,
-no Spark job), and ``all_files_ms`` / ``totals_ms`` time the O(files)
-file-row read and the O(1) counter read that fills
-``ScanDecision.total_row_groups``.
+``plan_{point,range1pct,in10,unpruned}_ms`` time
+``IndexedParquetTable.plan_scan`` through a table assembled over the
+catalog alone (no Parquet, no Spark job). The unpruned predicate keeps
+every row group, so its row shows what grouping and ordering the whole
+catalog's survivors on the driver costs. ``all_files_ms`` /
+``totals_ms`` time the O(files) file-row read and the O(1) counter read
+that fills ``ScanDecision.total_row_groups``.
 
 Usage: python scripts/catalog_scale_probe.py [max_files]
 Prints one JSON line per scale tier.
@@ -96,23 +98,29 @@ def probe(n_files: int, rtree: bool = False) -> dict:
                           if rtree else cat.get_files(sp))
         return ms, sum(len(r) for _, r in res)
 
-    point_ms, point_rgs = t_plan(Col("v") == Lit(domain // 2),
-                                 [(domain // 2, domain // 2)])
+    point = Col("v") == Lit(domain // 2)
     lo = domain // 2
-    rng_ms, rng_rgs = t_plan(
-        (Col("v") >= Lit(lo)) & (Col("v") <= Lit(lo + domain // 100)),
-        [(lo, lo + domain // 100)])
+    rng = (Col("v") >= Lit(lo)) & (Col("v") <= Lit(lo + domain // 100))
+    in_lits = [i * domain // 10 + 7 for i in range(10)]
+    in10 = InList(Col("v"), [Lit(x) for x in in_lits])
+    unpruned = Col("v") >= Lit(0)
+    point_ms, point_rgs = t_plan(point, [(domain // 2, domain // 2)])
+    rng_ms, rng_rgs = t_plan(rng, [(lo, lo + domain // 100)])
     contra_ms, contra_rgs = t_plan(
         (Col("v") > Lit(domain)) & (Col("v") < Lit(0)), [(domain, 0)])
-    in_lits = [i * domain // 10 + 7 for i in range(10)]
-    in_ms, in_rgs = t_plan(InList(Col("v"), [Lit(x) for x in in_lits]),
-                           [(x, x) for x in in_lits])
+    in_ms, in_rgs = t_plan(in10, [(x, x) for x in in_lits])
     all_files_ms, _ = best_ms(cat.all_files)
     totals_ms, _ = best_ms(cat.totals)
     table = planner(cat)
-    plan_ms, dec = best_ms(
-        lambda: table.plan_scan(Col("v") == Lit(domain // 2)))
-    assert dec.row_groups_scanned == point_rgs
+    plans = {}
+    for name, pred, rgs, reps in (("point", point, point_rgs, 20),
+                                  ("range1pct", rng, rng_rgs, 20),
+                                  ("in10", in10, in_rgs, 20),
+                                  ("unpruned", unpruned,
+                                   n_files * RGS_PER_FILE, 5)):
+        plans[f"plan_{name}_ms"], dec = best_ms(
+            lambda: table.plan_scan(pred), reps)
+        assert dec.row_groups_scanned == rgs, (name, dec.row_groups_scanned)
     return {
         "files": n_files, "rg_rows": n_files * RGS_PER_FILE,
         "rtree": rtree, "build_s": round(build_s, 2),
@@ -122,7 +130,7 @@ def probe(n_files: int, rtree: bool = False) -> dict:
         "contradiction_ms": contra_ms, "contradiction_rgs": contra_rgs,
         "in10_ms": in_ms, "in10_rgs": in_rgs,
         "all_files_ms": all_files_ms, "totals_ms": totals_ms,
-        "plan_scan_ms": plan_ms,
+        **plans,
     }
 
 

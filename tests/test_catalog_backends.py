@@ -7,9 +7,11 @@ renderers.
 
 import pytest
 
-from datafusion_async_parquet_index_spark.plans.expr import col
+from datafusion_async_parquet_index_spark.plans.expr import (
+    Col, InList, Lit, col,
+)
 from datafusion_async_parquet_index_spark.sources.catalog import (
-    SqliteIndexCatalog,
+    FileStats, RowGroupStats, SqliteIndexCatalog, survivors_by_file,
 )
 from datafusion_async_parquet_index_spark.sources.df_catalog import (
     DataFrameIndexCatalog,
@@ -1066,3 +1068,79 @@ def test_snapshot_manifest_parity_all_four_backends(spark, corpus):
     assert all(i == identities["sqlite"] for i in identities.values())
     for _name, (size, mt, md5) in base.items():
         assert size > 0 and mt is not None and md5 is not None
+
+
+# -- lookup result shape (every backend) --------------------------------
+
+# files of four 100-wide row groups over a sorted int column, inserted out
+# of name order so file ids do not follow names; b's row group 2 carries
+# no bounds, so its R-tree entry spans the whole domain
+_SHAPE_FILES = ("d.parquet", "b.parquet", "a.parquet", "c.parquet")
+_SHAPE_ALL = [(n, [0, 1, 2, 3]) for n in sorted(_SHAPE_FILES)]
+_SHAPE_CASES = [
+    # IN-list inside one row group: each of a's and b's row groups is
+    # found by all three stabs, and the UNION returns it once
+    (InList(Col("v"), [Lit(5), Lit(17), Lit(42)]),
+     [(5, 5), (17, 17), (42, 42)],
+     [("a.parquet", [0]), ("b.parquet", [2])]),
+    # closed range envelope across a file boundary
+    ((Col("v") >= Lit(150)) & (Col("v") <= Lit(650)), [(150, 650)],
+     [("a.parquet", [1, 2, 3]), ("b.parquet", [0, 1, 2])]),
+    # a point in c: the bound-less row group survives beside it
+    (Col("v") == Lit(950), [(950, 950)],
+     [("b.parquet", [2]), ("c.parquet", [1])]),
+    # prunes nothing
+    (Col("v").is_null() | Col("v").is_not_null(), None, _SHAPE_ALL),
+]
+
+
+def _shape_catalog(cat):
+    cat.initialize({"v": "int"})
+    for name in _SHAPE_FILES:
+        base = "abcd".index(name[0]) * 400
+        rgs = [RowGroupStats(row_group=rg, row_count=100,
+                             columns={"v": (0, base + rg * 100,
+                                            base + rg * 100 + 99)})
+               for rg in range(4)]
+        if name == "b.parquet":
+            rgs[2].columns["v"] = (None, None, None)
+        cat.upsert_file(FileStats(name, 1000, 4, 400), rgs[::-1])
+    return cat
+
+
+def test_lookup_shape_across_backends(spark):
+    """get_files returns [(file, ascending row groups)] sorted by file
+    name with each (file, row group) once, on every backend and with
+    the R-tree stabs on or off; uniqueness rests on the row-group
+    primary key and the UNION of the stabs, ordering on the driver."""
+    from datafusion_async_parquet_index_spark.plans.pruning import (
+        PruningRewriter,
+    )
+
+    cats = {
+        "sqlite": SqliteIndexCatalog(),
+        "sqlite_rtree": SqliteIndexCatalog(rtree_columns=("v",)),
+        "dbapi_qmark": _dbapi_qmark(),
+        "dbapi_format": _dbapi_format(),
+        "df": DataFrameIndexCatalog(spark),
+    }
+    for cat in cats.values():
+        _shape_catalog(cat)
+    assert cats["sqlite_rtree"]._rtree_active == ["v"]
+    rewrite = PruningRewriter({"v": "int"}).rewrite
+    for pred, windows, want in _SHAPE_CASES:
+        prefilter = ("v", windows) if windows else None
+        for name, cat in cats.items():
+            got = cat.get_files(rewrite(pred), prefilter=prefilter)
+            pairs = [(f, rg) for f, rgs in got for rg in rgs]
+            assert len(pairs) == len(set(pairs)), (name, pred.to_sql(), got)
+            assert [f for f, _ in got] == sorted({f for f, _ in got})
+            assert all(rgs == sorted(rgs) and rgs for _, rgs in got)
+            assert got == want, (name, pred.to_sql(), got)
+
+
+def test_survivors_by_file_orders_any_input():
+    rows = [("b", 3), ("a", 1), ("b", 0), ("c", 2), ("a", 0), ("b", 1)]
+    assert survivors_by_file(rows) == [
+        ("a", [0, 1]), ("b", [0, 1, 3]), ("c", [2])]
+    assert survivors_by_file([]) == []
