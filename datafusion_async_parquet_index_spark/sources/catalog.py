@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import heapq
+import itertools
 import sqlite3
 import threading
 from dataclasses import dataclass, field
@@ -323,6 +324,37 @@ def rtree_hi(v) -> float:
     return _f32_step(f, up=True) if f < v else f
 
 
+def rtree_runs(category: str, bounds) -> List[Tuple[int, int, float, float]]:
+    """One file's R-tree entries as ``(first_rg, last_rg, lo, hi)``
+    runs, from its ``(row_group, min, max)`` bounds in the column's
+    ENCODED domain, row groups ascending. A run is a maximal sequence of
+    consecutive row groups whose joined intervals leave no gap: integer
+    encodings (int, date, timestamp) may abut (next min = run max + 1),
+    floats must touch. The run's [lo, hi] is then exactly the union of
+    its members' intervals, widened outward to f32, so the index loses
+    no precision: a window that touches a run touches at least one
+    member, and the exact stats SQL still decides every row group. A
+    row group with a NULL or NaN bound is its own full-domain run."""
+    step = 0 if category == "float" else 1
+    runs: List[list] = []
+    open_run = None   # [first, last, mn, mx] of the run that may grow
+    for rg, mn, mx in bounds:
+        if mn is None or mx is None or mn != mn or mx != mx:
+            runs.append([rg, rg, None, None])
+            open_run = None
+        elif (open_run is not None and rg == open_run[1] + 1
+              and mn <= open_run[3] + step and mx >= open_run[2] - step):
+            open_run[1] = rg
+            open_run[2] = min(open_run[2], mn)
+            open_run[3] = max(open_run[3], mx)
+        else:
+            open_run = [rg, rg, mn, mx]
+            runs.append(open_run)
+    return [(first, last, _RTREE_FULL_LO, _RTREE_FULL_HI) if mn is None
+            else (first, last, rtree_lo(mn), rtree_hi(mx))
+            for first, last, mn, mx in runs]
+
+
 def survivors_by_file(rows) -> List[Tuple[str, List[int]]]:
     """The lookup's result shape from its ``(file_name, row_group)``
     rows, which may come in any order: ``[(file_name, [row_group,
@@ -384,8 +416,10 @@ class SqliteIndexCatalog(SidecarReads):
         self._lease_fd = None
         self.index_schema: Dict[str, str] = {}
         # rtree planning acceleration (opt-in): per listed NUMERIC
-        # column, a SQLite R-tree over the per-row-group [min, max]
-        # intervals turns the stats lookup's full-table scan into an
+        # column, a SQLite R-tree over the [min, max] intervals of each
+        # file's gap-free row-group runs (``rtree_runs``: lossless, a
+        # run's interval is the union of its members') turns the stats
+        # lookup's full-table scan into an
         # O(log n) interval stab — the fix for planning latency growing
         # linearly with the file population (measured: 261 ms -> sub-ms
         # point plans at 200k files / 1.6M row-group rows). Soundness:
@@ -795,17 +829,21 @@ class SqliteIndexCatalog(SidecarReads):
                 # match only the virtual tables themselves — an rtree
                 # spawns shadow tables (_node/_rowid/_parent) that also
                 # start with rg_rtree_ and must never be dropped directly
+                # a table without the run column holds one entry per
+                # row group (the pre-run layout): dropped and rebuilt
                 for (tbl,) in self._query(
                         "SELECT name FROM sqlite_master WHERE type = 'table' "
                         "AND name LIKE 'rg_rtree_%' "
                         "AND sql LIKE 'CREATE VIRTUAL TABLE%'"):
-                    if tbl[len("rg_rtree_"):] not in active:
+                    if (tbl[len("rg_rtree_"):] not in active
+                            or "last_rg" not in self._existing_columns(
+                                f'"{tbl}"')):
                         self._exec(f'DROP TABLE IF EXISTS "{tbl}"')
             for c in getattr(self, "rtree_columns", ()):
                 if c in active:
                     self._exec(
                         f'CREATE VIRTUAL TABLE IF NOT EXISTS '
-                        f'"rg_rtree_{c}" USING rtree(id, mn, mx)')
+                        f'"rg_rtree_{c}" USING rtree(id, mn, mx, +last_rg)')
                     self._reconcile_rtree(c)
                     self._rtree_active.append(c)
 
@@ -844,38 +882,51 @@ class SqliteIndexCatalog(SidecarReads):
                 "row_groups = row_groups + ?, row_count = row_count + ? "
                 "WHERE id = 1", (files, row_groups, rows))
 
+    def _insert_rtree_runs(self, c: str, files) -> None:
+        """Insert the ``rtree_runs`` of each ``(file_id, bounds)`` of
+        ``files`` into ``rg_rtree_<c>``: entry id ``file_id * stride +
+        first_rg``, auxiliary column ``last_rg``."""
+        cat = self.index_schema[c]
+        ent = [(file_id * _RTREE_ID_STRIDE + first, lo, hi, last)
+               for file_id, bounds in files
+               for first, last, lo, hi in rtree_runs(cat, bounds)]
+        if ent:
+            self._execmany(
+                f'INSERT INTO "rg_rtree_{c}" (id, mn, mx, last_rg) '
+                f'VALUES (?, ?, ?, ?)', ent)
+
     def _reconcile_rtree(self, c: str) -> None:
         """Backfill ``rg_rtree_<c>`` from ``row_group_statistics`` when
         the two disagree — e.g. ``rtree_columns`` newly enabled on a
         catalog persisted without it (the CLI builds without the flag,
         then queries/refreshes with it; ``incremental_attach`` skips
         unchanged files so the rtree would stay empty and the INNER-JOIN
-        prefilter in ``get_files`` would drop every valid row group)."""
-        have = self._query(f'SELECT COUNT(*) FROM "rg_rtree_{c}"')[0][0]
+        prefilter in ``get_files`` would drop every valid row group).
+        The R-tree holds one interval per gap-free run of a file's row
+        groups (``rtree_runs``), so it is complete when its runs' lengths
+        sum to the number of row-group rows. The lengths are read from
+        the R-tree's rowid table, as in ``get_files``."""
+        have = self._query(
+            f'SELECT COALESCE(SUM(a0 - rowid % {_RTREE_ID_STRIDE} + 1), 0) '
+            f'FROM "rg_rtree_{c}_rowid"')[0][0]
         want = self._query(
             "SELECT COUNT(*) FROM row_group_statistics")[0][0]
         if have == want:
             return
         self._exec(f'DELETE FROM "rg_rtree_{c}"')
-        ent = []
-        for fid, rg, mn, mx in self._query(
-                f'SELECT file_id, row_group, "{c}_min", "{c}_max" '
-                f"FROM row_group_statistics"):
-            if rg >= _RTREE_ID_STRIDE:
-                raise ValueError(
-                    f"row_group {rg} >= rtree id stride "
-                    f"{_RTREE_ID_STRIDE}; rtree ids would alias")
-            if mn is None or mx is None:
-                lo, hi = _RTREE_FULL_LO, _RTREE_FULL_HI
-            else:
-                # stored min/max are already encode_value()-encoded, the
-                # same form the upsert path feeds rtree_lo/rtree_hi
-                lo, hi = rtree_lo(mn), rtree_hi(mx)
-            ent.append((fid * _RTREE_ID_STRIDE + rg, lo, hi))
-        if ent:
-            self._execmany(
-                f'INSERT INTO "rg_rtree_{c}" (id, mn, mx) '
-                f'VALUES (?, ?, ?)', ent)
+        # stored min/max are already encode_value()-encoded, the same
+        # form the upsert path feeds rtree_runs
+        rows = self._query(
+            f'SELECT file_id, row_group, "{c}_min", "{c}_max" '
+            f"FROM row_group_statistics ORDER BY file_id, row_group")
+        top = max((r[1] for r in rows), default=0)
+        if top >= _RTREE_ID_STRIDE:
+            raise ValueError(
+                f"row_group {top} >= rtree id stride "
+                f"{_RTREE_ID_STRIDE}; rtree ids would alias")
+        self._insert_rtree_runs(c, (
+            (fid, [r[1:] for r in group])
+            for fid, group in itertools.groupby(rows, key=lambda r: r[0])))
 
     # -- EP2: transactional upsert (reference index.rs:242-329) -------
     def upsert_file(
@@ -1017,24 +1068,17 @@ class SqliteIndexCatalog(SidecarReads):
         for c in getattr(self, "_rtree_active", ()):
             cat = self.index_schema[c]
             if old:
+                # every run id is file_id * stride + its first row group
                 self._execmany(
                     f'DELETE FROM "rg_rtree_{c}" WHERE id = ?',
                     [(old[0][0] * _RTREE_ID_STRIDE + rg,)
                      for rg in range(old[0][1])])
-            ent = []
-            for rg in rgs:
+            bounds = []
+            for rg in sorted(rgs, key=lambda rg: rg.row_group):
                 _, mn, mx = rg.columns.get(c, (None, None, None))
-                if mn is None or mx is None:
-                    lo, hi = _RTREE_FULL_LO, _RTREE_FULL_HI
-                else:
-                    lo = rtree_lo(encode_value(cat, mn))
-                    hi = rtree_hi(encode_value(cat, mx))
-                ent.append((file_id * _RTREE_ID_STRIDE + rg.row_group,
-                            lo, hi))
-            if ent:
-                self._execmany(
-                    f'INSERT INTO "rg_rtree_{c}" (id, mn, mx) '
-                    f'VALUES (?, ?, ?)', ent)
+                bounds.append((rg.row_group, encode_value(cat, mn),
+                               encode_value(cat, mx)))
+            self._insert_rtree_runs(c, [(file_id, bounds)])
         for stat, payload in zip(STATISTICS, payloads):
             self._exec(f"DELETE FROM {stat.table} WHERE file_id = ?",
                        (file_id,))
@@ -1093,12 +1137,16 @@ class SqliteIndexCatalog(SidecarReads):
         intervals in the column's ENCODED numeric domain (several for
         IN-lists: k point stabs beat one domain-wide envelope by
         orders of magnitude). When the column has an active rtree, the
-        exact WHERE evaluates only over the union of the rtree's
-        interval-stab candidates (O(k log n + candidates) instead of
-        O(row groups)); query windows widen to f32 like the stored
-        intervals, so the restriction is a pure over-approximation.
-        Ignored when no rtree serves the column — same results either
-        way (tested)."""
+        exact WHERE evaluates only over the row groups of the runs the
+        rtree's interval stabs return (O(k log n + candidates) instead
+        of O(row groups)). The rtree holds one interval per gap-free
+        run of a file's row groups (``rtree_runs``), exactly the union
+        of its members' intervals, so a window that touches a run
+        touches at least one member: the runs cost no precision, and
+        the exact WHERE still decides each member. Query windows widen
+        to f32 like the stored intervals, so the restriction is a pure
+        over-approximation. Ignored when no rtree serves the column —
+        same results either way (tested)."""
         renderer = _SqliteStatsSql(
             {"row_count": "int",
              **{c: cat for c, _, cat in self._stat_columns()}})
@@ -1108,20 +1156,30 @@ class SqliteIndexCatalog(SidecarReads):
         if prefilter is not None:
             col, wins = prefilter
             if col in getattr(self, "_rtree_active", ()) and wins:
-                # overlap test per window: rg_max >= lo AND rg_min <= hi,
-                # both sides widened outward to f32; windows UNION so
-                # each is an independent indexed stab
+                # overlap test per window: run_max >= lo AND run_min <=
+                # hi, both sides widened outward to f32; windows UNION so
+                # each is an independent indexed stab. A run stands for
+                # row groups first..last of one file. Its last_rg is read
+                # from the R-tree's own rowid table, whose column a0
+                # holds the first auxiliary column: reading it through
+                # the virtual table prepares a statement per stab, which
+                # took an IN-10 stab set at 20k files from 91 to 188 us
+                # on a 4-core host.
                 stab = (f'SELECT id FROM "rg_rtree_{col}" '
                         f'WHERE mx >= ? AND mn <= ?')
                 union = " UNION ".join([stab] * len(wins))
                 pre_sql = f"""
-                    JOIN (SELECT CAST(id / {_RTREE_ID_STRIDE} AS INTEGER)
+                    JOIN (SELECT CAST(s.id / {_RTREE_ID_STRIDE} AS INTEGER)
                                      AS c_fid,
-                                 CAST(id % {_RTREE_ID_STRIDE} AS INTEGER)
-                                     AS c_rg
-                          FROM ({union})) cand
+                                 CAST(s.id % {_RTREE_ID_STRIDE} AS INTEGER)
+                                     AS c_first,
+                                 r.a0 AS c_last
+                          FROM ({union}) s
+                          JOIN "rg_rtree_{col}_rowid" r ON r.rowid = s.id
+                         ) cand
                       ON cand.c_fid = row_group_statistics.file_id
-                     AND cand.c_rg = row_group_statistics.row_group
+                     AND row_group_statistics.row_group
+                         BETWEEN cand.c_first AND cand.c_last
                 """
                 for lo, hi in wins:
                     pre_params += [rtree_lo(lo), rtree_hi(hi)]

@@ -142,24 +142,34 @@ def write_zordered(
             placed = F.shiftleft(bit, j * len(cols) + ci)
             z = placed if z is None else z.bitwiseOR(placed)
     zed = casted.withColumn("__zval", z).drop(*[f"__zc_{c}" for c in cols])
+    _write_ranked(zed, rank("__zval", quantiles(zed, ["__zval"],
+                                                num_files)[0]),
+                  path, ["__zval", *cols], num_files, row_group_bytes,
+                  drop=["__zval"])
 
-    # one bigint key per shuffle partition, read off the hash
-    # partitioner itself: repartition(num_files, key) sends every row
-    # carrying keys[i] to partition i, so file i holds z range i
-    spark = df.sparkSession
-    probe = (spark.range(64 * num_files).repartition(num_files, "id")
+
+def _write_ranked(df: DataFrame, rank, path: str, sort_cols: Sequence[str],
+                  num_files: int, row_group_bytes: int,
+                  drop: Sequence[str] = ()) -> None:
+    """Write ``df`` with the rows of ``rank`` i (0 <= i < num_files) in
+    shuffle partition i, so file i holds range i, each sorted on
+    sort_cols. The route is one bigint key per shuffle partition, read
+    off the hash partitioner itself: repartition(num_files, key) sends
+    every row carrying keys[i] to partition i."""
+    from pyspark.sql import functions as F
+
+    probe = (df.sparkSession.range(64 * num_files)
+             .repartition(num_files, "id")
              .select("id", F.spark_partition_id().alias("p")).collect())
     first = {}
     for r in probe:
         first.setdefault(r["p"], r["id"])
     keys = F.array(*[F.lit(first[i]).cast("bigint")
                      for i in range(num_files)])
-    (zed.withColumn("__zkey", F.element_at(
-            keys, rank("__zval", quantiles(zed, ["__zval"], num_files)[0])
-            + 1))
-     .repartition(num_files, "__zkey")
-     .sortWithinPartitions("__zval", *cols)
-     .drop("__zval", "__zkey")
+    (df.withColumn("__rkey", F.element_at(keys, rank + 1))
+     .repartition(num_files, "__rkey")
+     .sortWithinPartitions(*sort_cols)
+     .drop(*drop, "__rkey")
      .write.mode("overwrite")
      .option("parquet.block.size", str(row_group_bytes))
      .parquet(path))
@@ -172,14 +182,38 @@ def write_range_sorted(
     num_files: int = 8,
     row_group_bytes: int = 1 << 20,
 ) -> None:
-    """Write Parquet range-partitioned AND sorted on sort_cols:
-    repartitionByRange gives each output file a disjoint slice of the
-    sort-key domain; sortWithinPartitions orders rows inside, so every
-    row group's [min,max] is tight and disjoint. row_group_bytes maps to
+    """Write Parquet range-partitioned AND sorted on sort_cols: each
+    output file holds a disjoint slice of the sort-key domain and
+    sortWithinPartitions orders rows inside, so every row group's
+    [min,max] is tight and disjoint. row_group_bytes maps to
     parquet.block.size (small values => more row groups => finer
-    pruning granularity, at footer-metadata cost)."""
-    (df.repartitionByRange(num_files, *sort_cols)
-     .sortWithinPartitions(*sort_cols)
-     .write.mode("overwrite")
-     .option("parquet.block.size", str(row_group_bytes))
-     .parquet(path))
+    pruning granularity, at footer-metadata cost).
+
+    The slices are cut at the key's exact quantiles: the keys at
+    positions i * rows / num_files of the sorted key order (ties hold
+    equal keys, so those positions name the same keys on every build).
+    A row goes to slice i when i of the cut keys are <= its key, in the
+    sort's own order (lexicographic over sort_cols, NULLs first). So
+    the layout depends only on the input rows; ``repartitionByRange``
+    would cut at bounds sampled with a seed taken from the RDD id,
+    which differ from build to build."""
+    from pyspark.sql import functions as F
+
+    cols = list(sort_cols)
+    ordered = df.select(*cols).orderBy(*cols)
+    n = ordered.count()
+    at = {i * n // num_files for i in range(1, num_files)}
+    cuts = (ordered.rdd.zipWithIndex().filter(lambda kv: kv[1] in at)
+            .keys().collect())
+    if not cuts:
+        rank = F.lit(0)
+    else:
+        types = {f.name: f.dataType for f in df.schema.fields}
+        key = F.struct(*[F.col(c) for c in cols])
+        rank = F.aggregate(
+            F.array(*[F.struct(*[F.lit(v).cast(types[c]).alias(c)
+                                 for c, v in zip(cols, cut)])
+                      for cut in cuts]),
+            F.lit(0),
+            lambda acc, cut: acc + F.when(key >= cut, 1).otherwise(0))
+    _write_ranked(df, rank, path, cols, num_files, row_group_bytes)

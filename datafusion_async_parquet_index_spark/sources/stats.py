@@ -623,11 +623,13 @@ def list_parquet_files(data_dir: str, recursive: bool = False) -> List[str]:
     hive-partitioned layouts, skipping hidden/metadata entries
     (_SUCCESS, _delta_log, .crc — the usual lakehouse convention).
 
+    Only regular files (or symlinks to them) are listed: a directory
+    named ``*.parquet``, such as Spark's ``df.write.parquet("x.parquet")``
+    output, is walked in recursive mode and skipped in flat mode.
     One ``os.scandir`` per directory: names are matched as strings, and
     directory entries' types come from the listing itself, so a file
-    costs no stat call. Symlinked directories are listed by name but
-    not descended into, and an unreadable or missing directory lists
-    nothing."""
+    costs no stat call. Symlinked directories are not descended into,
+    and an unreadable or missing directory lists nothing."""
     out: List[str] = []
 
     def walk(path: str, prefix: str) -> None:
@@ -639,7 +641,7 @@ def list_parquet_files(data_dir: str, recursive: bool = False) -> List[str]:
         for e in entries:
             if e.name.startswith((".", "_")):
                 continue
-            if e.name.endswith(".parquet"):
+            if e.name.endswith(".parquet") and e.is_file():
                 out.append(prefix + e.name)
             if recursive and e.is_dir(follow_symlinks=False):
                 walk(e.path, f"{prefix}{e.name}/")

@@ -415,8 +415,9 @@ class IndexedParquetTable(CatalogAnswers):
         files written with a smaller truncation threshold."""
         self.spark = spark
         self.data_dir = data_dir
-        # rtree_columns: numeric columns whose per-row-group [min, max]
-        # intervals also enter a SQLite R-tree, turning planning's
+        # rtree_columns: numeric columns whose [min, max] intervals,
+        # one per gap-free run of a file's row groups, also enter a
+        # SQLite R-tree, turning planning's
         # stats-table scan into an O(log n) interval stab (see
         # catalog.get_files prefilter). Only meaningful for the default
         # SQLite catalog; an injected catalog brings its own setting.

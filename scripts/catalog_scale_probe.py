@@ -9,7 +9,20 @@ data it replaces scanning grows unbounded. This probe builds synthetic
 catalogs (no parquet involved: planning touches only the catalog) at
 increasing file counts and times plan-shaped lookups on the SQLite
 backend: point equality, a 1% range, a contradiction, and an IN-list,
-plus the upsert throughput that bounds index-build time.
+plus the bulk ``upsert_files`` load (``load_s``) that bounds index-build
+time.
+
+Two layouts run at each tier. ``sorted``: file f holds [f*8e5,
+(f+1)*8e5) in 8 abutting row groups, like a table clustered on the
+column. ``interleaved``: row group r of file f holds a narrow interval
+in slot r*files + f, so a file's row groups lie far apart and every
+file's envelope spans the whole domain. With the R-tree on,
+``rtree_entries`` counts its entries: one per gap-free run of a file's
+row groups, whose interval is exactly the union of its members'. The
+sorted layout needs one entry per file, the interleaved one an entry
+per row group. Runs lose no precision: a window that touches a run
+touches at least one of its members, and the exact stats SQL still
+decides every row group.
 
 Next to the lookup timings each tier prints the end-to-end planner:
 ``plan_{point,range1pct,in10,unpruned}_ms`` time
@@ -21,7 +34,7 @@ catalog's survivors on the driver costs. ``all_files_ms`` /
 that fills ``ScanDecision.total_row_groups``.
 
 Usage: python scripts/catalog_scale_probe.py [max_files]
-Prints one JSON line per scale tier.
+Prints one JSON line per layout, scale tier and R-tree setting.
 """
 
 import json
@@ -42,24 +55,31 @@ from datafusion_async_parquet_index_spark.sources.table import (
 
 RGS_PER_FILE = 8
 ROWS_PER_RG = 100_000
+NARROW = 1_000   # an interleaved row group's width, far below its slot's
+LAYOUTS = ("sorted", "interleaved")
 
 
-def build(n_files: int, rtree: bool = False) -> tuple:
+def bounds(layout: str, n_files: int, f: int, rg: int) -> tuple:
+    """[min, max] of row group rg of file f."""
+    if layout == "sorted":
+        lo = (f * RGS_PER_FILE + rg) * ROWS_PER_RG
+        return lo, lo + ROWS_PER_RG - 1
+    lo = (rg * n_files + f) * ROWS_PER_RG
+    return lo, lo + NARROW
+
+
+def build(n_files: int, layout: str = "sorted", rtree: bool = False) -> tuple:
     cat = SqliteIndexCatalog(rtree_columns=("v",) if rtree else ())
     cat.initialize({"v": "int"})
+    items = (
+        (FileStats(f"f{f:07d}.parquet", 512 << 20, RGS_PER_FILE,
+                   RGS_PER_FILE * ROWS_PER_RG),
+         [RowGroupStats(row_group=rg, row_count=ROWS_PER_RG,
+                        columns={"v": (0, *bounds(layout, n_files, f, rg))})
+          for rg in range(RGS_PER_FILE)])
+        for f in range(n_files))
     t0 = time.perf_counter()
-    for f in range(n_files):
-        # sorted layout: file f covers [f*8e5, (f+1)*8e5)
-        base = f * RGS_PER_FILE * ROWS_PER_RG
-        rgs = []
-        for rg in range(RGS_PER_FILE):
-            lo = base + rg * ROWS_PER_RG
-            rgs.append(RowGroupStats(
-                row_group=rg, row_count=ROWS_PER_RG,
-                columns={"v": (0, lo, lo + ROWS_PER_RG - 1)}))
-        cat.upsert_file(
-            FileStats(f"f{f:07d}.parquet", 512 << 20, RGS_PER_FILE,
-                      RGS_PER_FILE * ROWS_PER_RG), rgs)
+    cat.upsert_files(items)
     return cat, time.perf_counter() - t0
 
 
@@ -87,8 +107,8 @@ def best_ms(fn, reps=20) -> tuple:
     return round(best * 1000, 3), out
 
 
-def probe(n_files: int, rtree: bool = False) -> dict:
-    cat, build_s = build(n_files, rtree=rtree)
+def probe(n_files: int, layout: str = "sorted", rtree: bool = False) -> dict:
+    cat, load_s = build(n_files, layout, rtree=rtree)
     rw = PruningRewriter({"v": "int"})
     domain = n_files * RGS_PER_FILE * ROWS_PER_RG
 
@@ -122,9 +142,12 @@ def probe(n_files: int, rtree: bool = False) -> dict:
             lambda: table.plan_scan(pred), reps)
         assert dec.row_groups_scanned == rgs, (name, dec.row_groups_scanned)
     return {
-        "files": n_files, "rg_rows": n_files * RGS_PER_FILE,
-        "rtree": rtree, "build_s": round(build_s, 2),
-        "upserts_per_s": round(n_files / build_s),
+        "layout": layout, "files": n_files,
+        "rg_rows": n_files * RGS_PER_FILE, "rtree": rtree,
+        "rtree_entries": (cat._query('SELECT COUNT(*) FROM "rg_rtree_v"')[0][0]
+                          if rtree else None),
+        "load_s": round(load_s, 2),
+        "upserts_per_s": round(n_files / load_s),
         "point_ms": point_ms, "point_rgs": point_rgs,
         "range1pct_ms": rng_ms, "range1pct_rgs": rng_rgs,
         "contradiction_ms": contra_ms, "contradiction_rgs": contra_rgs,
@@ -138,6 +161,7 @@ if __name__ == "__main__":
     max_files = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     n = 2_000
     while n <= max_files:
-        print(json.dumps(probe(n)))
-        print(json.dumps(probe(n, rtree=True)))
+        for layout in LAYOUTS:
+            for rtree in (False, True):
+                print(json.dumps(probe(n, layout, rtree=rtree)), flush=True)
         n *= 10

@@ -57,8 +57,11 @@ def test_rtree_late_activation_backfills(spark, corpus, tmp_path):
         catalog=SqliteIndexCatalog(db, rtree_columns=["value"]),
         incremental_attach=True)
     assert t1.catalog._rtree_active == ["value"]
-    # the rtree was reconciled, not left empty:
-    n = t1.catalog._query('SELECT COUNT(*) FROM "rg_rtree_value"')[0][0]
+    # the rtree was reconciled, not left empty: its runs cover every
+    # row group once
+    n = t1.catalog._query(
+        f'SELECT SUM(last_rg - id % {_RTREE_ID_STRIDE} + 1) '
+        f'FROM "rg_rtree_value"')[0][0]
     m = t1.catalog._query(
         "SELECT COUNT(*) FROM row_group_statistics")[0][0]
     assert n == m > 0
@@ -89,9 +92,11 @@ def test_rtree_toggle_off_then_on_rebuilds(tmp_path):
     # reopen WITH the flag: the interval must reflect the NEW stats
     c3 = SqliteIndexCatalog(db, rtree_columns=["v"])
     c3.initialize({"v": "int"})
-    rows = c3._query('SELECT mn, mx FROM "rg_rtree_v"')
+    rows = c3._query('SELECT id, mn, mx, last_rg FROM "rg_rtree_v"')
     assert len(rows) == 1
-    assert rows[0][0] <= 100 and rows[0][1] >= 109, rows
+    fid = c3._query("SELECT file_id FROM file_statistics")[0][0]
+    assert rows[0][0] == fid * _RTREE_ID_STRIDE and rows[0][3] == 0, rows
+    assert rows[0][1] <= 100 and rows[0][2] >= 109, rows
     c3._conn.close()
 
 

@@ -99,7 +99,8 @@ def _delete_mix(t, n_files):
 
 def _sqlite_state(cat) -> dict:
     """Every catalog table's rows, file ids replaced by file names (and
-    R-tree ids by (file name, row group)), as sorted lists."""
+    R-tree run ids by (file name, first row group, last row group)), as
+    sorted lists."""
     names = dict(cat._query("SELECT file_id, file_name FROM file_statistics"))
     tables = [r[0] for r in cat._query(
         "SELECT name FROM sqlite_master WHERE type = 'table' "
@@ -116,8 +117,8 @@ def _sqlite_state(cat) -> dict:
             if "file_id" in rec:
                 rec["file_id"] = names.get(rec["file_id"], rec["file_id"])
             if tbl.startswith("rg_rtree_"):
-                fid, rg = divmod(rec.pop("id"), 1_000_000)
-                rec["id"] = (names[fid], rg)
+                fid, first = divmod(rec.pop("id"), 1_000_000)
+                rec["id"] = (names[fid], first, rec.pop("last_rg"))
             rows.append(tuple(sorted(rec.items(), key=lambda kv: kv[0])))
         out[tbl] = sorted(rows, key=repr)
     return out

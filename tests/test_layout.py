@@ -90,11 +90,10 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     assert rows_b_sorted == rows_b_z and len(rows_b_z) > 0
 
     # the a-sorted layout cannot meaningfully prune on b: allow a
-    # one-row-group sliver, because repartitionByRange draws its
-    # boundaries from a RANDOM sample per run, so a boundary row
-    # group's b-range occasionally happens to refute the predicate
-    # (observed 57/58 once in-suite; the claim under test is "no
-    # useful pruning", not "bit-identical boundaries")
+    # one-row-group sliver, because a row group's b-range can happen
+    # to refute the predicate (observed 57/58 once in-suite while the
+    # file cuts were sampled; the claim under test is "no useful
+    # pruning", not a particular row-group count)
     assert d_b_sorted.row_groups_scanned >= d_b_sorted.total_row_groups - 1
     # ...the z-ordered layout prunes most row groups on b AND on a
     assert d_b_z.row_groups_scanned < d_b_z.total_row_groups / 2
@@ -177,6 +176,66 @@ def test_zorder_layout_depends_only_on_the_rows(spark, tmp_path):
     first = layout("z1")
     assert len(first) == 4
     assert layout("z2") == first
+
+
+def _file_rows(d, key):
+    """(rows, min key, max key) per part file of d, in file order."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(glob.glob(f"{d}/*.parquet")):
+        keys = pq.read_table(f, columns=[key]).column(key).to_pylist()
+        out.append((len(keys), keys[0], keys[-1]))
+    return out
+
+
+def test_range_sorted_layout_depends_only_on_the_rows(spark, tmp_path):
+    """Three builds of one 8-partition frame give the same files: equal
+    row counts per file, disjoint ascending key ranges, cut at the
+    key's quantiles."""
+    base = spark.range(0, 40_000, 1, 8).select(
+        F.pmod(F.hash(F.col("id").cast("string")), F.lit(40_000))
+         .cast("int").alias("a"), "id")
+    builds = []
+    for i in range(3):
+        d = str(tmp_path / f"r{i}")
+        write_range_sorted(base, d, ["a"], num_files=4,
+                           row_group_bytes=1 << 15)
+        builds.append(_file_rows(d, "a"))
+    assert builds[0] == builds[1] == builds[2]
+    rows = [n for n, _, _ in builds[0]]
+    assert len(rows) == 4 and sum(rows) == 40_000
+    assert all(9_900 <= n <= 10_100 for n in rows), rows
+    assert all(hi < lo for (_, _, hi), (_, lo, _)
+               in zip(builds[0], builds[0][1:]))
+
+
+def test_range_sorted_cuts_composite_keys_in_sort_order(spark, tmp_path):
+    """A string + int key with NULLs: every file is sorted on the key
+    and the files' key ranges follow each other in the same order."""
+    rows = [(None if i % 50 == 0 else f"k{i % 7}", i) for i in range(2_000)]
+    base = spark.createDataFrame(rows, "s STRING, i INT").repartition(5)
+    d = str(tmp_path / "composite")
+    write_range_sorted(base, d, ["s", "i"], num_files=4)
+
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def order(r):
+        return (r[0] is not None, r[0] or "", r[1])
+
+    files = []
+    for f in sorted(glob.glob(f"{d}/*.parquet")):
+        t = pq.read_table(f, columns=["s", "i"])
+        files.append(list(zip(t.column("s").to_pylist(),
+                              t.column("i").to_pylist())))
+    assert len(files) == 4 and sum(map(len, files)) == 2_000
+    assert all(450 <= len(f) <= 550 for f in files), list(map(len, files))
+    flat = [r for f in files for r in f]
+    assert flat == sorted(flat, key=order)
 
 
 def test_ivf_layout_topk_parity_and_partition_pruning(spark, sf_dir, tmp_path):
